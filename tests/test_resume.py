@@ -6,6 +6,7 @@ MERGE INTO, and filter state carried in the checkpoint."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -298,7 +299,10 @@ def test_resume_from_pre_request_surface_checkpoint(spark, ckpt_dir):
     reference default / NULL sentinel (round-5 ADVICE — the round loop
     selects all of them, so a partial frontier raised
     AnalysisException). Crawl ordering is unaffected because the
-    synthetic mints for the backfilled columns are ordering-neutral."""
+    synthetic mints for the backfilled columns are ordering-neutral.
+    Two manifest shapes resume: one whose recorded frontier schema is
+    the legacy file's, and one with no schemas at all (published before
+    manifests carried them), which reads by inference."""
     full = CrawlEngine(spark, SF).run()
     ref = _decisions(full)
 
@@ -318,11 +322,25 @@ def test_resume_from_pre_request_surface_checkpoint(spark, ckpt_dir):
     path = os.path.join(ckpt_dir, f"v{v}", "frontier.parquet")
     shutil.rmtree(path)
     legacy.write.mode("overwrite").parquet(path)
+    man_path = os.path.join(ckpt_dir, f"v{v}", "manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    man["schemas"]["frontier"] = spark.read.parquet(path).schema.jsonValue()
+    no_schemas = {k: val for k, val in man.items() if k != "schemas"}
 
-    res = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir).run()
-    got = _decisions(res)
-    # the minted g_seeds values for the stripped columns are ordering-
-    # neutral EXCEPT where a default flips behavior; with all-true
-    # extract_links and never-tripping timeout/retries mints, the
-    # resumed crawl must equal the uninterrupted one exactly
-    assert got == ref
+    for manifest in (man, no_schemas):
+        case_dir = tempfile.mkdtemp(prefix="crawl_ckpt_case_")
+        try:
+            shutil.copytree(ckpt_dir, case_dir, dirs_exist_ok=True)
+            with open(os.path.join(case_dir, f"v{v}", "manifest.json"), "w") as f:
+                json.dump(manifest, f)
+            res = CrawlEngine(spark, SF, checkpoint_dir=case_dir).run()
+            got = _decisions(res)
+        finally:
+            shutil.rmtree(case_dir, ignore_errors=True)
+        # the minted g_seeds values for the stripped columns are
+        # ordering-neutral EXCEPT where a default flips behavior; with
+        # all-true extract_links and never-tripping timeout/retries
+        # mints, the resumed crawl must equal the uninterrupted one
+        # exactly
+        assert got == ref

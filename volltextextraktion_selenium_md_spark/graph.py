@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from volltextextraktion_selenium_md_spark.schemas import footer_schema
+
 BASE_TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -228,9 +230,14 @@ def graph_with_clause(extra: dict[str, str] | None = None) -> str:
 
 
 def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver parquet tables as temp views (idempotent)."""
+    """Register the driver parquet tables as temp views (idempotent).
+    Each read carries the schema from its file footer, so registration
+    submits no Spark job (inference costs one job per table)."""
     for name in BASE_TABLES:
-        spark.read.parquet(f"{sf_dir}/{name}.parquet").createOrReplaceTempView(name)
+        path = f"{sf_dir}/{name}.parquet"
+        schema = footer_schema(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        reader.parquet(path).createOrReplaceTempView(name)
 
 
 # one-slot registration memo: every query entry point calls

@@ -17,9 +17,9 @@ from pyspark.sql import functions as F
 from volltextextraktion_selenium_md_spark.functions.urls import url_path
 
 # the deterministic crawl-order key within a round (SURVEY §2.3 F5):
-# BFS depth first, then lineage (seeds: zero-padded seed_idx; children:
-# parent_lineage.doc_pos) — lexicographic == reference's implied
-# FIFO-seeds / document-order-links BFS.
+# BFS depth first, then lineage (seeds: seed_idx segment; children:
+# parent_lineage.doc_pos segment, functions/lineage.py) — lexicographic
+# == reference's implied FIFO-seeds / document-order-links BFS.
 ORDER_COLS = ["depth", "lineage"]
 
 

@@ -22,6 +22,11 @@ from volltextextraktion_selenium_md_spark.functions.classify import (
     NAV_TEXTS,
     SOCIAL_DOMAINS,
 )
+from volltextextraktion_selenium_md_spark.functions.lineage import (
+    DOC_POS_WIDTH,
+    SEED_WIDTH,
+    segment_sql,
+)
 from volltextextraktion_selenium_md_spark.functions.mime import MIME_TO_EXT
 from volltextextraktion_selenium_md_spark.graph import canon_sql, graph_with_clause
 from volltextextraktion_selenium_md_spark.operators.dedup import (
@@ -48,7 +53,7 @@ SELECT url, host, depth, lineage, priority, {_REQ_SQL_COLS} FROM (
          row_number() OVER (PARTITION BY canon ORDER BY lineage) AS rn
   FROM (
     SELECT {canon_sql("raw_url")} AS canon, host,
-           lpad(CAST(seed_idx AS STRING), 6, '0') AS lineage, priority,
+           {segment_sql("seed_idx", SEED_WIDTH)} AS lineage, priority,
            {_REQ_SQL_COLS}
     FROM g_seeds) s0
 ) s1 WHERE rn = 1
@@ -61,12 +66,12 @@ _BLOCKED = (
     + " LIKE r.disallow_prefix || '%')"
 )
 
-D1_CAND = """
+D1_CAND = f"""
 SELECT url, host, depth, lineage FROM (
   SELECT c.*, row_number() OVER (PARTITION BY url ORDER BY depth, lineage) AS rn
   FROM (
     SELECT l.dst_url AS url, l.dst_host AS host, 1 AS depth,
-           f.lineage || '.' || lpad(CAST(l.doc_pos AS STRING), 2, '0') AS lineage
+           f.lineage || '.' || {segment_sql("l.doc_pos", DOC_POS_WIDTH)} AS lineage
     FROM f_init f
     JOIN g_pages p ON p.url = f.url
          AND p.status < 400 AND p.content_type LIKE 'text/html%'
@@ -1308,7 +1313,7 @@ WITH RECURSIVE sim AS (
     kids AS (
       SELECT {canon_sql("l.raw_url")} AS url, l.dst_host AS host,
              d.depth + 1 AS depth,
-             d.lin || '.' || lpad(CAST(l.doc_pos AS VARCHAR), 2, '0') AS lin,
+             d.lin || '.' || {segment_sql("l.doc_pos", DOC_POS_WIDTH)} AS lin,
              0 AS att, d.xl, d.hc, d.tc, d.mb, d.mp, d.rt
       FROM dec d JOIN g_links l ON l.src_page_id = d.pid
       WHERE d.outcome = 'fetched' AND d.ctype LIKE 'text/html%'

@@ -536,6 +536,10 @@ def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
     (first-seen dedup, seen anti-join, ordering) is shared code."""
     import pandas as pd
 
+    from volltextextraktion_selenium_md_spark.functions.lineage import (
+        DOC_POS_WIDTH,
+        segment_col,
+    )
     from volltextextraktion_selenium_md_spark.functions.urls import (
         canonicalize_url,
         extract_links_one,
@@ -572,7 +576,7 @@ def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
         (F.col("p_depth") + 1).alias("depth"),
         F.concat(
             F.col("p_lineage"), F.lit("."),
-            F.lpad(F.col("doc_pos").cast("string"), 2, "0"),
+            segment_col(F.col("doc_pos"), DOC_POS_WIDTH),
         ).alias("lineage"),
         F.col("p_priority").alias("priority"),
         *[F.col(f"p_{c}").alias(c) for c in _REQ_COLS],

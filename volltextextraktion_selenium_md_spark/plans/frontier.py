@@ -20,11 +20,12 @@ from the payload bytes) — every other step is shared code, and each
 frontier row carries its request mode (fast/js/auto).
 
 Determinism: every cut and dedup orders by (depth, lineage) where
-lineage is the recursive crawl-order key (seed: zero-padded seed_idx;
-child: parent_lineage + '.' + zero-padded doc_pos). Lexicographic
-(round, depth, lineage) therefore equals the reference's implied
-FIFO-seeds / document-order-links BFS, and the single-threaded golden
-replay (replay.py) must — and does, see tests — match row for row.
+lineage is the recursive crawl-order key (seed: seed_idx segment;
+child: parent_lineage + '.' + doc_pos segment, functions/lineage.py).
+Lexicographic (round, depth, lineage) therefore equals the reference's
+implied FIFO-seeds / document-order-links BFS, and the single-threaded
+golden replay (replay.py) must — and does, see tests — match row for
+row.
 
 Scale notes (10^10-URL design point):
 - per-round state (frontier, seen) is hash-partitioned on the url;
@@ -57,6 +58,11 @@ from volltextextraktion_selenium_md_spark.sources.lakehouse import (
 
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
+from volltextextraktion_selenium_md_spark.functions.lineage import (
+    DOC_POS_WIDTH,
+    SEED_WIDTH,
+    segment_col,
+)
 from volltextextraktion_selenium_md_spark.functions.urls import (
     canonicalize_url,
     url_host,
@@ -207,14 +213,6 @@ def _release_ckpt(df: DataFrame | None) -> None:
         pass
 
 
-def _pad6(col):
-    return F.lpad(col.cast("string"), 6, "0")
-
-
-def _pad2(col):
-    return F.lpad(col.cast("string"), 2, "0")
-
-
 def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> DataFrame:
     """Seed rows -> canonical frontier (depth 0), first-seen deduped in
     seed order (reference's per-page order-preserving dedup semantics,
@@ -243,7 +241,7 @@ def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> Dat
         "url",
         url_host(F.col("url")).alias("host"),
         F.lit(0).alias("depth"),
-        _pad6(F.col("seed_idx")).alias("lineage"),
+        segment_col(F.col("seed_idx"), SEED_WIDTH).alias("lineage"),
         F.col("priority"),
         # per-request fetch mode + JS pool + LLM anonymize flag
         # (reference schemas.py:85-104, js_strategy speed/accuracy pools
@@ -727,7 +725,10 @@ class CrawlEngine:
                     frontier = frontier.withColumn(
                         name, F.lit(default).cast(dtype)
                     )
-            frontier = frontier.localCheckpoint()
+            if self.new_seeds is None:
+                # service mode checkpoints the frontier once, after the
+                # union with the batch's seeds below
+                frontier = frontier.localCheckpoint()
             # seen set = BASE + DELTAS: above the volume threshold the
             # base is kept hash(url)-partitioned + sorted through its
             # checkpoint, so each round's anti-join moves no base rows
@@ -966,8 +967,15 @@ class CrawlEngine:
                 # tail of in-flight long tasks. k=4 cuts task length
                 # ~4x at ~ms-level task-launch overhead; the serial
                 # path keeps 1x width (no interleaving to enable).
-                conv_width = self.num_partitions * (
-                    self.convert_task_factor if self.overlap_convert else 1
+                # Never more tasks than the round has rows: each convert
+                # task pays a fixed Python-worker cost (~0.25 s), so a
+                # 3-row service round split 16 ways spent ~4
+                # executor-seconds on empty tasks.
+                conv_width = min(
+                    self.num_partitions * (
+                        self.convert_task_factor if self.overlap_convert else 1
+                    ),
+                    max(1, n_frontier),
                 )
                 conv = convert_stage(
                     ok.repartition(conv_width),
@@ -1137,7 +1145,10 @@ class CrawlEngine:
                         ).alias("url"),
                         F.col("dst_host").alias("host"),
                         (F.col("p_depth") + 1).alias("depth"),
-                        F.concat(F.col("p_lineage"), F.lit("."), _pad2(F.col("doc_pos"))).alias("lineage"),
+                        F.concat(
+                            F.col("p_lineage"), F.lit("."),
+                            segment_col(F.col("doc_pos"), DOC_POS_WIDTH),
+                        ).alias("lineage"),
                         F.col("p_priority").alias("priority"),
                         *[F.col(f"p_{c}").alias(c) for c in REQUEST_COLS],
                         F.lit(0).alias("attempt"),

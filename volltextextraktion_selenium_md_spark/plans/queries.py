@@ -16,6 +16,10 @@ from pyspark.sql import functions as F
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.functions import classify, mime, text as textf
+from volltextextraktion_selenium_md_spark.functions.lineage import (
+    DOC_POS_WIDTH,
+    segment_col,
+)
 from volltextextraktion_selenium_md_spark.functions.urls import (
     canonicalize_url,
     is_internal,
@@ -234,7 +238,8 @@ def _depth1_candidates(spark) -> DataFrame:
         F.col("dst_host").alias("host"),
         F.lit(1).alias("depth"),
         F.concat(
-            F.col("p_lineage"), F.lit("."), F.lpad(F.col("doc_pos").cast("string"), 2, "0")
+            F.col("p_lineage"), F.lit("."),
+            segment_col(F.col("doc_pos"), DOC_POS_WIDTH),
         ).alias("lineage"),
     )
     return first_seen(children, "url", ["depth", "lineage"])

@@ -8,8 +8,10 @@ first-seen dedup, per-host budget rank cut, robots prefix rules, retry
 re-queue. The Spark engine's (round, depth, lineage)-ordered decisions
 and final seen set must match this exactly.
 
-Deliberately shares only `canonicalize_one` (a pure scalar, golden-pair
-tested on its own) with the engine; all loop logic is written twice.
+Deliberately shares only two pure scalars with the engine:
+`canonicalize_one` (golden-pair tested on its own) and the lineage
+`segment` encoding (property-tested against the engine's Column form);
+all loop logic is written twice.
 """
 
 from __future__ import annotations
@@ -21,6 +23,11 @@ import duckdb
 
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.graph import BASE_TABLES, GRAPH_VIEWS
+from volltextextraktion_selenium_md_spark.functions.lineage import (
+    DOC_POS_WIDTH,
+    SEED_WIDTH,
+    segment,
+)
 from volltextextraktion_selenium_md_spark.functions.urls import canonicalize_one
 
 
@@ -202,7 +209,7 @@ def replay_crawl(
             "url": url,
             "host": urlsplit(url).hostname,
             "depth": 0,
-            "lineage": f"{s['seed_idx']:06d}",
+            "lineage": segment(s["seed_idx"], SEED_WIDTH),
             "priority": s["priority"],
             **{c: s[c] for c in _REQ_COLS},
             "attempt": 0,
@@ -298,7 +305,8 @@ def replay_crawl(
                         "url": canonicalize_one(raw_url),
                         "host": dst_host,
                         "depth": row["depth"] + 1,
-                        "lineage": f"{row['lineage']}.{doc_pos:02d}",
+                        "lineage": f"{row['lineage']}."
+                                   f"{segment(doc_pos, DOC_POS_WIDTH)}",
                         "priority": row["priority"],
                         # children re-POST with the parent request's
                         # FULL settings (reference dispatch is

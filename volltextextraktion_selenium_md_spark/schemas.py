@@ -8,16 +8,51 @@ stable and the Parquet scans prune columns.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
+    DataType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
 )
+
+
+def as_nullable(dt: DataType) -> DataType:
+    """``dt`` as a Spark file read returns it: every struct field,
+    array element and map value nullable (Spark's ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(as_nullable(dt.keyType), as_nullable(dt.valueType), True)
+    return dt
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The Spark schema ``spark.read.parquet(path)`` would infer, taken
+    from the file footer on the driver — no Spark job. Naive timestamps
+    map to ``timestamp_ntz``, as Spark infers them. None when ``path``
+    is not a single parquet file (a directory of part files): the
+    caller falls back to inference."""
+    if not os.path.isfile(path):
+        return None
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    arrow = pq.read_schema(path)
+    return as_nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=True))
+
 
 # LinkInfo (reference app/schemas.py:229-245) — nested array element of a page
 LINK_INFO = StructType([
@@ -47,9 +82,10 @@ PAGE = StructType([
 ])
 
 # frontier row (FIXTURES.md §4); `lineage` is the deterministic
-# crawl-order key: seeds -> lpad(seed_idx,6); child -> parent || '.' ||
-# lpad(doc_pos,2). Lexicographic (depth, lineage) == the reference's
-# implied FIFO-seeds/doc-order-links BFS (SURVEY §2.3 F5).
+# crawl-order key: seeds -> segment(seed_idx, 6); child -> parent || '.'
+# || segment(doc_pos, 2) (functions/lineage.py). Lexicographic
+# (depth, lineage) == the reference's implied FIFO-seeds/doc-order-links
+# BFS (SURVEY §2.3 F5).
 FRONTIER = StructType([
     StructField("url", StringType(), False),          # canonical
     StructField("host", StringType(), False),

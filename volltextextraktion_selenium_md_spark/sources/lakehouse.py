@@ -10,6 +10,11 @@ plain parquet with Iceberg's commit discipline:
   LAST via atomic rename — readers never see a half-written snapshot,
   exactly like Iceberg's metadata-pointer swap. Time travel = read any
   older vN.
+- **schemas in the manifest**: like Iceberg's table metadata, every
+  manifest records each table's Spark schema, so a read resolves its
+  columns from the manifest instead of running a footer-inference Spark
+  job per table. Manifests written before schemas were recorded still
+  read, through inference.
 - **MERGE INTO emulation**: copy-on-write upsert — target rows whose key
   appears in the batch are replaced, everything else re-written
   unchanged (Iceberg COW `MERGE INTO t USING b ON t.k = b.k WHEN
@@ -41,6 +46,25 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from volltextextraktion_selenium_md_spark.schemas import as_nullable
+
+
+def _schema_json(df: DataFrame) -> dict:
+    """The schema a parquet read of ``df``'s written files resolves to."""
+    return as_nullable(df.schema).jsonValue()
+
+
+def _read_parquet(
+    spark: SparkSession, paths: list[str], schema: dict | None
+) -> DataFrame:
+    """Read with the manifest's schema (no inference job); a manifest
+    without one falls back to inference."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(*paths)
 
 
 class SnapshotStore:
@@ -78,18 +102,19 @@ class SnapshotStore:
         version = (self.latest() or 0) + 1
         vdir = self._vdir(version)
         os.makedirs(vdir, exist_ok=True)
-        written = []
+        written, schemas = [], {}
         for name, df in tables.items():
             path = os.path.join(vdir, f"{name}.parquet")
             df.write.mode("overwrite").parquet(path)
             written.append(name)
+            schemas[name] = _schema_json(df)
         blob_names = []
         for name, raw in (blobs or {}).items():
             with open(os.path.join(vdir, f"{name}.bin"), "wb") as f:
                 f.write(raw)
             blob_names.append(name)
         manifest = {"version": version, "tables": written, "blobs": blob_names,
-                    "meta": meta}
+                    "meta": meta, "schemas": schemas}
         fd, tmp = tempfile.mkstemp(dir=vdir, suffix=".json.tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(manifest, f)
@@ -106,7 +131,10 @@ class SnapshotStore:
 
     def read(self, spark: SparkSession, name: str, version: int | None = None) -> DataFrame:
         v = self.latest() if version is None else version
-        return spark.read.parquet(os.path.join(self._vdir(v), f"{name}.parquet"))
+        schema = self.manifest(v).get("schemas", {}).get(name)
+        return _read_parquet(
+            spark, [os.path.join(self._vdir(v), f"{name}.parquet")], schema
+        )
 
     def read_blob(self, name: str, version: int | None = None) -> bytes:
         v = self.latest() if version is None else version
@@ -188,7 +216,7 @@ class PartitionedTable:
         ]
         if cur:
             # read ONLY the touched partitions; anti-join out updated keys
-            tgt = spark.read.parquet(*cur)
+            tgt = _read_parquet(spark, cur, man.get("schema"))
             keep = tgt.join(
                 batch.select(self.key).distinct(), on=self.key, how="left_anti"
             ).withColumn("_part", part)
@@ -219,7 +247,7 @@ class PartitionedTable:
                 files[str(t)] = dst_name
         shutil.rmtree(staging, ignore_errors=True)
         new_man = {"files": files, "p": self.p, "version": version,
-                   "key": self.key}
+                   "key": self.key, "schema": _schema_json(merged.drop("_part"))}
         fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".json.tmp")
         with os.fdopen(fd, "w") as f:
             json.dump(new_man, f)
@@ -232,7 +260,7 @@ class PartitionedTable:
         if not man["files"]:
             return None
         paths = [os.path.join(self.root, "data", f) for f in man["files"].values()]
-        return spark.read.parquet(*paths).drop("_part")
+        return _read_parquet(spark, paths, man.get("schema")).drop("_part")
 
     def expire_versions(self, keep_last: int = 2) -> None:
         """Drop old manifests + any data dir no live manifest references."""

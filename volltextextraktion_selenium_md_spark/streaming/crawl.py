@@ -86,20 +86,31 @@ def request_results(
 ) -> DataFrame:
     """The service's response body for ONE request: every fetch-log row
     of the request's crawl subtree, in crawl order. The lineage key is
-    the recursive crawl-order address and its first segment is the
-    zero-padded seed index (``plans/frontier.py:init_frontier``), so a
-    request's whole subtree is a prefix filter on the store's
-    cumulative log — no join, and at lakehouse scale a sorted/bucketed
-    lineage column makes this a range scan."""
+    the recursive crawl-order address and its first segment encodes the
+    seed index (``functions/lineage.py``), so a request's whole subtree
+    is a prefix filter on the store's cumulative log — no join, and at
+    lakehouse scale a sorted/bucketed lineage column makes this a range
+    scan. The filtered subtree is sorted in a single partition: one
+    Spark job, where a global sort adds a sampling job and a shuffle
+    for a handful of rows. The log scan runs in that one task too,
+    which suits a service store's size."""
     from pyspark.sql import functions as F
 
+    from volltextextraktion_selenium_md_spark.functions.lineage import (
+        SEED_WIDTH,
+        segment,
+    )
     from volltextextraktion_selenium_md_spark.sources.lakehouse import (
         SnapshotStore,
     )
 
     log = SnapshotStore(store_dir).read(spark, "fetch_log")
-    prefix = f"{seed_idx:06d}"
-    return log.filter(
-        (F.col("lineage") == prefix)
-        | F.col("lineage").startswith(prefix + ".")
-    ).orderBy("round", "depth", "lineage")
+    prefix = segment(seed_idx, SEED_WIDTH)
+    return (
+        log.filter(
+            (F.col("lineage") == prefix)
+            | F.col("lineage").startswith(prefix + ".")
+        )
+        .coalesce(1)
+        .sortWithinPartitions("round", "depth", "lineage")
+    )
