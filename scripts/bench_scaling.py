@@ -29,8 +29,7 @@ from datetime import datetime, timezone
 REPO = "/root/repo"
 
 # (job, n_small, n_large, mirrors, payload_scale, reps)
-# headline: 2->8 engine at web-realistic ~50KB pages (lazy checkpoint is
-# the session default for the engine job via SPARK_GRAFT_EAGER=0 below)
+# headline: 2->8 engine at web-realistic ~50KB pages
 MATRIX = [
     ("engine",   2,  8,  8, 64, 1),
     ("engine",   2,  8,  8, 32, 1),
@@ -52,15 +51,10 @@ JOB_DESC = {
 
 
 def run_once(sf_dir: str, cores: int, job: str, mirrors: int, scale: int) -> dict:
-    import os
-
-    env = dict(os.environ)
-    if job == "engine":
-        env["SPARK_GRAFT_EAGER"] = "0"  # lazy checkpoint: one job/round
     out = subprocess.run(
         [sys.executable, f"{REPO}/scripts/scaling_worker.py",
          sf_dir, str(cores), job, str(mirrors), str(scale)],
-        capture_output=True, text=True, check=True, timeout=2400, env=env,
+        capture_output=True, text=True, check=True, timeout=2400,
     )
     return json.loads(out.stdout.strip().splitlines()[-1])
 

@@ -44,10 +44,7 @@ def main() -> None:
     # the flagship measures steady-state throughput, not first-job JIT
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        CrawlEngine(
-            spark, warm_dir, cfg=CrawlConfig(max_rounds=2),
-            collect_round_counts=False,
-        ).run().fetch_log.count()
+        CrawlEngine(spark, warm_dir, cfg=CrawlConfig(max_rounds=2)).run().fetch_log.count()
         # drop the warm-up engine's persisted relations so warm-dir data
         # doesn't sit in executor storage memory during the measured run
         spark.catalog.clearCache()
@@ -55,7 +52,7 @@ def main() -> None:
         spark.read.parquet(f"{sf_dir}/nation.parquet").count()
     cfg = CrawlConfig(max_depth=6, host_budget_per_round=1_000_000, max_rounds=10)
     t0 = time.time()
-    res = CrawlEngine(spark, sf_dir, cfg=cfg, collect_round_counts=False).run()
+    res = CrawlEngine(spark, sf_dir, cfg=cfg).run()
     t_run = time.time() - t0
     decisions = res.fetch_log.filter(F.col("outcome") != "blocked").count()
     wall = time.time() - t0

@@ -47,6 +47,11 @@ def main() -> None:
              "a new file to serve the next batch",
     )
     args = ap.parse_args()
+    if args.requests is not None:
+        if not args.checkpoint_dir:
+            ap.error("--requests (service mode) requires --checkpoint-dir")
+        if args.mirrors != 1:
+            ap.error("--requests (service mode) cannot be combined with --mirrors")
 
     # package import works both from --py-files zip and from the repo
     from volltextextraktion_selenium_md_spark.config import CrawlConfig
@@ -63,15 +68,13 @@ def main() -> None:
     )
     new_seeds = None
     if args.requests is not None:
-        if not args.checkpoint_dir:
-            ap.error("--requests (service mode) requires --checkpoint-dir")
         new_seeds = spark.read.parquet(args.requests)
     t0 = time.time()
     res = CrawlEngine(
         spark, args.sf_dir, cfg=cfg,
         with_convert=args.convert, use_bloom=args.use_bloom,
         mirrors=args.mirrors, checkpoint_dir=args.checkpoint_dir,
-        collect_round_counts=False, new_seeds=new_seeds,
+        new_seeds=new_seeds,
     ).run()
 
     res.fetch_log.write.mode("overwrite").parquet(f"{args.out}/fetch_log")

@@ -45,16 +45,12 @@ def job_engine(spark, sf_dir, cores, mirrors, scale):
         max_depth=6, host_budget_per_round=1_000_000, max_rounds=10,
         payload_scale=scale,
     )
+    # the engine plans at the session width (SPARK_GRAFT_SHUFFLE,
+    # default max(cores, 8), set in main)
     eng = CrawlEngine(
         spark, sf_dir, cfg=cfg,
         with_convert=os.environ.get("SPARK_GRAFT_CONVERT", "1") == "1",
-        collect_round_counts=False, num_partitions=max(cores, 8),
-        mirrors=mirrors, emit_markdown=False,
-        eager_fetch_checkpoint=(
-            None if "SPARK_GRAFT_EAGER" not in os.environ
-            else os.environ["SPARK_GRAFT_EAGER"] == "1"
-        ),
-        overlap_convert=os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "1",
+        mirrors=mirrors,
     )
     res = eng.run()
     n = res.fetch_log.filter(F.col("outcome") != "blocked").count()

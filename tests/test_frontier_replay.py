@@ -311,16 +311,6 @@ def test_live_fetch_with_convert(spark):
     assert res.payloads is None or res.payloads.count() == 0
 
 
-def test_lazy_fetch_checkpoint_still_exact(spark):
-    """eager_fetch_checkpoint=False (one lazy-checkpoint job per round)
-    must preserve exact crawl order + seen set."""
-    cfg = CrawlConfig()
-    rep = replay_crawl(SF_SMALL, cfg)
-    res = CrawlEngine(spark, SF_SMALL, cfg, eager_fetch_checkpoint=False).run()
-    assert _spark_order(res) == _gold_order(rep)
-    assert {r["url"] for r in res.seen.collect()} == rep.seen
-
-
 @pytest.mark.parametrize("min_rows", [1, 60])
 def test_partitioned_seen_base_still_exact(spark, min_rows):
     """The volume-adaptive seen set has two layouts: a plain broadcast
@@ -343,7 +333,7 @@ def test_partitioned_seen_base_still_exact(spark, min_rows):
     assert {r["url"] for r in res.seen.collect()} == rep.seen
 
 
-def test_adaptive_shuffle_width_exact_and_conf_restored(spark):
+def test_adaptive_shuffle_width_exact_and_conf_restored(spark, monkeypatch):
     """The per-round adaptive shuffle width is a pure perf knob: the
     crawl ordering and seen set must be identical at BOTH extremes
     (rows_per_task=1 pins every round to the session ceiling;
@@ -354,9 +344,8 @@ def test_adaptive_shuffle_width_exact_and_conf_restored(spark):
     cfg = CrawlConfig()
     rep = replay_crawl(SF_SMALL, cfg)
     for rows_per_task in (1, 10_000_000):
-        eng = CrawlEngine(
-            spark, SF_SMALL, cfg, shuffle_rows_per_task=rows_per_task
-        )
+        monkeypatch.setattr(CrawlEngine, "SHUFFLE_ROWS_PER_TASK", rows_per_task)
+        eng = CrawlEngine(spark, SF_SMALL, cfg)
         res = eng.run()
         assert _spark_order(res) == _gold_order(rep)
         assert {r["url"] for r in res.seen.collect()} == rep.seen

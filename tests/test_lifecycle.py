@@ -35,7 +35,7 @@ def test_pipelined_crawl_releases_dead_blocks(spark):
     n0, mem0, _ = _retained(spark)
     res = CrawlEngine(
         spark, SF_SMALL, CrawlConfig(max_depth=3, max_rounds=5),
-        mirrors=3, overlap_convert=True, with_convert=True,
+        mirrors=3, with_convert=True,
     ).run()
     # results stay fully readable after the run (releases must only hit
     # blocks no plan can reach)

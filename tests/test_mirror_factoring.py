@@ -1,21 +1,25 @@
-"""Factored mirror joins == eagerly materialized mirror corpus.
+"""Factored mirror joins == R copies of the base crawl.
 
-The scale benchmarks crawl R disjoint copies of the web. The engine's
-default path keeps pages/links BASE-sized and strips/re-mints the
-mirror id on the probe side of each per-round join; the eager path
-(SPARK_GRAFT_MIRROR_MATERIALIZE=1) materializes the R× page corpus.
-Both must produce the identical crawl."""
+The scale benchmarks crawl R disjoint copies of the web. The engine
+keeps pages/links BASE-sized and strips/re-mints the mirror id on the
+probe side of each per-round join; every mirror must crawl exactly what
+the golden replay crawls on the base graph."""
 
 from __future__ import annotations
 
-import os
+import re
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
+from volltextextraktion_selenium_md_spark.functions.lineage import (
+    SEED_WIDTH,
+    segment,
+)
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
+from volltextextraktion_selenium_md_spark.replay import replay_crawl
 
 LOG_KEY = ("ordinal", "round", "url", "depth", "lineage", "mode", "attempt",
            "outcome", "page_id", "status_code", "final_url", "content_type",
@@ -89,32 +93,73 @@ def test_canonicalize_commutes_with_insert_mirror(spark):
         assert mismatches == 0, f"mirror {m}: {mismatches} mismatches"
 
 
-def _run(spark, materialize: bool):
-    prev = os.environ.get("SPARK_GRAFT_MIRROR_MATERIALIZE")
-    os.environ["SPARK_GRAFT_MIRROR_MATERIALIZE"] = "1" if materialize else "0"
-    try:
-        res = CrawlEngine(
-            spark, SF_SMALL, CrawlConfig(max_depth=3, max_rounds=5),
-            mirrors=3,
-        ).run()
-        rows = (
-            res.fetch_log.filter("outcome <> 'blocked'")
-            .select(*LOG_KEY)
-            .orderBy("ordinal")
-            .collect()
-        )
-        return [tuple(r[k] for k in LOG_KEY) for r in rows]
-    finally:
-        if prev is None:
-            os.environ.pop("SPARK_GRAFT_MIRROR_MATERIALIZE", None)
-        else:
-            os.environ["SPARK_GRAFT_MIRROR_MATERIALIZE"] = prev
+_MIRROR = re.compile(r"\.m(\d+)\.example\.com")
+MIRRORS = 3
+REPLAY_KEY = ("round", "url", "depth", "lineage", "mode", "attempt",
+              "outcome", "js_escalated")
 
 
-def test_factored_mirror_crawl_equals_materialized(spark):
-    factored = _run(spark, materialize=False)
-    eager = _run(spark, materialize=True)
-    assert len(factored) > 0
-    assert factored == eager
+def _unmirror(s: str) -> tuple[int, str]:
+    """(mirror, text with the mirror token removed)."""
+    found = _MIRROR.search(s)
+    assert found is not None, f"no mirror token in {s!r}"
+    return int(found.group(1)), _MIRROR.sub(".example.com", s)
+
+
+def _segment_value(seg: str) -> int:
+    """Inverse of ``lineage.segment`` (plain or overflow form)."""
+    return int(seg[3:]) if seg.startswith("~") else int(seg)
+
+
+def test_factored_mirror_crawl_equals_replay_per_mirror(spark):
+    """Each mirror of a factored ``mirrors=3`` crawl, with its mirror
+    token stripped from url/host/final_url and its lineage head and
+    page_id re-based to the base graph (mirror m of seed s carries seed
+    index s * 3 + m and page_id base + m * span), is exactly the golden
+    replay of the base graph: crawl order, seen set, and the page
+    attributes the fetch join re-mints."""
+    cfg = CrawlConfig(max_depth=3, max_rounds=5)
+    eng = CrawlEngine(spark, SF_SMALL, cfg, mirrors=MIRRORS)
+    res = eng.run()
+    rows = [
+        r.asDict() for r in res.fetch_log.filter("outcome <> 'blocked'")
+        .select(*LOG_KEY, "host", "js_escalated").orderBy("ordinal").collect()
+    ]
+    assert len(rows) > 0
     # sanity: the crawl really ran in mirrored URL space
-    assert all(".m" in r[2] for r in factored)
+    assert all(".m" in r["url"] for r in rows)
+    pages = {
+        r["url"]: r for r in graph.pages(spark).select(
+            "url", "host", "page_id", "status", "final_url", "content_type"
+        ).collect()
+    }
+    per_m: dict[int, list[dict]] = {m: [] for m in range(MIRRORS)}
+    for r in rows:
+        m, url = _unmirror(r["url"])
+        head, dot, rest = r["lineage"].partition(".")
+        base_head = segment((_segment_value(head) - m) // MIRRORS, SEED_WIDTH)
+        per_m[m].append({
+            **r, "url": url, "host": _unmirror(r["host"])[1],
+            "lineage": base_head + dot + rest,
+            "final_url": r["final_url"] and _unmirror(r["final_url"])[1],
+            "page_id": (None if r["page_id"] is None
+                        else r["page_id"] - m * eng.span),
+        })
+    rep = replay_crawl(SF_SMALL, cfg)
+    want = [tuple(g[k] for k in REPLAY_KEY) for g in rep.crawl_order]
+    for m, got in per_m.items():
+        assert [tuple(r[k] for k in REPLAY_KEY) for r in got] == want, m
+        for r in got:
+            page = pages.get(r["url"])
+            if r["page_id"] is None:
+                assert page is None, r
+                continue
+            assert (r["host"], r["page_id"], r["status_code"],
+                    r["final_url"], r["content_type"]) == (
+                page["host"], page["page_id"], page["status"],
+                page["final_url"], page["content_type"]), r
+    seen_m: dict[int, set] = {m: set() for m in range(MIRRORS)}
+    for r in res.seen.collect():
+        m, url = _unmirror(r["url"])
+        seen_m[m].add(url)
+    assert seen_m == {m: rep.seen for m in range(MIRRORS)}

@@ -129,13 +129,3 @@ def media_policy_markdown_py(
     if policy == "full":
         return f"# Media Content\n\n[media transcription not available: {ct}]"
     return f"# Media Content\n\n[media content skipped: {ct}]"
-
-
-def truncate_payload(payload: Column, max_bytes: int) -> tuple[Column, Column]:
-    """max_bytes byte-budget cut + truncated flag
-    (app/http_fetcher.py:71-79). Returns (bytes_col, truncated_col)."""
-    return (
-        F.when(F.length(payload) > max_bytes, F.substring(payload, 1, max_bytes))
-        .otherwise(payload),
-        F.length(payload) > max_bytes,
-    )

@@ -109,11 +109,6 @@ def _with(extra: dict[str, str]) -> str:
     return graph_with_clause(extra)
 
 
-def _docs_with(ctes: dict[str, str]) -> str:
-    parts = [f"{k} AS ({v})" for k, v in ctes.items()]
-    return "WITH " + ",\n".join(parts)
-
-
 # --- frontier / engine-step oracles ------------------------------------------
 
 def sql_frontier_init() -> str:
@@ -419,10 +414,6 @@ END"""
         f" THEN {x} ELSE 0 END)"
     )
     return cost, esc
-
-
-def _cost_case() -> str:
-    return _cost_exprs()[0]
 
 
 def sql_fetch_timeout() -> str:

@@ -153,7 +153,6 @@ class CrawlResult:
     metrics: DataFrame            # per (round, outcome) counts
     payloads: DataFrame | None    # image+caption rows (input_hint shape)
     rounds: int = 0
-    round_counts: list[dict] = field(default_factory=list)
     partition_metrics: DataFrame | None = None  # per (round, partition) lineage
     conversions: DataFrame | None = None  # per-page markdown (with_convert)
     round_walls: list[float] = field(default_factory=list)  # driver s/round
@@ -256,6 +255,43 @@ def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> Dat
 
 
 class CrawlEngine:
+    # Volume-adaptive shuffle width (round-4 verdict #2 "shape-adaptive,
+    # not static"): each round plans its shuffles at
+    #   clamp(8, ceil(n_frontier / SHUFFLE_ROWS_PER_TASK), session)
+    # so the session width stays the CEILING (on a real cluster:
+    # thousands, set via spark-submit) while small rounds — a real
+    # crawl's first and last rounds are always small, and the whole
+    # sandbox flagship is — stop paying per-task scheduling latency for
+    # near-empty tasks. Measured basis (BENCH_RUNS_r5.jsonl, interleaved
+    # A/B on the conv-off mirrors=64 loop, 32 cores): adaptive width +
+    # width-preserving AQE 207.6-222.5 s vs the sizing-conf configs
+    # 229-436 s, and it beat a static session width of 8 in both
+    # interleaved control pairs — the loop's barrier stages are
+    # task-latency-bound, not throughput-bound, at sandbox volumes. NOTE
+    # the conf interplay: a 64 MB AQE advisory on top of a narrowed
+    # round width collapses stages to a single task (measured 320.4 s) —
+    # adaptive width REPLACES sizing-based coalescing, it must not run
+    # under it. Only the per-round session conf moves: the cached
+    # pages/links sides, the partitioned seen base, and the convert
+    # width all keep the session width, so the exchange-free layouts are
+    # untouched. At 10^10-URL rounds n_frontier/rows_per_task exceeds
+    # any cluster width and this is a no-op (= ceiling).
+    SHUFFLE_ROWS_PER_TASK = 50_000
+    # convert-task granularity multiplier (round-4 verdict #3 "finer
+    # convert tasks"): convert width = CONVERT_TASK_FACTOR x session
+    # width, capped at the round's row count
+    CONVERT_TASK_FACTOR = 4
+    # explicit-broadcast ceiling for the per-round parents side of the
+    # child-link join (see _children_links): rounds below this many
+    # frontier rows hint the broadcast outright instead of letting AQE
+    # discover it through a materialized shuffle stage
+    BROADCAST_PARENTS_MAX = 100_000
+    # size of a fresh deletable membership ledger (use_cuckoo)
+    CUCKOO_CAPACITY = 1 << 16
+    CUCKOO_SHARDS = 16
+    # seen-set compaction cadence (rounds); bounds the anti-join chain
+    SEEN_COMPACT_EVERY = 4
+
     def __init__(
         self,
         spark: SparkSession,
@@ -264,25 +300,29 @@ class CrawlEngine:
         use_bloom: bool = False,
         seen_shards: int = 0,
         use_cuckoo: bool = False,
-        cuckoo_capacity: int = 1 << 16,
-        cuckoo_shards: int = 16,
         with_convert: bool = False,
-        num_partitions: int | None = None,
         collect_round_counts: bool = True,
         mirrors: int = 1,
-        eager_fetch_checkpoint: bool | None = None,
-        emit_markdown: bool = True,
         with_llm: bool = False,
         checkpoint_dir: str | None = None,
-        checkpoint_every: int = 1,
         fetch_mode: str = "simulated",
         transport_factory=None,
-        overlap_convert: bool = True,
-        seen_partitioned_min_rows: int | None = None,
-        adaptive_shuffle_width: bool | None = None,
-        shuffle_rows_per_task: int | None = None,
+        seen_partitioned_min_rows: int = 200_000,
         new_seeds: DataFrame | None = None,
     ):
+        """``collect_round_counts`` is accepted and ignored: per-(round,
+        outcome) counts are ``CrawlResult.metrics``. Its frozen callers
+        (``bench.py``, ``perfbench/workloads.py``) still pass it."""
+        # caller-input checks raise (not assert, which ``python -O``
+        # strips) before any Spark work runs
+        if fetch_mode not in ("simulated", "live"):
+            raise ValueError(
+                f"fetch_mode must be 'simulated' or 'live', got {fetch_mode!r}"
+            )
+        if new_seeds is not None and mirrors != 1:
+            raise ValueError(
+                "new_seeds (service mode) cannot be combined with mirrors > 1"
+            )
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
         # 'simulated' resolves fetches against the deterministic graph
@@ -295,7 +335,6 @@ class CrawlEngine:
         # and with_convert converts the REAL payload bytes (image rows
         # yield metadata markdown; the image+caption payload TABLE stays
         # the minted corpus's contract, see convert_stage docstring).
-        assert fetch_mode in ("simulated", "live")
         self.fetch_mode = fetch_mode
         self.transport_factory = transport_factory
         self.use_bloom = use_bloom
@@ -309,55 +348,23 @@ class CrawlEngine:
         # exact anti-join stays the correctness path (a cuckoo is never
         # used to BYPASS the join: after a delete that would re-fetch)
         self.use_cuckoo = use_cuckoo
-        self.cuckoo_capacity = cuckoo_capacity
-        self.cuckoo_shards = cuckoo_shards
         self.cuckoo = None
+        # with_convert: each round's convert output (and its payload-
+        # table merge) is materialized from ONE background driver thread
+        # so the bulk phase runs concurrently with the next rounds'
+        # frontier barriers — wall approaches max(rounds, bulk)
         self.with_convert = with_convert
-        # overlap_convert: materialize each round's convert output (and
-        # its payload-table merge) from ONE background driver thread so
-        # the bulk phase runs concurrently with the next rounds'
-        # frontier barriers — wall approaches max(rounds, bulk). On by
-        # default; the sequential path remains for A/B.
-        self.overlap_convert = overlap_convert and with_convert
-        self.collect_round_counts = collect_round_counts
-        self.seen_compact_every = 4
-        # fetch-output checkpoint mode. True: materialize immediately in
-        # its own job (two jobs per round). False: LAZY — the round's
-        # single count action materializes and stores fetched in one
-        # job. None (default): auto-select on job shape — the round-2
-        # judge bisected the convert-OFF flagship to EAGER (1190.5 vs
-        # 741.7 decisions/s on their host; this session's quiet-host
-        # reruns put the two within ±25% host noise — see BENCH.md),
-        # while the SEQUENTIAL convert-ON scaling shape measured LAZY
-        # +25% (one consumer per round). With overlap_convert the
-        # background thread consumes fetched too, so it must be EAGER —
-        # a lazy checkpoint would race its first materialization across
-        # the two threads.
-        if eager_fetch_checkpoint is None:
-            eager_fetch_checkpoint = not with_convert or self.overlap_convert
-        elif self.overlap_convert and not eager_fetch_checkpoint:
-            # a lazy fetch checkpoint under overlap_convert races its
-            # first materialization between the loop and the bulk
-            # thread — force eager rather than run nondeterministically
-            # (reachable via SPARK_GRAFT_EAGER=0 with default overlap)
-            eager_fetch_checkpoint = True
-        self.eager_fetch_checkpoint = eager_fetch_checkpoint
-        self.emit_markdown = emit_markdown
         # optional LLM postprocess over converted markdown (plans/llm.py):
         # conversions gain the LLMResult struct column (CrawlResponse.llm,
         # reference schemas.py:248-257) — never fails a row
         self.with_llm = with_llm and with_convert
         # lakehouse snapshot checkpointing (SURVEY §7 M6): commit
-        # frontier/seen/log each K rounds + MERGE payloads INTO the
+        # frontier/seen/log every round + MERGE payloads INTO the
         # payload table; a new engine on the same dir resumes from the
         # latest published snapshot
         self.store = SnapshotStore(checkpoint_dir) if checkpoint_dir else None
-        self.checkpoint_every = checkpoint_every
         self.payload_table = (
             os.path.join(checkpoint_dir, "payload_table") if checkpoint_dir else None
-        )
-        self.num_partitions = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions")
         )
         # volume-adaptive seen set (round-4 verdict #1): below this many
         # seen rows the base is a PLAIN checkpoint and the anti-join
@@ -369,10 +376,6 @@ class CrawlEngine:
         # 200k urls ≈ 20 MB of (url, h1, h2) — a comfortable per-round
         # broadcast; past that the partitioned/exchange-free layout
         # wins (r4 measured it at 204 s for the conv-off m64 loop).
-        if seen_partitioned_min_rows is None:
-            seen_partitioned_min_rows = int(
-                os.environ.get("SPARK_GRAFT_SEEN_PARTITIONED_MIN", "200000")
-            )
         self.seen_partitioned_min_rows = seen_partitioned_min_rows
         self._seen_partitioned = False
         # incrementally-maintained seen filter (use_bloom/seen_shards):
@@ -381,54 +384,14 @@ class CrawlEngine:
         self._seen_filter = None
         self._filter_pending: list[DataFrame] = []
         self._filter_rebuilds = 0  # observability: resize-rebuild count
-        # convert-task granularity multiplier for the pipelined path
-        # (round-4 verdict #3 "finer convert tasks")
-        self.convert_task_factor = max(
-            1, int(os.environ.get("SPARK_GRAFT_CONVERT_FACTOR", "4"))
-        )
         # serializes _ckpt_partitioned's session-conf AQE toggle against
         # the background bulk thread (round-4 verdict #9): a bulk job
         # planned inside the toggle window would silently run without
         # AQE. The bulk worker holds the lock while planning/running.
         self._conf_lock = threading.Lock()
-        # Volume-adaptive shuffle width (round-4 verdict #2 "shape-
-        # adaptive, not static"): each round plans its shuffles at
-        #   clamp(8, ceil(n_frontier / shuffle_rows_per_task), session)
-        # so the session width stays the CEILING (on a real cluster:
-        # thousands, set via spark-submit) while small rounds — a real
-        # crawl's first and last rounds are always small, and the whole
-        # sandbox flagship is — stop paying per-task scheduling latency
-        # for near-empty tasks. Measured basis (BENCH_RUNS_r5.jsonl,
-        # interleaved A/B on the conv-off mirrors=64 loop, 32 cores):
-        # adaptive width + width-preserving AQE 207.6-222.5 s vs the
-        # sizing-conf configs 229-436 s, and it beat a static session
-        # width of 8 in both interleaved control pairs — the loop's
-        # barrier stages are task-latency-bound, not throughput-bound,
-        # at sandbox volumes. NOTE the conf interplay: a 64 MB AQE
-        # advisory on top of a narrowed round width collapses stages to
-        # a single task (measured 320.4 s) — adaptive width REPLACES
-        # sizing-based coalescing, it must not run under it.
-        # Only the per-round
-        # session conf moves: the cached pages/links sides, the
-        # partitioned seen base, and the convert width all keep their
-        # explicit num_partitions, so the exchange-free layouts are
-        # untouched. At 10^10-URL rounds n_frontier/rows_per_task
-        # exceeds any cluster width and this is a no-op (= ceiling).
-        if adaptive_shuffle_width is None:
-            adaptive_shuffle_width = (
-                os.environ.get("SPARK_GRAFT_ADAPTIVE_WIDTH", "1") != "0"
-            )
-        self.adaptive_shuffle_width = adaptive_shuffle_width
-        self.shuffle_rows_per_task = shuffle_rows_per_task or int(
-            os.environ.get("SPARK_GRAFT_ROWS_PER_TASK", "50000")
-        )
-        # explicit-broadcast ceiling for the per-round parents side of
-        # the child-link join (see _children_links): rounds below this
-        # many frontier rows hint the broadcast outright instead of
-        # letting AQE discover it through a materialized shuffle stage
-        self.broadcast_parents_max = int(
-            os.environ.get("SPARK_GRAFT_BCAST_PARENTS_MAX", "100000")
-        )
+        # the session width is every explicit width's ceiling: the
+        # cached pages/links, the partitioned seen base, the convert
+        # stage and the final ordinal sort
         self._session_width = int(
             spark.conf.get("spark.sql.shuffle.partitions")
         )
@@ -452,27 +415,16 @@ class CrawlEngine:
         # foreachBatch wrapper; incompatible with benchmark mirroring.
         self.new_seeds = new_seeds
         if new_seeds is not None:
-            assert mirrors == 1, "new_seeds is a service-mode feature"
             self.seeds = new_seeds
         self.mirrors = mirrors
         self.span = 0
-        # factored mirroring (default): BOTH fat tables (pages, links)
-        # stay base-sized and the mirror id is stripped/re-minted on
-        # the (round-sized) probe side of each join — per-round work is
-        # O(round + base), never O(R × corpus). The eager path
-        # (SPARK_GRAFT_MIRROR_MATERIALIZE=1) materializes the R× page
-        # corpus instead; it exists for equivalence tests and A/B runs
-        # (measured: 38M-row persist at m64 cost ~50 s of round-0
-        # warm-up plus an O(corpus) scan/sort inside every round's
-        # fetch join). seeds/robots are tiny and mirror eagerly either
-        # way.
-        self._mirror_materialize = (
-            os.environ.get("SPARK_GRAFT_MIRROR_MATERIALIZE", "0") == "1"
-        )
+        # factored mirroring: BOTH fat tables (pages, links) stay
+        # base-sized and the mirror id is stripped/re-minted on the
+        # (round-sized) probe side of each join — per-round work is
+        # O(round + base), never O(R × corpus). seeds/robots are tiny
+        # and mirror eagerly.
         if mirrors > 1:
             self.span = self.pages.agg(F.max("page_id")).first()[0] + 1
-            if self._mirror_materialize:
-                self.pages = graph.mirror_pages(self.pages, mirrors, self.span)
             self.seeds = graph.mirror_seeds(self.seeds, mirrors, self.span)
             self.robots = graph.mirror_robots(self.robots, mirrors)
 
@@ -546,7 +498,7 @@ class CrawlEngine:
             conf.set("spark.sql.adaptive.enabled", "false")
             try:
                 return (
-                    df.repartition(self.num_partitions, key)
+                    df.repartition(self._session_width, key)
                     .sortWithinPartitions(key)
                     .localCheckpoint()
                 )
@@ -573,7 +525,7 @@ class CrawlEngine:
             # race returns None, and marking the layout promoted then
             # would turn off the broadcast hint AND the promote_now
             # retry while the base is still a plain stats-less
-            # checkpoint — up to seen_compact_every rounds of the 2x
+            # checkpoint — up to SEEN_COMPACT_EVERY rounds of the 2x
             # slower two-sided sort-merge anti-join
             if out is not None:
                 self._seen_partitioned = True
@@ -582,7 +534,7 @@ class CrawlEngine:
 
     def _set_round_width(self, n_frontier: int) -> None:
         """Set ``spark.sql.shuffle.partitions`` for THIS round's plans
-        from the round's live frontier size (see ctor comment). The
+        from the round's live frontier size (see SHUFFLE_ROWS_PER_TASK). The
         session value is the ceiling; the floor of 8 keeps a little
         parallelism and tail tolerance in near-empty rounds. Width is a
         pure perf knob — crawl ordering and the seen set are width-
@@ -590,13 +542,11 @@ class CrawlEngine:
         convert thread holds the conf lock mid-plan we simply skip the
         change this round rather than stall the loop or yank the conf
         out from under a job being planned."""
-        if not self.adaptive_shuffle_width:
-            return
         want = min(
             self._session_width,
             max(
                 min(8, self._session_width),
-                -(-n_frontier // self.shuffle_rows_per_task),
+                -(-n_frontier // self.SHUFFLE_ROWS_PER_TASK),
             ),
         )
         if want == self._round_width:
@@ -615,6 +565,72 @@ class CrawlEngine:
         for df in parts[1:]:
             out = out.unionByName(df)
         return out
+
+    def _bulk(self, conv: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+        """One round's bulk phase, on the bulk-convert thread: checkpoint
+        the convert output, derive the conversions rows and the
+        image+caption payload batch from it, and MERGE the batch into
+        the payload table when there is one. Returns (conversions,
+        batch or None when merged)."""
+        from pyspark import StorageLevel
+
+        from volltextextraktion_selenium_md_spark.functions.classify import (
+            error_page_detected,
+        )
+
+        # the bulk thread's jobs run in the weight-1 "bulk" FAIR pool:
+        # convert tasks fill slots the loop leaves idle but never starve
+        # its barriers
+        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", "bulk")
+        # _conf_lock: never plan/run a bulk job while _ckpt_partitioned
+        # has AQE toggled off on the shared session conf
+        with self._conf_lock:
+            # DISK_ONLY: the convert output carries the payload bytes
+            # (image rows) — at web scale those stream to the sink, they
+            # are never RAM-resident. Memory-level checkpoints here pinned
+            # O(crawl volume) of unified memory and starved the execution
+            # side into per-shuffle spills (measured m128/s64 local[32]:
+            # 439 s -> 345 s, BENCH.md r6); the final payload count
+            # streams from local disk instead.
+            conv = conv.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+            # the reference flags error pages on the CONVERTED markdown
+            # of every response (main.py:433), not only on the LLM path
+            # — CrawlResponse.error_page_detected
+            co = conv.select(
+                "url", "page_id", "markdown", "markdown_length",
+                "converter_used", "truncated", "llm_anonymize",
+                "llm_postprocess", "llm_prompt",
+            ).withColumn(
+                "error_page_detected",
+                error_page_detected(F.col("markdown"), F.lit(None).cast("int")),
+            )
+            if self.with_llm:
+                from volltextextraktion_selenium_md_spark.plans.llm import (
+                    llm_postprocess_stage,
+                )
+
+                # per-request llm_anonymize + llm_postprocess (reference
+                # schemas.py:194-211, honored at main.py:437-457): both
+                # frontier columns ride through the convert stage and
+                # steer the LLM stage row-wise — rows whose request
+                # didn't ask for postprocessing get a NULL llm struct
+                co = llm_postprocess_stage(
+                    co, error_col="error_page_detected",
+                    anonymize_col="llm_anonymize",
+                    enable_col="llm_postprocess",
+                )
+            batch = conv.filter(F.col("image_id").isNotNull()).select(
+                "image_id",
+                F.col("image_bytes").alias("bytes"),
+                "w", "h", "fmt", "caption", "phash",
+            )
+            if self.payload_table is None:
+                return co, batch
+            # land this round's image+caption rows in the payload table:
+            # Iceberg `MERGE INTO payload USING batch ON image_id` (north
+            # rule input_hint shape)
+            merge_into(self.spark, self.payload_table, batch, "image_id")
+            return co, None
 
     def run(self) -> CrawlResult:
         # FAIR pool split (round-4 scaling fix): the loop thread's small
@@ -662,7 +678,7 @@ class CrawlEngine:
         # outputPartitioning under AQE by default
         # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning).
         if self.fetch_mode == "simulated":
-            self.pages = self.pages.repartition(self.num_partitions, "url").persist()
+            self.pages = self.pages.repartition(self._session_width, "url").persist()
             links = self.links.select(*self.LINK_COLS)
             if self.mirrors > 1:
                 # canonical URL is a property of the LINK, not of the
@@ -677,7 +693,7 @@ class CrawlEngine:
                     "canon_url", canonicalize_url(F.col("raw_url"))
                 )
             self.links = links.repartition(
-                self.num_partitions, "src_page_id"
+                self._session_width, "src_page_id"
             ).persist()
         # robots rules re-derive from the parquet view on EVERY round's
         # broadcast build otherwise — persist the (tiny) relation once
@@ -686,11 +702,10 @@ class CrawlEngine:
         logs: list[DataFrame] = []
         payloads: list[DataFrame] = []
         conversions: list[DataFrame] = []
-        round_counts: list[dict] = []
         bulk_futures: list = []
         hygiene_futures: list = []
         self._bulk_pool = None
-        if self.overlap_convert:
+        if self.with_convert:
             from concurrent.futures import ThreadPoolExecutor
 
             self._bulk_pool = ThreadPoolExecutor(
@@ -807,7 +822,7 @@ class CrawlEngine:
             n_seen = 0
         if self.use_cuckoo and self.cuckoo is None:
             self.cuckoo = ShardedCuckooFilter(
-                self.cuckoo_capacity, self.cuckoo_shards
+                self.CUCKOO_CAPACITY, self.CUCKOO_SHARDS
             )
             if rnd == 0:
                 seen_ops.cuckoo_update_df(
@@ -873,7 +888,7 @@ class CrawlEngine:
                 raw = live_fetch(
                     admitted, cfg,
                     transport_factory=self.transport_factory,
-                    num_partitions=self.num_partitions,
+                    num_partitions=self._session_width,
                     passthrough=[
                         "priority", *REQUEST_COLS, "h1", "h2",
                         "sched_slot_ms",
@@ -889,36 +904,22 @@ class CrawlEngine:
                     *[c for c in keep if c != "status_code"], "payload"
                 )
             else:
-                _factored = self.mirrors > 1 and not self._mirror_materialize
                 fetched = (
                     simulated_fetch(
                         admitted, self.pages, cfg,
-                        mirror_span=self.span if _factored else 0,
-                        mirrors=self.mirrors if _factored else 0,
+                        mirror_span=self.span, mirrors=self.mirrors,
                     )
                     .select(*[c for c in keep if c not in ("status_code", "partition_id")])
                     # per-partition lineage: which physical partition
                     # carried the row through the fetch stage
                     .withColumn("partition_id", F.spark_partition_id())
                 )
-            if os.environ.get("SPARK_GRAFT_ROUND_PROFILE"):
-                # driver-side DataFrame construction up to the fetch plan
-                print(f"[round {rnd}] build_fetch {_time.time() - _t_round:.2f}s")
-            if self.eager_fetch_checkpoint:
-                _t_f = _time.time()
-                if os.environ.get("SPARK_GRAFT_EXPLAIN_ROUND") == str(rnd):
-                    fetched.explain("formatted")
-                fetched = fetched.localCheckpoint()
-                if os.environ.get("SPARK_GRAFT_ROUND_PROFILE"):
-                    print(f"[round {rnd}] fetch_ckpt {_time.time() - _t_f:.2f}s")
-            else:
-                # lazy checkpoint: the round's ONE materializing action
-                # (the frontier count below) computes AND stores fetched;
-                # every later consumer (log, retries, children, convert)
-                # reads the stored partitions — one Spark job per round
-                # instead of two, no recompute
-                fetched = fetched.localCheckpoint(eager=False)
-            _t_f2 = _time.time()
+            # eager: the bulk-convert thread consumes fetched too, and a
+            # lazy checkpoint would race its first materialization
+            # across the two threads. With convert off, lazy measured no
+            # faster (perfbench frontier_open, 4 vCPU: 305.8 vs 316.0
+            # decisions/s, medians of 4 interleaved runs)
+            fetched = fetched.localCheckpoint()
 
             log = fetched.select(
                 F.lit(rnd).alias("round"),
@@ -946,7 +947,7 @@ class CrawlEngine:
             # the round's log part stays a LAZY projection of the
             # fetched/frontier checkpoints here; the end-of-round
             # hygiene task re-checkpoints it NARROW (LOG_COLS only) so
-            # the wide fetched blocks can be released (pipelined path)
+            # the wide fetched blocks can be released (convert on)
             log_part = log.select(*LOG_COLS).unionByName(
                 blocked_log.select(*LOG_COLS)
             )
@@ -959,133 +960,40 @@ class CrawlEngine:
                 # ~payload_scale KB (mint + markdown), which AQE cannot
                 # see from the upstream shuffle's input bytes — with
                 # sizing-based coalescing the tiny feature rows would
-                # collapse to a handful of partitions and strand cores
-                # explicit convert width, FINER in the pipelined path
-                # (k x cores): a ~30 s convert task set at mirrors=64
-                # otherwise occupies whole scheduling quanta, and even
-                # under FAIR the loop's barrier stages wait for the
-                # tail of in-flight long tasks. k=4 cuts task length
-                # ~4x at ~ms-level task-launch overhead; the serial
-                # path keeps 1x width (no interleaving to enable).
+                # collapse to a handful of partitions and strand cores.
+                # FINER than the session width (k x cores): a ~30 s
+                # convert task set at mirrors=64 otherwise occupies
+                # whole scheduling quanta, and even under FAIR the
+                # loop's barrier stages wait for the tail of in-flight
+                # long tasks. k=4 cuts task length ~4x at ~ms-level
+                # task-launch overhead.
                 # Never more tasks than the round has rows: each convert
                 # task pays a fixed Python-worker cost (~0.25 s), so a
                 # 3-row service round split 16 ways spent ~4
                 # executor-seconds on empty tasks.
                 conv_width = min(
-                    self.num_partitions * (
-                        self.convert_task_factor if self.overlap_convert else 1
-                    ),
+                    self._session_width * self.CONVERT_TASK_FACTOR,
                     max(1, n_frontier),
                 )
                 conv = convert_stage(
-                    ok.repartition(conv_width),
-                    cfg, emit_markdown=self.emit_markdown,
+                    ok.repartition(conv_width), cfg,
                     payload_col="payload" if self.fetch_mode == "live" else None,
                 )
-                from volltextextraktion_selenium_md_spark.functions.classify import (
-                    error_page_detected,
-                )
+                # PIPELINE the bulk phase against the round loop: round
+                # k's convert depends only on the already-checkpointed
+                # fetch output, so a single background driver thread
+                # materializes it (and lands its payload batch) WHILE
+                # round k+1's frontier stages run. Spark schedules jobs
+                # from both threads concurrently; the small frontier
+                # stages leave most cores idle between barriers and the
+                # convert tasks fill them — engine wall approaches
+                # max(rounds, bulk) instead of rounds + bulk. The convert
+                # mapInPandas is checkpointed ONCE and both consumers
+                # (markdown output, payload batch) derive from the
+                # stored partitions. ONE worker thread keeps payload
+                # MERGEs in round order.
+                bulk_futures.append(self._bulk_pool.submit(self._bulk, conv))
 
-                def _derive(conv_df):
-                    # the reference flags error pages on the CONVERTED
-                    # markdown of every response (main.py:433), not only
-                    # on the LLM path — CrawlResponse.error_page_detected
-                    co = conv_df.select(
-                        "url", "page_id", "markdown", "markdown_length",
-                        "converter_used", "truncated", "llm_anonymize",
-                        "llm_postprocess", "llm_prompt",
-                    ).withColumn(
-                        "error_page_detected",
-                        error_page_detected(
-                            F.col("markdown"), F.lit(None).cast("int")
-                        ),
-                    )
-                    if self.with_llm:
-                        from volltextextraktion_selenium_md_spark.plans.llm import (
-                            llm_postprocess_stage,
-                        )
-
-                        # per-request llm_anonymize + llm_postprocess
-                        # (reference schemas.py:194-211, honored at
-                        # main.py:437-457): both frontier columns ride
-                        # through the convert stage and steer the LLM
-                        # stage row-wise — rows whose request didn't
-                        # ask for postprocessing get a NULL llm struct
-                        co = llm_postprocess_stage(
-                            co, error_col="error_page_detected",
-                            anonymize_col="llm_anonymize",
-                            enable_col="llm_postprocess",
-                        )
-                    b = conv_df.filter(F.col("image_id").isNotNull()).select(
-                        "image_id",
-                        F.col("image_bytes").alias("bytes"),
-                        "w", "h", "fmt", "caption", "phash",
-                    )
-                    return co, b
-
-                if self.overlap_convert:
-                    # PIPELINE the bulk phase against the round loop:
-                    # round k's convert depends only on the already-
-                    # checkpointed fetch output, so a single background
-                    # driver thread materializes it (and lands its
-                    # payload batch) WHILE round k+1's frontier stages
-                    # run. Spark schedules jobs from both threads
-                    # concurrently; the small frontier stages leave most
-                    # cores idle between barriers and the convert tasks
-                    # fill them — engine wall approaches
-                    # max(rounds, bulk) instead of rounds + bulk. The
-                    # convert mapInPandas is checkpointed ONCE and both
-                    # consumers (markdown output, payload batch) derive
-                    # from the stored partitions. ONE worker thread
-                    # keeps payload MERGEs in round order.
-                    def _bulk(c=conv):
-                        # the bulk thread's jobs run in the weight-1
-                        # "bulk" FAIR pool: convert tasks fill slots the
-                        # loop leaves idle but never starve its barriers
-                        self.spark.sparkContext.setLocalProperty(
-                            "spark.scheduler.pool", "bulk"
-                        )
-                        # _conf_lock: never plan/run a bulk job while
-                        # _ckpt_partitioned has AQE toggled off on the
-                        # shared session conf
-                        with self._conf_lock:
-                            # DISK_ONLY: the convert output carries the
-                            # payload bytes (image rows) — at web scale
-                            # those stream to the sink, they are never
-                            # RAM-resident. Memory-level checkpoints here
-                            # pinned O(crawl volume) of unified memory
-                            # and starved the execution side into
-                            # per-shuffle spills (measured m128/s64
-                            # local[32]: 439 s -> 345 s, BENCH.md r6);
-                            # the final payload count streams from local
-                            # disk instead.
-                            from pyspark import StorageLevel
-
-                            conv_ck = c.localCheckpoint(
-                                storageLevel=StorageLevel.DISK_ONLY
-                            )
-                            co, b = _derive(conv_ck)
-                            if self.payload_table is not None:
-                                merge_into(
-                                    self.spark, self.payload_table, b, "image_id"
-                                )
-                                return co, None
-                            return co, b
-
-                    bulk_futures.append(self._bulk_pool.submit(_bulk))
-                else:
-                    conv_out, batch = _derive(conv)
-                    conversions.append(conv_out)
-                    if self.payload_table is not None:
-                        # land this round's image+caption rows in the
-                        # payload table: Iceberg `MERGE INTO payload
-                        # USING batch ON image_id` (north rule
-                        # input_hint shape)
-                        merge_into(self.spark, self.payload_table, batch, "image_id")
-                    else:
-                        payloads.append(batch)
-
-            _t_lc = _time.time()
             # retry re-queue (F8): failed-retryable rows flow into the
             # next round with attempt+1 — backoff becomes a schedule
             # slot, not a sleep
@@ -1133,7 +1041,7 @@ class CrawlEngine:
                     self._children_links(
                         parents,
                         broadcast_parents=(
-                            n_frontier < self.broadcast_parents_max
+                            n_frontier < self.BROADCAST_PARENTS_MAX
                         ),
                     )
                     .select(
@@ -1156,7 +1064,6 @@ class CrawlEngine:
                     )
                 )
             children = seen_ops.with_hashes(first_seen(children, "url", ["depth", "lineage"]))
-            _t_ch = _time.time()
 
             bloom = None
             if self.use_bloom:
@@ -1168,7 +1075,6 @@ class CrawlEngine:
                     self._seen_filter, resume_filter = resume_filter, None
                     self._filter_pending = []
                 filt = self._seen_filter
-                _t_bf = _time.time()
                 if filt is None or n_seen > filt.capacity:
                     # (re)build with 2x headroom. INCREMENTAL
                     # maintenance: each round's delta is folded in at
@@ -1194,9 +1100,6 @@ class CrawlEngine:
                     self._seen_filter = filt
                     self._filter_pending = []
                     self._filter_rebuilds += 1
-                    if os.environ.get("SPARK_GRAFT_ROUND_PROFILE"):
-                        print(f"[round {rnd}] filter_rebuild "
-                              f"{_time.time() - _t_bf:.2f}s")
                 bloom = filt
             # lazy checkpoints truncate lineage without extra jobs: the
             # single frontier count below materializes unseen AND the
@@ -1210,7 +1113,7 @@ class CrawlEngine:
                 # partitioned base must NOT be broadcast or its
                 # exchange-free SMJ shape is wasted. Gated on the LIVE
                 # seen estimate, not just the promotion flag: promotion
-                # happens at compaction time (every seen_compact_every
+                # happens at compaction time (every SEEN_COMPACT_EVERY
                 # rounds), and without the n_seen gate the rounds in
                 # between were broadcasting a million-row base — the
                 # explicit hint overrides every size threshold
@@ -1223,11 +1126,10 @@ class CrawlEngine:
             # NOTE for profile readers: under AQE this lazy checkpoint's
             # toRdd finalizes the plan, which MATERIALIZES every
             # intermediate query stage (children shuffle, first_seen
-            # window, anti-join broadcast builds) — the unseen_plan span
-            # is the round's distributed work, not driver overhead
-            # (measured: analyze+physical-plan alone is 0.03-0.06 s/round
-            # at sf0.1; the remaining ~1.2 s is stage jobs)
-            _t_u = _time.time()
+            # window, anti-join broadcast builds) — building it is the
+            # round's distributed work, not driver overhead (measured:
+            # analyze+physical-plan alone is 0.03-0.06 s/round at sf0.1;
+            # the remaining ~1.2 s is stage jobs)
 
             frontier = (
                 deferred.select(*FRONTIER_COLS, "h1", "h2")
@@ -1235,7 +1137,6 @@ class CrawlEngine:
                 .unionByName(unseen.select(*FRONTIER_COLS, "h1", "h2"))
                 .localCheckpoint(eager=False)
             )
-            _t_fr = _time.time()
             seen_parts.append(unseen.select("url", "h1", "h2"))
             if self.use_bloom:
                 self._filter_pending.append(unseen.select("h1", "h2"))
@@ -1247,12 +1148,12 @@ class CrawlEngine:
                 not self._seen_partitioned
                 and n_seen >= self.seen_partitioned_min_rows
             )
-            if promote_now or (rnd + 1) % self.seen_compact_every == 0:
+            if promote_now or (rnd + 1) % self.SEEN_COMPACT_EVERY == 0:
                 # periodic compaction folds the deltas back into ONE
                 # partitioned+sorted base (at 10^10 scale this is the
                 # lakehouse seen-table MERGE; locally a checkpoint
                 # rewrite) — bounds the anti-join chain depth at
-                # seen_compact_every + 1. Volume-adaptive: small seen
+                # SEEN_COMPACT_EVERY + 1. Volume-adaptive: small seen
                 # sets compact into a plain checkpoint instead. When the
                 # bulk-convert thread is mid-job (it holds _conf_lock
                 # for its whole body so the AQE toggle can't corrupt its
@@ -1260,7 +1161,7 @@ class CrawlEngine:
                 # stall the loop behind a multi-job convert — until the
                 # delta chain hits 2x the compact interval, at which
                 # point we do block (anti-join depth stays bounded).
-                force = len(seen_parts) > 2 * self.seen_compact_every
+                force = len(seen_parts) > 2 * self.SEEN_COMPACT_EVERY
                 base = self._ckpt_seen(
                     self._union_parts(seen_parts), n_seen, blocking=force
                 )
@@ -1270,22 +1171,8 @@ class CrawlEngine:
                     # stores unseen's rows in the new frontier's own
                     # blocks and the cuckoo delta has read them
                     dead_parts, seen_parts = seen_parts, [base]
-            _t_c = _time.time()
             n_frontier = frontier.count()
-            if os.environ.get("SPARK_GRAFT_ROUND_PROFILE"):
-                print(f"[round {rnd}] build_next {_t_c - _t_f2:.2f}s"
-                      f" (log+conv_submit {_t_lc - _t_f2:.2f}s"
-                      f" children_plan {_t_ch - _t_lc:.2f}s"
-                      f" unseen_plan {_t_u - _t_ch:.2f}s"
-                      f" frontier_plan {_t_fr - _t_u:.2f}s"
-                      f" compact {_t_c - _t_fr:.2f}s)"
-                      f" frontier_count {_time.time() - _t_c:.2f}s"
-                      f" n={n_frontier}")
 
-            committing = (
-                self.store is not None
-                and (rnd + 1) % self.checkpoint_every == 0
-            )
             if self.use_cuckoo:
                 # ledger delta applied EXECUTOR-SIDE (seen_ops.
                 # cuckoo_update_df): inserts for this round's first-seen
@@ -1301,7 +1188,7 @@ class CrawlEngine:
                 )
                 seen_ops.cuckoo_update_df(self.cuckoo, ops)
 
-            if committing:
+            if self.store is not None:
                 if self._bulk_pool is not None:
                     # a published snapshot at round k must not outrun
                     # the payload-table merges it implies — wait for
@@ -1312,9 +1199,7 @@ class CrawlEngine:
                     # source blocks are being released.
                     for fut in bulk_futures + hygiene_futures:
                         fut.result()
-                cum_log = logs[0]
-                for df in logs[1:]:
-                    cum_log = cum_log.unionByName(df)
+                cum_log = self._union_parts(logs)
                 blobs = {}
                 if self.use_bloom and bloom is not None:
                     # fold the round delta in so the blob covers exactly
@@ -1345,16 +1230,6 @@ class CrawlEngine:
                           "n_seen_hint": n_seen + n_frontier},
                     blobs=blobs,
                 )
-            if self.collect_round_counts:
-                # one extra driver action per round; benches pass
-                # collect_round_counts=False to skip it
-                counts = {
-                    r["outcome"]: r["n"]
-                    for r in logs[-1].groupBy("outcome").agg(F.count("*").alias("n")).collect()
-                }
-                counts["round"] = rnd
-                counts["frontier_next"] = n_frontier
-                round_counts.append(counts)
             if self.use_bloom and bloom is not None and self._filter_pending:
                 # end-of-round O(delta) fold (non-commit rounds; commit
                 # rounds drained the queue above): MUST land before the
@@ -1362,10 +1237,7 @@ class CrawlEngine:
                 # would read checkpoint blocks that compaction already
                 # unpersisted (localCheckpoint lineage is truncated, so
                 # that fails loud, not silent)
-                _t_fold = _time.time()
-                delta = self._filter_pending[0]
-                for p in self._filter_pending[1:]:
-                    delta = delta.unionByName(p)
+                delta = self._union_parts(self._filter_pending)
                 if isinstance(bloom, seen_ops.SeenSet):
                     bloom.fold_delta_df(delta)
                 else:
@@ -1373,9 +1245,6 @@ class CrawlEngine:
                         delta, bloom, max_partials=8
                     )
                 self._filter_pending = []
-                if os.environ.get("SPARK_GRAFT_ROUND_PROFILE"):
-                    print(f"[round {rnd}] filter_fold "
-                          f"{_time.time() - _t_fold:.2f}s")
             # cheap upper bound is enough for bloom sizing (deferred and
             # retry rows double-count; the bloom is just slightly larger)
             n_seen = n_seen + n_frontier
@@ -1387,14 +1256,13 @@ class CrawlEngine:
             for p in dead_parts:
                 _release_ckpt(p)
             if self._bulk_pool is not None:
-                # pipelined path: re-checkpoint the round's log part
-                # narrow, then release the wide fetched and the consumed
-                # frontier. The single-worker pool sequences this AFTER
-                # the round's convert (which reads fetched); children/
+                # re-checkpoint the round's log part narrow, then
+                # release the wide fetched and the consumed frontier.
+                # The single-worker pool sequences this AFTER the
+                # round's convert (which reads fetched); children/
                 # retries/deferred were stored in the next frontier's
-                # blocks by this round's count. The serial path skips
-                # this: its convert plan is lazy over fetched until the
-                # final materialization.
+                # blocks by this round's count. A convert-off crawl has
+                # no bulk thread and keeps its log parts lazy.
                 def _hygiene(
                     i=log_idx, part=log_part, f=fetched, fr=frontier_cur
                 ):
@@ -1436,8 +1304,7 @@ class CrawlEngine:
         _t_post = _time.time()
         if self._bulk_pool is not None:
             # drain the pipelined convert jobs (re-raises any worker
-            # exception); checkpointed results slot into the same lists
-            # the sequential path fills
+            # exception)
             for fut in bulk_futures:
                 co_ck, batch_ck = fut.result()
                 conversions.append(co_ck)
@@ -1452,15 +1319,13 @@ class CrawlEngine:
             self._bulk_pool.shutdown()
             self._bulk_pool = None
 
-        fetch_log = logs[0]
-        for df in logs[1:]:
-            fetch_log = fetch_log.unionByName(df)
+        fetch_log = self._union_parts(logs)
         # global crawl-order ordinal via range-partitioned sort +
         # per-partition offsets — distributed; the ORDER (round, depth,
         # lineage) is the replay contract, the ordinal is bookkeeping.
         decisions = fetch_log.filter(F.col("outcome") != "blocked")
         ordered = global_ordinal(
-            decisions, ["round", "depth", "lineage"], self.num_partitions
+            decisions, ["round", "depth", "lineage"], self._session_width
         )
         full_log = ordered.unionByName(
             fetch_log.filter(F.col("outcome") == "blocked").withColumn(
@@ -1484,9 +1349,7 @@ class CrawlEngine:
         if self.payload_table is not None and os.path.exists(self.payload_table):
             payload_df = read_merged(self.spark, self.payload_table, "image_id")
         elif payloads:
-            payload_df = payloads[0]
-            for df in payloads[1:]:
-                payload_df = payload_df.unionByName(df)
+            payload_df = self._union_parts(payloads)
 
         # every returned DataFrame bottoms out in (possibly lazy)
         # localCheckpoints, all of which were materialized by the
@@ -1496,21 +1359,14 @@ class CrawlEngine:
             self.links.unpersist()
         self.robots.unpersist()
 
-        conversions_df = None
-        if conversions:
-            conversions_df = conversions[0]
-            for df in conversions[1:]:
-                conversions_df = conversions_df.unionByName(df)
-
         return CrawlResult(
             fetch_log=full_log,
             seen=self._union_parts(seen_parts).select("url"),
             metrics=metrics,
             payloads=payload_df,
             rounds=rnd,
-            round_counts=round_counts,
             partition_metrics=partition_metrics,
-            conversions=conversions_df,
+            conversions=self._union_parts(conversions) if conversions else None,
             round_walls=round_walls,
             post_loop_s=round(_time.time() - _t_post, 3),
         )
