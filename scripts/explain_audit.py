@@ -8,6 +8,9 @@ Checks (fail loudly if a regression sneaks in):
   4. the fetch join does NOT re-shuffle the persisted page corpus
   5. the convert stage is ArrowEvalPython/MapInPandas (vectorized), not
      row-at-a-time PythonUDF
+  6. image near-dup pairs through a banded equi-join, never a nested loop
+  7. the unfiltered seen check (q_seen_anti_join) is one left-anti join
+     with no Python prefilter
 
 Writes EXPLAIN.md. Usage: python scripts/explain_audit.py [sf_dir]
 """
@@ -160,6 +163,20 @@ def main() -> None:
         "equi-join on (band, bucket) behind the max_bucket rank window — "
         "no nested-loop/cartesian pairing anywhere in the plan.",
         p6,
+    ))
+
+    # 7. the unfiltered seen check is one exact anti-join
+    p7 = formatted(Q.q_seen_anti_join(spark, SF))
+    if p7.count("Join type: LeftAnti") != 1:
+        problems.append("q_seen_anti_join is not exactly one left-anti join")
+    if "MapInPandas" in p7 or "BatchEvalPython" in p7:
+        problems.append("unfiltered seen anti-join runs a Python prefilter")
+    sections.append((
+        "Seen anti-join: one exact LeftAnti join",
+        "Without a prefilter, `filter_unseen` is a single left-anti join "
+        "on url; the only Python is the Arrow-batched URL canonicalizer "
+        "upstream of it.",
+        p7,
     ))
 
     out = ["# EXPLAIN — physical-plan audit", "",

@@ -37,7 +37,12 @@ def main() -> None:
     ap.add_argument("--mirrors", type=int, default=1)
     ap.add_argument("--payload-scale", type=int, default=1)
     ap.add_argument("--convert", action="store_true", help="run the convert stage")
-    ap.add_argument("--use-bloom", action="store_true")
+    ap.add_argument(
+        "--use-bloom", action="store_true",
+        help="prefilter seen-set candidates through a sharded Bloom "
+             "filter (one shard per session partition); the exact "
+             "anti-join still decides, so results are unchanged",
+    )
     ap.add_argument(
         "--requests", default=None,
         help="service mode: parquet of CrawlRequest rows (raw_url, "

@@ -29,6 +29,10 @@ from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.plans.convert import convert_stage
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
+from volltextextraktion_selenium_md_spark.functions.lineage import (
+    DOC_POS_WIDTH,
+    segment_col,
+)
 from volltextextraktion_selenium_md_spark.functions.urls import canonicalize_url
 from volltextextraktion_selenium_md_spark.operators.dedup import first_seen
 from volltextextraktion_selenium_md_spark.operators import seen as seen_ops
@@ -84,7 +88,7 @@ def job_frontier(spark, sf_dir, cores, mirrors, scale):
         canonicalize_url(F.col("raw_url")).alias("url"),
         F.col("dst_host").alias("host"),
         F.lit(1).alias("depth"),
-        F.lpad(F.col("doc_pos").cast("string"), 6, "0").alias("lineage"),
+        segment_col(F.col("doc_pos"), DOC_POS_WIDTH).alias("lineage"),
     )
     deduped = seen_ops.with_hashes(first_seen(children, "url", ["depth", "lineage"]))
     seen = seeds.select(canonicalize_url(F.col("raw_url")).alias("url"))

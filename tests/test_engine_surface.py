@@ -19,7 +19,7 @@ from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "volltextextraktion_selenium_md_spark")
-MAX_ENGINE_PARAMS = 15
+MAX_ENGINE_PARAMS = 13
 ENV_KNOBS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_JIT_OPTS"}
 
 

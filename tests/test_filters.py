@@ -1,16 +1,10 @@
-"""Bloom / cuckoo filter unit tests (numpy membership structures)."""
+"""Bloom filter and sharded SeenSet unit tests."""
 
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
-from volltextextraktion_selenium_md_spark.operators.filters import (
-    BloomFilter,
-    CuckooFilter,
-    ShardedCuckooFilter,
-)
+from volltextextraktion_selenium_md_spark.operators.filters import BloomFilter
 
 
 def _keys(n, seed=0):
@@ -44,116 +38,6 @@ def test_bloom_roundtrip_and_union():
     merged = BloomFilter.from_bytes(bf_a.union(bf_b).to_bytes())
     assert merged.contains(a1, a2).all()
     assert merged.contains(b1, b2).all()
-
-
-def test_cuckoo_insert_contains_delete():
-    keys = _keys(2000, 7)
-    cf = CuckooFilter(4000)
-    inserted = cf.insert(keys)
-    assert inserted == len(keys)
-    assert cf.contains(keys).all()
-    # delete half, the rest must remain (deletability — bloom can't)
-    half = keys[:1000]
-    removed = cf.delete(half)
-    assert removed == 1000
-    assert cf.contains(keys[1000:]).all()
-
-
-def test_cuckoo_serialization():
-    keys = _keys(500, 9)
-    cf = CuckooFilter(1000)
-    cf.insert(keys)
-    cf2 = CuckooFilter.from_bytes(cf.to_bytes())
-    assert cf2.contains(keys).all()
-    assert cf2.n_buckets == cf.n_buckets
-
-
-def test_sharded_cuckoo_reads_legacy_blob():
-    """Round-3 ADVICE: a checkpoint blob written by the pre-sharding
-    CuckooFilter (first int64 = n_buckets > 0) loads as a one-shard
-    filter with identical membership; garbage blobs raise a
-    descriptive format error instead of a bare assert."""
-    import pytest
-
-    from volltextextraktion_selenium_md_spark.operators.filters import (
-        ShardedCuckooFilter,
-    )
-
-    keys = _keys(300, 11)
-    legacy = CuckooFilter(600)
-    legacy.insert(keys)
-    wrapped = ShardedCuckooFilter.from_bytes(legacy.to_bytes())
-    assert wrapped.n_shards == 1
-    assert wrapped.contains(keys).all()
-    # round-trips in the NEW format afterwards
-    again = ShardedCuckooFilter.from_bytes(wrapped.to_bytes())
-    assert again.contains(keys).all()
-    with pytest.raises(ValueError, match="incompatible seen_cuckoo"):
-        ShardedCuckooFilter.from_bytes(
-            np.array([-999999, 4], dtype=np.int64).tobytes()
-        )
-
-
-@settings(max_examples=20, deadline=None)
-@given(st.lists(st.integers(-(2**62), 2**62), min_size=1, max_size=200, unique=True))
-def test_cuckoo_property_membership(xs):
-    arr = np.array(xs, dtype=np.int64)
-    cf = CuckooFilter(max(len(xs) * 2, 64))
-    cf.insert(arr)
-    assert cf.contains(arr).all()
-
-
-def test_sharded_cuckoo_matches_driver_side(spark):
-    """cuckoo_update_df (executor-side per-shard delta application) is
-    byte-identical to the driver-side insert/delete path, and the driver
-    never receives key rows — only shard blobs."""
-    from pyspark.sql import functions as F
-
-    from volltextextraktion_selenium_md_spark.operators import seen as seen_ops
-
-    keys = _keys(3000, 11)
-    dels = keys[:400]
-
-    ref = ShardedCuckooFilter(1 << 14, n_shards=16)
-    ref.insert(keys)
-    ref.delete(dels)
-
-    got = ShardedCuckooFilter(1 << 14, n_shards=16)
-    ops = spark.createDataFrame(
-        [(int(k), "i") for k in keys] + [(int(k), "d") for k in dels],
-        "h1 long, op string",
-    )
-    seen_ops.cuckoo_update_df(got, ops)
-    assert got.to_bytes() == ref.to_bytes()
-    assert got.contains(keys[400:]).all()
-
-    rt = ShardedCuckooFilter.from_bytes(got.to_bytes())
-    assert rt.to_bytes() == got.to_bytes()
-    assert rt.contains(keys[400:]).all()
-
-
-def test_bloom_delta_fold_executor_side(spark):
-    """build_bloom_like folds a delta into an existing bloom without a
-    key collect; result contains base ∪ delta."""
-    from pyspark.sql import functions as F
-
-    from volltextextraktion_selenium_md_spark.operators import seen as seen_ops
-
-    base = seen_ops.with_hashes(
-        spark.range(0, 800).select(
-            F.concat(F.lit("b"), F.col("id").cast("string")).alias("url"))
-    )
-    delta = seen_ops.with_hashes(
-        spark.range(800, 1200).select(
-            F.concat(F.lit("b"), F.col("id").cast("string")).alias("url"))
-    )
-    bf = seen_ops.build_bloom(base, n_items=2400)
-    bf = seen_ops.build_bloom_like(delta, bf)
-    both = seen_ops.with_hashes(
-        spark.range(0, 1200).select(
-            F.concat(F.lit("b"), F.col("id").cast("string")).alias("url"))
-    ).select("h1", "h2").toPandas()
-    assert bf.contains(both["h1"].to_numpy(), both["h2"].to_numpy()).all()
 
 
 def test_seenset_delta_fold_executor_side(spark):

@@ -11,16 +11,12 @@ import os
 import shutil
 import tempfile
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
-from volltextextraktion_selenium_md_spark.operators.filters import (
-    BloomFilter,
-    CuckooFilter,
-    ShardedCuckooFilter,
-)
+from volltextextraktion_selenium_md_spark.operators.filters import BloomFilter
+from volltextextraktion_selenium_md_spark.operators.seen import SeenSet
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.sources.lakehouse import (
     SnapshotStore,
@@ -45,6 +41,25 @@ def _decisions(res):
         for r in res.fetch_log.filter(F.col("outcome") != "blocked")
         .select(*KEY).orderBy("ordinal").collect()
     ]
+
+
+def _seen_urls(res):
+    return sorted(r["url"] for r in res.seen.collect())
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark):
+    """(decisions, seen urls) of one uninterrupted default crawl."""
+    res = CrawlEngine(spark, SF).run()
+    return _decisions(res), _seen_urls(res)
+
+
+def _checkpoint_3_rounds(spark, ckpt_dir):
+    CrawlEngine(
+        spark, SF, cfg=CrawlConfig(max_rounds=3),
+        checkpoint_dir=ckpt_dir, use_bloom=True,
+    ).run()
+    return SnapshotStore(ckpt_dir)
 
 
 def test_resume_matches_uninterrupted(spark, ckpt_dir):
@@ -193,104 +208,60 @@ def test_merge_into_crash_after_data_rename(spark, ckpt_dir):
     assert rows == {1: "A2", 2: "b", 9: "z"}
 
 
-def test_filter_state_in_snapshot(spark, ckpt_dir):
-    """Bloom filter bytes stored in the snapshot restore to an identical
-    filter; cuckoo filter round-trips with deletes."""
-    CrawlEngine(
-        spark, SF, cfg=CrawlConfig(max_rounds=2),
-        checkpoint_dir=ckpt_dir, use_bloom=True,
-    ).run()
-    store = SnapshotStore(ckpt_dir)
-    raw = store.read_blob("seen_bloom")
-    bf = BloomFilter.from_bytes(raw)
-    seen = store.read(spark, "seen")
-    h = seen.select("h1", "h2").collect()
-    h1 = np.array([r["h1"] for r in h], dtype=np.int64)
-    h2 = np.array([r["h2"] for r in h], dtype=np.int64)
-    # the snapshot bloom was built from the PREVIOUS round's seen set;
-    # it must contain every url seen up to that round (no false negatives)
-    man = store.manifest()
-    assert man["meta"]["round"] == 1
-    # restored filter answers membership for the keys it was built over
-    prev_seen = store.read(spark, "seen", version=1)
-    ph = prev_seen.select("h1", "h2").collect()
-    if ph:
-        p1 = np.array([r["h1"] for r in ph], dtype=np.int64)
-        p2 = np.array([r["h2"] for r in ph], dtype=np.int64)
-        assert bf.contains(p1, p2).all()
-
-    cf = CuckooFilter(len(h1) or 4)
-    cf.insert(h1.astype(np.uint64))
-    rt = CuckooFilter.from_bytes(cf.to_bytes())
-    assert rt.contains(h1.astype(np.uint64)).all()
-    rt.delete(h1[:2].astype(np.uint64))
-    assert not rt.contains(h1[:2].astype(np.uint64)).any() or True  # fp possible
-
-
-def test_cuckoo_ledger_checkpoint_and_restore(spark, ckpt_dir):
-    """North rule: the deletable cuckoo ledger (insert on first-seen,
-    delete on permanent failure) serializes with every snapshot and an
-    interrupted+resumed run ends with byte-identical ledger state to an
-    uninterrupted run."""
-    full = CrawlEngine(spark, SF, use_cuckoo=True)
-    full.run()
-    want = full.cuckoo.to_bytes()
-
-    eng1 = CrawlEngine(
-        spark, SF, cfg=CrawlConfig(max_rounds=3),
-        checkpoint_dir=ckpt_dir, use_cuckoo=True,
-    )
-    eng1.run()
-    store = SnapshotStore(ckpt_dir)
-    assert "seen_cuckoo" in store.manifest()["blobs"]
-    # the stored blob IS the live ledger state at the commit
-    assert store.read_blob("seen_cuckoo") == eng1.cuckoo.to_bytes()
-
-    eng2 = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_cuckoo=True)
-    eng2.run()
-    assert eng2.cuckoo.to_bytes() == want
-    # permanently-failed urls were deleted: ledger holds fewer entries
-    # than the seen table (404/missing pages exist in this graph)
-    n_seen = store.read(spark, "seen").count()
-    restored = ShardedCuckooFilter.from_bytes(want)
-    occupied = int(sum((s.table != 0).sum() for s in restored.shards))
-    assert 0 < occupied < n_seen
-
-
-def test_sharded_filter_resume_matches(spark, ckpt_dir):
-    """use_bloom + seen_shards: the sharded prefilter path (incl. the
-    seen_shards blob restore on resume) preserves exact decisions."""
-    ref = _decisions(CrawlEngine(spark, SF).run())
-    CrawlEngine(
-        spark, SF, cfg=CrawlConfig(max_rounds=3),
-        checkpoint_dir=ckpt_dir, use_bloom=True, seen_shards=8,
-    ).run()
-    store = SnapshotStore(ckpt_dir)
+def test_sharded_filter_resume_matches(spark, ckpt_dir, uninterrupted):
+    """use_bloom: the seen_shards blob holds one shard per session
+    partition, and resuming from it preserves exact decisions and the
+    exact seen set."""
+    store = _checkpoint_3_rounds(spark, ckpt_dir)
     assert "seen_shards" in store.manifest()["blobs"]
-    res = CrawlEngine(
-        spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True, seen_shards=8,
-    ).run()
-    assert _decisions(res) == ref
-
-
-def test_resume_bloom_blob_seeds_first_round(spark, ckpt_dir):
-    """ADVICE fix: the seen_bloom blob is LOADED on resume (covers the
-    committed seen table exactly) — the first resumed round must not
-    rebuild, and decisions stay exact."""
-    ref = _decisions(CrawlEngine(spark, SF).run())
-    CrawlEngine(
-        spark, SF, cfg=CrawlConfig(max_rounds=3),
-        checkpoint_dir=ckpt_dir, use_bloom=True,
-    ).run()
-    store = SnapshotStore(ckpt_dir)
-    raw = store.read_blob("seen_bloom")
-    bf = BloomFilter.from_bytes(raw)
-    h = store.read(spark, "seen").select("h1", "h2").collect()
-    h1 = np.array([r["h1"] for r in h], dtype=np.int64)
-    h2 = np.array([r["h2"] for r in h], dtype=np.int64)
-    assert bf.contains(h1, h2).all()   # blob covers the committed seen
+    filt = SeenSet.from_bytes(store.read_blob("seen_shards"))
+    assert filt.n_shards == int(spark.conf.get("spark.sql.shuffle.partitions"))
     res = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True).run()
-    assert _decisions(res) == ref
+    assert (_decisions(res), _seen_urls(res)) == uninterrupted
+
+
+def test_resume_bloom_blob_seeds_first_round(spark, ckpt_dir, uninterrupted):
+    """The seen_shards blob committed with a snapshot covers every key
+    of the committed seen table (a missed key would route a seen URL
+    around the anti-join), so a resume LOADS it as the first round's
+    filter instead of rebuilding; decisions stay exact."""
+    store = _checkpoint_3_rounds(spark, ckpt_dir)
+    filt = SeenSet.from_bytes(store.read_blob("seen_shards"))
+    seen = store.read(spark, "seen")
+    definitely_new, maybe_seen = filt.partitioned_prefilter(seen)
+    assert definitely_new.count() == 0
+    assert maybe_seen.count() == seen.count() > 0
+    eng = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True)
+    res = eng.run()
+    assert _decisions(res) == uninterrupted[0]
+    assert eng._filter_rebuilds == 0
+
+
+def test_resume_ignores_retired_filter_blobs(spark, ckpt_dir, uninterrupted):
+    """A store whose manifest lists only the retired filter blobs
+    (``seen_bloom``: monolithic Bloom, ``seen_cuckoo``: cuckoo ledger)
+    resumes under use_bloom to exactly the uninterrupted crawl: the
+    blobs are never read, and the first resumed round rebuilds the
+    sharded filter from the restored seen table."""
+    store = _checkpoint_3_rounds(spark, ckpt_dir)
+    vdir = os.path.join(ckpt_dir, f"v{store.latest()}")
+    os.remove(os.path.join(vdir, "seen_shards.bin"))
+    # junk that parses: an EMPTY shard set — an engine that trusted
+    # either blob would route every seen URL around the anti-join
+    junk = SeenSet({0: BloomFilter(1 << 20)}, 1).to_bytes()
+    for name in ("seen_bloom", "seen_cuckoo"):
+        with open(os.path.join(vdir, f"{name}.bin"), "wb") as f:
+            f.write(junk)
+    man_path = os.path.join(vdir, "manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    man["blobs"] = ["seen_bloom", "seen_cuckoo"]
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    eng = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True)
+    res = eng.run()
+    assert (_decisions(res), _seen_urls(res)) == uninterrupted
+    assert eng._filter_rebuilds >= 1
 
 
 def test_resume_from_pre_request_surface_checkpoint(spark, ckpt_dir):

@@ -72,15 +72,15 @@ def test_incremental_new_seeds_match_replay(spark, tmp_path):
 
 
 def test_incremental_with_filters_and_convert(spark, tmp_path):
-    """Service batches with the full state surface on: bloom prefilter,
-    deletable cuckoo ledger, and the convert stage whose payload table
-    accumulates across batches in the same store."""
+    """Service batches with the full state surface on: the sharded
+    seen-set prefilter (its blob carried between batches) and the
+    convert stage whose payload table accumulates across batches in the
+    same store."""
     cfg = CrawlConfig()
     df1, df2, d1, d2 = _seed_halves(spark)
     store = str(tmp_path / "store")
     kw = dict(
-        checkpoint_dir=store, use_bloom=True, use_cuckoo=True,
-        with_convert=True,
+        checkpoint_dir=store, use_bloom=True, with_convert=True,
     )
     r1 = CrawlEngine(spark, SF_SMALL, cfg, new_seeds=df1, **kw).run()
     n_pay1 = r1.payloads.count() if r1.payloads is not None else 0

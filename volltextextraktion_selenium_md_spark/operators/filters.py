@@ -1,23 +1,22 @@
-"""Probabilistic membership filters (numpy-vectorized, no per-row Python).
+"""Bloom filter over int64 keys (numpy-vectorized, no per-row Python).
 
 The URL-seen set's *correctness* path is always the exact anti-join
-(`seen.py`); these filters only PRUNE candidates before the shuffle.
+(`seen.py`); a Bloom filter only PRUNES candidates before the shuffle.
 A candidate that passes the filter still goes through the anti-join,
 so false positives cost nothing but a join row and false negatives
-cannot occur (standard Bloom property; the cuckoo filter additionally
-supports deletes for retry-requeue bookkeeping per the north rule).
+cannot occur (standard Bloom property).
 
 Keys are 64-bit hashes computed JVM-side with ``F.xxhash64`` (two
 independent seeds -> double hashing h1 + i*h2), so Python never hashes
-strings; the filters operate on int64 numpy arrays only.
+strings; the filter operates on int64 numpy arrays only.
 
 Scale note (10^10 URLs): one monolithic bloom at 1% fp needs ~12 GiB —
-too big to broadcast. The design is *per-partition* filters: the seen
-set is hash-partitioned by url_hash, each partition owns a filter over
-its shard, and candidates are routed by the same partitioner so each
-executor consults only its shard (`seen.SeenSet.partitioned_prefilter`,
-unit-tested at 8+ shards in tests/test_filters.py). In the sandbox the
-shard count is small; the sharding math is identical.
+too big to broadcast. The engine therefore only uses these as the
+SHARDS of `seen.SeenSet`: the seen set is hash-partitioned by url_hash,
+each shard owns a filter over its keys, and candidates are routed by
+the same partitioner so each task consults only its shard
+(`SeenSet.partitioned_prefilter`, unit-tested at 8 shards in
+tests/test_filters.py).
 """
 
 from __future__ import annotations
@@ -88,216 +87,4 @@ class BloomFilter:
         out.m, out.k = self.m, self.k
         out.bits = self.bits | other.bits
         return out
-
-
-class CuckooFilter:
-    """Bucketized cuckoo filter (2 buckets/key, 4 slots/bucket, 16-bit
-    fingerprints) over int64 keys — supports DELETE, which Bloom cannot:
-    retry rows that permanently fail can be evicted so the seen set
-    stays tight across resume cycles."""
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_items: int):
-        n_buckets = 1
-        while n_buckets * self.SLOTS < max(n_items, 4) * 1.3:
-            n_buckets *= 2
-        self.n_buckets = n_buckets
-        self.table = np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
-        self._rng_state = np.uint64(0x853C49E6748FEA9B)
-
-    def _fingerprint(self, h: np.ndarray) -> np.ndarray:
-        fp = ((h >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
-        return np.where(fp == 0, np.uint16(1), fp)
-
-    def _index1(self, h: np.ndarray) -> np.ndarray:
-        return (h & np.uint64(self.n_buckets - 1)).astype(np.int64)
-
-    def _index2(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        # partner bucket = i1 xor hash(fp) (standard partial-key cuckoo)
-        fph = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) & np.uint64(
-            self.n_buckets - 1
-        )
-        return (i1.astype(np.uint64) ^ fph).astype(np.int64)
-
-    def insert(self, h1: np.ndarray) -> int:
-        """Insert keys (scalar loop over slots but numpy per step);
-        returns number inserted (drops on table-full, caller falls back
-        to exact join — correctness unaffected)."""
-        h = np.asarray(h1).astype(np.uint64)
-        fps = self._fingerprint(h)
-        i1s = self._index1(h)
-        inserted = 0
-        for fp, i1 in zip(fps, i1s):
-            if self._insert_one(int(i1), np.uint16(fp)):
-                inserted += 1
-        return inserted
-
-    def _insert_one(self, i1: int, fp: np.uint16) -> bool:
-        i2 = int(self._index2(np.array([i1]), np.array([fp]))[0])
-        for idx in (i1, i2):
-            row = self.table[idx]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        idx = i1
-        for _ in range(self.MAX_KICKS):
-            # PCG step in python ints (explicit mod 2^64 — numpy scalar
-            # overflow would warn on the intended wraparound)
-            self._rng_state = np.uint64(
-                (int(self._rng_state) * 6364136223846793005
-                 + 1442695040888963407) % (1 << 64)
-            )
-            slot = int(self._rng_state >> np.uint64(59)) % self.SLOTS
-            fp, self.table[idx][slot] = self.table[idx][slot], fp
-            idx = int(self._index2(np.array([idx]), np.array([fp]))[0])
-            row = self.table[idx]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        return False
-
-    def contains(self, h1: np.ndarray) -> np.ndarray:
-        h = np.asarray(h1).astype(np.uint64)
-        if len(h) == 0:
-            return np.zeros(0, dtype=bool)
-        fps = self._fingerprint(h)
-        i1 = self._index1(h)
-        i2 = self._index2(i1, fps)
-        in1 = (self.table[i1] == fps[:, None]).any(axis=1)
-        in2 = (self.table[i2] == fps[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete(self, h1: np.ndarray) -> int:
-        h = np.asarray(h1).astype(np.uint64)
-        fps = self._fingerprint(h)
-        i1s = self._index1(h)
-        i2s = self._index2(i1s, fps)
-        removed = 0
-        for fp, i1, i2 in zip(fps, i1s, i2s):
-            for idx in (int(i1), int(i2)):
-                row = self.table[idx]
-                hit = np.nonzero(row == fp)[0]
-                if len(hit):
-                    row[hit[0]] = 0
-                    removed += 1
-                    break
-        return removed
-
-    def to_bytes(self) -> bytes:
-        header = np.array([self.n_buckets], dtype=np.int64).tobytes()
-        return header + self.table.tobytes() + self._rng_state.tobytes()
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "CuckooFilter":
-        n_buckets = int(np.frombuffer(raw[:8], dtype=np.int64)[0])
-        obj = cls.__new__(cls)
-        obj.n_buckets = n_buckets
-        body = raw[8:8 + n_buckets * cls.SLOTS * 2]
-        obj.table = np.frombuffer(body, dtype=np.uint16).reshape(
-            n_buckets, cls.SLOTS
-        ).copy()
-        obj._rng_state = np.frombuffer(raw[8 + n_buckets * cls.SLOTS * 2:], dtype=np.uint64)[0]
-        return obj
-
-
-class ShardedCuckooFilter:
-    """N independent cuckoo shards routed by ``pmod(h1, n_shards)``.
-
-    Why sharding matters here and not just for blooms: bloom partials
-    OR-merge, so a delta fold never needs keys in one place — but
-    cuckoo insertion is stateful (kick chains), so updating ONE
-    monolithic table requires all keys wherever that table lives. With
-    disjoint shards, each shard's delta can be applied independently
-    executor-side (`engine: cuckoo_update_df`): a task receives one
-    shard's current bytes + that shard's delta rows and returns the
-    updated bytes. The driver only ever moves O(filter bytes), never
-    O(round-delta keys) — the 10^10-design-point requirement.
-
-    Deterministic: per-shard inserts/deletes are applied in sorted-h1
-    order and each shard has its own rng state, so blob bytes are
-    identical however the delta rows were partitioned upstream.
-    """
-
-    MAGIC = -847392  # first int64 of the blob; CuckooFilter blobs start
-                     # with n_buckets > 0, so the formats can't collide
-
-    def __init__(self, n_items: int, n_shards: int = 16):
-        self.n_shards = n_shards
-        per = max(n_items // n_shards, 4)
-        self.shards = [CuckooFilter(per) for _ in range(n_shards)]
-
-    def _route(self, h: np.ndarray) -> np.ndarray:
-        h = np.asarray(h, dtype=np.int64)
-        return (np.mod(h, self.n_shards) + self.n_shards) % self.n_shards
-
-    def insert(self, h1: np.ndarray) -> int:
-        h1 = np.asarray(h1, dtype=np.int64)
-        sid = self._route(h1)
-        done = 0
-        for s in np.unique(sid):
-            done += self.shards[int(s)].insert(np.sort(h1[sid == s]))
-        return done
-
-    def delete(self, h1: np.ndarray) -> int:
-        h1 = np.asarray(h1, dtype=np.int64)
-        sid = self._route(h1)
-        done = 0
-        for s in np.unique(sid):
-            done += self.shards[int(s)].delete(np.sort(h1[sid == s]))
-        return done
-
-    def contains(self, h1: np.ndarray) -> np.ndarray:
-        h1 = np.asarray(h1, dtype=np.int64)
-        if len(h1) == 0:
-            return np.zeros(0, dtype=bool)
-        sid = self._route(h1)
-        out = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(sid):
-            mask = sid == s
-            out[mask] = self.shards[int(s)].contains(h1[mask])
-        return out
-
-    def to_bytes(self) -> bytes:
-        parts = [np.array([self.MAGIC, self.n_shards], dtype=np.int64).tobytes()]
-        for bf in self.shards:
-            blob = bf.to_bytes()
-            parts.append(np.array([len(blob)], dtype=np.int64).tobytes())
-            parts.append(blob)
-        return b"".join(parts)
-
-    @classmethod
-    def from_bytes(cls, raw: bytes) -> "ShardedCuckooFilter":
-        magic, n_shards = np.frombuffer(raw[:16], dtype=np.int64)
-        if magic != cls.MAGIC:
-            if magic > 0:
-                # legacy layout (round-3 ADVICE): a checkpoint written
-                # by the pre-sharding CuckooFilter starts with
-                # n_buckets > 0 — wrap it as a single shard (routing
-                # pmod(h, 1) == 0 sends every key to it, so membership
-                # semantics are unchanged)
-                obj = cls.__new__(cls)
-                obj.n_shards = 1
-                obj.shards = [CuckooFilter.from_bytes(raw)]
-                return obj
-            raise ValueError(
-                f"incompatible seen_cuckoo checkpoint blob (magic={int(magic)}): "
-                "neither a ShardedCuckooFilter nor a legacy CuckooFilter "
-                "layout — the checkpoint was written by an unknown format; "
-                "delete the blob to rebuild the ledger from the seen table"
-            )
-        obj = cls.__new__(cls)
-        obj.n_shards = int(n_shards)
-        obj.shards = []
-        off = 16
-        for _ in range(obj.n_shards):
-            blen = int(np.frombuffer(raw[off:off + 8], dtype=np.int64)[0])
-            off += 8
-            obj.shards.append(CuckooFilter.from_bytes(raw[off:off + blen]))
-            off += blen
-        return obj
-
 

@@ -7,16 +7,16 @@ adds the global set. Design:
 - `seen` state = DataFrame (url, h1, h2), hash-partitioned by h1 and
   persisted across rounds; h1/h2 are xxhash64 with two seeds, computed
   JVM-side.
-- `filter_unseen` = left_anti join on `url` — exact, shuffle-hash,
-  scales linearly (both sides partitioned on the same key).
-- optional Bloom prefilter built DISTRIBUTEDLY (per-partition numpy
-  blooms inside a `mapInPandas` pass, tiny binary partials OR-merged on
-  the driver) and applied in `mapInPandas`; it removes the bulk of
-  already-seen candidates before the anti-join shuffle. At 10^10 URLs
-  the bloom is SHARDED per partition — `SeenSet.partitioned_prefilter`
-  below — so no single 12 GiB bitset is ever broadcast.
-- a CuckooFilter mirror supports deletes (permanently-failed rows can
-  be evicted on resume) and serializes into the checkpoint directory.
+- `filter_unseen_parts` = left_anti join on `url` against a BASE plus
+  per-round deltas — exact, and the base side keeps its hash(url)
+  partitioning so the join moves no base rows.
+- optional prefilter (`SeenSet`): per-shard numpy blooms, shard id =
+  pmod(h1, n_shards), built DISTRIBUTEDLY (per-task partial bitsets in
+  a `mapInPandas` pass, OR-merged per shard on the driver) and applied
+  in `mapInPandas`; it routes definitely-new candidates around the
+  anti-join. A task consults only its rows' shards, so no single
+  12 GiB bitset is ever broadcast at 10^10 URLs. The shard blob
+  serializes into the snapshot store (`seen_shards`).
 """
 
 from __future__ import annotations
@@ -33,90 +33,6 @@ from volltextextraktion_selenium_md_spark.operators.filters import BloomFilter
 
 def with_hashes(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("h1", url_hash(url_col)).withColumn("h2", url_hash2(url_col))
-
-
-def build_bloom_like(
-    df: DataFrame, proto: BloomFilter, max_partials: int | None = None
-) -> BloomFilter:
-    """Distributed bloom build with ``proto``'s (m, k): one numpy bloom
-    per partition built inside an Arrow-batched ``mapInPandas`` pass,
-    partial bitsets returned as one binary row per partition; the driver
-    ORs ~P small bitsets and never sees a key — the collect is O(filter
-    bytes), never O(rows). Used both for full builds and for folding a
-    round's DELTA into an existing filter (``proto.union(result)``).
-
-    ``max_partials`` coalesces ``df`` first: each partial blob is a
-    FULL-size bitset, so folding a small delta through many partitions
-    pays O(partitions × m bits) of blob traffic for no parallelism win
-    (measured: 70 s vs 19 s folding a 100k-row delta into a 32M-item
-    bloom at 32 vs 8 partials). Full builds want the parallelism and
-    leave it unset; at genuinely large capacity the sharded ``SeenSet``
-    is the design path (per-shard blobs stay small — its delta fold is
-    flat ~0.5-0.8 s from 1M to 16M seen while monolithic rebuild grows
-    linearly)."""
-    m, k, nbits = proto.m, proto.k, len(proto.bits)
-    if max_partials:
-        df = df.coalesce(max_partials)
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        bf = BloomFilter.__new__(BloomFilter)
-        bf.m, bf.k = m, k
-        bf.bits = np.zeros(nbits, dtype=np.uint64)
-        n = 0
-        for pdf in batches:
-            bf.add(pdf["h1"].to_numpy(), pdf["h2"].to_numpy())
-            n += len(pdf)
-        if n:
-            yield pd.DataFrame({"blob": [bf.to_bytes()]})
-
-    rows = df.select("h1", "h2").mapInPandas(partial, schema="blob binary").collect()
-    merged = proto
-    for r in rows:
-        merged = merged.union(BloomFilter.from_bytes(bytes(r["blob"])))
-    return merged
-
-
-def build_bloom(seen: DataFrame, n_items: int, fp_rate: float = 0.01) -> BloomFilter:
-    """Distributed bloom build in the DataFrame layer (SURVEY §1.4
-    'DataFrame everywhere'). (``df.stat.bloomFilter`` exists but yields
-    a JVM object the Python filters can't consume or serialize.)"""
-    return build_bloom_like(seen, BloomFilter(n_items, fp_rate))
-
-
-def bloom_prefilter(candidates: DataFrame, bloom: BloomFilter) -> DataFrame:
-    """Drop candidates the bloom says are definitely-unseen? No —
-    inverse: keep rows the bloom does NOT contain (definitely new) plus
-    rows it claims seen go to the exact join. Here we split: rows not
-    in bloom are guaranteed unseen and BYPASS the anti-join shuffle;
-    the (small) maybe-seen remainder joins exactly.
-
-    Returns (definitely_new, maybe_seen)."""
-    blob = bloom.to_bytes()
-    spark = candidates.sparkSession
-    b_blob = spark.sparkContext.broadcast(blob)
-    cols = candidates.columns
-
-    def mark(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bf = BloomFilter.from_bytes(b_blob.value)
-        for pdf in batches:
-            hit = bf.contains(pdf["h1"].to_numpy(), pdf["h2"].to_numpy())
-            pdf = pdf.copy()
-            pdf["maybe_seen"] = hit
-            yield pdf
-
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        list(candidates.schema.fields)
-        + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-    marked = candidates.mapInPandas(mark, schema=schema)
-    return (
-        marked.filter(~F.col("maybe_seen")).select(*cols),
-        marked.filter(F.col("maybe_seen")).select(*cols),
-    )
 
 
 class SeenSet:
@@ -289,101 +205,38 @@ class SeenSet:
         )
 
 
-def cuckoo_update_df(cuckoo, ops: DataFrame):
-    """Apply a round's ledger delta to a ShardedCuckooFilter WITHOUT
-    collecting keys to the driver.
-
-    ``ops``: (h1 long, op string) with op ∈ {'i', 'd'} (insert on
-    first-seen, delete on permanent failure — north rule). Each shard's
-    current bytes are broadcast; one executor task per touched shard
-    applies its sorted inserts then sorted deletes and returns the
-    updated bytes. Driver traffic = O(touched_shards × shard_bytes).
-    Byte-identical to the driver-side ``insert``/``delete`` path (same
-    per-shard sorted order, same per-shard rng state)."""
-    from volltextextraktion_selenium_md_spark.operators.filters import (
-        CuckooFilter,
-        ShardedCuckooFilter,
-    )
-
-    assert isinstance(cuckoo, ShardedCuckooFilter)
-    spark = ops.sparkSession
-    b = spark.sparkContext.broadcast(
-        {s: bf.to_bytes() for s, bf in enumerate(cuckoo.shards)}
-    )
-    n_shards = cuckoo.n_shards
-
-    def one_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        s = int(pdf["shard"].iloc[0])
-        bf = CuckooFilter.from_bytes(b.value[s])
-        ins = pdf.loc[pdf["op"] == "i", "h1"].to_numpy(dtype=np.int64)
-        if len(ins):
-            bf.insert(np.sort(ins))
-        dels = pdf.loc[pdf["op"] == "d", "h1"].to_numpy(dtype=np.int64)
-        if len(dels):
-            bf.delete(np.sort(dels))
-        return pd.DataFrame({"shard": [s], "blob": [bf.to_bytes()]})
-
-    rows = (
-        ops.select(
-            F.pmod(F.col("h1"), F.lit(n_shards)).cast("int").alias("shard"),
-            "h1", "op",
-        )
-        .groupBy("shard")
-        .applyInPandas(one_shard, schema="shard int, blob binary")
-        .collect()
-    )
-    from volltextextraktion_selenium_md_spark.operators.filters import (
-        CuckooFilter as _CF,
-    )
-
-    for r in rows:
-        cuckoo.shards[r["shard"]] = _CF.from_bytes(bytes(r["blob"]))
-    b.unpersist()
-    return cuckoo
-
-
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: BloomFilter | None = None,
+    filt: SeenSet | None = None,
 ) -> DataFrame:
-    """Exact unseen filter; bloom only reroutes definitely-new rows
-    around the shuffle (false negatives impossible, so no unseen row is
-    ever dropped; false positives just take the join path)."""
-    if bloom is None:
-        return candidates.join(seen.select("url"), on="url", how="left_anti")
-    if isinstance(bloom, SeenSet):
-        definitely_new, maybe_seen = bloom.partitioned_prefilter(candidates)
-    else:
-        definitely_new, maybe_seen = bloom_prefilter(candidates, bloom)
-    checked = maybe_seen.join(seen.select("url"), on="url", how="left_anti")
-    return definitely_new.unionByName(checked)
+    """Exact unseen filter against one seen relation (a one-part
+    `filter_unseen_parts`)."""
+    return filter_unseen_parts(candidates, [seen], filt)
 
 
 def filter_unseen_parts(
     candidates: DataFrame,
     seen_parts: list[DataFrame],
-    bloom: BloomFilter | None = None,
+    bloom: SeenSet | None = None,
     broadcast_base: bool = False,
 ) -> DataFrame:
-    """`filter_unseen` against a seen set maintained as BASE + DELTAS
-    (round-4 rounds-phase fix): the engine keeps the compacted base
-    hash-partitioned AND sorted on url (partitioning captured through
-    `localCheckpoint`), so the base-side anti-join needs NO exchange
-    and NO sort — the per-round shuffle volume is O(candidates + recent
-    deltas), never O(total seen). Deltas (≤ compact-interval of them)
-    anti-join in sequence; each is round-sized, so AQE broadcasts them.
-    Semantics are identical to the union form: a url is unseen iff it
-    is in no part."""
+    """Exact unseen filter against a seen set maintained as BASE + DELTAS
+    (round-4 rounds-phase fix). ``bloom`` only reroutes definitely-new
+    rows around the joins (false negatives impossible, so no unseen row
+    is ever dropped; false positives just take the join path). The
+    engine keeps the compacted base hash-partitioned AND sorted on url
+    (partitioning captured through `localCheckpoint`), so the base-side
+    anti-join needs NO exchange and NO sort — the per-round shuffle
+    volume is O(candidates + recent deltas), never O(total seen).
+    Deltas (≤ compact-interval of them) anti-join in sequence; each is
+    round-sized, so AQE broadcasts them. Semantics are identical to the
+    union form: a url is unseen iff it is in no part."""
     if bloom is None:
         maybe_seen = candidates
         definitely_new = None
-    elif isinstance(bloom, SeenSet):
-        definitely_new, maybe_seen = bloom.partitioned_prefilter(candidates)
     else:
-        definitely_new, maybe_seen = bloom_prefilter(candidates, bloom)
+        definitely_new, maybe_seen = bloom.partitioned_prefilter(candidates)
     # exactly TWO joins regardless of delta count: base (exchange-free,
     # pre-sorted) + one union of the small deltas (one broadcast build,
     # not one per delta — the chain form paid a growing number of

@@ -32,9 +32,10 @@ Scale notes (10^10-URL design point):
   `localCheckpoint` truncates the iterative lineage each round so plans
   don't grow with round count (on a cluster: checkpoint to the
   lakehouse, see sources/lakehouse.py).
-- seen-set membership = exact left_anti join (linear, co-partitioned)
-  with a distributed-built Bloom prefilter routing definitely-new rows
-  around the shuffle (operators/seen.py).
+- seen-set membership = exact left_anti join (linear, co-partitioned);
+  ``use_bloom`` adds a sharded Bloom prefilter (one shard per session
+  partition, built distributedly) that routes definitely-new rows
+  around the shuffle (operators/seen.py:SeenSet).
 - hot hosts are salted across partitions before the fetch stage
   (operators/politeness.py:salted_repartition); AQE skew-join covers
   the join side.
@@ -286,9 +287,6 @@ class CrawlEngine:
     # frontier rows hint the broadcast outright instead of letting AQE
     # discover it through a materialized shuffle stage
     BROADCAST_PARENTS_MAX = 100_000
-    # size of a fresh deletable membership ledger (use_cuckoo)
-    CUCKOO_CAPACITY = 1 << 16
-    CUCKOO_SHARDS = 16
     # seen-set compaction cadence (rounds); bounds the anti-join chain
     SEEN_COMPACT_EVERY = 4
 
@@ -298,8 +296,6 @@ class CrawlEngine:
         sf_dir: str,
         cfg: CrawlConfig | None = None,
         use_bloom: bool = False,
-        seen_shards: int = 0,
-        use_cuckoo: bool = False,
         with_convert: bool = False,
         collect_round_counts: bool = True,
         mirrors: int = 1,
@@ -337,18 +333,10 @@ class CrawlEngine:
         # the minted corpus's contract, see convert_stage docstring).
         self.fetch_mode = fetch_mode
         self.transport_factory = transport_factory
+        # use_bloom: the sharded seen-set prefilter (seen_ops.SeenSet),
+        # one shard per session partition — per-shard blooms consulted
+        # task-locally; the exact anti-join stays the correctness path
         self.use_bloom = use_bloom
-        # seen_shards > 0: the 10^10-scale sharded prefilter (SeenSet) —
-        # per-shard blooms consulted task-locally — instead of one
-        # monolithic broadcast bloom
-        self.seen_shards = seen_shards
-        # deletable membership ledger (north rule): inserted on first-
-        # seen, DELETED on permanent failure, serialized with every
-        # checkpoint and restored on resume. Bookkeeping only — the
-        # exact anti-join stays the correctness path (a cuckoo is never
-        # used to BYPASS the join: after a delete that would re-fetch)
-        self.use_cuckoo = use_cuckoo
-        self.cuckoo = None
         # with_convert: each round's convert output (and its payload-
         # table merge) is materialized from ONE background driver thread
         # so the bulk phase runs concurrently with the next rounds'
@@ -378,7 +366,7 @@ class CrawlEngine:
         # wins (r4 measured it at 204 s for the conv-off m64 loop).
         self.seen_partitioned_min_rows = seen_partitioned_min_rows
         self._seen_partitioned = False
-        # incrementally-maintained seen filter (use_bloom/seen_shards):
+        # incrementally-maintained seen filter (use_bloom):
         # full builds only on the geometric resize schedule; per-round
         # deltas fold in via executor-side partial bitsets (O(delta))
         self._seen_filter = None
@@ -712,14 +700,8 @@ class CrawlEngine:
                 max_workers=1, thread_name_prefix="bulk-convert"
             )
 
-        from volltextextraktion_selenium_md_spark.operators.filters import (
-            BloomFilter,
-            ShardedCuckooFilter,
-        )
-
         rnd = 0
-        resume_filter = None  # bloom/SeenSet restored from checkpoint blob
-        fresh_seeds = None  # service-mode new_seeds injected on a resume
+        resume_filter = None  # SeenSet restored from the checkpoint blob
         if self.store is not None and self.store.latest() is not None:
             # resume from the latest published snapshot: frontier, seen,
             # cumulative log AND filter state restore exactly; rounds
@@ -761,19 +743,13 @@ class CrawlEngine:
                     "js_escalated", F.lit(None).cast("boolean")
                 )
             logs = [log0.localCheckpoint()]
-            blobs_present = set(man.get("blobs", []))
-            if self.use_bloom:
-                if self.seen_shards > 0 and "seen_shards" in blobs_present:
-                    resume_filter = seen_ops.SeenSet.from_bytes(
-                        self.store.read_blob("seen_shards")
-                    )
-                elif "seen_bloom" in blobs_present:
-                    resume_filter = BloomFilter.from_bytes(
-                        self.store.read_blob("seen_bloom")
-                    )
-            if self.use_cuckoo and "seen_cuckoo" in blobs_present:
-                self.cuckoo = ShardedCuckooFilter.from_bytes(
-                    self.store.read_blob("seen_cuckoo")
+            # a store without a seen_shards blob (crawled without
+            # use_bloom, or written with a retired filter blob format)
+            # resumes with no filter: the first round rebuilds it from
+            # seen_parts, which include a service batch's fresh seeds
+            if self.use_bloom and "seen_shards" in man.get("blobs", []):
+                resume_filter = seen_ops.SeenSet.from_bytes(
+                    self.store.read_blob("seen_shards")
                 )
             if self.new_seeds is not None:
                 # service mode: this batch of CrawlRequests joins the
@@ -805,13 +781,7 @@ class CrawlEngine:
                     # around the anti-join as "definitely new" (crawled
                     # twice). Later rounds rebuild from seen_parts and
                     # are safe either way.
-                    delta = fresh_seeds.select("h1", "h2")
-                    if isinstance(resume_filter, seen_ops.SeenSet):
-                        resume_filter.fold_delta_df(delta)
-                    else:
-                        resume_filter = seen_ops.build_bloom_like(
-                            delta, resume_filter, max_partials=8
-                        )
+                    resume_filter.fold_delta_df(fresh_seeds.select("h1", "h2"))
         else:
             frontier = seen_ops.with_hashes(
                 init_frontier(self.spark, self.seeds)
@@ -820,23 +790,6 @@ class CrawlEngine:
                 self._ckpt_seen(frontier.select("url", "h1", "h2"), 0)
             ]
             n_seen = 0
-        if self.use_cuckoo and self.cuckoo is None:
-            self.cuckoo = ShardedCuckooFilter(
-                self.CUCKOO_CAPACITY, self.CUCKOO_SHARDS
-            )
-            if rnd == 0:
-                seen_ops.cuckoo_update_df(
-                    self.cuckoo,
-                    seen_parts[0].select("h1", F.lit("i").alias("op")),
-                )
-        if self.use_cuckoo and fresh_seeds is not None:
-            # service mode: the batch's surviving requests are first-
-            # seen rows — insert them into the deletable ledger the same
-            # way round-0 seeds are on a fresh crawl
-            seen_ops.cuckoo_update_df(
-                self.cuckoo,
-                fresh_seeds.select("h1", F.lit("i").alias("op")),
-            )
         # one count per round doubles as the loop-exit test AND the seen-
         # cardinality input for bloom sizing — no extra driver actions
         n_frontier = frontier.count()
@@ -1085,18 +1038,14 @@ class CrawlEngine:
                     # between resizes only raises the fp rate (fp rows
                     # still hit the exact anti-join); misses cannot
                     # occur because the fold lands before the delta's
-                    # checkpoint blocks are released.
-                    if self.seen_shards > 0:
-                        filt = seen_ops.SeenSet.build(
-                            self._union_parts(seen_parts),
-                            n_items=max(n_seen, 1024) * 2,
-                            n_shards=self.seen_shards,
-                        )
-                    else:
-                        filt = seen_ops.build_bloom(
-                            self._union_parts(seen_parts),
-                            n_items=max(n_seen, 1024) * 2,
-                        )
+                    # checkpoint blocks are released. One shard per
+                    # session partition: the width the seen base is
+                    # hash-partitioned to.
+                    filt = seen_ops.SeenSet.build(
+                        self._union_parts(seen_parts),
+                        n_items=max(n_seen, 1024) * 2,
+                        n_shards=self._session_width,
+                    )
                     self._seen_filter = filt
                     self._filter_pending = []
                     self._filter_rebuilds += 1
@@ -1169,24 +1118,9 @@ class CrawlEngine:
                     # the folded parts (old base + deltas) die here —
                     # released at end-of-round, AFTER the frontier count
                     # stores unseen's rows in the new frontier's own
-                    # blocks and the cuckoo delta has read them
+                    # blocks
                     dead_parts, seen_parts = seen_parts, [base]
             n_frontier = frontier.count()
-
-            if self.use_cuckoo:
-                # ledger delta applied EXECUTOR-SIDE (seen_ops.
-                # cuckoo_update_df): inserts for this round's first-seen
-                # rows, DELETEs for permanent failures (north rule: the
-                # deletable cuckoo keeps the active set tight; the seen
-                # TABLE keeps them so crawl ordering stays replay-exact).
-                # The driver moves only shard BYTES — never a collect
-                # whose row count is O(round delta).
-                ops = unseen.select("h1", F.lit("i").alias("op")).unionByName(
-                    fetched.filter(
-                        F.col("outcome").isin("failed", "missing")
-                    ).select("h1", F.lit("d").alias("op"))
-                )
-                seen_ops.cuckoo_update_df(self.cuckoo, ops)
 
             if self.store is not None:
                 if self._bulk_pool is not None:
@@ -1201,27 +1135,17 @@ class CrawlEngine:
                         fut.result()
                 cum_log = self._union_parts(logs)
                 blobs = {}
-                if self.use_bloom and bloom is not None:
+                if bloom is not None:
                     # fold the round delta in so the blob covers exactly
                     # the seen table being committed — a resume uses it
                     # as the first round's filter without a rebuild scan.
                     # Folding is executor-side partial-bitset builds
                     # (O(filter bytes) to the driver, never keys)
-                    if isinstance(bloom, seen_ops.SeenSet):
-                        bloom.fold_delta_df(unseen.select("h1", "h2"))
-                        blobs["seen_shards"] = bloom.to_bytes()
-                    else:
-                        bloom = seen_ops.build_bloom_like(
-                            unseen.select("h1", "h2"), bloom,
-                            max_partials=8,
-                        )
-                        blobs["seen_bloom"] = bloom.to_bytes()
+                    bloom.fold_delta_df(unseen.select("h1", "h2"))
+                    blobs["seen_shards"] = bloom.to_bytes()
                     # the commit fold doubles as the round's incremental
-                    # maintenance — adopt it and drain the pending queue
-                    self._seen_filter = bloom
+                    # maintenance — drain the pending queue
                     self._filter_pending = []
-                if self.use_cuckoo:
-                    blobs["seen_cuckoo"] = self.cuckoo.to_bytes()
                 self.store.commit(
                     {"frontier": frontier,
                      "seen": self._union_parts(seen_parts),
@@ -1230,20 +1154,14 @@ class CrawlEngine:
                           "n_seen_hint": n_seen + n_frontier},
                     blobs=blobs,
                 )
-            if self.use_bloom and bloom is not None and self._filter_pending:
+            if bloom is not None and self._filter_pending:
                 # end-of-round O(delta) fold (non-commit rounds; commit
                 # rounds drained the queue above): MUST land before the
                 # hygiene releases below — a delta folded next round
                 # would read checkpoint blocks that compaction already
                 # unpersisted (localCheckpoint lineage is truncated, so
                 # that fails loud, not silent)
-                delta = self._union_parts(self._filter_pending)
-                if isinstance(bloom, seen_ops.SeenSet):
-                    bloom.fold_delta_df(delta)
-                else:
-                    self._seen_filter = seen_ops.build_bloom_like(
-                        delta, bloom, max_partials=8
-                    )
+                bloom.fold_delta_df(self._union_parts(self._filter_pending))
                 self._filter_pending = []
             # cheap upper bound is enough for bloom sizing (deferred and
             # retry rows double-count; the bloom is just slightly larger)
@@ -1251,8 +1169,8 @@ class CrawlEngine:
             # --- block-manager hygiene (10^10-scale): release every
             # block no later plan can read. Seen parts folded into a
             # new compacted base died above (the count stored the
-            # frontier's own copy of unseen; the cuckoo delta has been
-            # applied) — driver-side bookkeeping, no job.
+            # frontier's own copy of unseen) — driver-side bookkeeping,
+            # no job.
             for p in dead_parts:
                 _release_ckpt(p)
             if self._bulk_pool is not None:

@@ -19,9 +19,11 @@ plain parquet with Iceberg's commit discipline:
   appears in the batch are replaced, everything else re-written
   unchanged (Iceberg COW `MERGE INTO t USING b ON t.k = b.k WHEN
   MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT`).
-- **filter state**: the URL-seen Bloom/Cuckoo filter bytes are stored
-  inside the snapshot directory so a resume does not rescan history to
-  rebuild membership state (SURVEY §7 M6).
+- **filter state**: the URL-seen filter's shard bytes (the
+  `seen_shards` blob, written under `use_bloom`) are stored inside the
+  snapshot directory so a resume does not rescan history to rebuild
+  membership state (SURVEY §7 M6). The engine ignores any other blob
+  name a manifest lists.
 
 On a real cluster, swap `SnapshotStore` for `df.writeTo(tbl)` /
 `MERGE INTO` SQL against an Iceberg catalog; the engine call sites are
