@@ -21,6 +21,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "volltextextraktion_selenium_md_spark")
 MAX_ENGINE_PARAMS = 13
 ENV_KNOBS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_JIT_OPTS"}
+# the round loop is split into phase methods; none may grow back into
+# one body
+MAX_METHOD_LINES = 150
 
 
 def _trees(*paths: str):
@@ -62,6 +65,37 @@ def _env_names(tree: ast.AST) -> set[str]:
         if isinstance(key, ast.Constant) and isinstance(key.value, str):
             names.add(key.value)
     return names
+
+
+def test_no_long_function_in_the_round_loop():
+    path = os.path.join(PKG, "plans", "frontier.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    long = {
+        f"{node.name}:{node.lineno}": node.end_lineno - node.lineno + 1
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.end_lineno - node.lineno + 1 > MAX_METHOD_LINES
+    }
+    assert not long, long
+
+
+def test_request_column_contract_has_one_list():
+    from volltextextraktion_selenium_md_spark import oracles, replay
+    from volltextextraktion_selenium_md_spark.plans import frontier
+    from volltextextraktion_selenium_md_spark.schemas import (
+        REQUEST_COL_DEFAULTS,
+        REQUEST_COLS,
+    )
+
+    assert frontier.REQUEST_COLS is REQUEST_COLS
+    # replay and oracles keep their own lists: they are the
+    # independent references the engine is checked against
+    assert tuple(REQUEST_COLS) == replay._REQ_COLS
+    assert REQUEST_COLS == [
+        c.strip() for c in oracles._REQ_SQL_COLS.split(",")
+    ]
+    assert list(REQUEST_COL_DEFAULTS) == [c for c in REQUEST_COLS if c != "mode"]
 
 
 def test_engine_parameter_count():

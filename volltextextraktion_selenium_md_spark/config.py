@@ -124,5 +124,3 @@ class CrawlConfig:
         "BLOCKED": 10,
     })
 
-
-DEFAULT_CONFIG = CrawlConfig()

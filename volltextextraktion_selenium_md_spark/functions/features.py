@@ -53,7 +53,6 @@ _SKIP_OPEN_RE = re.compile(r"<(script|style|noscript)\b", re.I)
 _SKIP_CLOSE_RES = {
     n: re.compile(rf"</{n}\s*>", re.I) for n in ("script", "style", "noscript")
 }
-_WS_RE = re.compile(r"\s+")
 
 # content-root selector list (preflight.py:101) as a structural probe:
 # the named tags, or an id/role attribute equal to one of the named ids

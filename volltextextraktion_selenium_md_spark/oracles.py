@@ -39,8 +39,9 @@ from volltextextraktion_selenium_md_spark.plans import queries as Q
 
 # --- shared CTE fragments ----------------------------------------------------
 
-# full per-request surface carried by every frontier row (mirror of
-# plans/frontier.py REQUEST_COLS; frontier_init hash-checks them all)
+# full per-request surface carried by every frontier row (an independent
+# copy of schemas.py REQUEST_COLS, pinned equal by
+# tests/test_engine_surface.py; frontier_init hash-checks them all)
 _REQ_SQL_COLS = (
     "mode, js_strategy, llm_anonymize, timeout_ms, retries, "
     "llm_postprocess, extract_links, html_converter, media_policy, "

@@ -31,6 +31,10 @@ from volltextextraktion_selenium_md_spark.functions.classify import (
 )
 from volltextextraktion_selenium_md_spark.functions.mime import pick_user_agent
 from volltextextraktion_selenium_md_spark.functions.urls import redirect_flag
+from volltextextraktion_selenium_md_spark.schemas import (
+    REQUEST_COL_DEFAULTS,
+    REQUEST_COLS,
+)
 
 # Column-tree memo for the fetch stage's derived expressions. Column
 # CONSTRUCTION is driver-side py4j work — the classify CASE chain alone
@@ -507,24 +511,14 @@ def live_decisions(fetched: DataFrame, cfg: CrawlConfig) -> DataFrame:
     )
 
 
-LINKS_SCHEMA = (
-    "p_url string, p_depth int, p_lineage string, p_priority int, "
-    "p_mode string, p_js_strategy string, p_llm_anonymize boolean, "
-    "p_timeout_ms int, p_retries int, p_llm_postprocess boolean, "
-    "p_extract_links boolean, p_html_converter string, "
-    "p_media_policy string, p_max_bytes int, p_trafilatura_clean boolean, "
-    "p_proxy string, p_allow_insecure_ssl boolean, p_llm_prompt string, "
-    "doc_pos int, raw_url string, text string"
-)
-
-# request-settings columns a parent hands to its children (mirror of
-# plans/frontier.py REQUEST_COLS; kept here to avoid a circular import)
-_REQ_COLS = (
-    "mode", "js_strategy", "llm_anonymize", "timeout_ms", "retries",
-    "llm_postprocess", "extract_links", "html_converter", "media_policy",
-    "max_bytes", "trafilatura_clean", "proxy", "allow_insecure_ssl",
-    "llm_prompt",
-)
+# parent columns a fetched page hands to its child links: the request
+# settings ride as p_<col> with their shared types (schemas.py)
+LINKS_SCHEMA = ", ".join([
+    "p_url string", "p_depth int", "p_lineage string", "p_priority int",
+    "p_mode string",
+    *[f"p_{c} {dtype}" for c, (dtype, _) in REQUEST_COL_DEFAULTS.items()],
+    "doc_pos int", "raw_url string", "text string",
+])
 
 
 def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
@@ -550,7 +544,7 @@ def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
         for pdf in batches:
             rows = {k: [] for k in (
                 "p_url", "p_depth", "p_lineage", "p_priority",
-                *[f"p_{c}" for c in _REQ_COLS],
+                *[f"p_{c}" for c in REQUEST_COLS],
                 "doc_pos", "raw_url", "text")}
             for r in pdf.to_dict("records"):
                 payload = r["payload"]
@@ -563,7 +557,7 @@ def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
                     rows["p_depth"].append(r["depth"])
                     rows["p_lineage"].append(r["lineage"])
                     rows["p_priority"].append(r["priority"])
-                    for c in _REQ_COLS:
+                    for c in REQUEST_COLS:
                         rows[f"p_{c}"].append(r.get(c))
                     rows["doc_pos"].append(pos)
                     rows["raw_url"].append(absolute)
@@ -579,13 +573,13 @@ def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
             segment_col(F.col("doc_pos"), DOC_POS_WIDTH),
         ).alias("lineage"),
         F.col("p_priority").alias("priority"),
-        *[F.col(f"p_{c}").alias(c) for c in _REQ_COLS],
+        *[F.col(f"p_{c}").alias(c) for c in REQUEST_COLS],
         F.lit(0).alias("attempt"),
         F.lit(next_round).alias("round_added"),
     )
     return canon.select(
         "url", url_host(F.col("url")).alias("host"), "depth", "lineage",
-        "priority", *_REQ_COLS, "attempt", "round_added",
+        "priority", *REQUEST_COLS, "attempt", "round_added",
     )
 
 

@@ -13,6 +13,18 @@ round k:  frontier --robots--> allowed | blocked
           --seen anti-join--> unseen
           frontier(k+1) = deferred ∪ retries(attempt+1) ∪ unseen
 
+``CrawlEngine`` runs it in named phases (``_run_impl``): ``_prep_tables``
+persists the graph tables and ``_restore`` loads the starting point
+(fresh seeds, a resumed snapshot, or a snapshot plus a service batch).
+Each ``_round`` then runs robots, budget and slots (``_politeness``),
+the fetch stage and the round's log part (``_fetch``; ``_convert``
+hands the bulk phase to its thread), children plus first-seen dedup
+(``_children``), the seen filter and anti-join (``_unseen``), the next
+frontier, the seen delta and compaction (``_compact_seen``), and then,
+in this order: the frontier count, the seen filter's one fold,
+``_commit`` and ``_hygiene``. ``_endgame`` drains the bulk thread and
+assigns the global ordinal.
+
 The fetch stage is either the simulated lookup join (deterministic,
 oracle-checkable) or the LIVE network stage (fetch_mode='live': salted
 mapInPandas, per-partition client + thread pool, children extracted
@@ -83,51 +95,12 @@ from volltextextraktion_selenium_md_spark.plans.fetch import (
     live_fetch,
     simulated_fetch,
 )
-
-# per-request settings every frontier row carries (reference
-# CrawlRequest, app/schemas.py); a crawl loop re-POSTs children with
-# the parent request's settings, so children inherit all of them.
-# Column -> reference field: html_converter (schemas.py:44-53),
-# media_policy (media_conversion_policy, :156-170 area), max_bytes
-# (:156-170), trafilatura_clean (trafilatura_clean_markdown, :55-63),
-# proxy / allow_insecure_ssl (:105-115), llm_prompt (llm_clean_prompt,
-# :206-226). Each is resolved per-request at its stage: convert reads
-# html_converter/media_policy/max_bytes/trafilatura_clean
-# (plans/convert.py), the live transport reads
-# proxy/allow_insecure_ssl/timeout_ms/max_bytes/retries
-# (plans/fetch.py), the LLM stage reads
-# llm_anonymize/llm_postprocess/llm_prompt (plans/llm.py).
-REQUEST_COLS = [
-    "mode", "js_strategy", "llm_anonymize", "timeout_ms", "retries",
-    "llm_postprocess", "extract_links", "html_converter", "media_policy",
-    "max_bytes", "trafilatura_clean", "proxy", "allow_insecure_ssl",
-    "llm_prompt",
-]
-
-# (spark type, default) for request columns absent from an input — a
-# bare seed frame or a checkpoint written before the column existed.
-# Defaults are the REFERENCE request defaults where it has one
-# (js_strategy 'speed', llm_anonymize/llm_postprocess false; extract_
-# links true is the crawl default — a crawl means following links);
-# NULL where NULL means "resolve against global config at the stage"
-# (timeout_ms, retries, max_bytes, trafilatura_clean,
-# allow_insecure_ssl) or "not set" (html_converter, media_policy,
-# proxy, llm_prompt). 'mode' is required input and has no default.
-REQUEST_COL_DEFAULTS: dict[str, tuple[str, object]] = {
-    "js_strategy": ("string", "speed"),
-    "llm_anonymize": ("boolean", False),
-    "timeout_ms": ("int", None),
-    "retries": ("int", None),
-    "llm_postprocess": ("boolean", False),
-    "extract_links": ("boolean", True),
-    "html_converter": ("string", None),
-    "media_policy": ("string", None),
-    "max_bytes": ("int", None),
-    "trafilatura_clean": ("boolean", None),
-    "proxy": ("string", None),
-    "allow_insecure_ssl": ("boolean", None),
-    "llm_prompt": ("string", None),
-}
+# the per-request column contract (schemas.py); importers of the engine
+# take REQUEST_COLS from here
+from volltextextraktion_selenium_md_spark.schemas import (
+    REQUEST_COL_DEFAULTS,
+    REQUEST_COLS,
+)
 
 FRONTIER_COLS = [
     "url", "host", "depth", "lineage", "priority", *REQUEST_COLS,
@@ -213,29 +186,30 @@ def _release_ckpt(df: DataFrame | None) -> None:
         pass
 
 
+def with_request_cols(df: DataFrame) -> DataFrame:
+    """``df`` with every absent REQUEST_COL but the required ``mode``
+    added as its reference request default / NULL-means-config sentinel
+    (REQUEST_COL_DEFAULTS, see its comment for the per-field reference
+    citations): a seed frame may carry any subset of them, and a
+    checkpoint written before a column existed lacks it."""
+    have = set(df.columns)
+    for name in REQUEST_COLS:
+        if name != "mode" and name not in have:
+            dtype, default = REQUEST_COL_DEFAULTS[name]
+            df = df.withColumn(name, F.lit(default).cast(dtype))
+    return df
+
+
 def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> DataFrame:
     """Seed rows -> canonical frontier (depth 0), first-seen deduped in
     seed order (reference's per-page order-preserving dedup semantics,
     app/utils.py:48-55, applied to the seed list)."""
     src = seeds_df if seeds_df is not None else graph.seeds(spark)
-    # every REQUEST_COL rides from the seed frame when present; absent
-    # columns take the reference request default / NULL-means-config
-    # sentinel from REQUEST_COL_DEFAULTS (see its comment for the
-    # per-field reference citations)
-    req_exprs = [F.col("mode")]
-    for name in REQUEST_COLS:
-        if name == "mode":
-            continue
-        if name in src.columns:
-            req_exprs.append(F.col(name))
-        else:
-            dtype, default = REQUEST_COL_DEFAULTS[name]
-            req_exprs.append(F.lit(default).cast(dtype).alias(name))
-    seeds = src.select(
+    seeds = with_request_cols(src).select(
         canonicalize_url(F.col("raw_url")).alias("url"),
         F.col("seed_idx"),
         F.col("priority"),
-        *req_exprs,
+        *REQUEST_COLS,
     )
     f = seeds.select(
         "url",
@@ -342,6 +316,22 @@ class CrawlEngine:
         # so the bulk phase runs concurrently with the next rounds'
         # frontier barriers — wall approaches max(rounds, bulk)
         self.with_convert = with_convert
+        # the fetch stage's output columns: every log column but
+        # status_code (the log renames page_status), the request
+        # settings, the seen hashes and the convert features. The
+        # simulated fetch adds partition_id after this projection; the
+        # live stage carries its own plus the payload bytes.
+        keep = [
+            c for c in dict.fromkeys(
+                LOG_COLS[1:]
+                + ["page_status", "priority", *REQUEST_COLS, "h1", "h2"]
+                + (CONVERT_FEATURES if with_convert else [])
+            ) if c != "status_code"
+        ]
+        self._fetch_cols = (
+            keep + ["payload"] if fetch_mode == "live"
+            else [c for c in keep if c != "partition_id"]
+        )
         # optional LLM postprocess over converted markdown (plans/llm.py):
         # conversions gain the LLMResult struct column (CrawlResponse.llm,
         # reference schemas.py:248-257) — never fails a row
@@ -365,13 +355,6 @@ class CrawlEngine:
         # broadcast; past that the partitioned/exchange-free layout
         # wins (r4 measured it at 204 s for the conv-off m64 loop).
         self.seen_partitioned_min_rows = seen_partitioned_min_rows
-        self._seen_partitioned = False
-        # incrementally-maintained seen filter (use_bloom):
-        # full builds only on the geometric resize schedule; per-round
-        # deltas fold in via executor-side partial bitsets (O(delta))
-        self._seen_filter = None
-        self._filter_pending: list[DataFrame] = []
-        self._filter_rebuilds = 0  # observability: resize-rebuild count
         # serializes _ckpt_partitioned's session-conf AQE toggle against
         # the background bulk thread (round-4 verdict #9): a bulk job
         # planned inside the toggle window would silently run without
@@ -506,7 +489,7 @@ class CrawlEngine:
         ``blocking=False`` and the bulk thread holds the conf lock —
         compaction timing is a perf detail, so the caller just retries
         next round (bounded by the force cap at the call site)."""
-        if self._seen_partitioned or n_hint >= self.seen_partitioned_min_rows:
+        if self._seen_large(n_hint):
             out = self._ckpt_partitioned(df, blocking=blocking)
             # flip the flag only once a partitioned base actually
             # exists: a non-blocking attempt that lost the conf-lock
@@ -519,6 +502,13 @@ class CrawlEngine:
                 self._seen_partitioned = True
             return out
         return df.localCheckpoint()
+
+    def _seen_large(self, n_seen: int) -> bool:
+        """Is the seen base large: already promoted to the partitioned
+        layout, or at/over its threshold? A large base is kept
+        hash-partitioned + sorted and anti-joined exchange-free; a small
+        one is a plain checkpoint the anti-join broadcasts."""
+        return self._seen_partitioned or n_seen >= self.seen_partitioned_min_rows
 
     def _set_round_width(self, n_frontier: int) -> None:
         """Set ``spark.sql.shuffle.partitions`` for THIS round's plans
@@ -654,29 +644,45 @@ class CrawlEngine:
                 self._bulk_pool = None
 
     def _run_impl(self) -> CrawlResult:
-        cfg = self.cfg
-        # pages/links are temp-view-backed (window + explode under the
-        # hood); persist once so rounds don't re-derive them — the
-        # lakehouse-table analogue at 10^10 scale. BOTH sides of the
-        # per-round joins are persisted hash-partitioned on their join
-        # key (pages on url for the fetch join, links on src_page_id
-        # for the child expansion), so each round shuffles ONLY the
-        # (much smaller) frontier side — the co-located-join pattern
-        # (bucketed table at lakehouse scale). Cached plans keep their
-        # outputPartitioning under AQE by default
-        # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning).
+        self._prep_tables()
+        self._restore()
+        # service mode: each request batch gets its own max_rounds
+        # budget relative to the resumed round (the service serves each
+        # POST in full); a plain resume keeps the absolute budget — it
+        # is the SAME interrupted crawl continuing
+        rnd_limit = (
+            self._rnd + self.cfg.max_rounds if self.new_seeds is not None
+            else self.cfg.max_rounds
+        )
+        while self._rnd < rnd_limit and self._n_frontier > 0:
+            t_round = _time.time()
+            self._round()
+            self._round_walls.append(round(_time.time() - t_round, 3))
+            self._rnd += 1
+        return self._endgame()
+
+    def _prep_tables(self) -> None:
+        """Persist the graph tables every round reads. pages/links are
+        temp-view-backed (window + explode under the hood); persist once
+        so rounds don't re-derive them — the lakehouse-table analogue at
+        10^10 scale. BOTH sides of the per-round joins are persisted
+        hash-partitioned on their join key (pages on url for the fetch
+        join, links on src_page_id for the child expansion), so each
+        round shuffles ONLY the (much smaller) frontier side — the
+        co-located-join pattern (bucketed table at lakehouse scale).
+        Cached plans keep their outputPartitioning under AQE by default
+        (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning)."""
         if self.fetch_mode == "simulated":
             self.pages = self.pages.repartition(self._session_width, "url").persist()
             links = self.links.select(*self.LINK_COLS)
             if self.mirrors > 1:
-                # canonical URL is a property of the LINK, not of the
-                # crawl round — compute it once on the base table (the
-                # lakehouse would store it at link-extraction time) and
-                # let _children_links insert the mirror token into the
-                # canonical form. m=1 keeps the in-loop canonicalize:
-                # a partial crawl touches far fewer links than the
-                # table holds, so precomputing all of them would be
-                # net-negative there.
+                # canonical URL is a property of the LINK, not of the crawl
+                # round — compute it once on the base table (the lakehouse
+                # would store it at link-extraction time) and let
+                # _children_links insert the mirror token into the canonical
+                # form. m=1 keeps the in-loop canonicalize: a partial crawl
+                # touches far fewer links than the table holds, so precomputing
+                # all of them would be net-negative there.
                 links = links.withColumn(
                     "canon_url", canonicalize_url(F.col("raw_url"))
                 )
@@ -687,11 +693,26 @@ class CrawlEngine:
         # broadcast build otherwise — persist the (tiny) relation once
         self.robots = self.robots.persist()
         self.robots.count()
-        logs: list[DataFrame] = []
-        payloads: list[DataFrame] = []
-        conversions: list[DataFrame] = []
-        bulk_futures: list = []
-        hygiene_futures: list = []
+
+    def _restore(self) -> None:
+        """Reset the round loop's state and load its starting point: a
+        fresh crawl from the seeds, or the latest published snapshot
+        (plus a service batch's seeds when ``new_seeds`` is set). Ends
+        with the frontier count the loop's first exit test reads."""
+        # the round loop's state — the phase methods read and advance it
+        self._rnd = 0
+        self._logs: list[DataFrame] = []  # per-round fetch-log parts
+        self._bulk_futures: list = []  # pipelined convert/merge jobs
+        self._hygiene_futures: list = []  # narrow log re-checkpoints
+        self._round_walls: list[float] = []
+        # seen set = BASE + DELTAS (filter_unseen_parts); the base is in
+        # the partitioned layout once _seen_large promoted it
+        self._seen_partitioned = False
+        # incrementally-maintained seen filter (use_bloom): full builds
+        # only on the geometric resize schedule; each round's delta
+        # folds in via executor-side partial bitsets (O(delta))
+        self._seen_filter: seen_ops.SeenSet | None = None
+        self._filter_rebuilds = 0  # observability: resize-rebuild count
         self._bulk_pool = None
         if self.with_convert:
             from concurrent.futures import ThreadPoolExecutor
@@ -699,545 +720,467 @@ class CrawlEngine:
             self._bulk_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="bulk-convert"
             )
-
-        rnd = 0
-        resume_filter = None  # SeenSet restored from the checkpoint blob
         if self.store is not None and self.store.latest() is not None:
-            # resume from the latest published snapshot: frontier, seen,
-            # cumulative log AND filter state restore exactly; rounds
-            # continue from where the previous process died — no rescan
-            # of history to rebuild membership state
-            man = self.store.manifest()
-            rnd = man["meta"]["round"] + 1
-            frontier = self.store.read(self.spark, "frontier")
-            # checkpoint written before a request column existed —
-            # backfill EVERY missing REQUEST_COL with its reference
-            # default / NULL sentinel (the round loop selects all of
-            # them: keep list, retries re-queue, the extract_links
-            # parent filter — a partial frontier would raise
-            # AnalysisException on the first round after resume)
-            for name in REQUEST_COLS:
-                if name != "mode" and name not in frontier.columns:
-                    dtype, default = REQUEST_COL_DEFAULTS[name]
-                    frontier = frontier.withColumn(
-                        name, F.lit(default).cast(dtype)
-                    )
-            if self.new_seeds is None:
-                # service mode checkpoints the frontier once, after the
-                # union with the batch's seeds below
-                frontier = frontier.localCheckpoint()
-            # seen set = BASE + DELTAS: above the volume threshold the
-            # base is kept hash(url)-partitioned + sorted through its
-            # checkpoint, so each round's anti-join moves no base rows
-            # (filter_unseen_parts); small bases stay plain and the
-            # anti-join broadcasts them
-            n_seen = man["meta"].get("n_seen_hint", 1024)
-            seen_parts = [
-                self._ckpt_seen(self.store.read(self.spark, "seen"), n_seen)
-            ]
-            log0 = self.store.read(self.spark, "fetch_log")
-            if "js_escalated" not in log0.columns:
-                # checkpoint written before the escalation-ladder column
-                # existed — unknown for historic rows
-                log0 = log0.withColumn(
-                    "js_escalated", F.lit(None).cast("boolean")
-                )
-            logs = [log0.localCheckpoint()]
-            # a store without a seen_shards blob (crawled without
-            # use_bloom, or written with a retired filter blob format)
-            # resumes with no filter: the first round rebuilds it from
-            # seen_parts, which include a service batch's fresh seeds
-            if self.use_bloom and "seen_shards" in man.get("blobs", []):
-                resume_filter = seen_ops.SeenSet.from_bytes(
-                    self.store.read_blob("seen_shards")
-                )
-            if self.new_seeds is not None:
-                # service mode: this batch of CrawlRequests joins the
-                # PERSISTENT crawl. Exact anti-join against the restored
-                # seen table drops already-extracted URLs (the service's
-                # fast path); survivors enter the frontier at depth 0
-                # and are committed to the seen set immediately, exactly
-                # like round-0 seeds of a fresh crawl (replay twin:
-                # replay_crawl(seeds=..., initial_seen=..., start_round=...))
-                nf = seen_ops.with_hashes(
-                    init_frontier(self.spark, self.new_seeds)
-                ).withColumn("round_added", F.lit(rnd))
-                fresh_seeds = seen_ops.filter_unseen_parts(
-                    nf, seen_parts,
-                    broadcast_base=(
-                        not self._seen_partitioned
-                        and n_seen <= self.seen_partitioned_min_rows
-                    ),
-                ).select(*frontier.columns).localCheckpoint()
-                frontier = frontier.unionByName(
-                    fresh_seeds
-                ).localCheckpoint()
-                seen_parts.append(fresh_seeds.select("url", "h1", "h2"))
-                if resume_filter is not None:
-                    # the restored filter blob covers the RESTORED seen
-                    # table only — fold the batch's surviving seeds in,
-                    # or the first post-resume round's prefilter would
-                    # route a child link equal to a same-batch seed URL
-                    # around the anti-join as "definitely new" (crawled
-                    # twice). Later rounds rebuild from seen_parts and
-                    # are safe either way.
-                    resume_filter.fold_delta_df(fresh_seeds.select("h1", "h2"))
+            self._resume()
         else:
-            frontier = seen_ops.with_hashes(
+            self._frontier = seen_ops.with_hashes(
                 init_frontier(self.spark, self.seeds)
             ).localCheckpoint()
-            seen_parts = [
-                self._ckpt_seen(frontier.select("url", "h1", "h2"), 0)
+            self._seen_parts = [
+                self._ckpt_seen(self._frontier.select("url", "h1", "h2"), 0)
             ]
-            n_seen = 0
+            self._n_seen = 0
         # one count per round doubles as the loop-exit test AND the seen-
-        # cardinality input for bloom sizing — no extra driver actions
-        n_frontier = frontier.count()
-        n_seen = n_seen or n_frontier
-        round_walls: list[float] = []
-        # service mode: each request batch gets its own max_rounds
-        # budget relative to the resumed round (the service serves each
-        # POST in full); a plain resume keeps the absolute budget — it
-        # is the SAME interrupted crawl continuing
-        rnd_limit = (
-            rnd + cfg.max_rounds if self.new_seeds is not None
-            else cfg.max_rounds
-        )
-        while rnd < rnd_limit and n_frontier > 0:
-            _t_round = _time.time()
-            # the loop rebinds `frontier` to the NEXT round's mid-body;
-            # keep a handle on THIS round's so end-of-round hygiene can
-            # release its blocks once nothing can read them again
-            frontier_cur = frontier
-            dead_parts: list[DataFrame] = []
-            # plan this round's shuffles at a width the round's volume
-            # justifies (session width stays the ceiling)
-            self._set_round_width(n_frontier)
-            allowed, blocked = robots_split(frontier, self.robots)
-            admitted, deferred = host_budget_split(allowed, cfg.host_budget_per_round)
-            admitted = schedule_slots(admitted, cfg.default_crawl_delay_ms)
-            if cfg.round_time_budget_ms is not None:
-                # the round's crawl window: rows whose delay slot falls
-                # past the time budget defer (SURVEY §4 TimeBudget map)
-                admitted, time_deferred = time_budget_split(
-                    admitted, cfg.round_time_budget_ms
-                )
-                deferred = deferred.unionByName(
-                    time_deferred.select(*deferred.columns)
-                )
-            # NOTE: the live-fetch (mapInPandas) path salts hot hosts
-            # across partitions here (salted_repartition); the simulated
-            # fetch is a url-equi join whose output partitioning is
-            # already uniform in the join key, so no extra shuffle.
+        # cardinality input for filter sizing — no extra driver actions
+        self._n_frontier = self._frontier.count()
+        self._n_seen = self._n_seen or self._n_frontier
 
-            keep = list(
-                dict.fromkeys(
-                    LOG_COLS[1:]
-                    + ["page_status", "priority", *REQUEST_COLS, "h1", "h2"]
-                    + (CONVERT_FEATURES if self.with_convert else [])
-                )
+    def _resume(self) -> None:
+        """Restore frontier, seen set, cumulative log AND filter state
+        exactly from the latest published snapshot; rounds continue from
+        where the previous process died — no rescan of history to
+        rebuild membership state."""
+        man = self.store.manifest()
+        self._rnd = man["meta"]["round"] + 1
+        # a checkpoint written before a request column existed gets it
+        # backfilled: the round loop selects all of them
+        frontier = with_request_cols(self.store.read(self.spark, "frontier"))
+        if self.new_seeds is None:
+            # service mode checkpoints the frontier once, after the
+            # union with the batch's seeds
+            frontier = frontier.localCheckpoint()
+        # above the volume threshold the restored base is kept
+        # hash(url)-partitioned + sorted through its checkpoint, so each
+        # round's anti-join moves no base rows; small bases stay plain
+        # and the anti-join broadcasts them
+        self._n_seen = man["meta"].get("n_seen_hint", 1024)
+        self._seen_parts = [
+            self._ckpt_seen(self.store.read(self.spark, "seen"), self._n_seen)
+        ]
+        log0 = self.store.read(self.spark, "fetch_log")
+        if "js_escalated" not in log0.columns:
+            # checkpoint written before the escalation-ladder column
+            # existed — unknown for historic rows
+            log0 = log0.withColumn("js_escalated", F.lit(None).cast("boolean"))
+        self._logs = [log0.localCheckpoint()]
+        # a store without a seen_shards blob (crawled without use_bloom,
+        # or written with a retired filter blob format) resumes with no
+        # filter: the first round rebuilds it from the seen parts, which
+        # include a service batch's fresh seeds. The restored blob covers
+        # the committed seen table, so it simply BECOMES the maintained
+        # filter (sources/lakehouse.py contract)
+        if self.use_bloom and "seen_shards" in man.get("blobs", []):
+            self._seen_filter = seen_ops.SeenSet.from_bytes(
+                self.store.read_blob("seen_shards")
             )
-            if self.fetch_mode == "live":
-                raw = live_fetch(
-                    admitted, cfg,
-                    transport_factory=self.transport_factory,
-                    num_partitions=self._session_width,
-                    passthrough=[
-                        "priority", *REQUEST_COLS, "h1", "h2",
-                        "sched_slot_ms",
-                    ],
-                )
-                # partition_id comes from the salted live stage itself
-                # (north-rule lineage: which partition did the fetching)
-                fetched = live_decisions(raw, cfg).withColumn(
-                    # the escalation ladder is a cost-model concept; the
-                    # live httpx transport never renders, so unknown
-                    "js_escalated", F.lit(None).cast("boolean")
-                ).select(
-                    *[c for c in keep if c != "status_code"], "payload"
-                )
-            else:
-                fetched = (
-                    simulated_fetch(
-                        admitted, self.pages, cfg,
-                        mirror_span=self.span, mirrors=self.mirrors,
-                    )
-                    .select(*[c for c in keep if c not in ("status_code", "partition_id")])
-                    # per-partition lineage: which physical partition
-                    # carried the row through the fetch stage
-                    .withColumn("partition_id", F.spark_partition_id())
-                )
-            # eager: the bulk-convert thread consumes fetched too, and a
-            # lazy checkpoint would race its first materialization
-            # across the two threads. With convert off, lazy measured no
-            # faster (perfbench frontier_open, 4 vCPU: 305.8 vs 316.0
-            # decisions/s, medians of 4 interleaved runs)
-            fetched = fetched.localCheckpoint()
+        if self.new_seeds is not None:
+            frontier = self._admit_service_batch(frontier)
+        self._frontier = frontier
 
-            log = fetched.select(
-                F.lit(rnd).alias("round"),
-                "url", "host", "depth", "lineage", "mode", "attempt", "outcome",
-                "page_id",
+    def _admit_service_batch(self, frontier: DataFrame) -> DataFrame:
+        """Service mode: this batch of CrawlRequests joins the PERSISTENT
+        crawl. Exact anti-join against the restored seen table drops
+        already-extracted URLs (the service's fast path); survivors enter
+        the frontier at depth 0 and are committed to the seen set
+        immediately, exactly like round-0 seeds of a fresh crawl (replay
+        twin: replay_crawl(seeds=..., initial_seen=..., start_round=...))."""
+        nf = seen_ops.with_hashes(
+            init_frontier(self.spark, self.new_seeds)
+        ).withColumn("round_added", F.lit(self._rnd))
+        fresh_seeds = seen_ops.filter_unseen_parts(
+            nf, self._seen_parts,
+            broadcast_base=not self._seen_large(self._n_seen),
+        ).select(*frontier.columns).localCheckpoint()
+        frontier = frontier.unionByName(fresh_seeds).localCheckpoint()
+        self._seen_parts.append(fresh_seeds.select("url", "h1", "h2"))
+        if self._seen_filter is not None:
+            # the restored filter covers the RESTORED seen table only —
+            # fold the batch's surviving seeds in, or the first round's
+            # prefilter would route a child link equal to a same-batch
+            # seed URL around the anti-join as "definitely new"
+            self._seen_filter.fold_delta_df(fresh_seeds.select("h1", "h2"))
+        return frontier
+
+    def _round(self) -> None:
+        """One crawl round, in the module docstring's diagram order."""
+        frontier = self._frontier
+        # plan this round's shuffles at a width the round's volume
+        # justifies (session width stays the ceiling)
+        self._set_round_width(self._n_frontier)
+        admitted, deferred, blocked = self._politeness(frontier)
+        fetched = self._fetch(admitted, blocked)
+        if self.with_convert:
+            self._convert(fetched)
+        # retry re-queue (F8): failed-retryable rows flow into the next round
+        # with attempt+1 — backoff becomes a schedule slot, not a sleep
+        retries = fetched.filter(F.col("outcome") == "retry").select(
+            "url", "host", "depth", "lineage", "priority", *REQUEST_COLS,
+            (F.col("attempt") + 1).alias("attempt"),
+            F.lit(self._rnd + 1).alias("round_added"),
+            "h1", "h2",
+        )
+        unseen = self._unseen(self._children(fetched))
+        self._frontier = (
+            deferred.select(*FRONTIER_COLS, "h1", "h2")
+            .unionByName(retries)
+            .unionByName(unseen.select(*FRONTIER_COLS, "h1", "h2"))
+            .localCheckpoint(eager=False)
+        )
+        dead_parts = self._compact_seen(unseen)
+        self._n_frontier = self._frontier.count()
+        # cheap upper bound is enough for filter sizing (deferred and
+        # retry rows double-count; the filter is just slightly larger)
+        self._n_seen += self._n_frontier
+        if self._seen_filter is not None:
+            # the round's one O(delta) fold (executor-side partial
+            # bitsets, never keys to the driver): the committed blob
+            # then covers exactly the committed seen table, and the fold
+            # reads unseen before hygiene can release its blocks
+            self._seen_filter.fold_delta_df(unseen.select("h1", "h2"))
+        if self.store is not None:
+            self._commit()
+        self._hygiene(dead_parts, fetched, frontier)
+
+    def _politeness(
+        self, frontier: DataFrame
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """robots -> budget rank cut -> crawl-delay slots -> time-budget
+        cut. Returns (admitted, deferred, blocked)."""
+        cfg = self.cfg
+        allowed, blocked = robots_split(frontier, self.robots)
+        admitted, deferred = host_budget_split(allowed, cfg.host_budget_per_round)
+        admitted = schedule_slots(admitted, cfg.default_crawl_delay_ms)
+        if cfg.round_time_budget_ms is not None:
+            # the round's crawl window: rows whose delay slot falls
+            # past the time budget defer (SURVEY §4 TimeBudget map)
+            admitted, time_deferred = time_budget_split(
+                admitted, cfg.round_time_budget_ms
+            )
+            deferred = deferred.unionByName(
+                time_deferred.select(*deferred.columns)
+            )
+        return admitted, deferred, blocked
+
+    def _fetch(self, admitted: DataFrame, blocked: DataFrame) -> DataFrame:
+        """The fetch stage over the admitted rows, checkpointed; appends
+        the round's log part (fetched + blocked rows)."""
+        cfg = self.cfg
+        # NOTE: the live-fetch (mapInPandas) path salts hot hosts
+        # across partitions (salted_repartition); the simulated fetch
+        # is a url-equi join whose output partitioning is already
+        # uniform in the join key, so no extra shuffle.
+        if self.fetch_mode == "live":
+            raw = live_fetch(
+                admitted, cfg,
+                transport_factory=self.transport_factory,
+                num_partitions=self._session_width,
+                passthrough=[
+                    "priority", *REQUEST_COLS, "h1", "h2", "sched_slot_ms",
+                ],
+            )
+            # partition_id comes from the salted live stage itself
+            # (north-rule lineage: which partition did the fetching)
+            fetched = live_decisions(raw, cfg).withColumn(
+                # the escalation ladder is a cost-model concept; the
+                # live httpx transport never renders, so unknown
+                "js_escalated", F.lit(None).cast("boolean")
+            ).select(*self._fetch_cols)
+        else:
+            fetched = (
+                simulated_fetch(
+                    admitted, self.pages, cfg,
+                    mirror_span=self.span, mirrors=self.mirrors,
+                )
+                .select(*self._fetch_cols)
+                # per-partition lineage: which physical partition
+                # carried the row through the fetch stage
+                .withColumn("partition_id", F.spark_partition_id())
+            )
+        # eager: the bulk-convert thread consumes fetched too, and a
+        # lazy checkpoint would race its first materialization
+        # across the two threads. With convert off, lazy measured no
+        # faster (perfbench frontier_open, 4 vCPU: 305.8 vs 316.0
+        # decisions/s, medians of 4 interleaved runs)
+        fetched = fetched.localCheckpoint()
+        # the round's log part stays a LAZY projection of the
+        # fetched/frontier checkpoints here; the end-of-round hygiene
+        # task re-checkpoints it NARROW so the wide fetched blocks can
+        # be released (convert on). Blocked rows set the round, the row's
+        # identity and the outcome; their fetch columns are NULL.
+        rnd = F.lit(self._rnd).alias("round")
+        self._logs.append(
+            fetched.select(
+                rnd, "url", "host", "depth", "lineage", "mode", "attempt",
+                "outcome", "page_id",
                 F.col("page_status").alias("status_code"),
                 "final_url", "redirected", "content_type", "strategy",
                 "route", "js_escalated", "elapsed_ms", "partition_id",
-            )
-            blocked_log = blocked.select(
-                F.lit(rnd).alias("round"),
-                "url", "host", "depth", "lineage", "mode", "attempt",
-                F.lit("blocked").alias("outcome"),
-                F.lit(None).cast("long").alias("page_id"),
-                F.lit(None).cast("int").alias("status_code"),
-                F.lit(None).cast("string").alias("final_url"),
-                F.lit(None).cast("boolean").alias("redirected"),
-                F.lit(None).cast("string").alias("content_type"),
-                F.lit(None).cast("string").alias("strategy"),
-                F.lit(None).cast("string").alias("route"),
-                F.lit(None).cast("boolean").alias("js_escalated"),
-                F.lit(None).cast("int").alias("elapsed_ms"),
-                F.lit(None).cast("int").alias("partition_id"),
-            )
-            # the round's log part stays a LAZY projection of the
-            # fetched/frontier checkpoints here; the end-of-round
-            # hygiene task re-checkpoints it NARROW (LOG_COLS only) so
-            # the wide fetched blocks can be released (convert on)
-            log_part = log.select(*LOG_COLS).unionByName(
-                blocked_log.select(*LOG_COLS)
-            )
-            log_idx = len(logs)
-            logs.append(log_part)
-
-            if self.with_convert:
-                ok = fetched.filter(F.col("outcome") == "fetched")
-                # explicit convert width: the stage EXPANDS each row by
-                # ~payload_scale KB (mint + markdown), which AQE cannot
-                # see from the upstream shuffle's input bytes — with
-                # sizing-based coalescing the tiny feature rows would
-                # collapse to a handful of partitions and strand cores.
-                # FINER than the session width (k x cores): a ~30 s
-                # convert task set at mirrors=64 otherwise occupies
-                # whole scheduling quanta, and even under FAIR the
-                # loop's barrier stages wait for the tail of in-flight
-                # long tasks. k=4 cuts task length ~4x at ~ms-level
-                # task-launch overhead.
-                # Never more tasks than the round has rows: each convert
-                # task pays a fixed Python-worker cost (~0.25 s), so a
-                # 3-row service round split 16 ways spent ~4
-                # executor-seconds on empty tasks.
-                conv_width = min(
-                    self._session_width * self.CONVERT_TASK_FACTOR,
-                    max(1, n_frontier),
-                )
-                conv = convert_stage(
-                    ok.repartition(conv_width), cfg,
-                    payload_col="payload" if self.fetch_mode == "live" else None,
-                )
-                # PIPELINE the bulk phase against the round loop: round
-                # k's convert depends only on the already-checkpointed
-                # fetch output, so a single background driver thread
-                # materializes it (and lands its payload batch) WHILE
-                # round k+1's frontier stages run. Spark schedules jobs
-                # from both threads concurrently; the small frontier
-                # stages leave most cores idle between barriers and the
-                # convert tasks fill them — engine wall approaches
-                # max(rounds, bulk) instead of rounds + bulk. The convert
-                # mapInPandas is checkpointed ONCE and both consumers
-                # (markdown output, payload batch) derive from the
-                # stored partitions. ONE worker thread keeps payload
-                # MERGEs in round order.
-                bulk_futures.append(self._bulk_pool.submit(self._bulk, conv))
-
-            # retry re-queue (F8): failed-retryable rows flow into the
-            # next round with attempt+1 — backoff becomes a schedule
-            # slot, not a sleep
-            retries = (
-                fetched.filter(F.col("outcome") == "retry")
-                .select(
-                    "url", "host", "depth", "lineage", "priority",
-                    *REQUEST_COLS,
-                    (F.col("attempt") + 1).alias("attempt"),
-                    F.lit(rnd + 1).alias("round_added"),
-                    "h1", "h2",
-                )
-            )
-
-            # link expansion from fetched html pages below the depth cap
-            parent_filter = (
-                (F.col("outcome") == "fetched")
-                & F.col("content_type").startswith("text/html")
-                & (F.col("depth") < cfg.max_depth)
-                # per-request extract_links gate (schemas.py:171-192):
-                # a false row is a leaf — fetched and converted, but it
-                # expands no children (NULL = crawl default, expand)
-                & F.coalesce(F.col("extract_links"), F.lit(True))
-            )
-            if self.fetch_mode == "live":
-                # live mode: children come from the PAYLOAD BYTES — the
-                # reference's extract_links_detailed_from_html over the
-                # fetched body (app/utils.py:126-155), Arrow-batched
-                children = links_from_payloads(
-                    fetched.filter(parent_filter).select(
-                        "url", "final_url", "payload", "depth", "lineage",
-                        "priority", *REQUEST_COLS,
-                    ),
-                    rnd + 1,
-                )
-            else:
-                parents = fetched.filter(parent_filter).select(
-                    F.col("page_id").alias("src_page_id"),
-                    F.col("depth").alias("p_depth"),
-                    F.col("lineage").alias("p_lineage"),
-                    F.col("priority").alias("p_priority"),
-                    *[F.col(c).alias(f"p_{c}") for c in REQUEST_COLS],
-                )
-                children = (
-                    self._children_links(
-                        parents,
-                        broadcast_parents=(
-                            n_frontier < self.BROADCAST_PARENTS_MAX
-                        ),
-                    )
-                    .select(
-                        # mirrors>1: raw_url is ALREADY canonical (the
-                        # base table's canon_url + mirror token)
-                        (
-                            F.col("raw_url") if self.mirrors > 1
-                            else canonicalize_url(F.col("raw_url"))
-                        ).alias("url"),
-                        F.col("dst_host").alias("host"),
-                        (F.col("p_depth") + 1).alias("depth"),
-                        F.concat(
-                            F.col("p_lineage"), F.lit("."),
-                            segment_col(F.col("doc_pos"), DOC_POS_WIDTH),
-                        ).alias("lineage"),
-                        F.col("p_priority").alias("priority"),
-                        *[F.col(f"p_{c}").alias(c) for c in REQUEST_COLS],
-                        F.lit(0).alias("attempt"),
-                        F.lit(rnd + 1).alias("round_added"),
-                    )
-                )
-            children = seen_ops.with_hashes(first_seen(children, "url", ["depth", "lineage"]))
-
-            bloom = None
-            if self.use_bloom:
-                if resume_filter is not None:
-                    # first round after a resume: the checkpoint blob
-                    # (plus any service-batch seed fold) already covers
-                    # the restored seen table — it simply BECOMES the
-                    # maintained filter (sources/lakehouse.py contract)
-                    self._seen_filter, resume_filter = resume_filter, None
-                    self._filter_pending = []
-                filt = self._seen_filter
-                if filt is None or n_seen > filt.capacity:
-                    # (re)build with 2x headroom. INCREMENTAL
-                    # maintenance: each round's delta is folded in at
-                    # end-of-round (O(delta) executor-side partials), so
-                    # this O(total seen) scan runs only on the geometric
-                    # resize schedule — O(log n_seen) times over a
-                    # crawl, never once per round. An over-full filter
-                    # between resizes only raises the fp rate (fp rows
-                    # still hit the exact anti-join); misses cannot
-                    # occur because the fold lands before the delta's
-                    # checkpoint blocks are released. One shard per
-                    # session partition: the width the seen base is
-                    # hash-partitioned to.
-                    filt = seen_ops.SeenSet.build(
-                        self._union_parts(seen_parts),
-                        n_items=max(n_seen, 1024) * 2,
-                        n_shards=self._session_width,
-                    )
-                    self._seen_filter = filt
-                    self._filter_pending = []
-                    self._filter_rebuilds += 1
-                bloom = filt
-            # lazy checkpoints truncate lineage without extra jobs: the
-            # single frontier count below materializes unseen AND the
-            # new frontier in one job; seen then reuses the stored
-            # unseen partitions. The anti-join runs against the
-            # partitioned base + per-round deltas — no O(total seen)
-            # shuffle per round (see filter_unseen_parts)
-            unseen = seen_ops.filter_unseen_parts(
-                children, seen_parts, bloom,
-                # plain (unpartitioned) small base -> broadcast it; the
-                # partitioned base must NOT be broadcast or its
-                # exchange-free SMJ shape is wasted. Gated on the LIVE
-                # seen estimate, not just the promotion flag: promotion
-                # happens at compaction time (every SEEN_COMPACT_EVERY
-                # rounds), and without the n_seen gate the rounds in
-                # between were broadcasting a million-row base — the
-                # explicit hint overrides every size threshold
-                # (measured: conv-off m64 32c 421 s vs 204 s in r4).
-                broadcast_base=(
-                    not self._seen_partitioned
-                    and n_seen <= self.seen_partitioned_min_rows
+            ).unionByName(
+                blocked.select(
+                    rnd, "url", "host", "depth", "lineage", "mode",
+                    "attempt", F.lit("blocked").alias("outcome"),
                 ),
-            ).localCheckpoint(eager=False)
-            # NOTE for profile readers: under AQE this lazy checkpoint's
-            # toRdd finalizes the plan, which MATERIALIZES every
-            # intermediate query stage (children shuffle, first_seen
-            # window, anti-join broadcast builds) — building it is the
-            # round's distributed work, not driver overhead (measured:
-            # analyze+physical-plan alone is 0.03-0.06 s/round at sf0.1;
-            # the remaining ~1.2 s is stage jobs)
-
-            frontier = (
-                deferred.select(*FRONTIER_COLS, "h1", "h2")
-                .unionByName(retries)
-                .unionByName(unseen.select(*FRONTIER_COLS, "h1", "h2"))
-                .localCheckpoint(eager=False)
+                allowMissingColumns=True,
             )
-            seen_parts.append(unseen.select("url", "h1", "h2"))
-            if self.use_bloom:
-                self._filter_pending.append(unseen.select("h1", "h2"))
-            # promote the moment the estimate crosses the threshold —
-            # waiting for the scheduled compaction round left 2-3
-            # rounds anti-joining a plain (stats-less, unbroadcastable)
-            # base through a full two-sided sort-merge
-            promote_now = (
-                not self._seen_partitioned
-                and n_seen >= self.seen_partitioned_min_rows
+        )
+        return fetched
+
+    def _convert(self, fetched: DataFrame) -> None:
+        """Submit the round's convert stage to the bulk thread."""
+        ok = fetched.filter(F.col("outcome") == "fetched")
+        # explicit convert width: the stage EXPANDS each row by ~payload_scale
+        # KB (mint + markdown), which AQE cannot see from the upstream
+        # shuffle's input bytes — with sizing-based coalescing the tiny feature
+        # rows would collapse to a handful of partitions and strand cores.
+        # FINER than the session width (k x cores): a ~30 s convert task set at
+        # mirrors=64 otherwise occupies whole scheduling quanta, and even under
+        # FAIR the loop's barrier stages wait for the tail of in-flight long
+        # tasks. k=4 cuts task length ~4x at ~ms-level task-launch overhead.
+        # Never more tasks than the round has rows: each convert task pays a
+        # fixed Python-worker cost (~0.25 s), so a 3-row service round split 16
+        # ways spent ~4 executor-seconds on empty tasks.
+        conv_width = min(
+            self._session_width * self.CONVERT_TASK_FACTOR,
+            max(1, self._n_frontier),
+        )
+        conv = convert_stage(
+            ok.repartition(conv_width), self.cfg,
+            payload_col="payload" if self.fetch_mode == "live" else None,
+        )
+        # PIPELINE the bulk phase against the round loop: round k's convert
+        # depends only on the already-checkpointed fetch output, so a single
+        # background driver thread materializes it (and lands its payload
+        # batch) WHILE round k+1's frontier stages run. Spark schedules jobs
+        # from both threads concurrently; the small frontier stages leave most
+        # cores idle between barriers and the convert tasks fill them — engine
+        # wall approaches max(rounds, bulk) instead of rounds + bulk. The
+        # convert mapInPandas is checkpointed ONCE and both consumers (markdown
+        # output, payload batch) derive from the stored partitions. ONE worker
+        # thread keeps payload MERGEs in round order.
+        self._bulk_futures.append(self._bulk_pool.submit(self._bulk, conv))
+
+    def _children(self, fetched: DataFrame) -> DataFrame:
+        """Link expansion from fetched html pages below the depth cap,
+        first-seen deduped and hashed for the seen filter."""
+        next_round = self._rnd + 1
+        parent_filter = (
+            (F.col("outcome") == "fetched")
+            & F.col("content_type").startswith("text/html")
+            & (F.col("depth") < self.cfg.max_depth)
+            # per-request extract_links gate (schemas.py:171-192):
+            # a false row is a leaf — fetched and converted, but it
+            # expands no children (NULL = crawl default, expand)
+            & F.coalesce(F.col("extract_links"), F.lit(True))
+        )
+        if self.fetch_mode == "live":
+            # live mode: children come from the PAYLOAD BYTES — the
+            # reference's extract_links_detailed_from_html over the
+            # fetched body (app/utils.py:126-155), Arrow-batched
+            children = links_from_payloads(
+                fetched.filter(parent_filter).select(
+                    "url", "final_url", "payload", "depth", "lineage",
+                    "priority", *REQUEST_COLS,
+                ),
+                next_round,
             )
-            if promote_now or (rnd + 1) % self.SEEN_COMPACT_EVERY == 0:
-                # periodic compaction folds the deltas back into ONE
-                # partitioned+sorted base (at 10^10 scale this is the
-                # lakehouse seen-table MERGE; locally a checkpoint
-                # rewrite) — bounds the anti-join chain depth at
-                # SEEN_COMPACT_EVERY + 1. Volume-adaptive: small seen
-                # sets compact into a plain checkpoint instead. When the
-                # bulk-convert thread is mid-job (it holds _conf_lock
-                # for its whole body so the AQE toggle can't corrupt its
-                # plans), the compaction DEFERS a round rather than
-                # stall the loop behind a multi-job convert — until the
-                # delta chain hits 2x the compact interval, at which
-                # point we do block (anti-join depth stays bounded).
-                force = len(seen_parts) > 2 * self.SEEN_COMPACT_EVERY
-                base = self._ckpt_seen(
-                    self._union_parts(seen_parts), n_seen, blocking=force
-                )
-                if base is not None:
-                    # the folded parts (old base + deltas) die here —
-                    # released at end-of-round, AFTER the frontier count
-                    # stores unseen's rows in the new frontier's own
-                    # blocks
-                    dead_parts, seen_parts = seen_parts, [base]
-            n_frontier = frontier.count()
+        else:
+            parents = fetched.filter(parent_filter).select(
+                F.col("page_id").alias("src_page_id"),
+                F.col("depth").alias("p_depth"),
+                F.col("lineage").alias("p_lineage"),
+                F.col("priority").alias("p_priority"),
+                *[F.col(c).alias(f"p_{c}") for c in REQUEST_COLS],
+            )
+            children = self._children_links(
+                parents,
+                broadcast_parents=self._n_frontier < self.BROADCAST_PARENTS_MAX,
+            ).select(
+                # mirrors>1: raw_url is ALREADY canonical (the
+                # base table's canon_url + mirror token)
+                (
+                    F.col("raw_url") if self.mirrors > 1
+                    else canonicalize_url(F.col("raw_url"))
+                ).alias("url"),
+                F.col("dst_host").alias("host"),
+                (F.col("p_depth") + 1).alias("depth"),
+                F.concat(
+                    F.col("p_lineage"), F.lit("."),
+                    segment_col(F.col("doc_pos"), DOC_POS_WIDTH),
+                ).alias("lineage"),
+                F.col("p_priority").alias("priority"),
+                *[F.col(f"p_{c}").alias(c) for c in REQUEST_COLS],
+                F.lit(0).alias("attempt"),
+                F.lit(next_round).alias("round_added"),
+            )
+        return seen_ops.with_hashes(first_seen(children, "url", ["depth", "lineage"]))
 
-            if self.store is not None:
-                if self._bulk_pool is not None:
-                    # a published snapshot at round k must not outrun
-                    # the payload-table merges it implies — wait for
-                    # every pipelined convert/merge ≤ k before commit
-                    # (result() is idempotent; values re-read at drain).
-                    # Hygiene futures too: a mid-swap log part must not
-                    # be unioned into the committed cum_log while its
-                    # source blocks are being released.
-                    for fut in bulk_futures + hygiene_futures:
-                        fut.result()
-                cum_log = self._union_parts(logs)
-                blobs = {}
-                if bloom is not None:
-                    # fold the round delta in so the blob covers exactly
-                    # the seen table being committed — a resume uses it
-                    # as the first round's filter without a rebuild scan.
-                    # Folding is executor-side partial-bitset builds
-                    # (O(filter bytes) to the driver, never keys)
-                    bloom.fold_delta_df(unseen.select("h1", "h2"))
-                    blobs["seen_shards"] = bloom.to_bytes()
-                    # the commit fold doubles as the round's incremental
-                    # maintenance — drain the pending queue
-                    self._filter_pending = []
-                self.store.commit(
-                    {"frontier": frontier,
-                     "seen": self._union_parts(seen_parts),
-                     "fetch_log": cum_log},
-                    meta={"round": rnd, "n_frontier": n_frontier,
-                          "n_seen_hint": n_seen + n_frontier},
-                    blobs=blobs,
-                )
-            if bloom is not None and self._filter_pending:
-                # end-of-round O(delta) fold (non-commit rounds; commit
-                # rounds drained the queue above): MUST land before the
-                # hygiene releases below — a delta folded next round
-                # would read checkpoint blocks that compaction already
-                # unpersisted (localCheckpoint lineage is truncated, so
-                # that fails loud, not silent)
-                bloom.fold_delta_df(self._union_parts(self._filter_pending))
-                self._filter_pending = []
-            # cheap upper bound is enough for bloom sizing (deferred and
-            # retry rows double-count; the bloom is just slightly larger)
-            n_seen = n_seen + n_frontier
-            # --- block-manager hygiene (10^10-scale): release every
-            # block no later plan can read. Seen parts folded into a
-            # new compacted base died above (the count stored the
-            # frontier's own copy of unseen) — driver-side bookkeeping,
-            # no job.
-            for p in dead_parts:
-                _release_ckpt(p)
-            if self._bulk_pool is not None:
-                # re-checkpoint the round's log part narrow, then
-                # release the wide fetched and the consumed frontier.
-                # The single-worker pool sequences this AFTER the
-                # round's convert (which reads fetched); children/
-                # retries/deferred were stored in the next frontier's
-                # blocks by this round's count. A convert-off crawl has
-                # no bulk thread and keeps its log parts lazy.
-                def _hygiene(
-                    i=log_idx, part=log_part, f=fetched, fr=frontier_cur
-                ):
-                    self.spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", "bulk"
-                    )
-                    with self._conf_lock:
-                        conf = self.spark.conf
-                        prev = conf.get(
-                            "spark.sql.constraintPropagation.enabled", "true"
-                        )
-                        # the log part's plan nests the fetched/frontier
-                        # LogicalRDDs, whose own origin constraints
-                        # reference attributes this projection drops;
-                        # capturing constraints through that nesting
-                        # trips the consumer-side rewrite ("key not
-                        # found: partition_id#N" in PruneFilters on the
-                        # final ordinal sort). Constraints buy nothing
-                        # on a log part (it only feeds unions and
-                        # aggregations), so capture the checkpoint
-                        # without them.
-                        conf.set(
-                            "spark.sql.constraintPropagation.enabled", "false"
-                        )
-                        try:
-                            lck = part.localCheckpoint()
-                        finally:
-                            conf.set(
-                                "spark.sql.constraintPropagation.enabled", prev
-                            )
-                    logs[i] = lck
-                    _release_ckpt(f)
-                    _release_ckpt(fr)
+    def _unseen(self, children: DataFrame) -> DataFrame:
+        """The round's new URLs: children anti-joined against the seen
+        parts, behind the seen filter when ``use_bloom`` is on (the
+        filter is None otherwise)."""
+        filt = self._seen_filter
+        if self.use_bloom and (filt is None or self._n_seen > filt.capacity):
+            # (re)build with 2x headroom. Each round's delta folds in after
+            # the round's count, so this O(total seen) scan runs only on the
+            # geometric resize schedule — O(log n_seen) times over a crawl.
+            # An over-full filter between resizes only raises the fp rate
+            # (fp rows still hit the exact anti-join). One shard per session
+            # partition: the width the seen base is hash-partitioned to.
+            self._seen_filter = seen_ops.SeenSet.build(
+                self._union_parts(self._seen_parts),
+                n_items=max(self._n_seen, 1024) * 2,
+                n_shards=self._session_width,
+            )
+            self._filter_rebuilds += 1
+        # lazy checkpoints truncate lineage without extra jobs: the single
+        # frontier count materializes unseen AND the new frontier in one job;
+        # seen then reuses the stored unseen partitions. The anti-join runs
+        # against the partitioned base + per-round deltas — no O(total seen)
+        # shuffle per round. NOTE for profile readers: under AQE this lazy
+        # checkpoint's toRdd finalizes the plan, which MATERIALIZES every
+        # intermediate query stage (children shuffle, first_seen window,
+        # anti-join broadcast builds) — building it is the round's distributed
+        # work, not driver overhead (measured: analyze+physical-plan alone is
+        # 0.03-0.06 s/round at sf0.1; the remaining ~1.2 s is stage jobs)
+        return seen_ops.filter_unseen_parts(
+            children, self._seen_parts, self._seen_filter,
+            # plain (unpartitioned) small base -> broadcast it; the partitioned
+            # base must NOT be broadcast or its exchange-free SMJ shape is
+            # wasted. Gated on the LIVE seen estimate, not just the promotion
+            # flag: promotion happens at compaction time, and without the
+            # estimate gate the rounds in between were broadcasting a
+            # million-row base — the explicit hint overrides every size
+            # threshold (measured: conv-off m64 32c 421 s vs 204 s in r4).
+            broadcast_base=not self._seen_large(self._n_seen),
+        ).localCheckpoint(eager=False)
 
-                hygiene_futures.append(self._bulk_pool.submit(_hygiene))
-            round_walls.append(round(_time.time() - _t_round, 3))
-            rnd += 1
+    def _compact_seen(self, unseen: DataFrame) -> list[DataFrame]:
+        """Add the round's unseen rows as a seen delta and, on the
+        compaction cadence or at promotion, fold the parts into one new
+        base. Returns the folded parts: they die once the round's count
+        has stored unseen's rows in the new frontier's own blocks."""
+        self._seen_parts.append(unseen.select("url", "h1", "h2"))
+        # promote the moment the estimate crosses the threshold —
+        # waiting for the scheduled compaction round left 2-3
+        # rounds anti-joining a plain (stats-less, unbroadcastable)
+        # base through a full two-sided sort-merge
+        promote_now = (
+            self._seen_large(self._n_seen) and not self._seen_partitioned
+        )
+        if not (promote_now or (self._rnd + 1) % self.SEEN_COMPACT_EVERY == 0):
+            return []
+        # periodic compaction folds the deltas back into ONE partitioned+sorted
+        # base (at 10^10 scale this is the lakehouse seen-table MERGE; locally
+        # a checkpoint rewrite) — bounds the anti-join chain depth at
+        # SEEN_COMPACT_EVERY + 1. Volume-adaptive: small seen sets compact into
+        # a plain checkpoint instead. When the bulk-convert thread is mid-job
+        # (it holds _conf_lock for its whole body so the AQE toggle can't
+        # corrupt its plans), the compaction DEFERS a round rather than stall
+        # the loop behind a multi-job convert — until the delta chain hits 2x
+        # the compact interval, at which point we do block (anti-join depth
+        # stays bounded).
+        force = len(self._seen_parts) > 2 * self.SEEN_COMPACT_EVERY
+        base = self._ckpt_seen(
+            self._union_parts(self._seen_parts), self._n_seen, blocking=force
+        )
+        if base is None:
+            return []
+        dead, self._seen_parts = self._seen_parts, [base]
+        return dead
 
-        _t_post = _time.time()
+    def _commit(self) -> None:
+        """Publish the round's snapshot: frontier, seen, cumulative log
+        and the seen filter's blob."""
         if self._bulk_pool is not None:
-            # drain the pipelined convert jobs (re-raises any worker
-            # exception)
-            for fut in bulk_futures:
+            # a published snapshot at round k must not outrun the payload-table
+            # merges it implies — wait for every pipelined convert/merge ≤ k
+            # before commit (result() is idempotent; values re-read at drain).
+            # Hygiene futures too: a mid-swap log part must not be unioned into
+            # the committed log while its source blocks are being released.
+            for fut in self._bulk_futures + self._hygiene_futures:
+                fut.result()
+        blobs = {}
+        if self._seen_filter is not None:
+            # a resume uses it as the first round's filter without a
+            # rebuild scan
+            blobs["seen_shards"] = self._seen_filter.to_bytes()
+        self.store.commit(
+            {"frontier": self._frontier,
+             "seen": self._union_parts(self._seen_parts),
+             "fetch_log": self._union_parts(self._logs)},
+            meta={"round": self._rnd, "n_frontier": self._n_frontier,
+                  "n_seen_hint": self._n_seen},
+            blobs=blobs,
+        )
+
+    def _hygiene(
+        self, dead_parts: list[DataFrame], fetched: DataFrame,
+        frontier: DataFrame,
+    ) -> None:
+        """Block-manager hygiene (10^10-scale): release every block no
+        later plan can read. Seen parts folded into a new compacted base
+        died at the round's count (it stored the frontier's own copy of
+        unseen) — driver-side bookkeeping, no job. With convert on, the
+        bulk thread then re-checkpoints the round's log part narrow and
+        releases the wide fetched and the consumed frontier; the
+        single-worker pool sequences this AFTER the round's convert
+        (which reads fetched). A convert-off crawl has no bulk thread
+        and keeps its log parts lazy."""
+        for p in dead_parts:
+            _release_ckpt(p)
+        if self._bulk_pool is None:
+            return
+        i = len(self._logs) - 1
+        part = self._logs[i]
+
+        def narrow_log():
+            self.spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", "bulk"
+            )
+            with self._conf_lock:
+                conf = self.spark.conf
+                prev = conf.get("spark.sql.constraintPropagation.enabled", "true")
+                # the log part's plan nests the fetched/frontier LogicalRDDs,
+                # whose own origin constraints reference attributes this
+                # projection drops; capturing constraints through that nesting
+                # trips the consumer-side rewrite ("key not found:
+                # partition_id#N" in PruneFilters on the final ordinal sort).
+                # Constraints buy nothing on a log part (it only feeds unions
+                # and aggregations), so capture the checkpoint without them.
+                conf.set("spark.sql.constraintPropagation.enabled", "false")
+                try:
+                    lck = part.localCheckpoint()
+                finally:
+                    conf.set("spark.sql.constraintPropagation.enabled", prev)
+            self._logs[i] = lck
+            _release_ckpt(fetched)
+            _release_ckpt(frontier)
+
+        self._hygiene_futures.append(self._bulk_pool.submit(narrow_log))
+
+    def _endgame(self) -> CrawlResult:
+        """Drain the bulk thread, order the log globally, and assemble
+        the result."""
+        t_post = _time.time()
+        conversions: list[DataFrame] = []
+        payloads: list[DataFrame] = []
+        if self._bulk_pool is not None:
+            # drain the pipelined convert jobs (re-raises any worker exception)
+            for fut in self._bulk_futures:
                 co_ck, batch_ck = fut.result()
                 conversions.append(co_ck)
                 if batch_ck is not None:
                     payloads.append(batch_ck)
             # hygiene must finish before fetch_log is assembled below:
-            # every logs[i] slot must hold its narrow checkpoint (or a
+            # every log slot must hold its narrow checkpoint (or a
             # still-alive lazy part), never a lazy part whose source
             # blocks were released mid-swap
-            for fut in hygiene_futures:
+            for fut in self._hygiene_futures:
                 fut.result()
             self._bulk_pool.shutdown()
             self._bulk_pool = None
 
-        fetch_log = self._union_parts(logs)
+        fetch_log = self._union_parts(self._logs)
         # global crawl-order ordinal via range-partitioned sort +
         # per-partition offsets — distributed; the ORDER (round, depth,
         # lineage) is the replay contract, the ordinal is bookkeeping.
@@ -1279,12 +1222,12 @@ class CrawlEngine:
 
         return CrawlResult(
             fetch_log=full_log,
-            seen=self._union_parts(seen_parts).select("url"),
+            seen=self._union_parts(self._seen_parts).select("url"),
             metrics=metrics,
             payloads=payload_df,
-            rounds=rnd,
+            rounds=self._rnd,
             partition_metrics=partition_metrics,
             conversions=self._union_parts(conversions) if conversions else None,
-            round_walls=round_walls,
-            post_loop_s=round(_time.time() - _t_post, 3),
+            round_walls=self._round_walls,
+            post_loop_s=round(_time.time() - t_post, 3),
         )

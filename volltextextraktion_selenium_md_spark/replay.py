@@ -81,8 +81,9 @@ def _load_graph(sf_dir: str) -> tuple[dict, dict, list, dict]:
     return pages, links, seeds, robots
 
 
-# full per-request surface a crawl row carries (mirror of
-# plans/frontier.py REQUEST_COLS): the loop's decisions read
+# full per-request surface a crawl row carries (an independent copy of
+# schemas.py REQUEST_COLS; tests/test_engine_surface.py pins the two
+# equal): the loop's decisions read
 # mode/js_strategy/timeout_ms/retries/extract_links; the rest
 # (llm flags, converter overrides, transport settings) ride untouched
 # so recompute tests can resolve conversion/LLM behavior per lineage
@@ -93,8 +94,6 @@ _REQ_COLS = (
     "llm_prompt",
 )
 _SEED_COLS = ("seed_idx", "priority", "raw_url") + _REQ_COLS
-
-_SERVE = ("PDF", "RSS", "HTTP_ONLY", "YOUTUBE")
 
 
 def _strategy(page: dict, cfg: CrawlConfig) -> str:

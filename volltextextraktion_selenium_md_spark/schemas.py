@@ -1,9 +1,13 @@
-"""Declared StructType schemas for every engine table.
+"""Schema helpers and the per-request column contract.
 
 The reference declares its data model with Pydantic
-(``app/schemas.py``: CrawlRequest/CrawlResponse/LinkInfo/LLMResult);
-here every table is a fixed StructType — never inferred — so plans are
-stable and the Parquet scans prune columns.
+(``app/schemas.py``: CrawlRequest/CrawlResponse/LinkInfo/LLMResult).
+Here each engine table's schema is the one its writing plan produces;
+Parquet reads take theirs from the file footer (``footer_schema``) or
+the snapshot manifest instead of a schema-inference job.
+``REQUEST_COLS`` / ``REQUEST_COL_DEFAULTS`` are the CrawlRequest fields
+every frontier row carries; this leaf module owns them so the frontier
+and the fetch plans share one list without an import cycle.
 """
 
 from __future__ import annotations
@@ -12,13 +16,8 @@ import os
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    BooleanType,
     DataType,
-    IntegerType,
-    LongType,
     MapType,
-    StringType,
     StructField,
     StructType,
 )
@@ -54,93 +53,47 @@ def footer_schema(path: str) -> StructType | None:
     return as_nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=True))
 
 
-# LinkInfo (reference app/schemas.py:229-245) — nested array element of a page
-LINK_INFO = StructType([
-    StructField("url", StringType(), False),
-    StructField("text", StringType(), True),
-    StructField("internal", BooleanType(), False),
-    StructField("category", StringType(), False),
-    StructField("doc_pos", IntegerType(), False),
-])
+# per-request settings every frontier row carries (reference
+# CrawlRequest, app/schemas.py); a crawl loop re-POSTs children with
+# the parent request's settings, so children inherit all of them.
+# Column -> reference field: html_converter (schemas.py:44-53),
+# media_policy (media_conversion_policy, :156-170 area), max_bytes
+# (:156-170), trafilatura_clean (trafilatura_clean_markdown, :55-63),
+# proxy / allow_insecure_ssl (:105-115), llm_prompt (llm_clean_prompt,
+# :206-226). Each is resolved per-request at its stage: convert reads
+# html_converter/media_policy/max_bytes/trafilatura_clean
+# (plans/convert.py), the live transport reads
+# proxy/allow_insecure_ssl/timeout_ms/max_bytes/retries
+# (plans/fetch.py), the LLM stage reads
+# llm_anonymize/llm_postprocess/llm_prompt (plans/llm.py).
+REQUEST_COLS = [
+    "mode", "js_strategy", "llm_anonymize", "timeout_ms", "retries",
+    "llm_postprocess", "extract_links", "html_converter", "media_policy",
+    "max_bytes", "trafilatura_clean", "proxy", "allow_insecure_ssl",
+    "llm_prompt",
+]
 
-# synthetic web page (FIXTURES.md §2) — replaces the live fetch
-PAGE = StructType([
-    StructField("page_id", LongType(), False),
-    StructField("url", StringType(), False),
-    StructField("host", StringType(), False),
-    StructField("status", IntegerType(), False),
-    StructField("final_url", StringType(), False),
-    StructField("content_type", StringType(), False),
-    StructField("text_len", IntegerType(), False),
-    StructField("has_main", BooleanType(), False),
-    StructField("spa_mark", BooleanType(), False),
-    StructField("js_required", BooleanType(), False),
-    StructField("consent", BooleanType(), False),
-    StructField("bot_wall", BooleanType(), False),
-    StructField("rss_link", BooleanType(), False),
-    StructField("youtube", BooleanType(), False),
-])
-
-# frontier row (FIXTURES.md §4); `lineage` is the deterministic
-# crawl-order key: seeds -> segment(seed_idx, 6); child -> parent || '.'
-# || segment(doc_pos, 2) (functions/lineage.py). Lexicographic
-# (depth, lineage) == the reference's implied FIFO-seeds/doc-order-links
-# BFS (SURVEY §2.3 F5).
-FRONTIER = StructType([
-    StructField("url", StringType(), False),          # canonical
-    StructField("host", StringType(), False),
-    StructField("depth", IntegerType(), False),
-    StructField("lineage", StringType(), False),
-    StructField("priority", IntegerType(), False),
-    StructField("mode", StringType(), False),         # fast|js|auto (schemas.py:85-104)
-    StructField("attempt", IntegerType(), False),
-    StructField("round_added", IntegerType(), False),
-])
-
-# fetch log row ≙ CrawlResponse (reference app/schemas.py:260-278)
-FETCH_LOG = StructType([
-    StructField("round", IntegerType(), False),
-    StructField("ordinal", LongType(), False),
-    StructField("url", StringType(), False),
-    StructField("host", StringType(), False),
-    StructField("depth", IntegerType(), False),
-    StructField("lineage", StringType(), False),
-    StructField("mode", StringType(), False),         # ≙ request_mode
-    StructField("attempt", IntegerType(), False),
-    StructField("status_code", IntegerType(), True),
-    StructField("final_url", StringType(), True),
-    StructField("redirected", BooleanType(), True),
-    StructField("content_type", StringType(), True),
-    StructField("strategy", StringType(), True),
-    StructField("outcome", StringType(), False),      # fetched|failed|retry|missing
-    StructField("error_page_detected", BooleanType(), True),
-    StructField("elapsed_ms", IntegerType(), True),
-])
-
-# Iceberg-shaped payload table (BASELINE.json input_hint)
-PAYLOAD = StructType([
-    StructField("image_id", StringType(), False),
-    StructField("bytes", BinaryType(), False),
-    StructField("w", IntegerType(), False),
-    StructField("h", IntegerType(), False),
-    StructField("fmt", StringType(), False),
-    StructField("caption", StringType(), False),
-    StructField("phash", LongType(), False),
-])
-
-ROBOTS = StructType([
-    StructField("host", StringType(), False),
-    StructField("disallow_prefix", StringType(), True),
-    StructField("crawl_delay_ms", IntegerType(), False),
-])
-
-METRICS = StructType([
-    StructField("round", IntegerType(), False),
-    StructField("partition_id", IntegerType(), False),
-    StructField("fetched", LongType(), False),
-    StructField("failed", LongType(), False),
-    StructField("retried", LongType(), False),
-    StructField("deferred", LongType(), False),
-    StructField("blocked", LongType(), False),
-    StructField("seen_added", LongType(), False),
-])
+# (spark type, default) for request columns absent from an input — a
+# bare seed frame or a checkpoint written before the column existed.
+# Defaults are the REFERENCE request defaults where it has one
+# (js_strategy 'speed', llm_anonymize/llm_postprocess false; extract_
+# links true is the crawl default — a crawl means following links);
+# NULL where NULL means "resolve against global config at the stage"
+# (timeout_ms, retries, max_bytes, trafilatura_clean,
+# allow_insecure_ssl) or "not set" (html_converter, media_policy,
+# proxy, llm_prompt). 'mode' is required input and has no default.
+REQUEST_COL_DEFAULTS: dict[str, tuple[str, object]] = {
+    "js_strategy": ("string", "speed"),
+    "llm_anonymize": ("boolean", False),
+    "timeout_ms": ("int", None),
+    "retries": ("int", None),
+    "llm_postprocess": ("boolean", False),
+    "extract_links": ("boolean", True),
+    "html_converter": ("string", None),
+    "media_policy": ("string", None),
+    "max_bytes": ("int", None),
+    "trafilatura_clean": ("boolean", None),
+    "proxy": ("string", None),
+    "allow_insecure_ssl": ("boolean", None),
+    "llm_prompt": ("string", None),
+}

@@ -27,7 +27,7 @@ is asserted in ``tests/test_streaming_crawl.py`` (the replay twin is
 Request rows carry ``raw_url``, ``seed_idx`` (arrival order — the
 crawl-order tiebreak within a batch, exactly the reference's FIFO),
 ``priority``, and optionally any REQUEST_COLS; missing request columns
-take the reference defaults (``plans/frontier.py:REQUEST_COL_DEFAULTS``).
+take the reference defaults (``schemas.py:REQUEST_COL_DEFAULTS``).
 """
 
 from __future__ import annotations
@@ -36,10 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
-
-# the minimal request-stream schema; extend with any REQUEST_COLS for
-# per-request overrides (they inherit to the request's whole subtree)
-REQUEST_STREAM_DDL = "raw_url string, seed_idx bigint, priority int"
 
 
 def crawl_request_stream(
