@@ -34,7 +34,10 @@ from volltextextraktion_selenium_md_spark.operators.politeness import (
     robots_split,
     schedule_slots,
 )
-from volltextextraktion_selenium_md_spark.plans.convert import convert_stage
+from volltextextraktion_selenium_md_spark.plans.convert import (
+    FEATURE_COLS,
+    convert_stage,
+)
 from volltextextraktion_selenium_md_spark.plans.fetch import simulated_fetch
 from volltextextraktion_selenium_md_spark.plans.frontier import init_frontier
 from volltextextraktion_selenium_md_spark.session import get_spark
@@ -130,10 +133,7 @@ def main() -> None:
     pages.unpersist()
 
     # 5. convert stage is Arrow-vectorized
-    rows = graph.pages(spark).select(
-        "url", "page_id", "content_type", "text_len", "has_main",
-        "spa_mark", "js_required", "consent", "bot_wall", "rss_link",
-    )
+    rows = graph.pages(spark).select(*FEATURE_COLS)
     p5 = formatted(convert_stage(rows, cfg))
     if "MapInPandas" not in p5 and "ArrowEvalPython" not in p5:
         problems.append("convert stage is not Arrow-vectorized")

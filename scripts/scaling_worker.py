@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
-from volltextextraktion_selenium_md_spark.plans.convert import convert_stage
+from volltextextraktion_selenium_md_spark.plans.convert import (
+    FEATURE_COLS,
+    convert_stage,
+)
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.functions.lineage import (
     DOC_POS_WIDTH,
@@ -69,10 +72,7 @@ def job_convert(spark, sf_dir, cores, mirrors, scale):
     pages = graph.pages(spark)
     span = pages.agg(F.max("page_id")).first()[0] + 1
     pages = graph.mirror_pages(pages, mirrors, span)
-    rows = pages.select(
-        "url", "page_id", "content_type", "text_len", "has_main",
-        "spa_mark", "js_required", "consent", "bot_wall", "rss_link",
-    ).repartition(max(cores, 8))
+    rows = pages.select(*FEATURE_COLS).repartition(max(cores, 8))
     cfg = CrawlConfig(payload_scale=scale)
     out = convert_stage(rows, cfg, emit_markdown=False)
     return out.count()

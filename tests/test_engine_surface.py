@@ -98,6 +98,26 @@ def test_request_column_contract_has_one_list():
     assert list(REQUEST_COL_DEFAULTS) == [c for c in REQUEST_COLS if c != "mode"]
 
 
+def test_stages_read_the_request_columns_unconditionally():
+    """The fetch, convert and LLM stages take the request-column
+    contract as given (absent columns are backfilled at entry by
+    ``schemas.with_request_cols``): no ``"<col>" in <df>.columns`` or
+    ``not in`` test forks a stage on its input's shape."""
+    forks = []
+    for name, tree in _trees(*(
+        os.path.join("volltextextraktion_selenium_md_spark", "plans", f)
+        for f in ("fetch.py", "convert.py", "llm.py")
+    )):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Compare) and any(
+                isinstance(op, (ast.In, ast.NotIn))
+                and isinstance(cmp, ast.Attribute) and cmp.attr == "columns"
+                for op, cmp in zip(node.ops, node.comparators)
+            ) and isinstance(node.left, (ast.Constant, ast.Name)):
+                forks.append(f"{os.path.basename(name)}:{node.lineno}")
+    assert not forks, forks
+
+
 def test_engine_parameter_count():
     params = inspect.signature(CrawlEngine).parameters
     assert len(params) <= MAX_ENGINE_PARAMS, list(params)

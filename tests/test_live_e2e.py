@@ -11,7 +11,8 @@ Two transports drive the same server:
 - a stdlib ``http.client`` transport (always runs — a real HTTP client
   over real sockets, with User-Agent, per-request timeout, max_bytes
   read cap and redirect following; only the client LIBRARY differs
-  from production), and
+  from production), once connected straight to the server and once
+  only through the ``cfg.proxy`` the engine hands it, and
 - the DEFAULT httpx transport (``plans/fetch.py:_httpx_transport_
   factory``, no injection) pointed at the server via ``cfg.proxy`` —
   exactly the reference's proxy plumbing (``app/http_fetcher.py:45-53``).
@@ -165,51 +166,61 @@ def _sim_order_mapped(res):
     ]
 
 
+def _stdlib_factory(port=None):
+    """Stdlib ``http.client`` transport factory. With ``port`` it
+    connects straight to the localhost server; without, it connects to
+    the ``proxy`` each call is handed (absolute-URI GETs, the proxy
+    shape) and raises when handed none."""
+
+    def factory():
+        import http.client
+        from urllib.parse import urlsplit
+
+        def call(url, user_agent, timeout_s, max_bytes, proxy=None, verify=True):
+            if port is not None:
+                addr = ("127.0.0.1", port)
+            elif proxy:
+                addr = (urlsplit(proxy).hostname, urlsplit(proxy).port)
+            else:
+                raise ConnectionError(f"no proxy handed to the transport for {url}")
+            target = url
+            status, body, ctype = None, b"", None
+            for _ in range(5):  # follow redirects like the default client
+                conn = http.client.HTTPConnection(*addr, timeout=timeout_s)
+                try:
+                    conn.request(
+                        "GET", target,
+                        headers={
+                            "User-Agent": user_agent,
+                            "Host": urlsplit(target).netloc,
+                        },
+                    )
+                    r = conn.getresponse()
+                    body = r.read(max_bytes + 1)
+                    status, ctype = r.status, r.getheader("Content-Type")
+                    loc = r.getheader("Location")
+                finally:
+                    conn.close()
+                if status in (301, 302, 303, 307, 308) and loc:
+                    target = loc
+                    continue
+                break
+            return status, target, body, ctype
+
+        return call
+
+    return factory
+
+
 def test_live_engine_over_real_http_server(spark, http_graph_server):
     """Real sockets, real HTTP, real server — stdlib-client transport."""
     port, hits = http_graph_server
     cfg = CrawlConfig()
     sim = _http_engine(spark, cfg).run()
 
-    def make_factory(port=port):
-        def factory():
-            import http.client
-            from urllib.parse import urlsplit
-
-            def call(url, user_agent, timeout_s, max_bytes, proxy=None, verify=True):
-                target = url
-                status, body, ctype = None, b"", None
-                for _ in range(5):  # follow redirects like the default client
-                    conn = http.client.HTTPConnection(
-                        "127.0.0.1", port, timeout=timeout_s
-                    )
-                    try:
-                        conn.request(
-                            "GET", target,
-                            headers={
-                                "User-Agent": user_agent,
-                                "Host": urlsplit(target).netloc,
-                            },
-                        )
-                        r = conn.getresponse()
-                        body = r.read(max_bytes + 1)
-                        status, ctype = r.status, r.getheader("Content-Type")
-                        loc = r.getheader("Location")
-                    finally:
-                        conn.close()
-                    if status in (301, 302, 303, 307, 308) and loc:
-                        target = loc
-                        continue
-                    break
-                return status, target, body, ctype
-
-            return call
-
-        return factory
-
     before = hits[0]
     live = _http_engine(
-        spark, cfg, fetch_mode="live", transport_factory=make_factory(),
+        spark, cfg, fetch_mode="live", transport_factory=_stdlib_factory(port),
         with_convert=True,
     ).run()
     got = _order(live)
@@ -260,6 +271,23 @@ def test_live_engine_default_httpx_transport(spark, http_graph_server):
     before = hits[0]
     live = _http_engine(
         spark, CrawlConfig(proxy=f"http://127.0.0.1:{port}"), fetch_mode="live"
+    ).run()
+    got = _order(live)
+    assert got == _sim_order_mapped(sim)
+    assert hits[0] - before >= len(got)
+
+
+def test_live_engine_config_proxy_reaches_transport(spark, http_graph_server):
+    """The stdlib twin of the httpx test above: no request sets a proxy,
+    so every engine frontier row carries a NULL ``proxy`` column, which
+    must resolve to ``cfg.proxy``. The transport reaches the server only
+    through the proxy it is handed, and raises without one."""
+    port, hits = http_graph_server
+    sim = _http_engine(spark, CrawlConfig()).run()
+    before = hits[0]
+    live = _http_engine(
+        spark, CrawlConfig(proxy=f"http://127.0.0.1:{port}"), fetch_mode="live",
+        transport_factory=_stdlib_factory(),
     ).run()
     got = _order(live)
     assert got == _sim_order_mapped(sim)

@@ -36,9 +36,10 @@ class CrawlConfig:
     timeout_ms: int = 30_000
 
     # transport-level request options (reference schemas.py:105-115 /
-    # http_fetcher.py:45-53): default proxy URL (normalized by the P1
-    # operator before reaching the transport; per-row frontier columns
-    # override when present) and the SSL-verification toggle
+    # http_fetcher.py:45-53): default proxy URL and the SSL-verification
+    # toggle. A request's own proxy / allow_insecure_ssl overrides them;
+    # a NULL one (or a proxy the P1 normalizer rejects) resolves to
+    # these values, as timeout_ms / retries / max_bytes do
     proxy: str | None = None
     allow_insecure_ssl: bool = False
 

@@ -21,9 +21,9 @@ from pyspark.sql import functions as F
 # '(' made every candidate scan to end-of-text — O(n^2) on adversarial
 # markdown (measured 1.3 s at 60 KB of 'a(' repeats; minutes at ~1 MB
 # inside the convert kernel). No real formula carries a 300+-char
-# argument; the Python twin in plans/convert.py (which the DuckDB
-# oracle imports) carries the identical bound so the three engines
-# cannot drift.
+# argument. plans/convert.py compiles these same strings for its
+# Python pass (which the DuckDB oracle imports), so the three engines
+# share one definition.
 _MATH_EXPR_RE = r"\b([a-zA-Z]\([^)]{0,300}\)|[a-zA-Z][₀-₉⁰-⁹]*\s*[=+\-*/]\s*[^\s]+)"
 _FORMULA_RE = r"([a-zA-Z][₀-₉⁰-⁹]*\s*=\s*[^\n]+)"
 

@@ -41,10 +41,12 @@ import pyspark.sql.types as T
 
 from volltextextraktion_selenium_md_spark import codec
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
+from volltextextraktion_selenium_md_spark.functions import text as _text
 from volltextextraktion_selenium_md_spark.functions.text import (
     enhance_table_structure_py,
     strip_tags,
 )
+from volltextextraktion_selenium_md_spark.schemas import with_request_cols
 
 # ---------------------------------------------------------------------------
 # deterministic payload minting (replaces the network body)
@@ -592,12 +594,11 @@ def _extract(html: str, main_only: bool) -> str:
     return "\n\n".join(p.chunks)
 
 
-# bounded call-argument charset ({0,300}, was *): an unclosed '(' made
-# every candidate scan to end-of-text — O(n^2) on adversarial markdown.
-# functions/text.py's Spark-side regexp_replace carries the identical
-# bound, and oracles.py imports THIS pattern, so all three engines agree
-_MATH_EXPR_RE = re.compile(r"\b([a-zA-Z]\([^)]{0,300}\)|[a-zA-Z][₀-₉⁰-⁹]*\s*[=+\-*/]\s*[^\s]+)")
-_FORMULA_RE = re.compile(r"([a-zA-Z][₀-₉⁰-⁹]*\s*=\s*[^\n]+)")
+# the polish patterns are compiled from functions/text.py's strings,
+# which its Spark-side regexp_replace uses too, and oracles.py imports
+# these compiled forms — one definition for all three engines
+_MATH_EXPR_RE = re.compile(_text._MATH_EXPR_RE)
+_FORMULA_RE = re.compile(_text._FORMULA_RE)
 # every _MATH_EXPR_RE alternative needs '(' or an operator, _FORMULA_RE
 # needs '=' — one cheap scan gates BOTH subs (they were two full
 # backtracking passes over every ~100 KB document at payload_scale=64)
@@ -761,13 +762,13 @@ CONVERT_SCHEMA = T.StructType([
     T.StructField("truncated", T.BooleanType(), False),
     # per-request llm_anonymize / llm_postprocess flags ride through
     # conversion so the downstream LLM stage can honor them row-wise
-    # (reference schemas.py:194-211, main.py:437-457); NULL when the
-    # input has no such column
+    # (reference schemas.py:194-211, main.py:437-457); read from the
+    # request-column contract like every other request setting
     T.StructField("llm_anonymize", T.BooleanType(), True),
     T.StructField("llm_postprocess", T.BooleanType(), True),
     # per-request llm_clean_prompt override (reference schemas.py:
-    # 206-226): rides through so llm_postprocess_stage's auto-detected
-    # llm_prompt column steers the prompt row-wise; NULL = default
+    # 206-226): rides through so llm_postprocess_stage's llm_prompt
+    # column steers the prompt row-wise; NULL = default
     T.StructField("llm_prompt", T.StringType(), True),
     T.StructField("image_id", T.StringType(), True),
     T.StructField("image_bytes", T.BinaryType(), True),
@@ -778,9 +779,17 @@ CONVERT_SCHEMA = T.StructType([
     T.StructField("phash", T.LongType(), True),
 ])
 
-_FEATURE_COLS = [
+# the fetched-row columns the minting convert reads: identity, content
+# type and the page features mint_payload embeds
+FEATURE_COLS = [
     "url", "page_id", "content_type", "text_len", "has_main",
     "spa_mark", "js_required", "consent", "bot_wall", "rss_link",
+]
+
+# the request settings the stage reads per row (schemas.REQUEST_COLS)
+_REQUEST_INPUTS = [
+    "media_policy", "html_converter", "llm_anonymize", "llm_postprocess",
+    "llm_prompt", "max_bytes", "trafilatura_clean",
 ]
 
 
@@ -806,22 +815,22 @@ def convert_stage(
     stand-in — see ``codec.payload_row_from_bytes``); rows whose bytes
     don't decode (corrupt / max_bytes-truncated) emit no table row.
 
-    Per-request overrides (reference schemas.py:44-53): a
-    ``media_policy`` column (else ``cfg.media_policy``) governs the
-    audio/video branch, an ``html_converter`` column forces the HTML
-    tier ('main'/'full'/'strip'; NULL/'auto' keeps the chain), and a
-    ``max_bytes`` column caps THAT row's payload before conversion
-    (reference schemas.py:156-170; NULL = ``cfg.max_bytes``)."""
+    The stage reads the request-column contract (schemas.REQUEST_COLS):
+    an absent request column is backfilled with its
+    REQUEST_COL_DEFAULTS value at entry, so it means exactly that
+    default. Per row (reference schemas.py:44-53): ``media_policy``
+    (NULL = ``cfg.media_policy``) governs the audio/video branch,
+    ``html_converter`` forces the HTML tier ('main'/'full'/'strip';
+    NULL/'auto' keeps the chain), ``max_bytes`` caps THAT row's payload
+    before conversion (reference schemas.py:156-170; NULL =
+    ``cfg.max_bytes``), ``trafilatura_clean`` = False skips the
+    cleaning pass (NULL keeps it), and ``llm_anonymize`` /
+    ``llm_postprocess`` / ``llm_prompt`` ride through to the output for
+    the LLM stage."""
     cfg = cfg or CrawlConfig()
     max_bytes = cfg.max_bytes
     default_policy = cfg.media_policy
-    has_policy_col = "media_policy" in fetched.columns
-    has_forced_col = "html_converter" in fetched.columns
-    has_anon_col = "llm_anonymize" in fetched.columns
-    has_llm_gate_col = "llm_postprocess" in fetched.columns
-    has_maxb_col = "max_bytes" in fetched.columns
-    has_clean_col = "trafilatura_clean" in fetched.columns
-    has_prompt_col = "llm_prompt" in fetched.columns
+    fetched = with_request_cols(fetched)
 
     scale = cfg.payload_scale
 
@@ -846,23 +855,15 @@ def convert_stage(
                     payload = mint_payload(row, scale)
                     minted = True
                 ctype = row["content_type"]
-                policy = (
-                    row["media_policy"] if has_policy_col else None
-                ) or default_policy
-                forced = row["html_converter"] if has_forced_col else None
-                mb = max_bytes
-                if has_maxb_col:
-                    v = row["max_bytes"]
-                    if v is not None and not pd.isna(v):
-                        mb = int(v)
-                clean = None
-                if has_clean_col:
-                    v = row["trafilatura_clean"]
-                    if v is not None and not pd.isna(v):
-                        clean = bool(v)
+                policy = row["media_policy"] or default_policy
+                mb = row["max_bytes"]
+                mb = max_bytes if mb is None or pd.isna(mb) else int(mb)
+                clean = row["trafilatura_clean"]
+                clean = None if clean is None or pd.isna(clean) else bool(clean)
                 md, conv, trunc = convert_bytes(
                     int(pid), ctype, payload, breaker, mb, extractor,
-                    media_policy=policy, forced_converter=forced,
+                    media_policy=policy,
+                    forced_converter=row["html_converter"],
                     trafilatura_clean=clean,
                 )
                 out["url"].append(row["url"])
@@ -871,19 +872,9 @@ def convert_stage(
                 out["markdown_length"].append(len(md))
                 out["converter_used"].append(conv)
                 out["truncated"].append(trunc)
-                out["llm_anonymize"].append(
-                    bool(row["llm_anonymize"])
-                    if has_anon_col and row["llm_anonymize"] is not None
-                    else None
-                )
-                out["llm_postprocess"].append(
-                    bool(row["llm_postprocess"])
-                    if has_llm_gate_col and row["llm_postprocess"] is not None
-                    else None
-                )
-                out["llm_prompt"].append(
-                    row["llm_prompt"] if has_prompt_col else None
-                )
+                for k in ("llm_anonymize", "llm_postprocess"):
+                    out[k].append(None if row[k] is None else bool(row[k]))
+                out["llm_prompt"].append(row["llm_prompt"])
                 p = None
                 if ctype.startswith("image/"):
                     # minted rows synthesize the image+caption pair
@@ -916,15 +907,9 @@ def convert_stage(
                 res[k] = pd.array(out[k], dtype=dt)
             yield res
 
-    cols = _FEATURE_COLS if payload_col is None else (
+    cols = FEATURE_COLS if payload_col is None else (
         ["url", "page_id", "content_type", payload_col]
     )
-    cols = cols + [
-        c for c in (
-            "media_policy", "html_converter", "llm_anonymize",
-            "llm_postprocess", "llm_prompt", "max_bytes",
-            "trafilatura_clean",
-        )
-        if c in fetched.columns and c not in cols
-    ]
-    return fetched.select(*cols).mapInPandas(run, schema=CONVERT_SCHEMA)
+    return fetched.select(*cols, *_REQUEST_INPUTS).mapInPandas(
+        run, schema=CONVERT_SCHEMA
+    )

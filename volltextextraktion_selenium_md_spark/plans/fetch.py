@@ -34,6 +34,7 @@ from volltextextraktion_selenium_md_spark.functions.urls import redirect_flag
 from volltextextraktion_selenium_md_spark.schemas import (
     REQUEST_COL_DEFAULTS,
     REQUEST_COLS,
+    with_request_cols,
 )
 
 # Column-tree memo for the fetch stage's derived expressions. Column
@@ -48,10 +49,7 @@ from volltextextraktion_selenium_md_spark.schemas import (
 _SIM_EXPRS_CACHE: dict[tuple, dict] = {}
 
 
-def _sim_exprs(
-    cfg: CrawlConfig, has_js_strategy: bool, has_timeout: bool,
-    has_retries: bool = False, has_llm_gate: bool = False,
-) -> dict:
+def _sim_exprs(cfg: CrawlConfig) -> dict:
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
@@ -61,9 +59,7 @@ def _sim_exprs(
     # applicationId+startTime are unique per context lifetime
     ctx_key = (sc.applicationId, sc.startTime) if sc is not None else None
     key = (
-        ctx_key, has_js_strategy, has_timeout,
-        has_retries, has_llm_gate,
-        cfg.http_only_text_len, cfg.js_light_thin_text_len,
+        ctx_key, cfg.http_only_text_len, cfg.js_light_thin_text_len,
         cfg.second_chance_text_len, cfg.js_accuracy_extra_ms,
         cfg.js_renderer_cap_ms, cfg.timeout_ms, cfg.retries,
         cfg.llm_cost_ms_base, cfg.llm_cost_ms_step, cfg.llm_cost_ms_span,
@@ -136,10 +132,7 @@ def _sim_exprs(
         )
         | blocked_render
     )
-    accuracy = (
-        (F.col("js_strategy") == "accuracy")
-        if has_js_strategy else F.lit(False)
-    )
+    accuracy = F.col("js_strategy") == "accuracy"
     # speed->accuracy failure ladder (reference app/js_fetcher.py:
     # 896-946): a SPEED render that hits the renderer timeout (early
     # path) or exhausts retries — which a bot wall always does
@@ -165,14 +158,10 @@ def _sim_exprs(
     # request whose modeled latency exceeds the cap aborts — the 504
     # path (main.py:393-405), which re-enters the retry loop like any
     # transport failure. Evaluated on the request latency only (the
-    # crawl-delay slot is queueing, not request time). A frontier
-    # timeout_ms column overrides the config per row; NULL = global
-    # (same null-means-default semantics as allow_insecure_ssl).
-    req_timeout = (
-        F.coalesce(F.col("timeout_ms"), F.lit(cfg.timeout_ms))
-        if has_timeout
-        else F.lit(cfg.timeout_ms)
-    )
+    # crawl-delay slot is queueing, not request time). The request's
+    # timeout_ms overrides the config per row; NULL = global (same
+    # null-means-default semantics as allow_insecure_ssl).
+    req_timeout = F.coalesce(F.col("timeout_ms"), F.lit(cfg.timeout_ms))
     timed_out = F.coalesce(cost, F.lit(0)) > req_timeout
     retryable = (
         F.col("page_status").isin(list(cfg.retryable_statuses)) | timed_out
@@ -180,11 +169,7 @@ def _sim_exprs(
     # per-request retries (reference schemas.py:130-141): the requeue
     # cut compares the attempt counter against THAT row's budget, NULL
     # coalescing to the config default
-    req_retries = (
-        F.coalesce(F.col("retries"), F.lit(cfg.retries))
-        if has_retries
-        else F.lit(cfg.retries)
-    )
+    req_retries = F.coalesce(F.col("retries"), F.lit(cfg.retries))
     outcome = (
         F.when(F.col("page_id").isNull(), "missing")
         .when(retryable & (F.col("attempt") < req_retries), "retry")
@@ -203,12 +188,7 @@ def _sim_exprs(
     # classification never runs and the row takes the BLOCKED ladder
     # (Selenium render + escalation/accuracy surcharges).
     probe_trip = F.lit(cfg.cost_ms["HTTP_ONLY"]) > F.least(
-        (
-            F.coalesce(F.col("timeout_ms"), F.lit(cfg.timeout_ms))
-            if has_timeout
-            else F.lit(cfg.timeout_ms)
-        ),
-        F.lit(cfg.preflight_cap_ms),
+        req_timeout, F.lit(cfg.preflight_cap_ms)
     )
     exprs = {
         "strategy_when_auto": F.when(
@@ -242,18 +222,14 @@ def _sim_exprs(
             # time elapsed_ms is attached (simulated_fetch ordering) —
             # re-inlining the outcome CASE here would double the
             # codegen size for nothing.
-            + (
-                F.when(
-                    F.coalesce(F.col("llm_postprocess"), F.lit(False))
-                    & (F.col("outcome") == "fetched"),
-                    F.lit(cfg.llm_cost_ms_base)
-                    + F.pmod(
-                        F.col("page_id"), F.lit(cfg.llm_cost_ms_span + 1)
-                    ) * F.lit(cfg.llm_cost_ms_step),
-                ).otherwise(F.lit(0))
-                if has_llm_gate
-                else F.lit(0)
-            )
+            + F.when(
+                F.coalesce(F.col("llm_postprocess"), F.lit(False))
+                & (F.col("outcome") == "fetched"),
+                F.lit(cfg.llm_cost_ms_base)
+                + F.pmod(
+                    F.col("page_id"), F.lit(cfg.llm_cost_ms_span + 1)
+                ) * F.lit(cfg.llm_cost_ms_step),
+            ).otherwise(F.lit(0))
         ).cast("int"),
     }
     _SIM_EXPRS_CACHE[key] = exprs
@@ -280,7 +256,14 @@ def simulated_fetch(
     (page_id offset, final_url host) are re-minted probe-side. Exactly
     equivalent to joining an eagerly mirrored corpus, without ever
     materializing (or re-sorting, every round) R × corpus rows: the
-    fetch join stays O(round + base), the bucketed-dim pattern."""
+    fetch join stays O(round + base), the bucketed-dim pattern.
+
+    The stage reads the request-column contract: an absent request
+    column is backfilled with its REQUEST_COL_DEFAULTS value at entry
+    (schemas.with_request_cols), and the derived expressions read
+    ``mode``, ``js_strategy``, ``timeout_ms``, ``retries`` and
+    ``llm_postprocess`` unconditionally."""
+    admitted = with_request_cols(admitted)
     join_key = "url"
     if mirror_span > 0:
         from volltextextraktion_selenium_md_spark import graph as _graph
@@ -349,13 +332,7 @@ def simulated_fetch(
     # to duplicate non-cheap expressions, so every CASE chain is
     # generated exactly once; inlining them instead silently fell back
     # to interpreted eval — 10 "Code grows beyond 64 KB" per run)
-    ex = _sim_exprs(
-        cfg,
-        has_js_strategy="js_strategy" in admitted.columns,
-        has_timeout="timeout_ms" in admitted.columns,
-        has_retries="retries" in admitted.columns,
-        has_llm_gate="llm_postprocess" in admitted.columns,
-    )
+    ex = _sim_exprs(cfg)
     joined = (
         joined.withColumn("strategy", ex["strategy_when_auto"])
         .withColumn("route", ex["route"])
@@ -416,6 +393,10 @@ def live_decisions(fetched: DataFrame, cfg: CrawlConfig) -> DataFrame:
       simulated path
     - elapsed_ms = backoff slots + politeness slot (deterministic; real
       wall latency is not replayable)
+
+    Reads the request columns ``mode``, ``retries`` and
+    ``llm_postprocess`` from ``fetched``: ``live_fetch`` must pass them
+    through (the engine passes every REQUEST_COL).
     """
     from volltextextraktion_selenium_md_spark.functions.features import (
         extract_features_stage,
@@ -458,11 +439,7 @@ def live_decisions(fetched: DataFrame, cfg: CrawlConfig) -> DataFrame:
     # the in-partition transport loop — otherwise a live retries=0 row
     # with a retryable status requeues, diverging from the simulated
     # path / oracle / replay which all coalesce the per-row budget
-    req_retries = (
-        F.coalesce(F.col("retries"), F.lit(cfg.retries))
-        if "retries" in fetched.columns
-        else F.lit(cfg.retries)
-    )
+    req_retries = F.coalesce(F.col("retries"), F.lit(cfg.retries))
     outcome = (
         F.when(F.col("error").isNotNull(), "failed")
         .when(retryable & (F.col("attempt") < req_retries), "retry")
@@ -493,19 +470,15 @@ def live_decisions(fetched: DataFrame, cfg: CrawlConfig) -> DataFrame:
                 # live rows have no page_id, so the deterministic
                 # variance source is the url hash — replay-stable,
                 # never outcome-flipping (elapsed only)
-                + (
-                    F.when(
-                        F.coalesce(F.col("llm_postprocess"), F.lit(False))
-                        & (F.col("outcome") == "fetched"),
-                        F.lit(cfg.llm_cost_ms_base)
-                        + F.pmod(
-                            F.xxhash64(F.col("url")),
-                            F.lit(cfg.llm_cost_ms_span + 1),
-                        ) * F.lit(cfg.llm_cost_ms_step),
-                    ).otherwise(F.lit(0))
-                    if "llm_postprocess" in fetched.columns
-                    else F.lit(0)
-                )
+                + F.when(
+                    F.coalesce(F.col("llm_postprocess"), F.lit(False))
+                    & (F.col("outcome") == "fetched"),
+                    F.lit(cfg.llm_cost_ms_base)
+                    + F.pmod(
+                        F.xxhash64(F.col("url")),
+                        F.lit(cfg.llm_cost_ms_span + 1),
+                    ) * F.lit(cfg.llm_cost_ms_step),
+                ).otherwise(F.lit(0))
             ).cast("int"),
         )
     )
@@ -658,7 +631,6 @@ def live_fetch(
     cfg: CrawlConfig,
     transport_factory=None,
     num_partitions: int | None = None,
-    timeout_s: float | None = None,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
     """Real network fetch stage behind the flag: salted repartition ->
@@ -685,18 +657,21 @@ def live_fetch(
     ``transport_factory() -> callable(url, ua, timeout_s, max_bytes,
     proxy=None, verify=True) -> (status, final_url, bytes, ctype)`` is
     injectable (optionally with a ``.close()`` attribute, called when
-    the partition is exhausted); the default is httpx. ``timeout_s``
-    derives from ``cfg.timeout_ms`` when not given (reference default
-    30 s, ``app/schemas.py:116-128`` — round-3 verdict fix: the stage
-    previously hardcoded 10 s). Per-request ``proxy`` /
-    ``allow_insecure_ssl`` frontier columns (reference
-    ``app/schemas.py:105-115``) are honored when present — the proxy is
-    normalized with the P1 operator before it reaches the transport —
-    and fall back to the config defaults otherwise. Hot hosts are
-    salted across partitions FIRST — this stage really does one network
-    call per row, so a Zipf host would otherwise pin one executor.
-    ``passthrough`` columns ride along untouched (the engine passes
-    priority/h1/h2/slot)."""
+    the partition is exhausted); the default is httpx.
+
+    The stage reads the request-column contract: an absent request
+    column is backfilled with its REQUEST_COL_DEFAULTS value at entry
+    (schemas.with_request_cols). Each row's ``proxy``,
+    ``allow_insecure_ssl``, ``timeout_ms``, ``max_bytes`` and
+    ``retries`` (reference ``app/schemas.py:105-170``) reach the
+    transport, and a NULL one resolves to the config value
+    (``cfg.timeout_ms`` defaults to the reference's 30 s). The proxy is
+    normalized with the P1 operator first, so a placeholder or unknown
+    scheme counts as NULL too. Hot hosts are salted across partitions
+    FIRST — this stage really does one network call per row, so a Zipf
+    host would otherwise pin one executor. ``passthrough`` columns ride
+    along untouched (the engine passes priority, the request columns,
+    h1/h2 and the slot)."""
     import pandas as pd
 
     from volltextextraktion_selenium_md_spark.functions.mime import normalize_proxy
@@ -713,60 +688,40 @@ def live_fetch(
                 "the sandbox engine uses simulated_fetch"
             ) from exc
         transport_factory = _httpx_transport_factory
-    if timeout_s is None:
-        timeout_s = cfg.timeout_ms / 1000.0
 
+    admitted = with_request_cols(admitted)
     nparts = num_partitions or int(
         admitted.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     salted = salted_repartition(admitted, nparts)
     salted = salted.withColumn("user_agent", pick_user_agent(F.col("url")))
-    proxy_src = (
-        F.col("proxy") if "proxy" in admitted.columns
-        else F.lit(cfg.proxy).cast("string")
-    )
-    # NULL allow_insecure_ssl means "use the global setting" (reference
-    # http_fetcher.py:43, README "null nutzt .env") — coalesce to the
-    # config default; a NULL proxy means NO proxy by the same reference
-    # semantics, so proxy does NOT coalesce
-    ssl_src = (
+    # the request's transport settings, each NULL resolving to the
+    # config value (reference http_fetcher.py:43, README "null nutzt
+    # .env"); the proxy is P1-normalized on both sides first, so a
+    # placeholder ''/'string' request proxy falls back to cfg.proxy.
+    # timeout_ms is converted to the transport's seconds unit here.
+    salted = salted.select(
+        "*",
+        F.coalesce(
+            normalize_proxy(F.col("proxy")),
+            normalize_proxy(F.lit(cfg.proxy).cast("string")),
+        ).alias("_proxy"),
         F.coalesce(
             F.col("allow_insecure_ssl"), F.lit(bool(cfg.allow_insecure_ssl))
-        )
-        if "allow_insecure_ssl" in admitted.columns
-        else F.lit(bool(cfg.allow_insecure_ssl))
+        ).alias("_insecure"),
+        (
+            F.coalesce(F.col("timeout_ms"), F.lit(int(cfg.timeout_ms)))
+            .cast("double") / F.lit(1000.0)
+        ).alias("_timeout_s"),
+        # the body cap governs both the transport's read cap and the
+        # stream cut (reference max_bytes, schemas.py:156-170); retries
+        # is the in-partition transport budget (schemas.py:130-141,
+        # retry loop http_fetcher.py:64-83)
+        F.coalesce(F.col("max_bytes"), F.lit(int(cfg.max_bytes)))
+        .cast("long").alias("_max_bytes"),
+        F.coalesce(F.col("retries"), F.lit(int(cfg.retries)))
+        .cast("int").alias("_retries"),
     )
-    salted = salted.withColumn("_proxy", normalize_proxy(proxy_src)).withColumn(
-        "_insecure", ssl_src.cast("boolean")
-    )
-    # per-row timeout: the frontier's timeout_ms overrides the config
-    # default for THAT request (reference schemas.py:116-128, NULL =
-    # global), converted to the transport's seconds unit once here
-    timeout_src = (
-        F.coalesce(F.col("timeout_ms"), F.lit(int(timeout_s * 1000)))
-        if "timeout_ms" in admitted.columns
-        else F.lit(int(timeout_s * 1000))
-    )
-    salted = salted.withColumn(
-        "_timeout_s", (timeout_src.cast("double") / F.lit(1000.0))
-    )
-    retries, max_bytes = cfg.retries, cfg.max_bytes
-    # per-row body cap (reference max_bytes, schemas.py:156-170; NULL =
-    # global) — governs both the transport's read cap and the stream cut
-    maxb_src = (
-        F.coalesce(F.col("max_bytes"), F.lit(int(max_bytes)))
-        if "max_bytes" in admitted.columns
-        else F.lit(int(max_bytes))
-    )
-    salted = salted.withColumn("_max_bytes", maxb_src.cast("long"))
-    # per-row transport retry budget (reference retries, schemas.py:
-    # 130-141, retry loop http_fetcher.py:64-83; NULL = global)
-    retries_src = (
-        F.coalesce(F.col("retries"), F.lit(int(retries)))
-        if "retries" in admitted.columns
-        else F.lit(int(retries))
-    )
-    salted = salted.withColumn("_retries", retries_src.cast("int"))
     pool_size = max(int(cfg.fetch_concurrency), 1)
     passthrough = list(passthrough or [])
     keep = ["url", "host", "depth", "lineage", "attempt", "user_agent"] + passthrough

@@ -88,7 +88,10 @@ from volltextextraktion_selenium_md_spark.operators.politeness import (
     schedule_slots,
     time_budget_split,
 )
-from volltextextraktion_selenium_md_spark.plans.convert import convert_stage
+from volltextextraktion_selenium_md_spark.plans.convert import (
+    FEATURE_COLS,
+    convert_stage,
+)
 from volltextextraktion_selenium_md_spark.plans.fetch import (
     links_from_payloads,
     live_decisions,
@@ -98,8 +101,8 @@ from volltextextraktion_selenium_md_spark.plans.fetch import (
 # the per-request column contract (schemas.py); importers of the engine
 # take REQUEST_COLS from here
 from volltextextraktion_selenium_md_spark.schemas import (
-    REQUEST_COL_DEFAULTS,
     REQUEST_COLS,
+    with_request_cols,
 )
 
 FRONTIER_COLS = [
@@ -112,13 +115,6 @@ LOG_COLS = [
     "page_id", "status_code", "final_url", "redirected", "content_type",
     "strategy", "route", "js_escalated", "elapsed_ms", "partition_id",
 ]
-
-# feature columns the convert stage needs from fetched rows
-CONVERT_FEATURES = [
-    "text_len", "has_main", "spa_mark", "js_required", "consent",
-    "bot_wall", "rss_link",
-]
-
 
 @dataclass
 class CrawlResult:
@@ -184,20 +180,6 @@ def _release_ckpt(df: DataFrame | None) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
-
-
-def with_request_cols(df: DataFrame) -> DataFrame:
-    """``df`` with every absent REQUEST_COL but the required ``mode``
-    added as its reference request default / NULL-means-config sentinel
-    (REQUEST_COL_DEFAULTS, see its comment for the per-field reference
-    citations): a seed frame may carry any subset of them, and a
-    checkpoint written before a column existed lacks it."""
-    have = set(df.columns)
-    for name in REQUEST_COLS:
-        if name != "mode" and name not in have:
-            dtype, default = REQUEST_COL_DEFAULTS[name]
-            df = df.withColumn(name, F.lit(default).cast(dtype))
-    return df
 
 
 def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> DataFrame:
@@ -325,7 +307,7 @@ class CrawlEngine:
             c for c in dict.fromkeys(
                 LOG_COLS[1:]
                 + ["page_status", "priority", *REQUEST_COLS, "h1", "h2"]
-                + (CONVERT_FEATURES if with_convert else [])
+                + (FEATURE_COLS if with_convert else [])
             ) if c != "status_code"
         ]
         self._fetch_cols = (
@@ -592,11 +574,7 @@ class CrawlEngine:
                 # frontier columns ride through the convert stage and
                 # steer the LLM stage row-wise — rows whose request
                 # didn't ask for postprocessing get a NULL llm struct
-                co = llm_postprocess_stage(
-                    co, error_col="error_page_detected",
-                    anonymize_col="llm_anonymize",
-                    enable_col="llm_postprocess",
-                )
+                co = llm_postprocess_stage(co)
             batch = conv.filter(F.col("image_id").isNotNull()).select(
                 "image_id",
                 F.col("image_bytes").alias("bytes"),

@@ -204,37 +204,24 @@ LLM_RESULT_FIELDS = [
 LLM_RESULT_TYPE = T.StructType(LLM_RESULT_FIELDS)
 
 
-def llm_postprocess_stage(
-    df: DataFrame,
-    markdown_col: str = "markdown",
-    page_id_col: str = "page_id",
-    error_col: str | None = None,
-    anonymize_col: str | None = None,
-    prompt_col: str | None = None,
-    enable_col: str | None = None,
-) -> DataFrame:
+def llm_postprocess_stage(df: DataFrame) -> DataFrame:
     """Arrow-batched postprocess pass: appends the LLMResult struct
-    column ``llm`` (CrawlResponse.llm shape, schemas.py:248-257).
-    ``prompt_col`` carries the per-request llm_clean_prompt override
-    (NULL rows use the default template); when omitted and the input
-    HAS an ``llm_prompt`` column, that column is used. ``enable_col``
-    is the per-request ``llm_postprocess`` gate (schemas.py:194-204):
-    rows whose flag is false get a NULL ``llm`` struct — the reference
-    only runs the LLM when the request asks for it (main.py:437-454);
-    a NULL flag means the request didn't set it -> reference default
-    false."""
-    if prompt_col is None and "llm_prompt" in df.columns:
-        prompt_col = "llm_prompt"
+    column ``llm`` (CrawlResponse.llm shape, schemas.py:248-257). Reads
+    the request-column contract by name: ``markdown``, ``page_id``,
+    ``error_page_detected`` and the per-request ``llm_anonymize``,
+    ``llm_postprocess`` and ``llm_prompt`` columns (the convert stage
+    carries them through). ``llm_postprocess`` is the gate
+    (schemas.py:194-204): rows whose flag is false or NULL get a NULL
+    ``llm`` struct — the reference only runs the LLM when the request
+    asks for it (main.py:437-454). A NULL ``llm_anonymize`` means the
+    reference default false; a NULL ``llm_prompt`` the default
+    template. The output schema is the input's plus ``llm``."""
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("llm", LLM_RESULT_TYPE, True)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            errors = pdf[error_col] if error_col else [False] * len(pdf)
-            anon = pdf[anonymize_col] if anonymize_col else [False] * len(pdf)
-            prompts = pdf[prompt_col] if prompt_col else [None] * len(pdf)
-            enabled = pdf[enable_col] if enable_col else [True] * len(pdf)
             pdf = pdf.copy()
             pdf["llm"] = [
                 # pd.isna: a NULL anonymize flag (nullable-boolean NA)
@@ -247,8 +234,9 @@ def llm_postprocess_stage(
                 if (not pd.isna(en)) and bool(en)
                 else None
                 for md, pid, e, a, p, en in zip(
-                    pdf[markdown_col], pdf[page_id_col], errors, anon,
-                    prompts, enabled,
+                    pdf["markdown"], pdf["page_id"],
+                    pdf["error_page_detected"], pdf["llm_anonymize"],
+                    pdf["llm_prompt"], pdf["llm_postprocess"],
                 )
             ]
             yield pdf

@@ -625,14 +625,13 @@ def q_converter_route(spark, sf_dir):
     wide) joined onto the seed pages — oracle-checking that the
     request surface the engine's loop carries actually steers the
     convert stage."""
-    from volltextextraktion_selenium_md_spark.plans.convert import convert_stage
+    from volltextextraktion_selenium_md_spark.plans.convert import (
+        FEATURE_COLS,
+        convert_stage,
+    )
 
     _g(spark, sf_dir)
-    feat = [
-        "url", "page_id", "content_type", "text_len", "has_main",
-        "spa_mark", "js_required", "consent", "bot_wall", "rss_link",
-    ]
-    rows = _spread(graph.pages(spark).select(*feat)).withColumn(
+    rows = _spread(graph.pages(spark).select(*FEATURE_COLS)).withColumn(
         "media_policy", F.expr(MEDIA_POLICY_CASE)
     ).withColumn("html_converter", F.expr(HTML_CONVERTER_CASE))
     out = convert_stage(rows, CrawlConfig()).select(
@@ -646,7 +645,7 @@ def q_converter_route(spark, sf_dir):
     fr = init_frontier(spark).select(
         "url", "html_converter", "media_policy", "max_bytes",
     )
-    rows_fr = _spread(graph.pages(spark).select(*feat)).join(fr, "url")
+    rows_fr = _spread(graph.pages(spark).select(*FEATURE_COLS)).join(fr, "url")
     out_fr = convert_stage(rows_fr, CrawlConfig()).select(
         "page_id", "converter_used"
     ).withColumn("src", F.lit("frontier"))
@@ -683,15 +682,17 @@ def q_llm_postprocess(spark, sf_dir):
             F.col("llm.tokens_used").alias("tokens_used"),
         ).withColumn("src", F.lit(src))
 
-    cases = _spread(spark.sql(LLM_CASES_BODY)).withColumn(
-        "error_page", F.col("status") >= 400
+    # the stage reads the request-column names: the case columns take
+    # them here (llm_go is the per-request llm_postprocess gate,
+    # schemas.py:194-204 — 1/11 of the cases didn't ask for the LLM ->
+    # NULL llm struct)
+    cases = _spread(spark.sql(LLM_CASES_BODY)).select(
+        "page_id", "markdown", "llm_prompt",
+        F.col("anonymize").alias("llm_anonymize"),
+        F.col("llm_go").alias("llm_postprocess"),
+        (F.col("status") >= 400).alias("error_page_detected"),
     )
-    staged = llm_postprocess_stage(
-        cases, error_col="error_page", anonymize_col="anonymize",
-        # per-request llm_postprocess gate (schemas.py:194-204): 1/11 of
-        # the cases didn't ask for the LLM -> NULL llm struct
-        enable_col="llm_go",
-    )
+    staged = llm_postprocess_stage(cases)
     # section 2: the LLM settings come FROM THE FRONTIER — the
     # llm_anonymize / llm_postprocess / llm_prompt columns init_frontier
     # carries (minted in g_seeds, inherited engine-wide) steer the real
@@ -702,11 +703,10 @@ def q_llm_postprocess(spark, sf_dir):
     cases_fr = spark.sql(
         "SELECT url, page_id, status, 'doc ' || CAST(page_id AS STRING) "
         "|| repeat(' w', page_id % 400) AS markdown FROM g_pages"
-    ).join(fr, "url").withColumn("error_page", F.col("status") >= 400)
-    staged_fr = llm_postprocess_stage(
-        cases_fr, error_col="error_page", anonymize_col="llm_anonymize",
-        enable_col="llm_postprocess", prompt_col="llm_prompt",
+    ).join(fr, "url").withColumn(
+        "error_page_detected", F.col("status") >= 400
     )
+    staged_fr = llm_postprocess_stage(cases_fr)
     return _flatten(staged, "cases").unionByName(_flatten(staged_fr, "frontier"))
 
 

@@ -6,14 +6,18 @@ Here each engine table's schema is the one its writing plan produces;
 Parquet reads take theirs from the file footer (``footer_schema``) or
 the snapshot manifest instead of a schema-inference job.
 ``REQUEST_COLS`` / ``REQUEST_COL_DEFAULTS`` are the CrawlRequest fields
-every frontier row carries; this leaf module owns them so the frontier
-and the fetch plans share one list without an import cycle.
+every frontier row carries; this leaf module owns them, and
+``with_request_cols`` backfills the absent ones, so the frontier and
+the fetch, convert and LLM stages share one contract without an import
+cycle.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DataType,
@@ -62,8 +66,9 @@ def footer_schema(path: str) -> StructType | None:
 # proxy / allow_insecure_ssl (:105-115), llm_prompt (llm_clean_prompt,
 # :206-226). Each is resolved per-request at its stage: convert reads
 # html_converter/media_policy/max_bytes/trafilatura_clean
-# (plans/convert.py), the live transport reads
-# proxy/allow_insecure_ssl/timeout_ms/max_bytes/retries
+# (plans/convert.py), the simulated fetch reads
+# mode/js_strategy/timeout_ms/retries/llm_postprocess and the live
+# transport proxy/allow_insecure_ssl/timeout_ms/max_bytes/retries
 # (plans/fetch.py), the LLM stage reads
 # llm_anonymize/llm_postprocess/llm_prompt (plans/llm.py).
 REQUEST_COLS = [
@@ -74,14 +79,19 @@ REQUEST_COLS = [
 ]
 
 # (spark type, default) for request columns absent from an input — a
-# bare seed frame or a checkpoint written before the column existed.
+# bare seed frame, a checkpoint written before the column existed, or
+# any frame handed to the fetch or convert stage: each stage backfills
+# with with_request_cols at its entry, so an absent column means
+# exactly its default here.
 # Defaults are the REFERENCE request defaults where it has one
 # (js_strategy 'speed', llm_anonymize/llm_postprocess false; extract_
 # links true is the crawl default — a crawl means following links);
 # NULL where NULL means "resolve against global config at the stage"
-# (timeout_ms, retries, max_bytes, trafilatura_clean,
-# allow_insecure_ssl) or "not set" (html_converter, media_policy,
-# proxy, llm_prompt). 'mode' is required input and has no default.
+# (timeout_ms, retries, max_bytes, trafilatura_clean, proxy,
+# allow_insecure_ssl, media_policy) or "not set" (html_converter,
+# llm_prompt). A proxy value the P1 normalizer rejects (''/'string'/
+# an unknown scheme) counts as NULL and falls back to CrawlConfig.proxy.
+# 'mode' is required input and has no default.
 REQUEST_COL_DEFAULTS: dict[str, tuple[str, object]] = {
     "js_strategy": ("string", "speed"),
     "llm_anonymize": ("boolean", False),
@@ -97,3 +107,16 @@ REQUEST_COL_DEFAULTS: dict[str, tuple[str, object]] = {
     "allow_insecure_ssl": ("boolean", None),
     "llm_prompt": ("string", None),
 }
+
+
+def with_request_cols(df: DataFrame) -> DataFrame:
+    """``df`` with every absent REQUEST_COL but the required ``mode``
+    added as its REQUEST_COL_DEFAULTS value (see its comment for the
+    per-field reference citations). Present columns are left as they
+    are, so a frame that already carries the contract is unchanged."""
+    have = set(df.columns)
+    for name in REQUEST_COLS:
+        if name != "mode" and name not in have:
+            dtype, default = REQUEST_COL_DEFAULTS[name]
+            df = df.withColumn(name, F.lit(default).cast(dtype))
+    return df
