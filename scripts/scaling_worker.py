@@ -113,14 +113,13 @@ def main() -> None:
         if "=" in kv
     )
     if mirrors >= 8:
-        # High-volume conf, per job shape. ENGINE runs: the engine's
-        # volume-adaptive round width (CrawlEngine._set_round_width)
-        # already plans each round at a volume-proportional width, so
-        # the session keeps the width-preserving AQE defaults — the
-        # sizing conf (64m advisory) on top of a narrowed round width
-        # collapses loop stages to a single task (measured r5:
-        # convoff-adaptive-sizing 320.4 s vs convoff-adaptive-pf
-        # 210.8/207.6 s, BENCH_RUNS_r5.jsonl). The standalone convert/
+        # High-volume conf, per job shape. ENGINE runs keep the
+        # width-preserving AQE defaults: the loop's barrier stages are
+        # task-latency-bound, and the sizing conf (64m advisory)
+        # collapses them to a single task (measured r5 with the since
+        # deleted adaptive round width: convoff-adaptive-sizing 320.4 s
+        # vs convoff-adaptive-pf 210.8/207.6 s, BENCH_RUNS_r5.jsonl);
+        # every round plans at the session width. The standalone convert/
         # frontier KERNELS keep sizing-based coalescing (round-4
         # measurement: their one wide mapInPandas/shuffle pass is
         # volume-bound, not latency-bound). FAIR pools only when a

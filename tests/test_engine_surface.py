@@ -118,6 +118,70 @@ def test_stages_read_the_request_columns_unconditionally():
     assert not forks, forks
 
 
+def _conf_writes(tree: ast.AST) -> list[str]:
+    """Qualified name of the enclosing function of every session-conf
+    write (``<x>.conf.set/unset(...)`` or ``conf.set/unset(...)`` on a
+    local bound to a conf), one entry per call."""
+    found = []
+
+    def visit(node: ast.AST, scope: tuple[str, ...]) -> None:
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = (*scope, node.name)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            target = node.func.value
+            if node.func.attr in ("set", "unset") and (
+                (isinstance(target, ast.Attribute) and target.attr == "conf")
+                or (isinstance(target, ast.Name) and target.id == "conf")
+            ):
+                found.append(".".join(scope))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(tree, ())
+    return found
+
+
+def test_one_session_conf_write():
+    """The engine shares the caller's session conf with its bulk-convert
+    thread; the only write is the AQE toggle (and its restore) around
+    the partitioned seen base's capture, which drains the bulk thread
+    first. No lock serializes the two threads: the futures do."""
+    writes = []
+    for path, tree in _trees(PKG):
+        rel = os.path.relpath(path, PKG)
+        writes += [f"{rel}:{w}" for w in _conf_writes(tree)]
+    assert writes == ["plans/frontier.py:CrawlEngine._ckpt_partitioned"] * 2, writes
+    path = os.path.join(PKG, "plans", "frontier.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            assert "threading" not in {a.name for a in node.names}
+        if isinstance(node, ast.ImportFrom):
+            assert node.module != "threading"
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            assert name not in ("Lock", "RLock"), f"lock at line {node.lineno}"
+
+
+def test_conf_write_scan_sees_every_form():
+    tree = ast.parse(
+        "class E:\n"
+        "    def a(self):\n"
+        "        self.spark.conf.set('k', 'v')\n"
+        "    def b(self):\n"
+        "        conf = self.spark.conf\n"
+        "        conf.set('k', 'v')\n"
+        "        conf.unset('k')\n"
+        "def c(spark):\n"
+        "    spark.conf.set('k', 'v')\n"
+        "    spark.conf.get('k')\n"
+        "    {}.setdefault('k', 'v')\n"
+    )
+    assert _conf_writes(tree) == ["E.a", "E.b", "E.b", "c"]
+
+
 def test_engine_parameter_count():
     params = inspect.signature(CrawlEngine).parameters
     assert len(params) <= MAX_ENGINE_PARAMS, list(params)

@@ -327,23 +327,77 @@ def test_partitioned_seen_base_still_exact(spark, min_rows):
     assert {r["url"] for r in res.seen.collect()} == rep.seen
 
 
-def test_adaptive_shuffle_width_exact_and_conf_restored(spark, monkeypatch):
-    """The per-round adaptive shuffle width is a pure perf knob: the
-    crawl ordering and seen set must be identical at BOTH extremes
-    (rows_per_task=1 pins every round to the session ceiling;
-    rows_per_task huge pins every round to the floor of 8), and the
-    engine must hand the session conf back at its original width even
-    though rounds mutated it."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    cfg = CrawlConfig()
+def test_convert_on_partitioned_seen_base_exact_and_conf_kept(spark):
+    """The partitioned seen base's capture turns AQE off on the session
+    conf the bulk-convert thread shares, so it first drains every job
+    handed to that thread. A convert-on mirrored crawl promoted to the
+    partitioned base at round 0 (``seen_partitioned_min_rows=1``) and
+    compacting again at round SEEN_COMPACT_EVERY - 1, each time right
+    after the round's convert was submitted, stays replay-exact per
+    mirror, and the session conf reads the same after the run."""
+    from tests.test_mirror_factoring import REPLAY_KEY, per_mirror_crawl
+
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.constraintPropagation.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    cfg = CrawlConfig(max_depth=3, max_rounds=5)
+    mirrors = 2
+    eng = CrawlEngine(
+        spark, SF_SMALL, cfg, with_convert=True, mirrors=mirrors,
+        seen_partitioned_min_rows=1,
+    )
+    # (round, convert jobs submitted so far) at each partitioned capture
+    captures = []
+    capture = eng._ckpt_partitioned
+
+    def recording(df):
+        captures.append((eng._rnd, len(eng._bulk_futures)))
+        return capture(df)
+
+    eng._ckpt_partitioned = recording
+    res = eng.run()
+    assert {k: spark.conf.get(k) for k in keys} == before
+    # non-vacuous: promotion and a scheduled compaction both captured a
+    # partitioned base with the round's convert already submitted
+    assert eng._seen_partitioned
+    assert (0, 1) in captures
+    every = CrawlEngine.SEEN_COMPACT_EVERY
+    assert (every - 1, every) in captures
+    assert res.conversions.count() > 0
+    per_m, seen_m = per_mirror_crawl(res, eng.span, mirrors)
     rep = replay_crawl(SF_SMALL, cfg)
-    for rows_per_task in (1, 10_000_000):
-        monkeypatch.setattr(CrawlEngine, "SHUFFLE_ROWS_PER_TASK", rows_per_task)
-        eng = CrawlEngine(spark, SF_SMALL, cfg)
-        res = eng.run()
-        assert _spark_order(res) == _gold_order(rep)
-        assert {r["url"] for r in res.seen.collect()} == rep.seen
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    want = [tuple(g[k] for k in REPLAY_KEY) for g in rep.crawl_order]
+    for m, got in per_m.items():
+        assert [tuple(r[k] for k in REPLAY_KEY) for r in got] == want, m
+    assert seen_m == {m: rep.seen for m in range(mirrors)}
+
+
+def test_null_js_strategy_is_the_speed_pool(spark):
+    """A request that carries ``js_strategy`` as NULL (present, not
+    absent) runs in the default speed pool, as the replay does: the
+    speed->accuracy ladder still escalates its renders and charges the
+    surcharge (the KEY compares ``js_escalated`` row for row)."""
+    from pyspark.sql import functions as F
+
+    from volltextextraktion_selenium_md_spark import graph
+    from volltextextraktion_selenium_md_spark.replay import _load_graph
+
+    cfg = CrawlConfig(max_rounds=20)
+    seeds = [{**s, "js_strategy": None} for s in _load_graph(SF_SMALL)[2]]
+    rep = replay_crawl(SF_SMALL, cfg, seeds=seeds)
+    # non-vacuous: the ladder fires in this crawl
+    assert any(g["js_escalated"] for g in rep.crawl_order)
+    graph.register_graph_views(spark, SF_SMALL)
+    eng = CrawlEngine(spark, SF_SMALL, cfg)
+    eng.seeds = graph.seeds(spark).withColumn(
+        "js_strategy", F.lit(None).cast("string")
+    )
+    res = eng.run()
+    assert _spark_order(res) == _gold_order(rep)
+    assert {r["url"] for r in res.seen.collect()} == rep.seen
 
 
 def test_per_request_timeout_override_steers_outcomes(spark):

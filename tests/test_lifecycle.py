@@ -57,3 +57,31 @@ def test_pipelined_crawl_releases_dead_blocks(spark):
     assert mem - mem0 < 8 * 2**20, (
         f"crawl left {(mem - mem0) / 2**20:.1f} MB pinned in memory"
     )
+
+
+def test_release_frees_the_checkpoint_under_a_projection(spark, tmp_path):
+    """Every seen delta is a projection of a checkpoint (``unseen.select
+    (...)``); releasing the projection must free the checkpoint's blocks.
+    A parquet-backed frame has no checkpoint under it: releasing it is a
+    no-op."""
+    from volltextextraktion_selenium_md_spark.plans.frontier import _release_ckpt
+
+    def held(ck):
+        rdd_id = ck._jdf.queryExecution().analyzed().rdd().id()
+        return sum(
+            i.memSize() + i.diskSize()
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if i.id() == rdd_id
+        )
+
+    ck = spark.range(100_000).select(
+        F.col("id").cast("string").alias("url"),
+        F.col("id").alias("h1"), F.col("id").alias("h2"),
+    ).localCheckpoint()
+    assert held(ck) > 0
+    _release_ckpt(ck.select("url", "h1"))
+    assert held(ck) == 0
+
+    path = str(tmp_path / "seen")
+    spark.range(10).write.parquet(path)
+    _release_ckpt(spark.read.parquet(path).select("id"))

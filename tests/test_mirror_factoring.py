@@ -111,16 +111,15 @@ def _segment_value(seg: str) -> int:
     return int(seg[3:]) if seg.startswith("~") else int(seg)
 
 
-def test_factored_mirror_crawl_equals_replay_per_mirror(spark):
-    """Each mirror of a factored ``mirrors=3`` crawl, with its mirror
-    token stripped from url/host/final_url and its lineage head and
-    page_id re-based to the base graph (mirror m of seed s carries seed
-    index s * 3 + m and page_id base + m * span), is exactly the golden
-    replay of the base graph: crawl order, seen set, and the page
-    attributes the fetch join re-mints."""
-    cfg = CrawlConfig(max_depth=3, max_rounds=5)
-    eng = CrawlEngine(spark, SF_SMALL, cfg, mirrors=MIRRORS)
-    res = eng.run()
+def per_mirror_crawl(
+    res, span: int, mirrors: int
+) -> tuple[dict[int, list[dict]], dict[int, set]]:
+    """A factored ``mirrors``-way crawl split into its mirrors, each in
+    base-graph terms: (mirror -> its decisions in ordinal order, mirror
+    -> its seen urls). The mirror token is stripped from url/host/
+    final_url, and the lineage head and page_id are re-based (mirror m
+    of seed s carries seed index s * mirrors + m and page_id base +
+    m * span)."""
     rows = [
         r.asDict() for r in res.fetch_log.filter("outcome <> 'blocked'")
         .select(*LOG_KEY, "host", "js_escalated").orderBy("ordinal").collect()
@@ -128,23 +127,38 @@ def test_factored_mirror_crawl_equals_replay_per_mirror(spark):
     assert len(rows) > 0
     # sanity: the crawl really ran in mirrored URL space
     assert all(".m" in r["url"] for r in rows)
-    pages = {
-        r["url"]: r for r in graph.pages(spark).select(
-            "url", "host", "page_id", "status", "final_url", "content_type"
-        ).collect()
-    }
-    per_m: dict[int, list[dict]] = {m: [] for m in range(MIRRORS)}
+    per_m: dict[int, list[dict]] = {m: [] for m in range(mirrors)}
     for r in rows:
         m, url = _unmirror(r["url"])
         head, dot, rest = r["lineage"].partition(".")
-        base_head = segment((_segment_value(head) - m) // MIRRORS, SEED_WIDTH)
+        base_head = segment((_segment_value(head) - m) // mirrors, SEED_WIDTH)
         per_m[m].append({
             **r, "url": url, "host": _unmirror(r["host"])[1],
             "lineage": base_head + dot + rest,
             "final_url": r["final_url"] and _unmirror(r["final_url"])[1],
             "page_id": (None if r["page_id"] is None
-                        else r["page_id"] - m * eng.span),
+                        else r["page_id"] - m * span),
         })
+    seen_m: dict[int, set] = {m: set() for m in range(mirrors)}
+    for r in res.seen.collect():
+        m, url = _unmirror(r["url"])
+        seen_m[m].add(url)
+    return per_m, seen_m
+
+
+def test_factored_mirror_crawl_equals_replay_per_mirror(spark):
+    """Each mirror of a factored ``mirrors=3`` crawl, re-based to the
+    base graph (``per_mirror_crawl``), is exactly the golden replay of
+    the base graph: crawl order, seen set, and the page attributes the
+    fetch join re-mints."""
+    cfg = CrawlConfig(max_depth=3, max_rounds=5)
+    eng = CrawlEngine(spark, SF_SMALL, cfg, mirrors=MIRRORS)
+    per_m, seen_m = per_mirror_crawl(eng.run(), eng.span, MIRRORS)
+    pages = {
+        r["url"]: r for r in graph.pages(spark).select(
+            "url", "host", "page_id", "status", "final_url", "content_type"
+        ).collect()
+    }
     rep = replay_crawl(SF_SMALL, cfg)
     want = [tuple(g[k] for k in REPLAY_KEY) for g in rep.crawl_order]
     for m, got in per_m.items():
@@ -158,8 +172,4 @@ def test_factored_mirror_crawl_equals_replay_per_mirror(spark):
                     r["final_url"], r["content_type"]) == (
                 page["host"], page["page_id"], page["status"],
                 page["final_url"], page["content_type"]), r
-    seen_m: dict[int, set] = {m: set() for m in range(MIRRORS)}
-    for r in res.seen.collect():
-        m, url = _unmirror(r["url"])
-        seen_m[m].add(url)
     assert seen_m == {m: rep.seen for m in range(MIRRORS)}

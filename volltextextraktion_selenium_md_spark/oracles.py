@@ -375,7 +375,8 @@ def _cost_exprs(probe_cap_timeout: int | None = None) -> tuple[str, str]:
 
     cfg = CrawlConfig()
     x = cfg.js_accuracy_extra_ms
-    acc = "(js_strategy = 'accuracy')"
+    # NULL js_strategy = the reference default pool 'speed'
+    acc = "(coalesce(js_strategy, 'speed') = 'accuracy')"
     strat = _strategy_case()
     if probe_cap_timeout is not None:
         trip = (

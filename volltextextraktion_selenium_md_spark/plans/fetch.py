@@ -132,7 +132,11 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
         )
         | blocked_render
     )
-    accuracy = F.col("js_strategy") == "accuracy"
+    # a present-but-NULL js_strategy is the default pool, as an absent
+    # one is (with_request_cols only backfills absent columns)
+    accuracy = F.coalesce(
+        F.col("js_strategy"), F.lit(REQUEST_COL_DEFAULTS["js_strategy"][1])
+    ) == "accuracy"
     # speed->accuracy failure ladder (reference app/js_fetcher.py:
     # 896-946): a SPEED render that hits the renderer timeout (early
     # path) or exhausts retries — which a bot wall always does

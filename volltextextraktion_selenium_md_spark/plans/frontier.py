@@ -25,6 +25,13 @@ in this order: the frontier count, the seen filter's one fold,
 ``_commit`` and ``_hygiene``. ``_endgame`` drains the bulk thread and
 assigns the global ordinal.
 
+The loop thread and the bulk thread share one session conf, and the
+engine writes it in one place only: ``_ckpt_partitioned`` turns AQE off
+while it captures the partitioned seen base. It first waits for every
+job handed to the bulk thread (``_drain``, the same wait ``_commit``
+runs before publishing a snapshot), so no bulk job is planned inside
+that window. Every round plans its shuffles at the session width.
+
 The fetch stage is either the simulated lookup join (deterministic,
 oracle-checkable) or the LIVE network stage (fetch_mode='live': salted
 mapInPandas, per-partition client + thread pool, children extracted
@@ -56,7 +63,6 @@ Scale notes (10^10-URL design point):
 from __future__ import annotations
 
 import os
-import threading
 import time as _time
 from dataclasses import dataclass, field
 
@@ -163,23 +169,26 @@ def global_ordinal(
 
 
 def _release_ckpt(df: DataFrame | None) -> None:
-    """Free a localCheckpoint's stored blocks. The caller must guarantee
-    the DataFrame is never read again — Spark raises
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND if it is (loud, never silent
-    corruption). No-op for plans that aren't checkpoint-backed (a
-    parquet-backed resume read has no LogicalRDD root and nothing to
-    free). This is mandatory 10^10-scale hygiene: a crawl that pins
-    every round's checkpoint retains O(total crawl volume) of
-    block-manager storage, and past ~50% of unified memory the
-    executor's EXECUTION side starts spilling every shuffle — measured
-    m128/s64 local[32]: 439 s pinned vs 345 s with the blocks released
-    (BENCH.md round 6)."""
+    """Free the stored blocks of every localCheckpoint ``df`` reads —
+    each ``LogicalRDD`` leaf of its analyzed plan, so a projection of a
+    checkpoint (every seen delta is one) frees the checkpoint under it.
+    The caller must guarantee none of those checkpoints is read again —
+    Spark raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND if one is (loud,
+    never silent corruption). No-op for plans that aren't
+    checkpoint-backed (a parquet-backed resume read has no LogicalRDD
+    leaf and nothing to free). This is mandatory 10^10-scale hygiene: a
+    crawl that pins every round's checkpoint retains O(total crawl
+    volume) of block-manager storage, and past ~50% of unified memory
+    the executor's EXECUTION side starts spilling every shuffle —
+    measured m128/s64 local[32]: 439 s pinned vs 345 s with the blocks
+    released (BENCH.md round 6)."""
     if df is None:
         return
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> DataFrame:
@@ -212,28 +221,6 @@ def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> Dat
 
 
 class CrawlEngine:
-    # Volume-adaptive shuffle width (round-4 verdict #2 "shape-adaptive,
-    # not static"): each round plans its shuffles at
-    #   clamp(8, ceil(n_frontier / SHUFFLE_ROWS_PER_TASK), session)
-    # so the session width stays the CEILING (on a real cluster:
-    # thousands, set via spark-submit) while small rounds — a real
-    # crawl's first and last rounds are always small, and the whole
-    # sandbox flagship is — stop paying per-task scheduling latency for
-    # near-empty tasks. Measured basis (BENCH_RUNS_r5.jsonl, interleaved
-    # A/B on the conv-off mirrors=64 loop, 32 cores): adaptive width +
-    # width-preserving AQE 207.6-222.5 s vs the sizing-conf configs
-    # 229-436 s, and it beat a static session width of 8 in both
-    # interleaved control pairs — the loop's barrier stages are
-    # task-latency-bound, not throughput-bound, at sandbox volumes. NOTE
-    # the conf interplay: a 64 MB AQE advisory on top of a narrowed
-    # round width collapses stages to a single task (measured 320.4 s) —
-    # adaptive width REPLACES sizing-based coalescing, it must not run
-    # under it. Only the per-round session conf moves: the cached
-    # pages/links sides, the partitioned seen base, and the convert
-    # width all keep the session width, so the exchange-free layouts are
-    # untouched. At 10^10-URL rounds n_frontier/rows_per_task exceeds
-    # any cluster width and this is a no-op (= ceiling).
-    SHUFFLE_ROWS_PER_TASK = 50_000
     # convert-task granularity multiplier (round-4 verdict #3 "finer
     # convert tasks"): convert width = CONVERT_TASK_FACTOR x session
     # width, capped at the round's row count
@@ -337,18 +324,12 @@ class CrawlEngine:
         # broadcast; past that the partitioned/exchange-free layout
         # wins (r4 measured it at 204 s for the conv-off m64 loop).
         self.seen_partitioned_min_rows = seen_partitioned_min_rows
-        # serializes _ckpt_partitioned's session-conf AQE toggle against
-        # the background bulk thread (round-4 verdict #9): a bulk job
-        # planned inside the toggle window would silently run without
-        # AQE. The bulk worker holds the lock while planning/running.
-        self._conf_lock = threading.Lock()
         # the session width is every explicit width's ceiling: the
         # cached pages/links, the partitioned seen base, the convert
         # stage and the final ordinal sort
         self._session_width = int(
             spark.conf.get("spark.sql.shuffle.partitions")
         )
-        self._round_width = self._session_width
         graph.register_graph_views(spark, sf_dir)
         self.pages = graph.pages(spark)
         self.robots = graph.robots(spark)
@@ -428,10 +409,18 @@ class CrawlEngine:
             graph.insert_mirror(F.col("canon_url"), F.col("_mir")).alias("raw_url"),
         )
 
-    def _ckpt_partitioned(
-        self, df: DataFrame, key: str = "url", blocking: bool = True
-    ) -> DataFrame | None:
-        """Eager localCheckpoint that KEEPS hash(key) partitioning and
+    def _drain(self) -> None:
+        """Wait for every job handed to the bulk thread so far (convert,
+        payload merge, narrow log re-checkpoint); re-raises a worker's
+        exception. ``result()`` is idempotent, so draining twice costs
+        nothing. The bulk thread only runs what this (loop) thread
+        submits, so after the drain no bulk job is planned until the
+        loop submits the next one."""
+        for fut in self._bulk_futures + self._hygiene_futures:
+            fut.result()
+
+    def _ckpt_partitioned(self, df: DataFrame) -> DataFrame:
+        """Eager localCheckpoint that KEEPS hash(url) partitioning and
         per-partition ordering visible to later plans. AQE must be off
         while the checkpoint is captured: under AQE the physical root is
         an un-finalized AdaptiveSparkPlanExec whose outputPartitioning
@@ -439,50 +428,34 @@ class CrawlEngine:
         ENSURE_REQUIREMENTS exchange in every consumer (verified on
         Spark 4.1; with the toggle the downstream AQE-planned anti-join
         shows ZERO exchanges on this side). The sort lets the SMJ skip
-        the base-side sort too. Holds _conf_lock so the bulk thread
-        never plans a job during the toggle window; with
-        ``blocking=False`` the call returns None instead of waiting for
-        an in-flight bulk job (the caller defers the compaction)."""
-        if not self._conf_lock.acquire(blocking=blocking):
-            return None
-        try:
-            conf = self.spark.conf
-            prev = conf.get("spark.sql.adaptive.enabled", "true")
-            conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                return (
-                    df.repartition(self._session_width, key)
-                    .sortWithinPartitions(key)
-                    .localCheckpoint()
-                )
-            finally:
-                conf.set("spark.sql.adaptive.enabled", prev)
-        finally:
-            self._conf_lock.release()
+        the base-side sort too.
 
-    def _ckpt_seen(
-        self, df: DataFrame, n_hint: int, blocking: bool = True
-    ) -> DataFrame | None:
+        This is the engine's only session-conf write. The conf is shared
+        with the bulk thread, so the toggle window opens only after
+        ``_drain``: a bulk job planned inside it would silently run
+        without AQE."""
+        self._drain()
+        conf = self.spark.conf
+        prev = conf.get("spark.sql.adaptive.enabled", "true")
+        conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return (
+                df.repartition(self._session_width, "url")
+                .sortWithinPartitions("url")
+                .localCheckpoint()
+            )
+        finally:
+            conf.set("spark.sql.adaptive.enabled", prev)
+
+    def _ckpt_seen(self, df: DataFrame, n_hint: int) -> DataFrame:
         """Checkpoint a (compacted) seen base, volume-adaptively: small
         bases take a plain eager checkpoint (no repartition/sort jobs,
         no AQE toggle — the anti-join broadcasts them), large bases the
         partitioned+sorted form (exchange-free base side). Promotion is
-        monotonic so a run never flip-flops layouts. Returns None when
-        ``blocking=False`` and the bulk thread holds the conf lock —
-        compaction timing is a perf detail, so the caller just retries
-        next round (bounded by the force cap at the call site)."""
+        monotonic so a run never flip-flops layouts."""
         if self._seen_large(n_hint):
-            out = self._ckpt_partitioned(df, blocking=blocking)
-            # flip the flag only once a partitioned base actually
-            # exists: a non-blocking attempt that lost the conf-lock
-            # race returns None, and marking the layout promoted then
-            # would turn off the broadcast hint AND the promote_now
-            # retry while the base is still a plain stats-less
-            # checkpoint — up to SEEN_COMPACT_EVERY rounds of the 2x
-            # slower two-sided sort-merge anti-join
-            if out is not None:
-                self._seen_partitioned = True
-            return out
+            self._seen_partitioned = True
+            return self._ckpt_partitioned(df)
         return df.localCheckpoint()
 
     def _seen_large(self, n_seen: int) -> bool:
@@ -491,33 +464,6 @@ class CrawlEngine:
         hash-partitioned + sorted and anti-joined exchange-free; a small
         one is a plain checkpoint the anti-join broadcasts."""
         return self._seen_partitioned or n_seen >= self.seen_partitioned_min_rows
-
-    def _set_round_width(self, n_frontier: int) -> None:
-        """Set ``spark.sql.shuffle.partitions`` for THIS round's plans
-        from the round's live frontier size (see SHUFFLE_ROWS_PER_TASK). The
-        session value is the ceiling; the floor of 8 keeps a little
-        parallelism and tail tolerance in near-empty rounds. Width is a
-        pure perf knob — crawl ordering and the seen set are width-
-        independent (replay tests run both extremes) — so if the bulk-
-        convert thread holds the conf lock mid-plan we simply skip the
-        change this round rather than stall the loop or yank the conf
-        out from under a job being planned."""
-        want = min(
-            self._session_width,
-            max(
-                min(8, self._session_width),
-                -(-n_frontier // self.SHUFFLE_ROWS_PER_TASK),
-            ),
-        )
-        if want == self._round_width:
-            return
-        if not self._conf_lock.acquire(blocking=False):
-            return
-        try:
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(want))
-            self._round_width = want
-        finally:
-            self._conf_lock.release()
 
     @staticmethod
     def _union_parts(parts: list[DataFrame]) -> DataFrame:
@@ -542,51 +488,48 @@ class CrawlEngine:
         # convert tasks fill slots the loop leaves idle but never starve
         # its barriers
         self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", "bulk")
-        # _conf_lock: never plan/run a bulk job while _ckpt_partitioned
-        # has AQE toggled off on the shared session conf
-        with self._conf_lock:
-            # DISK_ONLY: the convert output carries the payload bytes
-            # (image rows) — at web scale those stream to the sink, they
-            # are never RAM-resident. Memory-level checkpoints here pinned
-            # O(crawl volume) of unified memory and starved the execution
-            # side into per-shuffle spills (measured m128/s64 local[32]:
-            # 439 s -> 345 s, BENCH.md r6); the final payload count
-            # streams from local disk instead.
-            conv = conv.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-            # the reference flags error pages on the CONVERTED markdown
-            # of every response (main.py:433), not only on the LLM path
-            # — CrawlResponse.error_page_detected
-            co = conv.select(
-                "url", "page_id", "markdown", "markdown_length",
-                "converter_used", "truncated", "llm_anonymize",
-                "llm_postprocess", "llm_prompt",
-            ).withColumn(
-                "error_page_detected",
-                error_page_detected(F.col("markdown"), F.lit(None).cast("int")),
+        # DISK_ONLY: the convert output carries the payload bytes
+        # (image rows) — at web scale those stream to the sink, they
+        # are never RAM-resident. Memory-level checkpoints here pinned
+        # O(crawl volume) of unified memory and starved the execution
+        # side into per-shuffle spills (measured m128/s64 local[32]:
+        # 439 s -> 345 s, BENCH.md r6); the final payload count
+        # streams from local disk instead.
+        conv = conv.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
+        # the reference flags error pages on the CONVERTED markdown
+        # of every response (main.py:433), not only on the LLM path
+        # — CrawlResponse.error_page_detected
+        co = conv.select(
+            "url", "page_id", "markdown", "markdown_length",
+            "converter_used", "truncated", "llm_anonymize",
+            "llm_postprocess", "llm_prompt",
+        ).withColumn(
+            "error_page_detected",
+            error_page_detected(F.col("markdown"), F.lit(None).cast("int")),
+        )
+        if self.with_llm:
+            from volltextextraktion_selenium_md_spark.plans.llm import (
+                llm_postprocess_stage,
             )
-            if self.with_llm:
-                from volltextextraktion_selenium_md_spark.plans.llm import (
-                    llm_postprocess_stage,
-                )
 
-                # per-request llm_anonymize + llm_postprocess (reference
-                # schemas.py:194-211, honored at main.py:437-457): both
-                # frontier columns ride through the convert stage and
-                # steer the LLM stage row-wise — rows whose request
-                # didn't ask for postprocessing get a NULL llm struct
-                co = llm_postprocess_stage(co)
-            batch = conv.filter(F.col("image_id").isNotNull()).select(
-                "image_id",
-                F.col("image_bytes").alias("bytes"),
-                "w", "h", "fmt", "caption", "phash",
-            )
-            if self.payload_table is None:
-                return co, batch
-            # land this round's image+caption rows in the payload table:
-            # Iceberg `MERGE INTO payload USING batch ON image_id` (north
-            # rule input_hint shape)
-            merge_into(self.spark, self.payload_table, batch, "image_id")
-            return co, None
+            # per-request llm_anonymize + llm_postprocess (reference
+            # schemas.py:194-211, honored at main.py:437-457): both
+            # frontier columns ride through the convert stage and
+            # steer the LLM stage row-wise — rows whose request
+            # didn't ask for postprocessing get a NULL llm struct
+            co = llm_postprocess_stage(co)
+        batch = conv.filter(F.col("image_id").isNotNull()).select(
+            "image_id",
+            F.col("image_bytes").alias("bytes"),
+            "w", "h", "fmt", "caption", "phash",
+        )
+        if self.payload_table is None:
+            return co, batch
+        # land this round's image+caption rows in the payload table:
+        # Iceberg `MERGE INTO payload USING batch ON image_id` (north
+        # rule input_hint shape)
+        merge_into(self.spark, self.payload_table, batch, "image_id")
+        return co, None
 
     def run(self) -> CrawlResult:
         # FAIR pool split (round-4 scaling fix): the loop thread's small
@@ -603,14 +546,6 @@ class CrawlEngine:
             return self._run_impl()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", prev_pool)
-            # leave the session conf as we found it (the adaptive round
-            # width is engine-internal; callers and later queries plan
-            # at the session width)
-            if self._round_width != self._session_width:
-                self.spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(self._session_width)
-                )
-                self._round_width = self._session_width
             # error-path cleanup: if the round loop or a drain raised,
             # cancel queued bulk-convert jobs and close the pool so no
             # non-daemon worker keeps submitting Spark jobs against a
@@ -782,9 +717,6 @@ class CrawlEngine:
     def _round(self) -> None:
         """One crawl round, in the module docstring's diagram order."""
         frontier = self._frontier
-        # plan this round's shuffles at a width the round's volume
-        # justifies (session width stays the ceiling)
-        self._set_round_width(self._n_frontier)
         admitted, deferred, blocked = self._politeness(frontier)
         fetched = self._fetch(admitted, blocked)
         if self.with_convert:
@@ -885,6 +817,12 @@ class CrawlEngine:
         # task re-checkpoints it NARROW so the wide fetched blocks can
         # be released (convert on). Blocked rows set the round, the row's
         # identity and the outcome; their fetch columns are NULL.
+        # partition_id is nullable on the fetched side too (no row has -1):
+        # unioned as non-nullable with the blocked side's NULL, it leaves
+        # the narrow checkpoint a constraint on the non-nullable attribute,
+        # which Spark 4.1's LogicalRDD.newInstance fails to re-key (its map
+        # compares nullability) when _endgame's union deduplicates the
+        # checkpoint — "key not found: partition_id#N" at planning.
         rnd = F.lit(self._rnd).alias("round")
         self._logs.append(
             fetched.select(
@@ -892,7 +830,8 @@ class CrawlEngine:
                 "outcome", "page_id",
                 F.col("page_status").alias("status_code"),
                 "final_url", "redirected", "content_type", "strategy",
-                "route", "js_escalated", "elapsed_ms", "partition_id",
+                "route", "js_escalated", "elapsed_ms",
+                F.nullif(F.col("partition_id"), F.lit(-1)).alias("partition_id"),
             ).unionByName(
                 blocked.select(
                     rnd, "url", "host", "depth", "lineage", "mode",
@@ -1051,32 +990,18 @@ class CrawlEngine:
         # base (at 10^10 scale this is the lakehouse seen-table MERGE; locally
         # a checkpoint rewrite) — bounds the anti-join chain depth at
         # SEEN_COMPACT_EVERY + 1. Volume-adaptive: small seen sets compact into
-        # a plain checkpoint instead. When the bulk-convert thread is mid-job
-        # (it holds _conf_lock for its whole body so the AQE toggle can't
-        # corrupt its plans), the compaction DEFERS a round rather than stall
-        # the loop behind a multi-job convert — until the delta chain hits 2x
-        # the compact interval, at which point we do block (anti-join depth
-        # stays bounded).
-        force = len(self._seen_parts) > 2 * self.SEEN_COMPACT_EVERY
-        base = self._ckpt_seen(
-            self._union_parts(self._seen_parts), self._n_seen, blocking=force
-        )
-        if base is None:
-            return []
+        # a plain checkpoint instead.
+        base = self._ckpt_seen(self._union_parts(self._seen_parts), self._n_seen)
         dead, self._seen_parts = self._seen_parts, [base]
         return dead
 
     def _commit(self) -> None:
         """Publish the round's snapshot: frontier, seen, cumulative log
         and the seen filter's blob."""
-        if self._bulk_pool is not None:
-            # a published snapshot at round k must not outrun the payload-table
-            # merges it implies — wait for every pipelined convert/merge ≤ k
-            # before commit (result() is idempotent; values re-read at drain).
-            # Hygiene futures too: a mid-swap log part must not be unioned into
-            # the committed log while its source blocks are being released.
-            for fut in self._bulk_futures + self._hygiene_futures:
-                fut.result()
+        # a published snapshot at round k must not outrun the payload-table
+        # merges it implies, and a mid-swap log part must not be unioned into
+        # the committed log while its source blocks are being released
+        self._drain()
         blobs = {}
         if self._seen_filter is not None:
             # a resume uses it as the first round's filter without a
@@ -1115,22 +1040,7 @@ class CrawlEngine:
             self.spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", "bulk"
             )
-            with self._conf_lock:
-                conf = self.spark.conf
-                prev = conf.get("spark.sql.constraintPropagation.enabled", "true")
-                # the log part's plan nests the fetched/frontier LogicalRDDs,
-                # whose own origin constraints reference attributes this
-                # projection drops; capturing constraints through that nesting
-                # trips the consumer-side rewrite ("key not found:
-                # partition_id#N" in PruneFilters on the final ordinal sort).
-                # Constraints buy nothing on a log part (it only feeds unions
-                # and aggregations), so capture the checkpoint without them.
-                conf.set("spark.sql.constraintPropagation.enabled", "false")
-                try:
-                    lck = part.localCheckpoint()
-                finally:
-                    conf.set("spark.sql.constraintPropagation.enabled", prev)
-            self._logs[i] = lck
+            self._logs[i] = part.localCheckpoint()
             _release_ckpt(fetched)
             _release_ckpt(frontier)
 
@@ -1143,18 +1053,16 @@ class CrawlEngine:
         conversions: list[DataFrame] = []
         payloads: list[DataFrame] = []
         if self._bulk_pool is not None:
-            # drain the pipelined convert jobs (re-raises any worker exception)
+            # hygiene must finish before fetch_log is assembled below:
+            # every log slot must hold its narrow checkpoint (or a
+            # still-alive lazy part), never a lazy part whose source
+            # blocks were released mid-swap
+            self._drain()
             for fut in self._bulk_futures:
                 co_ck, batch_ck = fut.result()
                 conversions.append(co_ck)
                 if batch_ck is not None:
                     payloads.append(batch_ck)
-            # hygiene must finish before fetch_log is assembled below:
-            # every log slot must hold its narrow checkpoint (or a
-            # still-alive lazy part), never a lazy part whose source
-            # blocks were released mid-swap
-            for fut in self._hygiene_futures:
-                fut.result()
             self._bulk_pool.shutdown()
             self._bulk_pool = None
 
