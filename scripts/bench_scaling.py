@@ -22,11 +22,13 @@ prints a JSON summary per measurement.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 from datetime import datetime, timezone
 
-REPO = "/root/repo"
+# repo root = parent of scripts/, so a second checkout runs its own code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # (job, n_small, n_large, mirrors, payload_scale, reps)
 # headline: 2->8 engine at web-realistic ~50KB pages

@@ -8,11 +8,13 @@ row count + sorted-column value hash. Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# repo root = parent of scripts/, so a second checkout checks its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from volltextextraktion_selenium_md_spark.graph import BASE_TABLES

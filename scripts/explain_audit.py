@@ -18,10 +18,13 @@ Writes EXPLAIN.md. Usage: python scripts/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+# repo root = parent of scripts/, so a second checkout audits its own code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -53,7 +56,11 @@ def formatted(df) -> str:
 
 
 def main() -> None:
-    spark = get_spark(app_name="explain-audit")
+    # pinned like the test session (tests/conftest.py), so the audit's
+    # exchange widths are the same on every host
+    spark = get_spark(
+        master="local[8]", shuffle_partitions=8, app_name="explain-audit"
+    )
     graph.register_graph_views(spark, SF)
     cfg = CrawlConfig()
     sections: list[tuple[str, str, str]] = []
@@ -185,7 +192,7 @@ def main() -> None:
     out += [f"**Audit status: {status}**", ""]
     for title, why, plan in sections:
         out += [f"## {title}", "", why, "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
     print(status)
     spark.stop()

@@ -18,10 +18,12 @@ without new data files.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# repo root = parent of scripts/, so a second checkout runs its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -33,6 +35,7 @@ from volltextextraktion_selenium_md_spark.plans.convert import (
 )
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.functions.lineage import (
+    CRAWL_ORDER,
     DOC_POS_WIDTH,
     segment_col,
 )
@@ -90,7 +93,7 @@ def job_frontier(spark, sf_dir, cores, mirrors, scale):
         F.lit(1).alias("depth"),
         segment_col(F.col("doc_pos"), DOC_POS_WIDTH).alias("lineage"),
     )
-    deduped = seen_ops.with_hashes(first_seen(children, "url", ["depth", "lineage"]))
+    deduped = seen_ops.with_hashes(first_seen(children, "url", CRAWL_ORDER))
     seen = seeds.select(canonicalize_url(F.col("raw_url")).alias("url"))
     unseen = seen_ops.filter_unseen(deduped, seen)
     return unseen.count()

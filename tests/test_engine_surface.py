@@ -10,16 +10,21 @@ starts Spark."""
 from __future__ import annotations
 
 import ast
+import dataclasses
 import inspect
 import os
 
 import pytest
 
+from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "volltextextraktion_selenium_md_spark")
-MAX_ENGINE_PARAMS = 13
+MAX_ENGINE_PARAMS = 12
+# CrawlConfig holds only what a caller or a deployment sets; the
+# reference's hard-coded cuts and the modeled costs are module constants
+MAX_CONFIG_FIELDS = 13
 ENV_KNOBS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_JIT_OPTS"}
 # the round loop is split into phase methods; none may grow back into
 # one body
@@ -96,6 +101,40 @@ def test_request_column_contract_has_one_list():
         c.strip() for c in oracles._REQ_SQL_COLS.split(",")
     ]
     assert list(REQUEST_COL_DEFAULTS) == [c for c in REQUEST_COLS if c != "mode"]
+    # no engine module spells the list out again (a literal list, tuple
+    # or argument list naming most of the request columns)
+    own_lists = {"schemas.py", "replay.py", "oracles.py"}
+    copies = [
+        f"{os.path.relpath(path, PKG)}:{line}"
+        for path, tree in _trees(PKG)
+        if os.path.basename(path) not in own_lists
+        for line in _request_col_lists(tree, REQUEST_COLS)
+    ]
+    assert not copies, copies
+    assert _request_col_lists(ast.parse(
+        "df.select('url', " + ", ".join(map(repr, REQUEST_COLS[:8])) + ")"
+    ), REQUEST_COLS) == [1]
+
+
+def _request_col_lists(tree: ast.AST, cols: list[str]) -> list[int]:
+    """Lines of every list, tuple or call whose string-constant items
+    name more than half of ``cols`` (a stage's own subset, such as the
+    convert stage's inputs, stays below that)."""
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.List, ast.Tuple, ast.Set)):
+            items = node.elts
+        elif isinstance(node, ast.Call):
+            items = node.args
+        else:
+            continue
+        named = {
+            i.value for i in items
+            if isinstance(i, ast.Constant) and i.value in cols
+        }
+        if 2 * len(named) > len(cols):
+            found.append(node.lineno)
+    return found
 
 
 def test_stages_read_the_request_columns_unconditionally():
@@ -187,6 +226,11 @@ def test_engine_parameter_count():
     assert len(params) <= MAX_ENGINE_PARAMS, list(params)
 
 
+def test_config_field_count():
+    fields = [f.name for f in dataclasses.fields(CrawlConfig)]
+    assert len(fields) <= MAX_CONFIG_FIELDS, fields
+
+
 def test_package_env_knobs():
     knobs = set()
     for _, tree in _trees(PKG):
@@ -230,12 +274,12 @@ def test_every_engine_call_uses_existing_keywords():
     assert not bad, bad
 
 
-def test_invalid_fetch_mode_raises_before_spark_work():
-    # spark=None: any Spark call before the check would fail differently
-    with pytest.raises(ValueError, match="fetch_mode"):
-        CrawlEngine(None, "unused", fetch_mode="replay")
-
-
 def test_service_mode_with_mirrors_raises_before_spark_work():
+    # spark=None: any Spark call before the check would fail differently
     with pytest.raises(ValueError, match="mirrors"):
         CrawlEngine(None, "unused", mirrors=2, new_seeds=object())
+
+
+def test_llm_without_convert_raises_before_spark_work():
+    with pytest.raises(ValueError, match="with_convert"):
+        CrawlEngine(None, "unused", with_llm=True)

@@ -7,8 +7,11 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 from volltextextraktion_selenium_md_spark import graph
-from volltextextraktion_selenium_md_spark.config import CrawlConfig
-from volltextextraktion_selenium_md_spark.functions.classify import route_fetch
+from volltextextraktion_selenium_md_spark.functions.classify import (
+    HTTP_ONLY_TEXT_LEN,
+    SECOND_CHANCE_TEXT_LEN,
+    route_fetch,
+)
 from volltextextraktion_selenium_md_spark.functions.features import (
     extract_features_one,
 )
@@ -73,8 +76,7 @@ def test_second_chance_700_vs_800_asymmetry(spark):
     """The auto-mode second-chance cut (main.py:343-349) is 700 — pages
     with preflight text in [700, 800) are NOT HTTP_ONLY (preflight's
     own cut is 800, preflight.py:119) yet still serve preflight bytes."""
-    cfg = CrawlConfig()
-    assert (cfg.second_chance_text_len, cfg.http_only_text_len) == (700, 800)
+    assert (SECOND_CHANCE_TEXT_LEN, HTTP_ONLY_TEXT_LEN) == (700, 800)
     rows = [
         # (strategy, text_len, mode) -> expected route
         ("HTTP_THEN_JS", 750, "auto", "preflight_bytes"),  # the asymmetry window
@@ -92,8 +94,7 @@ def test_second_chance_700_vs_800_asymmetry(spark):
         [(s, t, m) for s, t, m, _ in rows], ["strategy", "text_len", "mode"]
     ).withColumn(
         "route",
-        route_fetch(F.col("mode"), F.col("strategy"), F.col("text_len"),
-                    second_chance_text_len=cfg.second_chance_text_len),
+        route_fetch(F.col("mode"), F.col("strategy"), F.col("text_len")),
     )
     got = [r["route"] for r in df.collect()]
     assert got == [e for _, _, _, e in rows]

@@ -67,7 +67,7 @@ def test_speed_render_under_cap_does_not_escalate(fetched_default):
 
 
 def test_second_chance_miss_over_cap_escalates(fetched_default):
-    # base 60+120=180 > js_renderer_cap_ms=160 -> one-shot accuracy
+    # base 60+120=180 > JS_RENDERER_CAP_MS=160 -> one-shot accuracy
     r = fetched_default[("thin", "auto", "speed")]
     assert r["js_escalated"] is True
     assert r["elapsed_ms"] == 180 + 180
@@ -123,7 +123,7 @@ def test_escalation_can_flip_timeout_outcome(spark):
 def test_preflight_cap_trip_takes_blocked_fallthrough(spark):
     """Preflight probe cap (reference app/main.py:329: probe timeout =
     min(timeout_s, 12)): an auto-mode request whose per-row timeout_ms
-    sits below the modeled probe charge (cost_ms.HTTP_ONLY = 30) never
+    sits below the modeled probe charge (COST_MS["HTTP_ONLY"] = 30) never
     classifies — preflight_analyze maps the probe timeout to BLOCKED
     (app/preflight.py:48-59) and the row takes the Selenium
     fall-through: strategy BLOCKED, speed-pool escalation, the full

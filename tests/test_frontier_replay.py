@@ -167,8 +167,8 @@ def test_payload_invariants(spark):
         assert r["phash"] == codec.average_hash(src)
 
 
-def test_live_fetch_mode_engine_replay_match(spark):
-    """fetch_mode='live': the real network stage (mock transport serving
+def test_live_transport_engine_replay_match(spark):
+    """A live crawl: the real network stage (mock transport serving
     the SAME deterministic graph as minted HTML-with-anchors) inside the
     engine loop — robots, budget, slots, seen-set, status retries and
     ordering are shared code; children come from payload link
@@ -205,8 +205,7 @@ def test_live_fetch_mode_engine_replay_match(spark):
         return factory
 
     res = CrawlEngine(
-        spark, SF_SMALL, cfg, fetch_mode="live",
-        transport_factory=make_factory(),
+        spark, SF_SMALL, cfg, transport_factory=make_factory(),
     ).run()
     got = _spark_order(res)
     want = [
@@ -270,8 +269,7 @@ def test_live_fetch_with_convert(spark):
         return call
 
     res = CrawlEngine(
-        spark, SF_SMALL, cfg, fetch_mode="live", transport_factory=factory,
-        with_convert=True,
+        spark, SF_SMALL, cfg, transport_factory=factory, with_convert=True,
     ).run()
     conv = {r["url"]: r for r in res.conversions.collect()}
     assert len(conv) > 0

@@ -1,7 +1,7 @@
 """Live crawl end-to-end over a REAL localhost HTTP server.
 
 The minted graph is served over actual TCP sockets by an absolute-URI
-(proxy-form) HTTP server; `CrawlEngine(fetch_mode='live')` crawls it
+(proxy-form) HTTP server; `CrawlEngine(transport_factory=...)` crawls it
 and must reproduce the simulated engine's crawl order
 decision-for-decision (reference: the crawl client loop dispatching
 real requests through ``app/http_fetcher.py:24-87``).
@@ -13,9 +13,9 @@ Two transports drive the same server:
   read cap and redirect following; only the client LIBRARY differs
   from production), once connected straight to the server and once
   only through the ``cfg.proxy`` the engine hands it, and
-- the DEFAULT httpx transport (``plans/fetch.py:_httpx_transport_
-  factory``, no injection) pointed at the server via ``cfg.proxy`` —
-  exactly the reference's proxy plumbing (``app/http_fetcher.py:45-53``).
+- the httpx transport (``plans/fetch.py:httpx_transport``) pointed at
+  the server via ``cfg.proxy`` — exactly the reference's proxy
+  plumbing (``app/http_fetcher.py:45-53``).
   Skipped where httpx is not installed (this sandbox image).
 
 The graph's https URLs are rewritten to http for the live runs (a
@@ -37,6 +37,7 @@ from tests.conftest import SF_SMALL
 from volltextextraktion_selenium_md_spark import codec
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.functions.urls import canonicalize_one
+from volltextextraktion_selenium_md_spark.plans.fetch import httpx_transport
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.replay import _load_graph
 
@@ -220,7 +221,7 @@ def test_live_engine_over_real_http_server(spark, http_graph_server):
 
     before = hits[0]
     live = _http_engine(
-        spark, cfg, fetch_mode="live", transport_factory=_stdlib_factory(port),
+        spark, cfg, transport_factory=_stdlib_factory(port),
         with_convert=True,
     ).run()
     got = _order(live)
@@ -262,15 +263,16 @@ def test_live_engine_over_real_http_server(spark, http_graph_server):
 
 
 def test_live_engine_default_httpx_transport(spark, http_graph_server):
-    """No injected transport at all: the engine's DEFAULT httpx client
-    (follow_redirects, browser headers, keep-alive) reaches the server
-    through cfg.proxy — absolute-URI GETs, the reference's proxy shape."""
+    """The network client ``httpx_transport`` (follow_redirects,
+    browser headers, keep-alive) reaches the server through cfg.proxy —
+    absolute-URI GETs, the reference's proxy shape."""
     pytest.importorskip("httpx")
     port, hits = http_graph_server
     sim = _http_engine(spark, CrawlConfig()).run()
     before = hits[0]
     live = _http_engine(
-        spark, CrawlConfig(proxy=f"http://127.0.0.1:{port}"), fetch_mode="live"
+        spark, CrawlConfig(proxy=f"http://127.0.0.1:{port}"),
+        transport_factory=httpx_transport,
     ).run()
     got = _order(live)
     assert got == _sim_order_mapped(sim)
@@ -286,7 +288,7 @@ def test_live_engine_config_proxy_reaches_transport(spark, http_graph_server):
     sim = _http_engine(spark, CrawlConfig()).run()
     before = hits[0]
     live = _http_engine(
-        spark, CrawlConfig(proxy=f"http://127.0.0.1:{port}"), fetch_mode="live",
+        spark, CrawlConfig(proxy=f"http://127.0.0.1:{port}"),
         transport_factory=_stdlib_factory(),
     ).run()
     got = _order(live)

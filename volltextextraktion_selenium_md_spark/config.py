@@ -1,15 +1,20 @@
 """Engine configuration.
 
-Mirrors the reference's three-layer default resolution
-(per-request > .env > hardcoded; reference ``app/config.py:28-76``)
-as a single frozen dataclass broadcast to executors. Values that shape
-crawl semantics keep the reference's defaults/limits
-(``app/schemas.py:116-169``, ``app/main.py:25-91``).
+The reference resolves a setting per-request > .env > hard-coded
+(``app/config.py:28-76``); each kind of value lives in one layer here:
+
+- per-request: the request columns (``schemas.REQUEST_COLS``); NULL
+  resolves to the ``CrawlConfig`` value.
+- deployment: ``CrawlConfig``, one frozen dataclass broadcast to
+  executors, holding only what a caller or a deployment sets, with the
+  reference's defaults (``app/schemas.py:116-169``, ``app/main.py:25-91``).
+- hard-coded: module constants — the strategy cuts in
+  ``functions/classify.py``, the modeled fetch costs below.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -46,7 +51,6 @@ class CrawlConfig:
     # retry semantics (reference: for attempt in range(retries+1),
     # backoff min(2**attempt, 5)s [app/http_fetcher.py:64-83])
     retries: int = 1
-    retryable_statuses: tuple[int, ...] = (500, 502, 503, 504)
 
     # payload caps (reference defaults: max_bytes 10 MiB within
     # [1 KiB, 100 MiB], app/schemas.py:156-169)
@@ -63,65 +67,65 @@ class CrawlConfig:
     # network-bound crawling must not cap at 1 request per core
     fetch_concurrency: int = 8
 
-    # modeled LLM postprocess latency: the reference's elapsed_ms spans
-    # the WHOLE request including the LLM call (app/main.py:466; README
-    # quotes +2-10 s when llm_postprocess is on). Deterministic per-row
-    # charge = base + (page_id % (span+1)) * step on fetched rows whose
-    # request asked for the LLM; it rides elapsed_ms ONLY — the
-    # per-request timeout governs the TRANSPORT (httpx/Selenium timeout
-    # params), so a slow LLM never 504s the request in the reference
-    # and never flips outcomes here
-    llm_cost_ms_base: int = 2000
-    llm_cost_ms_step: int = 1000
-    llm_cost_ms_span: int = 8
-
     # payload-size multiplier for minted bodies (1 = oracle-checked
     # test scale; scale benchmarks raise it so per-page convert cost is
     # web-realistic — real pages are tens of KB, real images hundreds
     # of KB, the reference pays SECONDS per page [README.md:223])
     payload_scale: int = 1
 
-    # auto-mode preflight probe timeout ceiling (reference
-    # app/main.py:329: probe timeout = min(timeout_s, 12)); a tripped
-    # probe falls through to the BLOCKED Selenium path
-    preflight_cap_ms: int = 12_000
 
-    # strategy thresholds (reference app/preflight.py:119-124 and the
-    # looser second-chance cut at app/main.py:343-349)
-    http_only_text_len: int = 800
-    second_chance_text_len: int = 700
-    js_light_thin_text_len: int = 500
+# --- modeled fetch costs (hard-coded) ---------------------------------
 
-    # js_strategy 'accuracy' surcharge, ms: the reference runs two
-    # Selenium pools (speed vs accuracy, app/js_fetcher.py:201-202)
-    # with documented latency bands 2-6 s vs 8-12 s (README.md:362-363)
-    # — midpoint ratio 4:10, so the accuracy pool adds 1.5x the base
-    # JS_LIGHT charge (120 -> 300) on any request that actually renders
-    js_accuracy_extra_ms: int = 180
+# statuses the round loop re-queues while the request's retry budget
+# lasts; any other status >= 400 is a terminal failure
+RETRYABLE_STATUSES = (500, 502, 503, 504)
 
-    # speed-pool renderer cap, ms: the failure ladder's trigger. In the
-    # reference a SPEED render that hits the renderer timeout — or
-    # exhausts its retries, which a bot wall always does — escalates
-    # ONCE to a fresh accuracy-pool driver (app/js_fetcher.py:896-946
-    # early path, :933-946 exhaustion path). The deterministic twin: a
-    # speed-pool Selenium render whose modeled latency exceeds this cap
-    # (or whose strategy is BLOCKED) pays the one-shot accuracy
-    # surcharge and records js_escalated. 160 sits between the plain
-    # JS_LIGHT render (120/150) and the double-fetch second-chance miss
-    # (60+120=180), mirroring the reference where only the slow tail of
-    # speed renders trips the ladder.
-    js_renderer_cap_ms: int = 160
+# fetch-stage cost model, ms/page — midpoints of the reference's
+# documented latency ranges (README.md:223,362,363; BASELINE.md)
+COST_MS = {
+    "HTTP_ONLY": 30,
+    "HTTP_THEN_JS": 60,
+    "JS_LIGHT": 120,
+    "JS_LIGHT_CONSENT": 150,
+    "PDF": 40,
+    "RSS": 20,
+    "YOUTUBE": 25,
+    "BLOCKED": 10,
+}
 
-    # fetch-stage cost model, ms/page — midpoints of the reference's
-    # documented latency ranges (README.md:223,362,363; BASELINE.md)
-    cost_ms: dict[str, int] = field(default_factory=lambda: {
-        "HTTP_ONLY": 30,
-        "HTTP_THEN_JS": 60,
-        "JS_LIGHT": 120,
-        "JS_LIGHT_CONSENT": 150,
-        "PDF": 40,
-        "RSS": 20,
-        "YOUTUBE": 25,
-        "BLOCKED": 10,
-    })
+# auto-mode preflight probe timeout ceiling (reference
+# app/main.py:329: probe timeout = min(timeout_s, 12)); a tripped
+# probe falls through to the BLOCKED Selenium path
+PREFLIGHT_CAP_MS = 12_000
 
+# js_strategy 'accuracy' surcharge, ms: the reference runs two
+# Selenium pools (speed vs accuracy, app/js_fetcher.py:201-202)
+# with documented latency bands 2-6 s vs 8-12 s (README.md:362-363)
+# — midpoint ratio 4:10, so the accuracy pool adds 1.5x the base
+# JS_LIGHT charge (120 -> 300) on any request that actually renders
+JS_ACCURACY_EXTRA_MS = 180
+
+# speed-pool renderer cap, ms: the failure ladder's trigger. In the
+# reference a SPEED render that hits the renderer timeout — or
+# exhausts its retries, which a bot wall always does — escalates
+# ONCE to a fresh accuracy-pool driver (app/js_fetcher.py:896-946
+# early path, :933-946 exhaustion path). The deterministic twin: a
+# speed-pool Selenium render whose modeled latency exceeds this cap
+# (or whose strategy is BLOCKED) pays the one-shot accuracy
+# surcharge and records js_escalated. 160 sits between the plain
+# JS_LIGHT render (120/150) and the double-fetch second-chance miss
+# (60+120=180), mirroring the reference where only the slow tail of
+# speed renders trips the ladder.
+JS_RENDERER_CAP_MS = 160
+
+# modeled LLM postprocess latency: the reference's elapsed_ms spans
+# the WHOLE request including the LLM call (app/main.py:466; README
+# quotes +2-10 s when llm_postprocess is on). Deterministic per-row
+# charge = base + (page_id % (span+1)) * step on fetched rows whose
+# request asked for the LLM; it rides elapsed_ms ONLY — the
+# per-request timeout governs the TRANSPORT (httpx/Selenium timeout
+# params), so a slow LLM never 504s the request in the reference
+# and never flips outcomes here
+LLM_COST_MS_BASE = 2000
+LLM_COST_MS_STEP = 1000
+LLM_COST_MS_SPAN = 8

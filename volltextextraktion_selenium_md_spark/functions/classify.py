@@ -70,6 +70,14 @@ def classify_link(url: Column, text: Column) -> Column:
 
 # --- strategy classifier (reference app/preflight.py:61-124) ----------------
 
+# the reference's hard-coded text-length cuts: preflight's own
+# HTTP_ONLY and thin-main cuts (app/preflight.py:119-122) and the
+# looser auto-mode second-chance cut (app/main.py:343-349)
+HTTP_ONLY_TEXT_LEN = 800
+JS_LIGHT_THIN_TEXT_LEN = 500
+SECOND_CHANCE_TEXT_LEN = 700
+
+
 def classify_strategy(
     content_type: Column,
     final_url: Column,
@@ -81,13 +89,10 @@ def classify_strategy(
     bot_wall: Column,
     rss_link: Column,
     youtube: Column,
-    http_only_text_len: int = 800,
-    js_light_thin_text_len: int = 500,
 ) -> Column:
-    """P4 cascade. Threshold defaults 800/500 from
-    ``preflight.py:119-122`` (overridable via CrawlConfig so the config
-    layer actually drives the decision); ctype guards from
-    ``preflight.py:66-87`` run before feature rules."""
+    """P4 cascade. Text-length cuts ``HTTP_ONLY_TEXT_LEN`` and
+    ``JS_LIGHT_THIN_TEXT_LEN`` (800/500, ``preflight.py:119-122``);
+    ctype guards from ``preflight.py:66-87`` run before feature rules."""
     ctype = F.lower(F.coalesce(content_type, F.lit("")))
     return (
         F.when(
@@ -103,20 +108,20 @@ def classify_strategy(
         .when(youtube, "YOUTUBE")
         .when(rss_link, "RSS")
         .when(
-            (text_len >= http_only_text_len)
+            (text_len >= HTTP_ONLY_TEXT_LEN)
             & (has_main | ~spa_mark)
             & ~js_required
             & ~consent,
             "HTTP_ONLY",
         )
         .when(
-            (spa_mark | (has_main & (text_len < js_light_thin_text_len))
+            (spa_mark | (has_main & (text_len < JS_LIGHT_THIN_TEXT_LEN))
              | js_required | consent)
             & consent,
             "JS_LIGHT_CONSENT",
         )
         .when(
-            spa_mark | (has_main & (text_len < js_light_thin_text_len))
+            spa_mark | (has_main & (text_len < JS_LIGHT_THIN_TEXT_LEN))
             | js_required | consent,
             "JS_LIGHT",
         )
@@ -133,7 +138,6 @@ def route_fetch(
     mode: Column,
     strategy: Column,
     text_len: Column,
-    second_chance_text_len: int = 700,
 ) -> Column:
     """Which fetcher serves the bytes — the reference's mode dispatch:
 
@@ -154,7 +158,7 @@ def route_fetch(
         .when(mode == "js", "selenium")
         .when(strategy.isin(*PREFLIGHT_SERVE_STRATEGIES), "preflight_bytes")
         .when(
-            (strategy == "HTTP_THEN_JS") & (text_len >= second_chance_text_len),
+            (strategy == "HTTP_THEN_JS") & (text_len >= SECOND_CHANCE_TEXT_LEN),
             "preflight_bytes",
         )
         .otherwise("selenium")

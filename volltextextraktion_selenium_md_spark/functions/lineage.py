@@ -29,6 +29,12 @@ SEED_WIDTH = 6
 DOC_POS_WIDTH = 2
 _OVERFLOW = "~"
 
+# the deterministic crawl-order key within a round (SURVEY §2.3 F5):
+# BFS depth first, then lineage — lexicographic == the reference's
+# implied FIFO-seeds / document-order-links BFS. Every cut and dedup
+# orders by it; the fetch log orders by ``["round", *CRAWL_ORDER]``.
+CRAWL_ORDER = ["depth", "lineage"]
+
 
 def segment(n: int, width: int) -> str:
     """The lineage segment of non-negative ``n`` at ``width``."""

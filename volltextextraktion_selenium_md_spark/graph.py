@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from volltextextraktion_selenium_md_spark.schemas import footer_schema
+from volltextextraktion_selenium_md_spark.schemas import REQUEST_COLS, footer_schema
 
 BASE_TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -382,20 +382,7 @@ def mirror_seeds(seeds_df: DataFrame, R: int, id_span: int) -> DataFrame:
         _rewrite_host_str(F.col("raw_url")).alias("raw_url"),
         _rewrite_host_str(F.col("url")).alias("url"),
         _rewrite_host_str(F.col("host")).alias("host"),
-        "mode",
-        "js_strategy",
-        "llm_anonymize",
-        "timeout_ms",
-        "retries",
-        "llm_postprocess",
-        "extract_links",
-        "html_converter",
-        "media_policy",
-        "max_bytes",
-        "trafilatura_clean",
-        "proxy",
-        "allow_insecure_ssl",
-        "llm_prompt",
+        *REQUEST_COLS,
     )
 
 

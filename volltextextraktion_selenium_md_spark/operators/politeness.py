@@ -14,13 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from volltextextraktion_selenium_md_spark.functions.lineage import CRAWL_ORDER
 from volltextextraktion_selenium_md_spark.functions.urls import url_path
-
-# the deterministic crawl-order key within a round (SURVEY §2.3 F5):
-# BFS depth first, then lineage (seeds: seed_idx segment; children:
-# parent_lineage.doc_pos segment, functions/lineage.py) — lexicographic
-# == reference's implied FIFO-seeds / document-order-links BFS.
-ORDER_COLS = ["depth", "lineage"]
 
 
 def robots_split(frontier: DataFrame, robots: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -47,7 +42,7 @@ def host_budget_split(
     This is the distributed analogue of the reference's bounded waiting
     room (rows past capacity wait rather than drop, app/main.py:47-69).
     """
-    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in ORDER_COLS])
+    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in CRAWL_ORDER])
     ranked = frontier.withColumn("host_rank", F.row_number().over(w))
     admitted = ranked.filter(F.col("host_rank") <= budget).drop("host_rank")
     deferred = ranked.filter(F.col("host_rank") > budget).drop("host_rank")
@@ -59,7 +54,7 @@ def schedule_slots(admitted: DataFrame, default_delay_ms: int) -> DataFrame:
     (per-host position - 1) * crawl_delay. Pure bookkeeping column (the
     simulator charges it as cost; a live fetcher would sleep-until-slot
     inside its partition)."""
-    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in ORDER_COLS])
+    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in CRAWL_ORDER])
     delay = F.coalesce(F.col("crawl_delay_ms"), F.lit(default_delay_ms))
     return admitted.withColumn(
         "sched_slot_ms", (F.row_number().over(w) - 1) * delay

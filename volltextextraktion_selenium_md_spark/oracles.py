@@ -15,11 +15,25 @@ notes:
 
 from __future__ import annotations
 
+from volltextextraktion_selenium_md_spark.config import (
+    COST_MS,
+    JS_ACCURACY_EXTRA_MS,
+    JS_RENDERER_CAP_MS,
+    LLM_COST_MS_BASE,
+    LLM_COST_MS_SPAN,
+    LLM_COST_MS_STEP,
+    PREFLIGHT_CAP_MS,
+    RETRYABLE_STATUSES,
+    CrawlConfig,
+)
 from volltextextraktion_selenium_md_spark.functions.classify import (
     DOWNLOAD_EXTS,
     ERROR_HINTS_HTML,
     ERROR_HINTS_MD,
+    HTTP_ONLY_TEXT_LEN,
+    JS_LIGHT_THIN_TEXT_LEN,
     NAV_TEXTS,
+    SECOND_CHANCE_TEXT_LEN,
     SOCIAL_DOMAINS,
 )
 from volltextextraktion_selenium_md_spark.functions.lineage import (
@@ -206,9 +220,7 @@ SELECT url, host, lineage FROM (
 
 
 def sql_retry_requeue() -> str:
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
-
-    statuses = ", ".join(str(s) for s in CrawlConfig().retryable_statuses)
+    statuses = ", ".join(str(s) for s in RETRYABLE_STATUSES)
     return (
         _with({"f_init": F_INIT, "d1": D1_CAND})
         + f"""
@@ -266,11 +278,8 @@ FROM link_cases
 
 
 def _strategy_case() -> str:
-    # thresholds interpolated from the SAME CrawlConfig the Spark side
+    # thresholds interpolated from the SAME constants the Spark side
     # reads (http_only 800, js-light thin 500 — preflight.py:119-122)
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
-
-    cfg = CrawlConfig()
     return f"""
 CASE
   WHEN lower(content_type) LIKE 'application/pdf%'
@@ -280,12 +289,12 @@ CASE
   WHEN bot_wall THEN 'BLOCKED'
   WHEN youtube THEN 'YOUTUBE'
   WHEN rss_link THEN 'RSS'
-  WHEN text_len >= {cfg.http_only_text_len} AND (has_main OR NOT spa_mark)
+  WHEN text_len >= {HTTP_ONLY_TEXT_LEN} AND (has_main OR NOT spa_mark)
        AND NOT js_required AND NOT consent THEN 'HTTP_ONLY'
-  WHEN (spa_mark OR (has_main AND text_len < {cfg.js_light_thin_text_len})
+  WHEN (spa_mark OR (has_main AND text_len < {JS_LIGHT_THIN_TEXT_LEN})
         OR js_required OR consent)
        AND consent THEN 'JS_LIGHT_CONSENT'
-  WHEN spa_mark OR (has_main AND text_len < {cfg.js_light_thin_text_len})
+  WHEN spa_mark OR (has_main AND text_len < {JS_LIGHT_THIN_TEXT_LEN})
        OR js_required OR consent
        THEN 'JS_LIGHT'
   ELSE 'HTTP_THEN_JS'
@@ -325,9 +334,6 @@ WHERE content_type LIKE 'text/html%'
 
 
 def sql_fetch_route() -> str:
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
-
-    cfg = CrawlConfig()
     serve = ", ".join(f"'{s}'" for s in ("PDF", "RSS", "HTTP_ONLY", "YOUTUBE"))
     return (
         _with({"mode_cases": Q.MODE_CASES_BODY})
@@ -344,13 +350,13 @@ SELECT page_id, mode, strategy,
     WHEN mode = 'js' THEN 'selenium'
     WHEN strategy IN ({serve}) THEN 'preflight_bytes'
     WHEN strategy = 'HTTP_THEN_JS'
-         AND text_len >= {cfg.second_chance_text_len} THEN 'preflight_bytes'
+         AND text_len >= {SECOND_CHANCE_TEXT_LEN} THEN 'preflight_bytes'
     ELSE 'selenium'
   END AS route,
   (mode = 'auto' AND
    NOT (strategy IN ({serve})
         OR (strategy = 'HTTP_THEN_JS'
-            AND text_len >= {cfg.second_chance_text_len}))) AS second_fetch
+            AND text_len >= {SECOND_CHANCE_TEXT_LEN}))) AS second_fetch
 FROM routed
 """
     )
@@ -367,34 +373,31 @@ def _cost_exprs(probe_cap_timeout: int | None = None) -> tuple[str, str]:
 
     probe_cap_timeout: the context's GLOBAL timeout_ms — when given,
     mirrors the preflight 12 s cap (reference main.py:329): an
-    auto-mode row whose modeled probe charge (cost_ms.HTTP_ONLY)
-    exceeds min(coalesce(timeout_ms, global), preflight_cap_ms) takes
+    auto-mode row whose modeled probe charge (COST_MS["HTTP_ONLY"])
+    exceeds min(coalesce(timeout_ms, global), PREFLIGHT_CAP_MS) takes
     the BLOCKED fall-through instead of the classified strategy.
     Requires a timeout_ms column in scope."""
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
-
-    cfg = CrawlConfig()
-    x = cfg.js_accuracy_extra_ms
+    x = JS_ACCURACY_EXTRA_MS
     # NULL js_strategy = the reference default pool 'speed'
     acc = "(coalesce(js_strategy, 'speed') = 'accuracy')"
     strat = _strategy_case()
     if probe_cap_timeout is not None:
         trip = (
-            f"({cfg.cost_ms['HTTP_ONLY']} > least("
+            f"({COST_MS['HTTP_ONLY']} > least("
             f"coalesce(timeout_ms, {probe_cap_timeout}), "
-            f"{cfg.preflight_cap_ms}))"
+            f"{PREFLIGHT_CAP_MS}))"
         )
         strat = f"CASE WHEN {trip} THEN 'BLOCKED' ELSE {strat} END"
-    sc = cfg.second_chance_text_len
+    sc = SECOND_CHANCE_TEXT_LEN
     per_strategy = "\n".join(
         f"    WHEN {strat} = '{s}' THEN {ms}"
-        for s, ms in cfg.cost_ms.items()
+        for s, ms in COST_MS.items()
     )
     base = f"""CASE
-  WHEN mode = 'fast' THEN {cfg.cost_ms['HTTP_ONLY']}
-  WHEN mode = 'js' THEN {cfg.cost_ms['JS_LIGHT']}
+  WHEN mode = 'fast' THEN {COST_MS['HTTP_ONLY']}
+  WHEN mode = 'js' THEN {COST_MS['JS_LIGHT']}
   WHEN {strat} = 'HTTP_THEN_JS' AND text_len < {sc}
-       THEN {cfg.cost_ms['HTTP_THEN_JS'] + cfg.cost_ms['JS_LIGHT']}
+       THEN {COST_MS['HTTP_THEN_JS'] + COST_MS['JS_LIGHT']}
 {per_strategy}
 END"""
     blocked = (
@@ -409,7 +412,7 @@ END"""
     )
     esc = (
         f"({renders} AND NOT {acc}"
-        f" AND ({blocked} OR ({base}) > {cfg.js_renderer_cap_ms}))"
+        f" AND ({blocked} OR ({base}) > {JS_RENDERER_CAP_MS}))"
     )
     cost = (
         f"(({base}) + CASE WHEN ({renders} AND {acc}) OR {esc}"
@@ -419,10 +422,8 @@ END"""
 
 
 def sql_fetch_timeout() -> str:
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
-
     cfg = CrawlConfig()
-    retryables = ", ".join(str(s) for s in cfg.retryable_statuses)
+    retryables = ", ".join(str(s) for s in RETRYABLE_STATUSES)
     return (
         _with({"mode_cases": Q.MODE_CASES_BODY})
         + f"""
@@ -451,8 +452,8 @@ SELECT page_id, mode, js_strategy, timeout_ms,
   -- timeout_ms governs the transport, so no outcome interaction)
   CAST(cost + CASE
     WHEN outcome = 'fetched' AND coalesce(llm_postprocess, FALSE)
-    THEN {cfg.llm_cost_ms_base}
-         + (page_id % {cfg.llm_cost_ms_span + 1}) * {cfg.llm_cost_ms_step}
+    THEN {LLM_COST_MS_BASE}
+         + (page_id % {LLM_COST_MS_SPAN + 1}) * {LLM_COST_MS_STEP}
     ELSE 0 END AS INTEGER) AS elapsed_ms
 FROM decided
 """
@@ -460,8 +461,6 @@ FROM decided
 
 
 def sql_time_budget() -> str:
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
-
     cfg = CrawlConfig()
     return (
         _with({"f_init": F_INIT, "d1": D1_CAND})
@@ -1263,11 +1262,8 @@ _FR_COLS = "url, host, depth, lin, att, xl, hc, tc, mb, mp, rt"
 
 
 def _crawl_sim_sql() -> str:
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
-    from volltextextraktion_selenium_md_spark.graph import canon_sql
-
     cfg = CrawlConfig()
-    statuses = ", ".join(str(s) for s in cfg.retryable_statuses)
+    statuses = ", ".join(str(s) for s in RETRYABLE_STATUSES)
     return f"""
 WITH RECURSIVE sim AS (
   SELECT 0 AS rnd,
@@ -1370,7 +1366,6 @@ def _corpus_ctes() -> str:
     (the math/table polish, the strip-tier table separator) are
     precomputed HERE by running the same Python helpers the engine
     uses, so the two sides cannot drift."""
-    from volltextextraktion_selenium_md_spark.config import CrawlConfig
     from volltextextraktion_selenium_md_spark.functions.text import (
         enhance_table_structure_py,
     )

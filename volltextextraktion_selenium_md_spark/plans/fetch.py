@@ -5,9 +5,10 @@ The reference fetches one URL per request over the network
 Selenium path). The sandbox engine resolves fetches against the
 deterministic `g_pages` graph with a join (FIXTURES.md §2) — exactly
 what makes every downstream decision oracle-checkable. A live deploy
-replaces `simulated_fetch` with an httpx `mapInPandas` stage
-(`live_fetch`, gated on httpx availability); all scheduling, retry,
-strategy, and conversion logic is shared.
+replaces `simulated_fetch` with a `mapInPandas` network stage
+(`live_fetch`) over an injected transport — `httpx_transport` is the
+httpx client; all scheduling, retry, strategy, and conversion logic is
+shared.
 
 Outcome semantics (mirrors reference control flow):
 - no page row            -> 'missing' (terminal failure)
@@ -21,10 +22,20 @@ Outcome semantics (mirrors reference control flow):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from volltextextraktion_selenium_md_spark.config import CrawlConfig
+from volltextextraktion_selenium_md_spark.config import (
+    COST_MS,
+    JS_ACCURACY_EXTRA_MS,
+    JS_RENDERER_CAP_MS,
+    LLM_COST_MS_BASE,
+    LLM_COST_MS_SPAN,
+    LLM_COST_MS_STEP,
+    PREFLIGHT_CAP_MS,
+    RETRYABLE_STATUSES,
+    CrawlConfig,
+)
 from volltextextraktion_selenium_md_spark.functions.classify import (
     classify_strategy,
     route_fetch,
@@ -43,10 +54,22 @@ from volltextextraktion_selenium_md_spark.schemas import (
 # calls simulated_fetch every round, so rebuilding the trees per round
 # dominated the flagship's fixed per-round latency (~2.7 s/round of
 # pure expression building). Column objects are immutable and reusable
-# across DataFrames; the cache key carries every cfg constant the trees
+# across DataFrames; the cache key carries the two cfg values the trees
 # embed plus the SparkContext id (a restarted JVM would invalidate the
 # cached JVM expression refs).
 _SIM_EXPRS_CACHE: dict[tuple, dict] = {}
+
+
+def _llm_cost_ms(key: Column) -> Column:
+    """The modeled LLM postprocess latency (``config.LLM_COST_MS_*``) of
+    a fetched row whose request asked for the LLM, else 0; ``key`` is
+    the row's deterministic variance source."""
+    return F.when(
+        F.coalesce(F.col("llm_postprocess"), F.lit(False))
+        & (F.col("outcome") == "fetched"),
+        F.lit(LLM_COST_MS_BASE)
+        + F.pmod(key, F.lit(LLM_COST_MS_SPAN + 1)) * F.lit(LLM_COST_MS_STEP),
+    ).otherwise(F.lit(0))
 
 
 def _sim_exprs(cfg: CrawlConfig) -> dict:
@@ -58,15 +81,7 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
     # Column trees holding py4j refs into the torn-down gateway;
     # applicationId+startTime are unique per context lifetime
     ctx_key = (sc.applicationId, sc.startTime) if sc is not None else None
-    key = (
-        ctx_key, cfg.http_only_text_len, cfg.js_light_thin_text_len,
-        cfg.second_chance_text_len, cfg.js_accuracy_extra_ms,
-        cfg.js_renderer_cap_ms, cfg.timeout_ms, cfg.retries,
-        cfg.llm_cost_ms_base, cfg.llm_cost_ms_step, cfg.llm_cost_ms_span,
-        cfg.preflight_cap_ms,
-        tuple(sorted(cfg.cost_ms.items())),
-        tuple(cfg.retryable_statuses),
-    )
+    key = (ctx_key, cfg.timeout_ms, cfg.retries)
     cached = _SIM_EXPRS_CACHE.get(key)
     if cached is not None:
         return cached
@@ -80,14 +95,9 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
         F.col("text_len"), F.col("has_main"), F.col("spa_mark"),
         F.col("js_required"), F.col("consent"), F.col("bot_wall"),
         F.col("rss_link"), F.col("youtube"),
-        http_only_text_len=cfg.http_only_text_len,
-        js_light_thin_text_len=cfg.js_light_thin_text_len,
     )
     strategy = F.col("strategy")
-    route_expr = route_fetch(
-        F.col("mode"), strategy, F.col("text_len"),
-        second_chance_text_len=cfg.second_chance_text_len,
-    )
+    route_expr = route_fetch(F.col("mode"), strategy, F.col("text_len"))
     route = F.col("route")
 
     # cost model: strategy latency midpoints (README.md:223,362-363) +
@@ -98,15 +108,15 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
     # 351-371). fast mode charges the plain httpx fetch, js mode the
     # Selenium render — neither pays a preflight
     base_cost = F.lit(None).cast("int")
-    for strat, ms in cfg.cost_ms.items():
+    for strat, ms in COST_MS.items():
         base_cost = F.when(strategy == strat, ms).otherwise(base_cost)
     base_cost = F.when(
         (strategy == "HTTP_THEN_JS") & (route == "selenium"),
-        cfg.cost_ms["HTTP_THEN_JS"] + cfg.cost_ms["JS_LIGHT"],
+        COST_MS["HTTP_THEN_JS"] + COST_MS["JS_LIGHT"],
     ).otherwise(base_cost)
     base_cost = (
-        F.when(F.col("mode") == "fast", F.lit(cfg.cost_ms["HTTP_ONLY"]))
-        .when(F.col("mode") == "js", F.lit(cfg.cost_ms["JS_LIGHT"]))
+        F.when(F.col("mode") == "fast", F.lit(COST_MS["HTTP_ONLY"]))
+        .when(F.col("mode") == "js", F.lit(COST_MS["JS_LIGHT"]))
         .otherwise(base_cost)
     )
     cost = F.col("_base_cost")
@@ -142,19 +152,19 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
     # path) or exhausts retries — which a bot wall always does
     # (:933-946) — escalates ONCE to a fresh accuracy-pool driver.
     # Deterministic twin: a speed-pool Selenium render whose modeled
-    # latency exceeds js_renderer_cap_ms, or whose strategy is
+    # latency exceeds JS_RENDERER_CAP_MS, or whose strategy is
     # BLOCKED, pays the one-shot accuracy surcharge and records the
     # escalation; the per-request timeout then judges the TOTAL cost,
     # so an escalation can flip a fetch into the 504 retry path.
     escalated_expr = (
         renders_selenium
         & ~accuracy
-        & (blocked_render | (cost > F.lit(cfg.js_renderer_cap_ms)))
+        & (blocked_render | (cost > F.lit(JS_RENDERER_CAP_MS)))
     )
     escalated = F.col("_escalated")
     cost_expr = F.when(
         (renders_selenium & accuracy) | escalated,
-        cost + F.lit(cfg.js_accuracy_extra_ms),
+        cost + F.lit(JS_ACCURACY_EXTRA_MS),
     ).otherwise(cost)
     cost = F.col("_cost")
 
@@ -168,7 +178,7 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
     req_timeout = F.coalesce(F.col("timeout_ms"), F.lit(cfg.timeout_ms))
     timed_out = F.coalesce(cost, F.lit(0)) > req_timeout
     retryable = (
-        F.col("page_status").isin(list(cfg.retryable_statuses)) | timed_out
+        F.col("page_status").isin(list(RETRYABLE_STATUSES)) | timed_out
     )
     # per-request retries (reference schemas.py:130-141): the requeue
     # cut compares the attempt counter against THAT row's budget, NULL
@@ -187,12 +197,12 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
     # an httpx.HTTPError, which preflight_analyze maps to strategy
     # BLOCKED — the graceful fall-through to Selenium,
     # app/preflight.py:48-59). Modeled twin: the probe's deterministic
-    # latency is the plain httpx charge (cost_ms.HTTP_ONLY); when it
-    # exceeds min(per-request timeout, preflight_cap_ms) the
+    # latency is the plain httpx charge (COST_MS["HTTP_ONLY"]); when it
+    # exceeds min(per-request timeout, PREFLIGHT_CAP_MS) the
     # classification never runs and the row takes the BLOCKED ladder
     # (Selenium render + escalation/accuracy surcharges).
-    probe_trip = F.lit(cfg.cost_ms["HTTP_ONLY"]) > F.least(
-        req_timeout, F.lit(cfg.preflight_cap_ms)
+    probe_trip = F.lit(COST_MS["HTTP_ONLY"]) > F.least(
+        req_timeout, F.lit(PREFLIGHT_CAP_MS)
     )
     exprs = {
         "strategy_when_auto": F.when(
@@ -216,24 +226,12 @@ def _sim_exprs(cfg: CrawlConfig) -> dict:
         "elapsed_ms": (
             F.coalesce(cost, F.lit(0))
             + F.coalesce(F.col("sched_slot_ms"), F.lit(0))
-            # modeled LLM postprocess latency (reference app/main.py:
-            # 466: elapsed_ms spans the LLM call; README +2-10 s):
-            # deterministic per-page surcharge on fetched rows whose
-            # request asked for the LLM. elapsed ONLY — timeout_ms
-            # governs the TRANSPORT in the reference (httpx/Selenium
-            # timeout params), so the surcharge never flips outcomes.
-            # Evaluated against the OUTCOME COLUMN, which exists by the
-            # time elapsed_ms is attached (simulated_fetch ordering) —
-            # re-inlining the outcome CASE here would double the
-            # codegen size for nothing.
-            + F.when(
-                F.coalesce(F.col("llm_postprocess"), F.lit(False))
-                & (F.col("outcome") == "fetched"),
-                F.lit(cfg.llm_cost_ms_base)
-                + F.pmod(
-                    F.col("page_id"), F.lit(cfg.llm_cost_ms_span + 1)
-                ) * F.lit(cfg.llm_cost_ms_step),
-            ).otherwise(F.lit(0))
+            # modeled LLM latency (config.LLM_COST_MS_*: elapsed ONLY,
+            # never flips an outcome). Evaluated against the OUTCOME
+            # COLUMN, which exists by the time elapsed_ms is attached
+            # (simulated_fetch ordering) — re-inlining the outcome CASE
+            # here would double the codegen size for nothing.
+            + _llm_cost_ms(F.col("page_id"))
         ).cast("int"),
     }
     _SIM_EXPRS_CACHE[key] = exprs
@@ -427,18 +425,13 @@ def live_decisions(fetched: DataFrame, cfg: CrawlConfig) -> DataFrame:
         F.col("text_len"), F.col("has_main"), F.col("spa_mark"),
         F.col("js_required"), F.col("consent"), F.col("bot_wall"),
         F.col("rss_link"), youtube,
-        http_only_text_len=cfg.http_only_text_len,
-        js_light_thin_text_len=cfg.js_light_thin_text_len,
     )
     strategy = F.when(
         (F.col("mode") == "auto") & F.col("error").isNull(), strategy_raw
     )
-    route = route_fetch(
-        F.col("mode"), strategy, F.col("text_len"),
-        second_chance_text_len=cfg.second_chance_text_len,
-    )
+    route = route_fetch(F.col("mode"), strategy, F.col("text_len"))
 
-    retryable = F.col("status_code").isin(list(cfg.retryable_statuses))
+    retryable = F.col("status_code").isin(list(RETRYABLE_STATUSES))
     # per-request retries must gate the ROUND-LOOP requeue too, not just
     # the in-partition transport loop — otherwise a live retries=0 row
     # with a retryable status requeues, diverging from the simulated
@@ -474,15 +467,7 @@ def live_decisions(fetched: DataFrame, cfg: CrawlConfig) -> DataFrame:
                 # live rows have no page_id, so the deterministic
                 # variance source is the url hash — replay-stable,
                 # never outcome-flipping (elapsed only)
-                + F.when(
-                    F.coalesce(F.col("llm_postprocess"), F.lit(False))
-                    & (F.col("outcome") == "fetched"),
-                    F.lit(cfg.llm_cost_ms_base)
-                    + F.pmod(
-                        F.xxhash64(F.col("url")),
-                        F.lit(cfg.llm_cost_ms_span + 1),
-                    ) * F.lit(cfg.llm_cost_ms_step),
-                ).otherwise(F.lit(0))
+                + _llm_cost_ms(F.xxhash64(F.col("url")))
             ).cast("int"),
         )
     )
@@ -560,8 +545,9 @@ def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
     )
 
 
-def _httpx_transport_factory():  # pragma: no cover — needs network
-    """Default transport: one httpx client PER (THREAD, proxy, verify) —
+def httpx_transport():  # pragma: no cover — needs network
+    """The network transport factory for a live crawl (pass it as
+    ``transport_factory``): one httpx client PER (THREAD, proxy, verify) —
     keep-alive/connection reuse like the reference's AsyncClient with
     max_keepalive_connections=4 (http_fetcher.py:39-52), safe under the
     stage's intra-partition thread pool. Parity details (round-2
@@ -575,7 +561,13 @@ def _httpx_transport_factory():  # pragma: no cover — needs network
     frontiers don't rebuild connections per row."""
     import threading
 
-    import httpx
+    try:
+        import httpx
+    except ImportError as exc:
+        raise NotImplementedError(
+            "httpx_transport requires httpx; inject another transport "
+            "or use the simulated fetch"
+        ) from exc
 
     local = threading.local()
     clients: list = []
@@ -633,7 +625,7 @@ def _httpx_transport_factory():  # pragma: no cover — needs network
 def live_fetch(
     admitted: DataFrame,
     cfg: CrawlConfig,
-    transport_factory=None,
+    transport_factory,
     num_partitions: int | None = None,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
@@ -660,8 +652,9 @@ def live_fetch(
 
     ``transport_factory() -> callable(url, ua, timeout_s, max_bytes,
     proxy=None, verify=True) -> (status, final_url, bytes, ctype)`` is
-    injectable (optionally with a ``.close()`` attribute, called when
-    the partition is exhausted); the default is httpx.
+    called once per partition (the callable may carry a ``.close()``
+    attribute, called when the partition is exhausted);
+    ``httpx_transport`` is the network client.
 
     The stage reads the request-column contract: an absent request
     column is backfilled with its REQUEST_COL_DEFAULTS value at entry
@@ -682,16 +675,6 @@ def live_fetch(
     from volltextextraktion_selenium_md_spark.operators.politeness import (
         salted_repartition,
     )
-
-    if transport_factory is None:
-        try:
-            import httpx  # noqa: F401
-        except ImportError as exc:
-            raise NotImplementedError(
-                "live fetching requires httpx (or an injected transport); "
-                "the sandbox engine uses simulated_fetch"
-            ) from exc
-        transport_factory = _httpx_transport_factory
 
     admitted = with_request_cols(admitted)
     nparts = num_partitions or int(

@@ -33,7 +33,9 @@ runs before publishing a snapshot), so no bulk job is planned inside
 that window. Every round plans its shuffles at the session width.
 
 The fetch stage is either the simulated lookup join (deterministic,
-oracle-checkable) or the LIVE network stage (fetch_mode='live': salted
+oracle-checkable) or, when a transport is given
+(``CrawlEngine(transport_factory=...)``, e.g.
+``plans.fetch.httpx_transport``), the LIVE network stage (salted
 mapInPandas, per-partition client + thread pool, children extracted
 from the payload bytes) — every other step is shared code, and each
 frontier row carries its request mode (fast/js/auto).
@@ -78,6 +80,7 @@ from volltextextraktion_selenium_md_spark.sources.lakehouse import (
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.functions.lineage import (
+    CRAWL_ORDER,
     DOC_POS_WIDTH,
     SEED_WIDTH,
     segment_col,
@@ -217,7 +220,7 @@ def init_frontier(spark: SparkSession, seeds_df: DataFrame | None = None) -> Dat
         F.lit(0).alias("attempt"),
         F.lit(0).alias("round_added"),
     )
-    return first_seen(f, "url", ["depth", "lineage"])
+    return first_seen(f, "url", CRAWL_ORDER)
 
 
 class CrawlEngine:
@@ -244,7 +247,6 @@ class CrawlEngine:
         mirrors: int = 1,
         with_llm: bool = False,
         checkpoint_dir: str | None = None,
-        fetch_mode: str = "simulated",
         transport_factory=None,
         seen_partitioned_min_rows: int = 200_000,
         new_seeds: DataFrame | None = None,
@@ -254,28 +256,29 @@ class CrawlEngine:
         (``bench.py``, ``perfbench/workloads.py``) still pass it."""
         # caller-input checks raise (not assert, which ``python -O``
         # strips) before any Spark work runs
-        if fetch_mode not in ("simulated", "live"):
-            raise ValueError(
-                f"fetch_mode must be 'simulated' or 'live', got {fetch_mode!r}"
-            )
         if new_seeds is not None and mirrors != 1:
             raise ValueError(
                 "new_seeds (service mode) cannot be combined with mirrors > 1"
             )
+        if with_llm and not with_convert:
+            raise ValueError(
+                "with_llm post-processes converted markdown: it needs "
+                "with_convert"
+            )
         self.spark = spark
         self.cfg = cfg or CrawlConfig()
-        # 'simulated' resolves fetches against the deterministic graph
-        # (lookup join); 'live' runs the real mapInPandas network stage
-        # (plans/fetch.py:live_fetch — per-partition client, salted
-        # repartition, in-partition transport retries, thread pool)
-        # inside the SAME round loop: robots, budget, slots, seen-set,
-        # status-code retries and ordering are shared code. Live-mode
-        # children come from the payload bytes (links_from_payloads),
-        # and with_convert converts the REAL payload bytes (image rows
-        # yield metadata markdown; the image+caption payload TABLE stays
-        # the minted corpus's contract, see convert_stage docstring).
-        self.fetch_mode = fetch_mode
+        # no transport: fetches resolve against the deterministic graph
+        # (lookup join). A transport (e.g. plans/fetch.py:httpx_transport)
+        # makes the crawl LIVE: the mapInPandas network stage
+        # (plans/fetch.py:live_fetch) runs inside the SAME round loop —
+        # robots, budget, slots, seen-set, status-code retries and
+        # ordering are shared code. Live children come from the payload
+        # bytes (links_from_payloads), and with_convert converts the
+        # REAL payload bytes (image rows yield metadata markdown; the
+        # image+caption payload TABLE stays the minted corpus's
+        # contract, see convert_stage docstring).
         self.transport_factory = transport_factory
+        self.live = transport_factory is not None
         # use_bloom: the sharded seen-set prefilter (seen_ops.SeenSet),
         # one shard per session partition — per-shard blooms consulted
         # task-locally; the exact anti-join stays the correctness path
@@ -298,13 +301,13 @@ class CrawlEngine:
             ) if c != "status_code"
         ]
         self._fetch_cols = (
-            keep + ["payload"] if fetch_mode == "live"
+            keep + ["payload"] if self.live
             else [c for c in keep if c != "partition_id"]
         )
         # optional LLM postprocess over converted markdown (plans/llm.py):
         # conversions gain the LLMResult struct column (CrawlResponse.llm,
         # reference schemas.py:248-257) — never fails a row
-        self.with_llm = with_llm and with_convert
+        self.with_llm = with_llm
         # lakehouse snapshot checkpointing (SURVEY §7 M6): commit
         # frontier/seen/log every round + MERGE payloads INTO the
         # payload table; a new engine on the same dir resumes from the
@@ -585,7 +588,7 @@ class CrawlEngine:
         co-located-join pattern (bucketed table at lakehouse scale).
         Cached plans keep their outputPartitioning under AQE by default
         (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning)."""
-        if self.fetch_mode == "simulated":
+        if not self.live:
             self.pages = self.pages.repartition(self._session_width, "url").persist()
             links = self.links.select(*self.LINK_COLS)
             if self.mirrors > 1:
@@ -779,7 +782,7 @@ class CrawlEngine:
         # across partitions (salted_repartition); the simulated fetch
         # is a url-equi join whose output partitioning is already
         # uniform in the join key, so no extra shuffle.
-        if self.fetch_mode == "live":
+        if self.live:
             raw = live_fetch(
                 admitted, cfg,
                 transport_factory=self.transport_factory,
@@ -862,7 +865,7 @@ class CrawlEngine:
         )
         conv = convert_stage(
             ok.repartition(conv_width), self.cfg,
-            payload_col="payload" if self.fetch_mode == "live" else None,
+            payload_col="payload" if self.live else None,
         )
         # PIPELINE the bulk phase against the round loop: round k's convert
         # depends only on the already-checkpointed fetch output, so a single
@@ -889,7 +892,7 @@ class CrawlEngine:
             # expands no children (NULL = crawl default, expand)
             & F.coalesce(F.col("extract_links"), F.lit(True))
         )
-        if self.fetch_mode == "live":
+        if self.live:
             # live mode: children come from the PAYLOAD BYTES — the
             # reference's extract_links_detailed_from_html over the
             # fetched body (app/utils.py:126-155), Arrow-batched
@@ -929,7 +932,7 @@ class CrawlEngine:
                 F.lit(0).alias("attempt"),
                 F.lit(next_round).alias("round_added"),
             )
-        return seen_ops.with_hashes(first_seen(children, "url", ["depth", "lineage"]))
+        return seen_ops.with_hashes(first_seen(children, "url", CRAWL_ORDER))
 
     def _unseen(self, children: DataFrame) -> DataFrame:
         """The round's new URLs: children anti-joined against the seen
@@ -1072,7 +1075,7 @@ class CrawlEngine:
         # lineage) is the replay contract, the ordinal is bookkeeping.
         decisions = fetch_log.filter(F.col("outcome") != "blocked")
         ordered = global_ordinal(
-            decisions, ["round", "depth", "lineage"], self._session_width
+            decisions, ["round", *CRAWL_ORDER], self._session_width
         )
         full_log = ordered.unionByName(
             fetch_log.filter(F.col("outcome") == "blocked").withColumn(
@@ -1101,7 +1104,7 @@ class CrawlEngine:
         # every returned DataFrame bottoms out in (possibly lazy)
         # localCheckpoints, all of which were materialized by the
         # per-round counts — the cached graph tables can be released
-        if self.fetch_mode == "simulated":
+        if not self.live:
             self.pages.unpersist()
             self.links.unpersist()
         self.robots.unpersist()

@@ -14,9 +14,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from volltextextraktion_selenium_md_spark import graph
-from volltextextraktion_selenium_md_spark.config import CrawlConfig
+from volltextextraktion_selenium_md_spark.config import RETRYABLE_STATUSES, CrawlConfig
 from volltextextraktion_selenium_md_spark.functions import classify, mime, text as textf
 from volltextextraktion_selenium_md_spark.functions.lineage import (
+    CRAWL_ORDER,
     DOC_POS_WIDTH,
     segment_col,
 )
@@ -24,7 +25,6 @@ from volltextextraktion_selenium_md_spark.functions.urls import (
     canonicalize_url,
     is_internal,
     redirect_flag,
-    url_host,
 )
 from volltextextraktion_selenium_md_spark.operators import dedup, seen as seen_ops, simsearch
 from volltextextraktion_selenium_md_spark.operators.dedup import first_seen
@@ -242,7 +242,7 @@ def _depth1_candidates(spark) -> DataFrame:
             segment_col(F.col("doc_pos"), DOC_POS_WIDTH),
         ).alias("lineage"),
     )
-    return first_seen(children, "url", ["depth", "lineage"])
+    return first_seen(children, "url", CRAWL_ORDER)
 
 
 def q_host_budget_topk(spark, sf_dir):
@@ -261,7 +261,7 @@ def q_retry_requeue(spark, sf_dir):
     d1 = _depth1_candidates(spark).withColumn("attempt", F.lit(0))
     joined = d1.join(graph.pages(spark).select("url", "status"), on="url", how="left")
     retry = joined.filter(
-        F.col("status").isin(list(cfg.retryable_statuses)) & (F.col("attempt") < cfg.retries)
+        F.col("status").isin(list(RETRYABLE_STATUSES)) & (F.col("attempt") < cfg.retries)
     )
     return retry.select("url", (F.col("attempt") + 1).alias("attempt"))
 
@@ -288,7 +288,7 @@ def q_crawl_bfs_d1(spark, sf_dir):
     from volltextextraktion_selenium_md_spark.plans.frontier import global_ordinal
 
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return global_ordinal(both, ["depth", "lineage"], nparts)
+    return global_ordinal(both, CRAWL_ORDER, nparts)
 
 
 # --- scalar cascades ---------------------------------------------------------
@@ -305,13 +305,10 @@ def q_link_classification(spark, sf_dir):
 
 
 def _strategy_col():
-    cfg = CrawlConfig()
     return classify.classify_strategy(
         F.col("content_type"), F.col("final_url"), F.col("text_len"),
         F.col("has_main"), F.col("spa_mark"), F.col("js_required"),
         F.col("consent"), F.col("bot_wall"), F.col("rss_link"), F.col("youtube"),
-        http_only_text_len=cfg.http_only_text_len,
-        js_light_thin_text_len=cfg.js_light_thin_text_len,
     )
 
 
@@ -372,21 +369,17 @@ def q_fetch_route(spark, sf_dir):
     cut: HTTP_THEN_JS pages whose preflight text already has >=700
     chars are served from the preflight bytes instead of a Selenium
     refetch (main.py:343-349; looser than preflight's own >=800
-    HTTP_ONLY cut at preflight.py:119). Thresholds come from
-    CrawlConfig, not literals. `second_fetch` marks auto-mode rows that
+    HTTP_ONLY cut at preflight.py:119). The cuts are classify.py's
+    constants, not literals. `second_fetch` marks auto-mode rows that
     pay the JS refetch after the preflight probe."""
     _g(spark, sf_dir)
-    cfg = CrawlConfig()
     cases = spark.sql(MODE_CASES_BODY)
     strategy = F.when(F.col("mode") == "auto", _strategy_col())
     routed = cases.join(graph.pages(spark), on="page_id").select(
         "page_id",
         "mode",
         strategy.alias("strategy"),
-        classify.route_fetch(
-            F.col("mode"), strategy, F.col("text_len"),
-            second_chance_text_len=cfg.second_chance_text_len,
-        ).alias("route"),
+        classify.route_fetch(F.col("mode"), strategy, F.col("text_len")).alias("route"),
     )
     return routed.withColumn(
         "second_fetch",

@@ -10,8 +10,9 @@ and final seen set must match this exactly.
 
 Deliberately shares only two pure scalars with the engine:
 `canonicalize_one` (golden-pair tested on its own) and the lineage
-`segment` encoding (property-tested against the engine's Column form);
-all loop logic is written twice.
+`segment` encoding (property-tested against the engine's Column form),
+plus the settings it reads as values — `CrawlConfig`, the strategy cuts
+and the modeled cost constants; all loop logic is written twice.
 """
 
 from __future__ import annotations
@@ -21,7 +22,19 @@ from urllib.parse import urlsplit
 
 import duckdb
 
-from volltextextraktion_selenium_md_spark.config import CrawlConfig
+from volltextextraktion_selenium_md_spark.config import (
+    COST_MS,
+    JS_ACCURACY_EXTRA_MS,
+    JS_RENDERER_CAP_MS,
+    PREFLIGHT_CAP_MS,
+    RETRYABLE_STATUSES,
+    CrawlConfig,
+)
+from volltextextraktion_selenium_md_spark.functions.classify import (
+    HTTP_ONLY_TEXT_LEN,
+    JS_LIGHT_THIN_TEXT_LEN,
+    SECOND_CHANCE_TEXT_LEN,
+)
 from volltextextraktion_selenium_md_spark.graph import BASE_TABLES, GRAPH_VIEWS
 from volltextextraktion_selenium_md_spark.functions.lineage import (
     DOC_POS_WIDTH,
@@ -96,7 +109,7 @@ _REQ_COLS = (
 _SEED_COLS = ("seed_idx", "priority", "raw_url") + _REQ_COLS
 
 
-def _strategy(page: dict, cfg: CrawlConfig) -> str:
+def _strategy(page: dict) -> str:
     """Pure-python preflight cascade (independent twin of
     functions/classify.py:classify_strategy; reference preflight
     ``app/preflight.py:61-124`` — branch order is the contract)."""
@@ -112,7 +125,7 @@ def _strategy(page: dict, cfg: CrawlConfig) -> str:
     if page["rss_link"]:
         return "RSS"
     if (
-        page["text_len"] >= cfg.http_only_text_len
+        page["text_len"] >= HTTP_ONLY_TEXT_LEN
         and (page["has_main"] or not page["spa_mark"])
         and not page["js_required"]
         and not page["consent"]
@@ -120,7 +133,7 @@ def _strategy(page: dict, cfg: CrawlConfig) -> str:
         return "HTTP_ONLY"
     if (
         page["spa_mark"]
-        or (page["has_main"] and page["text_len"] < cfg.js_light_thin_text_len)
+        or (page["has_main"] and page["text_len"] < JS_LIGHT_THIN_TEXT_LEN)
         or page["js_required"]
         or page["consent"]
     ):
@@ -140,38 +153,38 @@ def _request_cost_ms(
 
     Mirrors the preflight 12 s cap (reference main.py:329): an
     auto-mode row whose modeled probe charge exceeds
-    min(timeout_ms, preflight_cap_ms) never classifies — it takes the
+    min(timeout_ms, PREFLIGHT_CAP_MS) never classifies — it takes the
     BLOCKED fall-through to Selenium."""
     accuracy = js_strategy == "accuracy"
     if mode == "fast":
-        return cfg.cost_ms["HTTP_ONLY"], False
+        return COST_MS["HTTP_ONLY"], False
     if mode == "js":
-        base = cfg.cost_ms["JS_LIGHT"]
+        base = COST_MS["JS_LIGHT"]
         renders, blocked = True, bool(page["bot_wall"])
     else:
         probe_cap = min(
             timeout_ms if timeout_ms is not None else cfg.timeout_ms,
-            cfg.preflight_cap_ms,
+            PREFLIGHT_CAP_MS,
         )
-        if cfg.cost_ms["HTTP_ONLY"] > probe_cap:
+        if COST_MS["HTTP_ONLY"] > probe_cap:
             s = "BLOCKED"
         else:
-            s = _strategy(page, cfg)
+            s = _strategy(page)
         blocked = s == "BLOCKED"
-        if s == "HTTP_THEN_JS" and page["text_len"] < cfg.second_chance_text_len:
-            base = cfg.cost_ms["HTTP_THEN_JS"] + cfg.cost_ms["JS_LIGHT"]
+        if s == "HTTP_THEN_JS" and page["text_len"] < SECOND_CHANCE_TEXT_LEN:
+            base = COST_MS["HTTP_THEN_JS"] + COST_MS["JS_LIGHT"]
             renders = True
         else:
-            base = cfg.cost_ms[s]
+            base = COST_MS[s]
             # BLOCKED renders (the wall is detected after the Selenium
             # refetch attempt); PDF/RSS/YOUTUBE/HTTP_ONLY never render
             renders = s in ("JS_LIGHT", "JS_LIGHT_CONSENT") or blocked
     escalated = (
         renders and not accuracy
-        and (blocked or base > cfg.js_renderer_cap_ms)
+        and (blocked or base > JS_RENDERER_CAP_MS)
     )
     if (renders and accuracy) or escalated:
-        return base + cfg.js_accuracy_extra_ms, escalated
+        return base + JS_ACCURACY_EXTRA_MS, escalated
     return base, escalated
 
 
@@ -263,7 +276,7 @@ def replay_crawl(
                 # global), mirroring plans/fetch.py's coalesce
                 cap = row.get("timeout_ms")
                 timed_out = cost > (cap if cap is not None else cfg.timeout_ms)
-                if page["status"] in cfg.retryable_statuses or timed_out:
+                if page["status"] in RETRYABLE_STATUSES or timed_out:
                     # per-request retry budget (NULL = config), same
                     # coalesce as plans/fetch.py's req_retries
                     budget = row.get("retries")

@@ -93,6 +93,7 @@ def request_results(
     from pyspark.sql import functions as F
 
     from volltextextraktion_selenium_md_spark.functions.lineage import (
+        CRAWL_ORDER,
         SEED_WIDTH,
         segment,
     )
@@ -108,5 +109,5 @@ def request_results(
             | F.col("lineage").startswith(prefix + ".")
         )
         .coalesce(1)
-        .sortWithinPartitions("round", "depth", "lineage")
+        .sortWithinPartitions("round", *CRAWL_ORDER)
     )
