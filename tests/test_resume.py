@@ -14,6 +14,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_expansion_skip import expanding_rounds
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.operators.filters import BloomFilter
 from volltextextraktion_selenium_md_spark.operators.seen import SeenSet
@@ -54,9 +55,12 @@ def uninterrupted(spark):
     return _decisions(res), _seen_urls(res)
 
 
-def _checkpoint_3_rounds(spark, ckpt_dir):
+def _checkpoint_2_rounds(spark, ckpt_dir):
+    """A use_bloom store after rounds 0-1. The resume's first round
+    (round 2) still expands, so it needs the seen filter — a round that
+    cannot expand runs no anti-join and never reads the filter."""
     CrawlEngine(
-        spark, SF, cfg=CrawlConfig(max_rounds=3),
+        spark, SF, cfg=CrawlConfig(max_rounds=2),
         checkpoint_dir=ckpt_dir, use_bloom=True,
     ).run()
     return SnapshotStore(ckpt_dir)
@@ -212,7 +216,7 @@ def test_sharded_filter_resume_matches(spark, ckpt_dir, uninterrupted):
     """use_bloom: the seen_shards blob holds one shard per session
     partition, and resuming from it preserves exact decisions and the
     exact seen set."""
-    store = _checkpoint_3_rounds(spark, ckpt_dir)
+    store = _checkpoint_2_rounds(spark, ckpt_dir)
     assert "seen_shards" in store.manifest()["blobs"]
     filt = SeenSet.from_bytes(store.read_blob("seen_shards"))
     assert filt.n_shards == int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -225,15 +229,18 @@ def test_resume_bloom_blob_seeds_first_round(spark, ckpt_dir, uninterrupted):
     of the committed seen table (a missed key would route a seen URL
     around the anti-join), so a resume LOADS it as the first round's
     filter instead of rebuilding; decisions stay exact."""
-    store = _checkpoint_3_rounds(spark, ckpt_dir)
+    store = _checkpoint_2_rounds(spark, ckpt_dir)
     filt = SeenSet.from_bytes(store.read_blob("seen_shards"))
     seen = store.read(spark, "seen")
     definitely_new, maybe_seen = filt.partitioned_prefilter(seen)
     assert definitely_new.count() == 0
     assert maybe_seen.count() == seen.count() > 0
+    first = store.manifest()["meta"]["round"] + 1
     eng = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True)
+    rounds = expanding_rounds(eng)
     res = eng.run()
     assert _decisions(res) == uninterrupted[0]
+    assert rounds[:1] == [first]  # the resumed first round needs the filter
     assert eng._filter_rebuilds == 0
 
 
@@ -243,7 +250,7 @@ def test_resume_ignores_retired_filter_blobs(spark, ckpt_dir, uninterrupted):
     resumes under use_bloom to exactly the uninterrupted crawl: the
     blobs are never read, and the first resumed round rebuilds the
     sharded filter from the restored seen table."""
-    store = _checkpoint_3_rounds(spark, ckpt_dir)
+    store = _checkpoint_2_rounds(spark, ckpt_dir)
     vdir = os.path.join(ckpt_dir, f"v{store.latest()}")
     os.remove(os.path.join(vdir, "seen_shards.bin"))
     # junk that parses: an EMPTY shard set — an engine that trusted

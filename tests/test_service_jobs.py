@@ -40,8 +40,11 @@ PERFBENCH_DATA = os.path.join(
 # the test session (local[8], 8 shuffle partitions). The count repeats
 # exactly run to run. The same batch ran 61 jobs before store reads took
 # their schemas from the manifest, convert width was capped at the
-# round's rows and request_results sorted in one partition.
-SERVICE_BATCH_JOB_BUDGET = 47
+# round's rows and request_results sorted in one partition, and 47
+# before a round that cannot expand (these requests are leaves) stopped
+# planning child expansion and the log's global ordinal waited for a
+# fetch_log read.
+SERVICE_BATCH_JOB_BUDGET = 35
 
 _REQUEST_DDL = (
     "raw_url string, seed_idx bigint, priority int, mode string, "
@@ -52,6 +55,26 @@ _REQUEST_DDL = (
 def _job_count(spark) -> int:
     ids = spark.sparkContext.statusTracker().getJobIdsForGroup()
     return max(ids) + 1 if ids else 0
+
+
+def record_links_cache(eng: CrawlEngine) -> list[int]:
+    """Wrap ``eng._endgame`` to record, before it unpersists the graph
+    tables, how many partitions of the link cache the block manager
+    holds: the cached relation ``CrawlEngine._prep_tables`` hash-
+    partitions on ``src_page_id``, the only one keyed on it."""
+    held: list[int] = []
+    endgame = eng._endgame
+
+    def recording():
+        infos = eng.spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        held.append(sum(
+            i.numCachedPartitions() for i in infos
+            if "hashpartitioning(src_page_id" in i.name()
+        ))
+        return endgame()
+
+    eng._endgame = recording
+    return held
 
 
 def _batches():
@@ -103,24 +126,26 @@ def served(spark, tmp_path_factory):
     graph.register_graph_views(spark, SF_SMALL)
 
     def serve(batch):
-        res = CrawlEngine(
+        eng = CrawlEngine(
             spark, SF_SMALL, cfg=cfg, checkpoint_dir=store,
             new_seeds=spark.createDataFrame(_rows(batch), _REQUEST_DDL),
             with_convert=True, with_llm=True, collect_round_counts=False,
-        ).run()
+        )
+        links_cached = record_links_cache(eng)
+        res = eng.run()
         return res, [request_results(spark, store, d["seed_idx"]).collect()
-                     for d in batch]
+                     for d in batch], links_cached[0]
 
     serve(b1)
     j0 = _job_count(spark)
-    res, results = serve(b2)
+    res, results, links_cached = serve(b2)
     jobs = _job_count(spark) - j0
     g1 = replay_crawl(SF_SMALL, cfg, seeds=b1)
     g2 = replay_crawl(SF_SMALL, cfg, seeds=b2, initial_seen=g1.seen,
                       start_round=g1.rounds)
     assert g2.rounds == g1.rounds + 1 == res.rounds  # one round per batch
     return {"store": store, "jobs": jobs, "batch": b2, "results": results,
-            "gold": g2}
+            "gold": g2, "links_cached": links_cached}
 
 
 def test_service_batch_stays_within_job_budget(served):
@@ -133,6 +158,9 @@ def test_service_batch_stays_within_job_budget(served):
         assert len(want) == 1
         assert [(r["url"], r["lineage"], r["outcome"]) for r in got] == want
     assert served["jobs"] <= SERVICE_BATCH_JOB_BUDGET, served["jobs"]
+    # a batch of leaf requests cannot expand: it never builds the link
+    # cache
+    assert served["links_cached"] == 0
 
 
 def test_registration_and_store_reads_submit_no_jobs(spark, served):

@@ -545,7 +545,7 @@ def links_from_payloads(parents: DataFrame, next_round: int) -> DataFrame:
     )
 
 
-def httpx_transport():  # pragma: no cover — needs network
+def httpx_transport():
     """The network transport factory for a live crawl (pass it as
     ``transport_factory``): one httpx client PER (THREAD, proxy, verify) —
     keep-alive/connection reuse like the reference's AsyncClient with

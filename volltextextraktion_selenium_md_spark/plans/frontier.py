@@ -9,9 +9,11 @@ round k:  frontier --robots--> allowed | blocked
           allowed --budget rank cut--> admitted | deferred
           admitted --slots--> --time-budget cut--> (over budget -> deferred)
           --fetch stage--> outcomes
-          fetched html --links--> children --first-seen dedup-->
-          --seen anti-join--> unseen
-          frontier(k+1) = deferred ∪ retries(attempt+1) ∪ unseen
+          only when a frontier row can expand (depth < max_depth and
+          extract_links not false):
+            fetched html --links--> children --first-seen dedup-->
+            --seen anti-join--> unseen
+          frontier(k+1) = deferred ∪ retries(attempt+1) [∪ unseen]
 
 ``CrawlEngine`` runs it in named phases (``_run_impl``): ``_prep_tables``
 persists the graph tables and ``_restore`` loads the starting point
@@ -22,8 +24,13 @@ hands the bulk phase to its thread), children plus first-seen dedup
 (``_children``), the seen filter and anti-join (``_unseen``), the next
 frontier, the seen delta and compaction (``_compact_seen``), and then,
 in this order: the frontier count, the seen filter's one fold,
-``_commit`` and ``_hygiene``. ``_endgame`` drains the bulk thread and
-assigns the global ordinal.
+``_commit`` and ``_hygiene``. The frontier count also counts the rows
+that can expand (``can_expand``); a round whose frontier has none
+plans no children and no unseen rows, so it adds no seen delta, folds
+nothing into the seen filter and never builds the link cache (a
+service batch of leaf requests, the last rounds of a depth-capped
+BFS). ``_endgame`` drains the bulk thread and assembles the result;
+``CrawlResult.fetch_log`` assigns the global ordinal on its first read.
 
 The loop thread and the bulk thread share one session conf, and the
 engine writes it in one place only: ``_ckpt_partitioned`` turns AQE off
@@ -67,8 +74,9 @@ from __future__ import annotations
 import os
 import time as _time
 from dataclasses import dataclass, field
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from volltextextraktion_selenium_md_spark.sources.lakehouse import (
@@ -125,9 +133,22 @@ LOG_COLS = [
     "strategy", "route", "js_escalated", "elapsed_ms", "partition_id",
 ]
 
+
+def can_expand(max_depth: int) -> Column:
+    """May this frontier row expand children: below the depth cap, and
+    its request asks for links (per-request extract_links gate,
+    schemas.py:171-192: a false row is a leaf, fetched and converted
+    but expanding no children; NULL = crawl default, expand). The
+    static half of ``_children``'s parent filter, and what the frontier
+    count counts to decide whether the next round expands at all."""
+    return (F.col("depth") < max_depth) & F.coalesce(
+        F.col("extract_links"), F.lit(True)
+    )
+
+
 @dataclass
 class CrawlResult:
-    fetch_log: DataFrame          # every decision, with global `ordinal`
+    log: DataFrame                # every decision, without the ordinal
     seen: DataFrame               # final seen set (url)
     metrics: DataFrame            # per (round, outcome) counts
     payloads: DataFrame | None    # image+caption rows (input_hint shape)
@@ -135,7 +156,28 @@ class CrawlResult:
     partition_metrics: DataFrame | None = None  # per (round, partition) lineage
     conversions: DataFrame | None = None  # per-page markdown (with_convert)
     round_walls: list[float] = field(default_factory=list)  # driver s/round
-    post_loop_s: float = 0.0  # drain + global-ordinal endgame wall
+    post_loop_s: float = 0.0  # drain + result-assembly endgame wall
+
+    @cached_property
+    def fetch_log(self) -> DataFrame:
+        """Every decision with its global ``ordinal`` (NULL on blocked
+        rows), assigned on the first read and kept: the ordinal's range
+        sort runs over the whole cumulative log, and a caller that
+        never reads it (a service batch answers from the store) never
+        pays for it. The ORDER (round, depth, lineage) is the replay
+        contract, the ordinal is bookkeeping. The range sort runs at the
+        session width, like every explicit width in the engine."""
+        width = int(
+            self.log.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
+        decisions = self.log.filter(F.col("outcome") != "blocked")
+        return global_ordinal(
+            decisions, ["round", *CRAWL_ORDER], width
+        ).unionByName(
+            self.log.filter(F.col("outcome") == "blocked").withColumn(
+                "ordinal", F.lit(None).cast("int")
+            )
+        )
 
 
 def global_ordinal(
@@ -646,9 +688,7 @@ class CrawlEngine:
                 self._ckpt_seen(self._frontier.select("url", "h1", "h2"), 0)
             ]
             self._n_seen = 0
-        # one count per round doubles as the loop-exit test AND the seen-
-        # cardinality input for filter sizing — no extra driver actions
-        self._n_frontier = self._frontier.count()
+        self._count_frontier()
         self._n_seen = self._n_seen or self._n_frontier
 
     def _resume(self) -> None:
@@ -717,6 +757,17 @@ class CrawlEngine:
             self._seen_filter.fold_delta_df(fresh_seeds.select("h1", "h2"))
         return frontier
 
+    def _count_frontier(self) -> None:
+        """The round's one frontier action: its row count (the loop-exit
+        test and the seen-cardinality input for filter sizing) and, in
+        the same aggregate, how many rows can expand (``can_expand``);
+        with none, the next round skips child expansion."""
+        row = self._frontier.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(can_expand(self.cfg.max_depth), 1)).alias("n_expand"),
+        ).collect()[0]
+        self._n_frontier, self._n_expandable = row["n"], row["n_expand"]
+
     def _round(self) -> None:
         """One crawl round, in the module docstring's diagram order."""
         frontier = self._frontier
@@ -732,19 +783,21 @@ class CrawlEngine:
             F.lit(self._rnd + 1).alias("round_added"),
             "h1", "h2",
         )
-        unseen = self._unseen(self._children(fetched))
-        self._frontier = (
-            deferred.select(*FRONTIER_COLS, "h1", "h2")
-            .unionByName(retries)
-            .unionByName(unseen.select(*FRONTIER_COLS, "h1", "h2"))
-            .localCheckpoint(eager=False)
-        )
+        nxt = deferred.select(*FRONTIER_COLS, "h1", "h2").unionByName(retries)
+        # no frontier row can expand: no children, so no unseen rows, no
+        # seen delta and no filter fold or rebuild — the round plans none
+        # of the child-expansion path (and never builds the link cache)
+        unseen = None
+        if self._n_expandable:
+            unseen = self._unseen(self._children(fetched))
+            nxt = nxt.unionByName(unseen.select(*FRONTIER_COLS, "h1", "h2"))
+        self._frontier = nxt.localCheckpoint(eager=False)
         dead_parts = self._compact_seen(unseen)
-        self._n_frontier = self._frontier.count()
+        self._count_frontier()
         # cheap upper bound is enough for filter sizing (deferred and
         # retry rows double-count; the filter is just slightly larger)
         self._n_seen += self._n_frontier
-        if self._seen_filter is not None:
+        if unseen is not None and self._seen_filter is not None:
             # the round's one O(delta) fold (executor-side partial
             # bitsets, never keys to the driver): the committed blob
             # then covers exactly the committed seen table, and the fold
@@ -886,11 +939,7 @@ class CrawlEngine:
         parent_filter = (
             (F.col("outcome") == "fetched")
             & F.col("content_type").startswith("text/html")
-            & (F.col("depth") < self.cfg.max_depth)
-            # per-request extract_links gate (schemas.py:171-192):
-            # a false row is a leaf — fetched and converted, but it
-            # expands no children (NULL = crawl default, expand)
-            & F.coalesce(F.col("extract_links"), F.lit(True))
+            & can_expand(self.cfg.max_depth)
         )
         if self.live:
             # live mode: children come from the PAYLOAD BYTES — the
@@ -974,12 +1023,14 @@ class CrawlEngine:
             broadcast_base=not self._seen_large(self._n_seen),
         ).localCheckpoint(eager=False)
 
-    def _compact_seen(self, unseen: DataFrame) -> list[DataFrame]:
-        """Add the round's unseen rows as a seen delta and, on the
-        compaction cadence or at promotion, fold the parts into one new
-        base. Returns the folded parts: they die once the round's count
-        has stored unseen's rows in the new frontier's own blocks."""
-        self._seen_parts.append(unseen.select("url", "h1", "h2"))
+    def _compact_seen(self, unseen: DataFrame | None) -> list[DataFrame]:
+        """Add the round's unseen rows as a seen delta (none in a round
+        that cannot expand) and, on the compaction cadence or at
+        promotion, fold the parts into one new base. Returns the folded
+        parts: they die once the round's count has stored unseen's rows
+        in the new frontier's own blocks."""
+        if unseen is not None:
+            self._seen_parts.append(unseen.select("url", "h1", "h2"))
         # promote the moment the estimate crosses the threshold —
         # waiting for the scheduled compaction round left 2-3
         # rounds anti-joining a plain (stats-less, unbroadcastable)
@@ -1050,8 +1101,9 @@ class CrawlEngine:
         self._hygiene_futures.append(self._bulk_pool.submit(narrow_log))
 
     def _endgame(self) -> CrawlResult:
-        """Drain the bulk thread, order the log globally, and assemble
-        the result."""
+        """Drain the bulk thread and assemble the result; the log's
+        global ordinal waits for the first ``CrawlResult.fetch_log``
+        read."""
         t_post = _time.time()
         conversions: list[DataFrame] = []
         payloads: list[DataFrame] = []
@@ -1069,25 +1121,10 @@ class CrawlEngine:
             self._bulk_pool.shutdown()
             self._bulk_pool = None
 
-        fetch_log = self._union_parts(self._logs)
-        # global crawl-order ordinal via range-partitioned sort +
-        # per-partition offsets — distributed; the ORDER (round, depth,
-        # lineage) is the replay contract, the ordinal is bookkeeping.
-        decisions = fetch_log.filter(F.col("outcome") != "blocked")
-        ordered = global_ordinal(
-            decisions, ["round", *CRAWL_ORDER], self._session_width
-        )
-        full_log = ordered.unionByName(
-            fetch_log.filter(F.col("outcome") == "blocked").withColumn(
-                "ordinal", F.lit(None).cast("int")
-            )
-        )
-
-        metrics = (
-            full_log.groupBy("round", "outcome").agg(F.count("*").alias("n"))
-        )
+        log = self._union_parts(self._logs)
+        metrics = log.groupBy("round", "outcome").agg(F.count("*").alias("n"))
         partition_metrics = (
-            full_log.groupBy("round", "partition_id")
+            log.groupBy("round", "partition_id")
             .agg(
                 F.count("*").alias("n"),
                 F.sum(F.when(F.col("outcome") == "fetched", 1).otherwise(0)).alias("n_fetched"),
@@ -1110,7 +1147,7 @@ class CrawlEngine:
         self.robots.unpersist()
 
         return CrawlResult(
-            fetch_log=full_log,
+            log=log,
             seen=self._union_parts(self._seen_parts).select("url"),
             metrics=metrics,
             payloads=payload_df,

@@ -879,7 +879,7 @@ def q_crawl_metrics(spark, sf_dir):
     verdict #8). Rows-only (partition assignment is an execution
     detail, not SQL semantics)."""
     res = _crawl_result(spark, sf_dir)
-    return res.fetch_log.groupBy("round", "partition_id", "outcome").agg(
+    return res.log.groupBy("round", "partition_id", "outcome").agg(
         F.count("*").alias("n")
     )
 
