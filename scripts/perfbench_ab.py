@@ -3,15 +3,16 @@
     python scripts/perfbench_ab.py BASE CHANGE --workload service_requests --pairs 10
 
 BASE and CHANGE are checkout roots, each with its own ``perfbench/``.
-Pair i runs ``perfbench/run.py --workload W --seed i --seconds S
---trace 0`` once in each checkout, one run at a time; odd pairs run
-BASE first, even pairs CHANGE first, so a drifting host slows both
-sides alike. Each run's result is printed as it lands (the end-to-end
-metrics, ``correct``, ``ops_failed_frac`` and the host's CPU steal
-share during the run), then each side's median and quartiles per
-metric and the win count on ``--metric``. A gain holds when CHANGE wins
-at least 90% of the pairs and its median beats BASE's by more than
-BASE's interquartile range. Exits 1 when a run fails or is incorrect.
+Pair i runs ``perfbench/run.py --workload W --seed i --seconds 5
+--trace 0`` (the benchmark's run length) once in each checkout, one run
+at a time; odd pairs run BASE first, even pairs CHANGE first, so a
+drifting host slows both sides alike. Each run's result is printed as
+it lands (the end-to-end metrics, ``correct``, ``ops_failed_frac`` and
+the host's CPU steal share during the run), then each side's median
+and quartiles per metric and the win count on ``decisions_per_s``. A
+gain holds when CHANGE wins at least 90% of the pairs and its median
+beats BASE's by more than BASE's interquartile range. Exits 1 when a
+run fails or is incorrect.
 This script only runs ``perfbench/run.py``; it writes nothing under
 either checkout except what that run writes itself.
 """
@@ -27,6 +28,8 @@ import subprocess
 import sys
 
 METRICS = ("decisions_per_s", "cpu_s_per_1k_decisions", "peak_rss_mb", "setup_s")
+CLAIMED = "decisions_per_s"  # the metric the win count and verdict use
+SECONDS = 5  # the benchmark's --seconds
 # a service_requests run takes ~1 min on 4 vCPUs; a run past this hung
 RUN_TIMEOUT_S = 900
 
@@ -37,10 +40,6 @@ def _args(argv):
     p.add_argument("change", help="checkout root of the change")
     p.add_argument("--workload", required=True)
     p.add_argument("--pairs", type=int, default=10)
-    p.add_argument("--seconds", type=float, default=5)
-    p.add_argument("--metric", default="decisions_per_s",
-                   help="the claimed metric the win count and verdict use")
-    p.add_argument("--first-seed", type=int, default=1)
     p.add_argument("--out", help="append every run's two result lines here (JSONL)")
     return p.parse_args(argv)
 
@@ -51,10 +50,10 @@ def _better(root: str) -> dict[str, str]:
         return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
 
 
-def run_once(root: str, workload: str, seed: int, seconds: float) -> dict:
+def run_once(root: str, workload: str, seed: int) -> dict:
     """One untraced perfbench run in ``root``; its detail and result lines."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"]
     proc = subprocess.run(cmd, cwd=root, capture_output=True, text=True,
                           timeout=RUN_TIMEOUT_S)
     lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
@@ -87,21 +86,17 @@ def main(argv=None) -> int:
     args = _args(argv)
     sides = {"base": os.path.abspath(args.base), "change": os.path.abspath(args.change)}
     better = _better(sides["change"])
-    if args.metric not in better:
-        print(f"unknown metric {args.metric!r}; choose from {sorted(better)}",
-              file=sys.stderr)
-        return 2
     runs: dict[str, list[dict]] = {"base": [], "change": []}
     bad = 0
-    print(f"# {args.workload}: {args.pairs} pairs, --seconds {args.seconds}, "
-          f"seed = pair number from {args.first_seed}")
+    print(f"# {args.workload}: {args.pairs} pairs, --seconds {SECONDS}, "
+          f"seed = pair number")
     print("pair seed side   " + " ".join(f"{m:>22}" for m in METRICS)
           + "  steal_frac ops_failed_frac correct")
     for i in range(args.pairs):
-        seed = args.first_seed + i
+        seed = i + 1
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for side in order:
-            r = run_once(sides[side], args.workload, seed, args.seconds)
+            r = run_once(sides[side], args.workload, seed)
             runs[side].append(r)
             if args.out:
                 with open(args.out, "a") as f:
@@ -129,15 +124,15 @@ def main(argv=None) -> int:
             q1, q2, q3 = quartiles(xs)
             print(f"{side:<6} {m:<24} {q1:<9.4g} {q2:<9.4g} {q3:<9.4g} {q3 - q1:.4g}")
 
-    sign = 1 if better[args.metric] == "higher" else -1
+    sign = 1 if better[CLAIMED] == "higher" else -1
     pairs = [(b, c) for b, c in zip(runs["base"], runs["change"]) if b["ok"] and c["ok"]]
-    wins = sum(sign * (c["metrics"][args.metric] - b["metrics"][args.metric]) > 0
+    wins = sum(sign * (c["metrics"][CLAIMED] - b["metrics"][CLAIMED]) > 0
                for b, c in pairs)
-    print(f"\n{args.metric} ({better[args.metric]} is better): change wins "
+    print(f"\n{CLAIMED} ({better[CLAIMED]} is better): change wins "
           f"{wins}/{len(pairs)} pairs")
     if pairs:
-        bq1, bmed, bq3 = quartiles([b["metrics"][args.metric] for b, _ in pairs])
-        cmed = statistics.median(c["metrics"][args.metric] for _, c in pairs)
+        bq1, bmed, bq3 = quartiles([b["metrics"][CLAIMED] for b, _ in pairs])
+        cmed = statistics.median(c["metrics"][CLAIMED] for _, c in pairs)
         gain = sign * (cmed - bmed)
         holds = wins >= math.ceil(0.9 * len(pairs)) and gain > bq3 - bq1
         print(f"median {bmed:.4g} -> {cmed:.4g} ({gain / bmed:+.1%} in the better "

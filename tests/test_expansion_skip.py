@@ -13,12 +13,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 from tests.test_frontier_replay import _gold_order, _spark_order
-from tests.test_service_jobs import (
-    _REQUEST_DDL,
-    _batches,
-    _rows,
-    record_links_cache,
-)
+from tests.test_service_jobs import record_links_cache
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.operators.seen import SeenSet
@@ -84,8 +79,9 @@ def test_capped_bloom_crawl_skips_and_resumes_exact(spark, tmp_path):
 def test_skipped_round_on_compaction_cadence_partitioned_base(spark):
     """A tight host budget spreads the seeds over rounds 0-2, so round
     3 — the first compaction round — cannot expand, yet still holds
-    two seen deltas over a partitioned base. It folds them like any
-    other compaction round, and the crawl stays exact."""
+    three seen deltas over the base round 0 promoted before its
+    anti-join. It folds them like any other compaction round, and the
+    crawl stays exact."""
     cfg = CrawlConfig(max_depth=1, host_budget_per_round=3, max_rounds=20)
     eng = CrawlEngine(spark, SF_SMALL, cfg, seen_partitioned_min_rows=1)
     rounds = expanding_rounds(eng)
@@ -101,8 +97,32 @@ def test_skipped_round_on_compaction_cadence_partitioned_base(spark):
     last = CrawlEngine.SEEN_COMPACT_EVERY - 1
     assert last not in rounds and last - 1 in rounds
     assert eng._seen_partitioned
-    assert (last, 3) in captures  # base + two deltas folded in a skip round
+    # promoted before round 0's anti-join, then base + three deltas
+    # folded in a skip round
+    assert (0, 1) in captures and (last, 4) in captures
     _exact(res, cfg)
+
+
+def test_skip_rounds_leave_promotion_to_an_expanding_round(spark):
+    """The seen estimate crosses ``seen_partitioned_min_rows`` after
+    round 0, but rounds 1-2 cannot expand and read no seen part, so the
+    base stays plain: no round promotes it."""
+    min_rows = len(_load_graph(SF_SMALL)[2]) + 1
+    eng = CrawlEngine(spark, SF_SMALL, CAPPED, seen_partitioned_min_rows=min_rows)
+    rounds = expanding_rounds(eng)
+    captures = []
+    capture = eng._ckpt_partitioned
+
+    def recording(df):
+        captures.append(eng._rnd)
+        return capture(df)
+
+    eng._ckpt_partitioned = recording
+    res = eng.run()
+    assert rounds == [0] and res.rounds == 3
+    assert eng._seen_large(eng._n_seen)  # non-vacuous: over the threshold
+    assert captures == [] and not eng._seen_partitioned
+    _exact(res, CAPPED)
 
 
 def test_convert_on_capped_crawl_exact(spark):
@@ -163,27 +183,6 @@ def test_fetch_log_ordinal_assigned_once_on_first_read(spark, monkeypatch):
         for r in log.groupBy("round", "outcome").count().collect()
     }
     assert len(calls) == 1
-
-
-def test_service_batch_submits_no_ordinal_job(spark, monkeypatch, tmp_path):
-    calls = []
-    ordinal = frontier.global_ordinal
-    monkeypatch.setattr(
-        frontier, "global_ordinal",
-        lambda *a, **kw: calls.append(1) or ordinal(*a, **kw),
-    )
-    graph.register_graph_views(spark, SF_SMALL)
-    store = str(tmp_path / "store")
-    for batch in _batches():
-        res = CrawlEngine(
-            spark, SF_SMALL, CrawlConfig(), checkpoint_dir=store,
-            new_seeds=spark.createDataFrame(_rows(batch), _REQUEST_DDL),
-            with_convert=True, with_llm=True,
-        ).run()
-        assert calls == []
-    # reading the log is what assigns it
-    assert res.fetch_log.filter("ordinal IS NOT NULL").count() > 0
-    assert calls == [1]
 
 
 @pytest.mark.parametrize("extract_links", [None, True, False])

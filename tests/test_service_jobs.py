@@ -16,6 +16,7 @@ from volltextextraktion_selenium_md_spark.functions.lineage import (
     SEED_WIDTH,
     segment,
 )
+from volltextextraktion_selenium_md_spark.plans import frontier
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.replay import (
     _SEED_COLS,
@@ -119,8 +120,15 @@ def _rows(batch):
 @pytest.fixture(scope="module")
 def served(spark, tmp_path_factory):
     """A store that has served two batches; returns the store path, the
-    second batch's job count and its request results."""
+    second batch's job count, its request results and how often the
+    batches called ``global_ordinal``."""
     store = str(tmp_path_factory.mktemp("service") / "store")
+    ordinal_calls = []
+    ordinal = frontier.global_ordinal
+
+    def counting(*a, **kw):
+        ordinal_calls.append(1)
+        return ordinal(*a, **kw)
     cfg = CrawlConfig()
     b1, b2 = _batches()
     graph.register_graph_views(spark, SF_SMALL)
@@ -136,16 +144,19 @@ def served(spark, tmp_path_factory):
         return res, [request_results(spark, store, d["seed_idx"]).collect()
                      for d in batch], links_cached[0]
 
-    serve(b1)
-    j0 = _job_count(spark)
-    res, results, links_cached = serve(b2)
-    jobs = _job_count(spark) - j0
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(frontier, "global_ordinal", counting)
+        serve(b1)
+        j0 = _job_count(spark)
+        res, results, links_cached = serve(b2)
+        jobs = _job_count(spark) - j0
     g1 = replay_crawl(SF_SMALL, cfg, seeds=b1)
     g2 = replay_crawl(SF_SMALL, cfg, seeds=b2, initial_seen=g1.seen,
                       start_round=g1.rounds)
     assert g2.rounds == g1.rounds + 1 == res.rounds  # one round per batch
     return {"store": store, "jobs": jobs, "batch": b2, "results": results,
-            "gold": g2, "links_cached": links_cached}
+            "gold": g2, "links_cached": links_cached,
+            "ordinal_calls": len(ordinal_calls)}
 
 
 def test_service_batch_stays_within_job_budget(served):
@@ -159,8 +170,10 @@ def test_service_batch_stays_within_job_budget(served):
         assert [(r["url"], r["lineage"], r["outcome"]) for r in got] == want
     assert served["jobs"] <= SERVICE_BATCH_JOB_BUDGET, served["jobs"]
     # a batch of leaf requests cannot expand: it never builds the link
-    # cache
+    # cache. It never reads fetch_log, so it never assigns the global
+    # ordinal either
     assert served["links_cached"] == 0
+    assert served["ordinal_calls"] == 0
 
 
 def test_registration_and_store_reads_submit_no_jobs(spark, served):

@@ -21,13 +21,15 @@ persists the graph tables and ``_restore`` loads the starting point
 Each ``_round`` then runs robots, budget and slots (``_politeness``),
 the fetch stage and the round's log part (``_fetch``; ``_convert``
 hands the bulk phase to its thread), children plus first-seen dedup
-(``_children``), the seen filter and anti-join (``_unseen``), the next
-frontier, the seen delta and compaction (``_compact_seen``), and then,
-in this order: the frontier count, the seen filter's one fold,
-``_commit`` and ``_hygiene``. The frontier count also counts the rows
-that can expand (``can_expand``); a round whose frontier has none
-plans no children and no unseen rows, so it adds no seen delta, folds
-nothing into the seen filter and never builds the link cache (a
+(``_children``), the seen filter and anti-join (``_unseen``; a seen
+base whose estimate crossed ``seen_partitioned_min_rows`` is promoted to
+the partitioned layout just before it), the next frontier, the seen
+delta and compaction (``_compact_seen``), and then, in this order: the
+frontier count, the seen filter's one fold, ``_commit`` and
+``_hygiene``. The frontier count also counts the rows that can expand
+(``can_expand``); a round whose frontier has none plans no children
+and no unseen rows, so it adds no seen delta, folds nothing into the
+seen filter, promotes no seen base and never builds the link cache (a
 service batch of leaf requests, the last rounds of a depth-capped
 BFS). ``_endgame`` drains the bulk thread and assembles the result;
 ``CrawlResult.fetch_log`` assigns the global ordinal on its first read.
@@ -787,12 +789,18 @@ class CrawlEngine:
         # no frontier row can expand: no children, so no unseen rows, no
         # seen delta and no filter fold or rebuild — the round plans none
         # of the child-expansion path (and never builds the link cache)
-        unseen = None
+        # and reads no seen part, so it leaves the seen base's promotion
+        # to the next round that does
+        unseen, dead_parts = None, []
         if self._n_expandable:
+            if self._seen_large(self._n_seen) and not self._seen_partitioned:
+                # promote before the anti-join reads the base: a large
+                # plain base is neither broadcastable nor exchange-free
+                dead_parts = self._fold_seen()
             unseen = self._unseen(self._children(fetched))
             nxt = nxt.unionByName(unseen.select(*FRONTIER_COLS, "h1", "h2"))
         self._frontier = nxt.localCheckpoint(eager=False)
-        dead_parts = self._compact_seen(unseen)
+        dead_parts += self._compact_seen(unseen)
         self._count_frontier()
         # cheap upper bound is enough for filter sizing (deferred and
         # retry rows double-count; the filter is just slightly larger)
@@ -1015,36 +1023,31 @@ class CrawlEngine:
             children, self._seen_parts, self._seen_filter,
             # plain (unpartitioned) small base -> broadcast it; the partitioned
             # base must NOT be broadcast or its exchange-free SMJ shape is
-            # wasted. Gated on the LIVE seen estimate, not just the promotion
-            # flag: promotion happens at compaction time, and without the
-            # estimate gate the rounds in between were broadcasting a
-            # million-row base — the explicit hint overrides every size
-            # threshold (measured: conv-off m64 32c 421 s vs 204 s in r4).
-            broadcast_base=not self._seen_large(self._n_seen),
+            # wasted. The round promoted a large base just before this
+            # anti-join, so the layout alone tells the two apart (a
+            # broadcast million-row base: conv-off m64 32c 421 s vs 204 s
+            # in r4).
+            broadcast_base=not self._seen_partitioned,
         ).localCheckpoint(eager=False)
 
     def _compact_seen(self, unseen: DataFrame | None) -> list[DataFrame]:
         """Add the round's unseen rows as a seen delta (none in a round
-        that cannot expand) and, on the compaction cadence or at
-        promotion, fold the parts into one new base. Returns the folded
-        parts: they die once the round's count has stored unseen's rows
-        in the new frontier's own blocks."""
+        that cannot expand) and, on the compaction cadence, fold the
+        parts into one new base. Returns the folded parts."""
         if unseen is not None:
             self._seen_parts.append(unseen.select("url", "h1", "h2"))
-        # promote the moment the estimate crosses the threshold —
-        # waiting for the scheduled compaction round left 2-3
-        # rounds anti-joining a plain (stats-less, unbroadcastable)
-        # base through a full two-sided sort-merge
-        promote_now = (
-            self._seen_large(self._n_seen) and not self._seen_partitioned
-        )
-        if not (promote_now or (self._rnd + 1) % self.SEEN_COMPACT_EVERY == 0):
+        # periodic compaction bounds the anti-join chain depth at
+        # SEEN_COMPACT_EVERY + 1 (at 10^10 scale this is the lakehouse
+        # seen-table MERGE; locally a checkpoint rewrite)
+        if (self._rnd + 1) % self.SEEN_COMPACT_EVERY:
             return []
-        # periodic compaction folds the deltas back into ONE partitioned+sorted
-        # base (at 10^10 scale this is the lakehouse seen-table MERGE; locally
-        # a checkpoint rewrite) — bounds the anti-join chain depth at
-        # SEEN_COMPACT_EVERY + 1. Volume-adaptive: small seen sets compact into
-        # a plain checkpoint instead.
+        return self._fold_seen()
+
+    def _fold_seen(self) -> list[DataFrame]:
+        """Fold the seen parts into one new base, partitioned + sorted
+        once the seen estimate is large (``_ckpt_seen``). Returns the
+        folded parts: they die once the round's count has stored
+        unseen's rows in the new frontier's own blocks."""
         base = self._ckpt_seen(self._union_parts(self._seen_parts), self._n_seen)
         dead, self._seen_parts = self._seen_parts, [base]
         return dead
