@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
 from volltextextraktion_selenium_md_spark.functions.classify import classify_strategy
-from volltextextraktion_selenium_md_spark.operators import seen as seen_ops
 from volltextextraktion_selenium_md_spark.operators.politeness import (
     host_budget_split,
     robots_split,
@@ -89,7 +88,7 @@ def main() -> None:
     ))
 
     # 2. robots broadcast join
-    frontier = seen_ops.with_hashes(init_frontier(spark))
+    frontier = init_frontier(spark)
     allowed, _ = robots_split(frontier, graph.robots(spark))
     p2 = formatted(allowed)
     if "BroadcastHashJoin" not in p2:

@@ -38,12 +38,6 @@ def main() -> None:
     ap.add_argument("--payload-scale", type=int, default=1)
     ap.add_argument("--convert", action="store_true", help="run the convert stage")
     ap.add_argument(
-        "--use-bloom", action="store_true",
-        help="prefilter seen-set candidates through a sharded Bloom "
-             "filter (one shard per session partition); the exact "
-             "anti-join still decides, so results are unchanged",
-    )
-    ap.add_argument(
         "--requests", default=None,
         help="service mode: parquet of CrawlRequest rows (raw_url, "
              "seed_idx, priority + optional request columns) served "
@@ -77,7 +71,7 @@ def main() -> None:
     t0 = time.time()
     res = CrawlEngine(
         spark, args.sf_dir, cfg=cfg,
-        with_convert=args.convert, use_bloom=args.use_bloom,
+        with_convert=args.convert,
         mirrors=args.mirrors, checkpoint_dir=args.checkpoint_dir,
         new_seeds=new_seeds,
     ).run()

@@ -93,7 +93,7 @@ def job_frontier(spark, sf_dir, cores, mirrors, scale):
         F.lit(1).alias("depth"),
         segment_col(F.col("doc_pos"), DOC_POS_WIDTH).alias("lineage"),
     )
-    deduped = seen_ops.with_hashes(first_seen(children, "url", CRAWL_ORDER))
+    deduped = first_seen(children, "url", CRAWL_ORDER)
     seen = seeds.select(canonicalize_url(F.col("raw_url")).alias("url"))
     unseen = seen_ops.filter_unseen(deduped, seen)
     return unseen.count()

@@ -21,7 +21,7 @@ from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "volltextextraktion_selenium_md_spark")
-MAX_ENGINE_PARAMS = 12
+MAX_ENGINE_PARAMS = 11
 # CrawlConfig holds only what a caller or a deployment sets; the
 # reference's hard-coded cuts and the modeled costs are module constants
 MAX_CONFIG_FIELDS = 13
@@ -272,6 +272,29 @@ def test_every_engine_call_uses_existing_keywords():
             ]
     assert calls > 0
     assert not bad, bad
+
+
+def test_tracer_patch_table_matches_the_engine(monkeypatch):
+    """``perfbench/run.py --trace 1`` wraps engine names by ``setattr``:
+    installing and removing the tracer proves every name it patches
+    still exists, and its ``filter_unseen_parts`` wrapper passes four
+    positional arguments, the third the retired Bloom slot. The
+    tracer's Column expressions are stubbed: building a real one needs
+    an active SparkContext."""
+    from unittest import mock
+
+    from perfbench import trace
+    from volltextextraktion_selenium_md_spark.operators import seen
+
+    monkeypatch.setattr(trace, "F", mock.MagicMock())
+    tracer = trace.Tracer("t")
+    try:
+        tracer.install()
+    finally:
+        tracer.uninstall()
+    inspect.signature(seen.filter_unseen_parts).bind(object(), [], None, False)
+    with pytest.raises(ValueError, match="retired"):
+        seen.filter_unseen_parts(object(), [], object())
 
 
 def test_service_mode_with_mirrors_raises_before_spark_work():

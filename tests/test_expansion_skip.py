@@ -1,10 +1,10 @@
 """Rounds that cannot expand. A round whose frontier has no row below
 the depth cap that asks for links (``plans.frontier.can_expand``) plans
 no children and no unseen rows: its next frontier is deferred ∪
-retries, it adds no seen delta and it folds nothing into the seen
-filter. These tests hold the engine to the golden replay at the edges
-of that skip, and check that the global ordinal is assigned when
-``CrawlResult.fetch_log`` is first read, never before."""
+retries and it adds no seen delta. These tests hold the engine to the
+golden replay at the edges of that skip, and check that the global
+ordinal is assigned when ``CrawlResult.fetch_log`` is first read, never
+before."""
 
 from __future__ import annotations
 
@@ -16,7 +16,6 @@ from tests.test_frontier_replay import _gold_order, _spark_order
 from tests.test_service_jobs import record_links_cache
 from volltextextraktion_selenium_md_spark import graph
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
-from volltextextraktion_selenium_md_spark.operators.seen import SeenSet
 from volltextextraktion_selenium_md_spark.plans import frontier
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.replay import _load_graph, replay_crawl
@@ -47,29 +46,25 @@ def _exact(res, cfg, **replay_kw):
     return rep
 
 
-def test_capped_bloom_crawl_skips_and_resumes_exact(spark, tmp_path):
-    """The last round of a depth-capped ``use_bloom`` crawl skips; the
-    seen_shards blob it commits still covers the committed seen table,
-    and a resume from that snapshot finishes the crawl exactly."""
+def test_capped_crawl_skips_and_resumes_exact(spark, tmp_path):
+    """The last round of a depth-capped crawl skips; the seen table it
+    commits is already the whole crawl's, and a resume from that
+    snapshot finishes the crawl exactly."""
     store_dir = str(tmp_path / "store")
     first = CrawlEngine(
         spark, SF_SMALL, CrawlConfig(max_depth=1, max_rounds=2,
                                      host_budget_per_round=1_000_000),
-        use_bloom=True, checkpoint_dir=store_dir,
+        checkpoint_dir=store_dir,
     )
     rounds = expanding_rounds(first)
     first.run()
     assert rounds == [0]  # round 1, the committed one, skipped
     store = SnapshotStore(store_dir)
     assert store.manifest()["meta"]["round"] == 1
-    filt = SeenSet.from_bytes(store.read_blob("seen_shards"))
-    seen = store.read(spark, "seen")
-    definitely_new, _ = filt.partitioned_prefilter(seen)
-    assert definitely_new.count() == 0 and seen.count() > 0
+    seen = {r["url"] for r in store.read(spark, "seen").collect()}
+    assert seen == replay_crawl(SF_SMALL, CAPPED).seen
 
-    resumed = CrawlEngine(
-        spark, SF_SMALL, CAPPED, use_bloom=True, checkpoint_dir=store_dir,
-    )
+    resumed = CrawlEngine(spark, SF_SMALL, CAPPED, checkpoint_dir=store_dir)
     rounds = expanding_rounds(resumed)
     res = resumed.run()
     assert rounds == [] and res.rounds == 3

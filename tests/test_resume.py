@@ -2,7 +2,7 @@
 
 The north rule requires the crawl to be resumable from snapshot
 checkpoints with identical final order/seen state, payloads landed via
-MERGE INTO, and filter state carried in the checkpoint."""
+MERGE INTO, and the seen set carried in the checkpoint."""
 
 from __future__ import annotations
 
@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 from tests.test_expansion_skip import expanding_rounds
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
-from volltextextraktion_selenium_md_spark.operators.filters import BloomFilter
-from volltextextraktion_selenium_md_spark.operators.seen import SeenSet
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.sources.lakehouse import (
     SnapshotStore,
@@ -56,12 +54,11 @@ def uninterrupted(spark):
 
 
 def _checkpoint_2_rounds(spark, ckpt_dir):
-    """A use_bloom store after rounds 0-1. The resume's first round
-    (round 2) still expands, so it needs the seen filter — a round that
-    cannot expand runs no anti-join and never reads the filter."""
+    """A store after rounds 0-1. The resume's first round (round 2)
+    still expands, so it anti-joins against the restored seen table — a
+    round that cannot expand runs no anti-join."""
     CrawlEngine(
-        spark, SF, cfg=CrawlConfig(max_rounds=2),
-        checkpoint_dir=ckpt_dir, use_bloom=True,
+        spark, SF, cfg=CrawlConfig(max_rounds=2), checkpoint_dir=ckpt_dir
     ).run()
     return SnapshotStore(ckpt_dir)
 
@@ -78,12 +75,12 @@ def test_resume_matches_uninterrupted(spark, ckpt_dir):
 
     CrawlEngine(
         spark, SF, cfg=CrawlConfig(max_rounds=3), with_convert=True,
-        checkpoint_dir=ckpt_dir, use_bloom=True,
+        checkpoint_dir=ckpt_dir,
     ).run()
     assert SnapshotStore(ckpt_dir).latest() == 3  # one snapshot per round
 
     res = CrawlEngine(
-        spark, SF, with_convert=True, checkpoint_dir=ckpt_dir, use_bloom=True
+        spark, SF, with_convert=True, checkpoint_dir=ckpt_dir
     ).run()
     assert _decisions(res) == ref
     assert sorted(r["url"] for r in res.seen.collect()) == ref_seen
@@ -97,19 +94,36 @@ def test_resume_matches_uninterrupted(spark, ckpt_dir):
 def test_snapshot_store_atomic_publish(spark, ckpt_dir):
     store = SnapshotStore(ckpt_dir)
     df = spark.range(5).withColumnRenamed("id", "k")
-    v1 = store.commit({"t": df}, meta={"round": 0}, blobs={"b": b"\x01\x02"})
+    v1 = store.commit({"t": df}, meta={"round": 0})
     assert v1 == 1 and store.latest() == 1
     # unpublished version (no manifest) is invisible
     os.makedirs(os.path.join(ckpt_dir, "v9"))
     assert store.latest() == 1
     assert store.read(spark, "t").count() == 5
-    assert store.read_blob("b") == b"\x01\x02"
+    # a crash inside an in-place commit left an unpublished v2 with
+    # files in it; the next commit replaces it
+    os.makedirs(os.path.join(ckpt_dir, "v2", "t.parquet"))
     v2 = store.commit({"t": df.limit(2)}, meta={"round": 1})
-    assert v2 == 2
+    assert v2 == 2 and store.read(spark, "t").count() == 2
     # time travel: v1 still has 5 rows
     assert store.read(spark, "t", version=1).count() == 5
     store.expire_snapshots(keep_last=1)
     assert store.versions() == [2]
+
+
+def test_snapshot_commit_is_exclusive(spark, ckpt_dir):
+    """Two committers on one store: B publishes v1, then A, whose view
+    of the latest version is stale, commits. A raises instead of mixing
+    its files into v1, leaves no staging directory behind, and v1 still
+    reads back B's rows."""
+    a, b = SnapshotStore(ckpt_dir), SnapshotStore(ckpt_dir)
+    a.latest = lambda: None  # A listed the store before B's commit
+    b.commit({"t": spark.range(3).withColumnRenamed("id", "k")}, meta={"round": 0})
+    with pytest.raises(FileExistsError):
+        a.commit({"t": spark.range(7).withColumnRenamed("id", "k")},
+                 meta={"round": 0})
+    assert sorted(r["k"] for r in b.read(spark, "t").collect()) == [0, 1, 2]
+    assert os.listdir(ckpt_dir) == ["v1"]
 
 
 def test_merge_into_upsert(spark, ckpt_dir):
@@ -212,63 +226,53 @@ def test_merge_into_crash_after_data_rename(spark, ckpt_dir):
     assert rows == {1: "A2", 2: "b", 9: "z"}
 
 
-def test_sharded_filter_resume_matches(spark, ckpt_dir, uninterrupted):
-    """use_bloom: the seen_shards blob holds one shard per session
-    partition, and resuming from it preserves exact decisions and the
-    exact seen set."""
+def test_resume_ignores_retired_filter_blobs(spark, ckpt_dir, uninterrupted):
+    """A store written while the engine still kept a Bloom filter holds
+    ``h1``/``h2`` key columns in its frontier and seen tables, and its
+    manifest lists the filter blobs (``seen_shards``, and the older
+    ``seen_bloom`` and ``seen_cuckoo``). It resumes to exactly the
+    uninterrupted crawl, and the snapshots it commits drop the columns.
+    A new store's committed schemas never carry them."""
     store = _checkpoint_2_rounds(spark, ckpt_dir)
-    assert "seen_shards" in store.manifest()["blobs"]
-    filt = SeenSet.from_bytes(store.read_blob("seen_shards"))
-    assert filt.n_shards == int(spark.conf.get("spark.sql.shuffle.partitions"))
-    res = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True).run()
-    assert (_decisions(res), _seen_urls(res)) == uninterrupted
+    man = store.manifest()
+    assert "blobs" not in man
+    assert not _hash_cols(man)
+    # rewrite the latest snapshot in the earlier format
+    vdir = os.path.join(ckpt_dir, f"v{store.latest()}")
+    for name in ("frontier", "seen"):
+        legacy = (
+            store.read(spark, name)
+            .withColumn("h1", F.xxhash64("url"))
+            .withColumn("h2", F.xxhash64("url", F.lit(0x9E3779B9)))
+            .localCheckpoint()
+        )
+        path = os.path.join(vdir, f"{name}.parquet")
+        shutil.rmtree(path)
+        legacy.write.parquet(path)
+        man["schemas"][name] = spark.read.parquet(path).schema.jsonValue()
+    man["blobs"] = ["seen_shards", "seen_bloom", "seen_cuckoo"]
+    for name in man["blobs"]:
+        with open(os.path.join(vdir, f"{name}.bin"), "wb") as f:
+            f.write(b"\x00" * 16)
+    with open(os.path.join(vdir, "manifest.json"), "w") as f:
+        json.dump(man, f)
+    assert _hash_cols(man) == {"frontier", "seen"}
 
-
-def test_resume_bloom_blob_seeds_first_round(spark, ckpt_dir, uninterrupted):
-    """The seen_shards blob committed with a snapshot covers every key
-    of the committed seen table (a missed key would route a seen URL
-    around the anti-join), so a resume LOADS it as the first round's
-    filter instead of rebuilding; decisions stay exact."""
-    store = _checkpoint_2_rounds(spark, ckpt_dir)
-    filt = SeenSet.from_bytes(store.read_blob("seen_shards"))
-    seen = store.read(spark, "seen")
-    definitely_new, maybe_seen = filt.partitioned_prefilter(seen)
-    assert definitely_new.count() == 0
-    assert maybe_seen.count() == seen.count() > 0
-    first = store.manifest()["meta"]["round"] + 1
-    eng = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True)
+    eng = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir)
     rounds = expanding_rounds(eng)
     res = eng.run()
-    assert _decisions(res) == uninterrupted[0]
-    assert rounds[:1] == [first]  # the resumed first round needs the filter
-    assert eng._filter_rebuilds == 0
-
-
-def test_resume_ignores_retired_filter_blobs(spark, ckpt_dir, uninterrupted):
-    """A store whose manifest lists only the retired filter blobs
-    (``seen_bloom``: monolithic Bloom, ``seen_cuckoo``: cuckoo ledger)
-    resumes under use_bloom to exactly the uninterrupted crawl: the
-    blobs are never read, and the first resumed round rebuilds the
-    sharded filter from the restored seen table."""
-    store = _checkpoint_2_rounds(spark, ckpt_dir)
-    vdir = os.path.join(ckpt_dir, f"v{store.latest()}")
-    os.remove(os.path.join(vdir, "seen_shards.bin"))
-    # junk that parses: an EMPTY shard set — an engine that trusted
-    # either blob would route every seen URL around the anti-join
-    junk = SeenSet({0: BloomFilter(1 << 20)}, 1).to_bytes()
-    for name in ("seen_bloom", "seen_cuckoo"):
-        with open(os.path.join(vdir, f"{name}.bin"), "wb") as f:
-            f.write(junk)
-    man_path = os.path.join(vdir, "manifest.json")
-    with open(man_path) as f:
-        man = json.load(f)
-    man["blobs"] = ["seen_bloom", "seen_cuckoo"]
-    with open(man_path, "w") as f:
-        json.dump(man, f)
-    eng = CrawlEngine(spark, SF, checkpoint_dir=ckpt_dir, use_bloom=True)
-    res = eng.run()
     assert (_decisions(res), _seen_urls(res)) == uninterrupted
-    assert eng._filter_rebuilds >= 1
+    # the resumed first round anti-joins against the legacy seen table
+    assert rounds[:1] == [man["meta"]["round"] + 1]
+    assert not _hash_cols(store.manifest())
+
+
+def _hash_cols(man):
+    """The committed tables whose manifest schema has h1 or h2."""
+    return {
+        name for name, schema in man["schemas"].items()
+        if {f["name"] for f in schema["fields"]} & {"h1", "h2"}
+    }
 
 
 def test_resume_from_pre_request_surface_checkpoint(spark, ckpt_dir):

@@ -72,19 +72,20 @@ def test_incremental_new_seeds_match_replay(spark, tmp_path):
 
 
 def test_incremental_with_filters_and_convert(spark, tmp_path):
-    """Service batches with the full state surface on: the sharded
-    seen-set prefilter (its blob carried between batches) and the
-    convert stage whose payload table accumulates across batches in the
-    same store."""
+    """Service batches with the full state surface on: the seen table
+    and its running count carried between batches, and the convert
+    stage whose payload table accumulates across batches in the same
+    store."""
     cfg = CrawlConfig()
     df1, df2, d1, d2 = _seed_halves(spark)
     store = str(tmp_path / "store")
-    kw = dict(
-        checkpoint_dir=store, use_bloom=True, with_convert=True,
-    )
+    kw = dict(checkpoint_dir=store, with_convert=True)
     r1 = CrawlEngine(spark, SF_SMALL, cfg, new_seeds=df1, **kw).run()
     n_pay1 = r1.payloads.count() if r1.payloads is not None else 0
-    r2 = CrawlEngine(spark, SF_SMALL, cfg, new_seeds=df2, **kw).run()
+    eng2 = CrawlEngine(spark, SF_SMALL, cfg, new_seeds=df2, **kw)
+    r2 = eng2.run()
+    # the committed count plus batch 2's fresh seeds and new children
+    assert eng2._n_seen == r2.seen.count()
     g1 = replay_crawl(SF_SMALL, cfg, seeds=d1)
     g2 = replay_crawl(
         SF_SMALL, cfg, seeds=d2, initial_seen=g1.seen, start_round=g1.rounds
@@ -139,11 +140,10 @@ def _seed_row(d):
 
 
 def test_resume_filter_covers_same_batch_seed_urls(spark, tmp_path):
-    """Regression: the restored bloom blob covers the RESTORED seen
-    table only — a request batch's fresh seeds must be folded into it,
-    or the first post-resume round's prefilter routes a child link
-    equal to a same-batch seed URL around the anti-join as "definitely
-    new" and crawls it twice. Construction: batch 2 = seeds A and B
+    """Regression: a request batch's fresh seeds join the seen set
+    before the first post-resume round, or that round's anti-join
+    passes a child link equal to a same-batch seed URL and crawls it
+    twice. Construction: batch 2 = seeds A and B
     where page A links to B (verified as a precondition), batch 1 = an
     unrelated page whose depth-1 neighborhood avoids both."""
     A = "https://host8.example.com/page/10"
@@ -157,7 +157,7 @@ def test_resume_filter_covers_same_batch_seed_urls(spark, tmp_path):
 
     cfg = CrawlConfig(max_depth=1)
     store = str(tmp_path / "store")
-    kw = dict(checkpoint_dir=store, use_bloom=True)
+    kw = dict(checkpoint_dir=store)
     CrawlEngine(spark, SF_SMALL, cfg, new_seeds=df1, **kw).run()
     r2 = CrawlEngine(spark, SF_SMALL, cfg, new_seeds=df2, **kw).run()
 

@@ -276,14 +276,3 @@ def redirect_flag(requested: Column, final: Column) -> Column:
         F.regexp_replace(final, r"/+$", "") != F.regexp_replace(requested, r"/+$", "")
     )
 
-
-def url_hash(col: Column | str) -> Column:
-    """xxhash64 of the canonical URL — seen-set / bloom key.
-
-    Computed JVM-side (vectorized, no Python); pair with
-    ``url_hash2`` for the bloom filter's double-hashing scheme."""
-    return F.xxhash64(F.col(col) if isinstance(col, str) else col)
-
-
-def url_hash2(col: Column | str) -> Column:
-    return F.xxhash64(F.col(col) if isinstance(col, str) else col, F.lit(0x9E3779B9))

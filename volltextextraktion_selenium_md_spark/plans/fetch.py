@@ -667,8 +667,8 @@ def live_fetch(
     scheme counts as NULL too. Hot hosts are salted across partitions
     FIRST — this stage really does one network call per row, so a Zipf
     host would otherwise pin one executor. ``passthrough`` columns ride
-    along untouched (the engine passes priority, the request columns,
-    h1/h2 and the slot)."""
+    along untouched (the engine passes priority, the request columns
+    and the slot)."""
     import pandas as pd
 
     from volltextextraktion_selenium_md_spark.functions.mime import normalize_proxy

@@ -21,18 +21,18 @@ persists the graph tables and ``_restore`` loads the starting point
 Each ``_round`` then runs robots, budget and slots (``_politeness``),
 the fetch stage and the round's log part (``_fetch``; ``_convert``
 hands the bulk phase to its thread), children plus first-seen dedup
-(``_children``), the seen filter and anti-join (``_unseen``; a seen
-base whose estimate crossed ``seen_partitioned_min_rows`` is promoted to
+(``_children``), the seen anti-join (``_unseen``; a seen
+base whose count crossed ``seen_partitioned_min_rows`` is promoted to
 the partitioned layout just before it), the next frontier, the seen
 delta and compaction (``_compact_seen``), and then, in this order: the
-frontier count, the seen filter's one fold, ``_commit`` and
-``_hygiene``. The frontier count also counts the rows that can expand
-(``can_expand``); a round whose frontier has none plans no children
-and no unseen rows, so it adds no seen delta, folds nothing into the
-seen filter, promotes no seen base and never builds the link cache (a
-service batch of leaf requests, the last rounds of a depth-capped
-BFS). ``_endgame`` drains the bulk thread and assembles the result;
-``CrawlResult.fetch_log`` assigns the global ordinal on its first read.
+frontier count, ``_commit`` and ``_hygiene``. The frontier count also
+counts the rows that can expand (``can_expand``) and the rows new to
+the seen set; a round whose frontier has no row that can expand plans
+no children and no unseen rows, so it adds no seen delta, promotes no
+seen base and never builds the link cache (a service batch of leaf
+requests, the last rounds of a depth-capped BFS). ``_endgame`` drains
+the bulk thread and assembles the result; ``CrawlResult.fetch_log``
+assigns the global ordinal on its first read.
 
 The loop thread and the bulk thread share one session conf, and the
 engine writes it in one place only: ``_ckpt_partitioned`` turns AQE off
@@ -62,10 +62,11 @@ Scale notes (10^10-URL design point):
   `localCheckpoint` truncates the iterative lineage each round so plans
   don't grow with round count (on a cluster: checkpoint to the
   lakehouse, see sources/lakehouse.py).
-- seen-set membership = exact left_anti join (linear, co-partitioned);
-  ``use_bloom`` adds a sharded Bloom prefilter (one shard per session
-  partition, built distributedly) that routes definitely-new rows
-  around the shuffle (operators/seen.py:SeenSet).
+- seen-set membership = exact left_anti join on the url against a
+  base plus per-round deltas (operators/seen.py); below
+  ``seen_partitioned_min_rows`` the base is broadcast, above it the
+  base stays hash(url)-partitioned and sorted, so the join moves only
+  the round's candidates.
 - hot hosts are salted across partitions before the fetch stage
   (operators/politeness.py:salted_repartition); AQE skew-join covers
   the join side.
@@ -285,7 +286,6 @@ class CrawlEngine:
         spark: SparkSession,
         sf_dir: str,
         cfg: CrawlConfig | None = None,
-        use_bloom: bool = False,
         with_convert: bool = False,
         collect_round_counts: bool = True,
         mirrors: int = 1,
@@ -323,10 +323,6 @@ class CrawlEngine:
         # contract, see convert_stage docstring).
         self.transport_factory = transport_factory
         self.live = transport_factory is not None
-        # use_bloom: the sharded seen-set prefilter (seen_ops.SeenSet),
-        # one shard per session partition — per-shard blooms consulted
-        # task-locally; the exact anti-join stays the correctness path
-        self.use_bloom = use_bloom
         # with_convert: each round's convert output (and its payload-
         # table merge) is materialized from ONE background driver thread
         # so the bulk phase runs concurrently with the next rounds'
@@ -334,13 +330,13 @@ class CrawlEngine:
         self.with_convert = with_convert
         # the fetch stage's output columns: every log column but
         # status_code (the log renames page_status), the request
-        # settings, the seen hashes and the convert features. The
+        # settings and the convert features. The
         # simulated fetch adds partition_id after this projection; the
         # live stage carries its own plus the payload bytes.
         keep = [
             c for c in dict.fromkeys(
                 LOG_COLS[1:]
-                + ["page_status", "priority", *REQUEST_COLS, "h1", "h2"]
+                + ["page_status", "priority", *REQUEST_COLS]
                 + (FEATURE_COLS if with_convert else [])
             ) if c != "status_code"
         ]
@@ -364,10 +360,10 @@ class CrawlEngine:
         # seen rows the base is a PLAIN checkpoint and the anti-join
         # BROADCASTS it — the eager repartition+sort machinery of the
         # partitioned base costs more than it saves at small rounds.
-        # Once the seen estimate crosses the threshold the engine
+        # Once the seen count crosses the threshold the engine
         # promotes (monotonically) to the partitioned base whose
         # per-round shuffle is O(round delta), never O(total seen).
-        # 200k urls ≈ 20 MB of (url, h1, h2) — a comfortable per-round
+        # 200k urls ≈ 20 MB of urls — a comfortable per-round
         # broadcast; past that the partitioned/exchange-free layout
         # wins (r4 measured it at 204 s for the conv-off m64 loop).
         self.seen_partitioned_min_rows = seen_partitioned_min_rows
@@ -668,11 +664,6 @@ class CrawlEngine:
         # seen set = BASE + DELTAS (filter_unseen_parts); the base is in
         # the partitioned layout once _seen_large promoted it
         self._seen_partitioned = False
-        # incrementally-maintained seen filter (use_bloom): full builds
-        # only on the geometric resize schedule; each round's delta
-        # folds in via executor-side partial bitsets (O(delta))
-        self._seen_filter: seen_ops.SeenSet | None = None
-        self._filter_rebuilds = 0  # observability: resize-rebuild count
         self._bulk_pool = None
         if self.with_convert:
             from concurrent.futures import ThreadPoolExecutor
@@ -683,26 +674,33 @@ class CrawlEngine:
         if self.store is not None and self.store.latest() is not None:
             self._resume()
         else:
-            self._frontier = seen_ops.with_hashes(
-                init_frontier(self.spark, self.seeds)
-            ).localCheckpoint()
-            self._seen_parts = [
-                self._ckpt_seen(self._frontier.select("url", "h1", "h2"), 0)
-            ]
+            self._frontier = init_frontier(self.spark, self.seeds).localCheckpoint()
+            self._seen_parts = [self._ckpt_seen(self._frontier.select("url"), 0)]
             self._n_seen = 0
-        self._count_frontier()
-        self._n_seen = self._n_seen or self._n_frontier
+        # the seeds this start added to the seen set: a fresh crawl's, or
+        # a service batch's fresh ones. A restored frontier's own rows
+        # are in the committed seen table already: seeds of an earlier
+        # round, children (depth > 0) or retries (attempt > 0)
+        self._n_seen += self._count_frontier(
+            (F.col("depth") == 0) & (F.col("round_added") == self._rnd)
+            & (F.col("attempt") == 0)
+        )
 
     def _resume(self) -> None:
-        """Restore frontier, seen set, cumulative log AND filter state
-        exactly from the latest published snapshot; rounds continue from
-        where the previous process died — no rescan of history to
-        rebuild membership state."""
+        """Restore frontier, seen set and cumulative log exactly from
+        the latest published snapshot; rounds continue from where the
+        previous process died — no rescan of history to rebuild
+        membership state. A store written while the engine still kept
+        Bloom-filter keys resumes too: the projections below drop the
+        frontier's and the seen table's ``h1``/``h2`` columns, and the
+        blobs its manifest lists are never read."""
         man = self.store.manifest()
         self._rnd = man["meta"]["round"] + 1
         # a checkpoint written before a request column existed gets it
         # backfilled: the round loop selects all of them
-        frontier = with_request_cols(self.store.read(self.spark, "frontier"))
+        frontier = with_request_cols(
+            self.store.read(self.spark, "frontier")
+        ).select(*FRONTIER_COLS)
         if self.new_seeds is None:
             # service mode checkpoints the frontier once, after the
             # union with the batch's seeds
@@ -713,7 +711,9 @@ class CrawlEngine:
         # and the anti-join broadcasts them
         self._n_seen = man["meta"].get("n_seen_hint", 1024)
         self._seen_parts = [
-            self._ckpt_seen(self.store.read(self.spark, "seen"), self._n_seen)
+            self._ckpt_seen(
+                self.store.read(self.spark, "seen").select("url"), self._n_seen
+            )
         ]
         log0 = self.store.read(self.spark, "fetch_log")
         if "js_escalated" not in log0.columns:
@@ -721,16 +721,6 @@ class CrawlEngine:
             # existed — unknown for historic rows
             log0 = log0.withColumn("js_escalated", F.lit(None).cast("boolean"))
         self._logs = [log0.localCheckpoint()]
-        # a store without a seen_shards blob (crawled without use_bloom,
-        # or written with a retired filter blob format) resumes with no
-        # filter: the first round rebuilds it from the seen parts, which
-        # include a service batch's fresh seeds. The restored blob covers
-        # the committed seen table, so it simply BECOMES the maintained
-        # filter (sources/lakehouse.py contract)
-        if self.use_bloom and "seen_shards" in man.get("blobs", []):
-            self._seen_filter = seen_ops.SeenSet.from_bytes(
-                self.store.read_blob("seen_shards")
-            )
         if self.new_seeds is not None:
             frontier = self._admit_service_batch(frontier)
         self._frontier = frontier
@@ -742,33 +732,31 @@ class CrawlEngine:
         the frontier at depth 0 and are committed to the seen set
         immediately, exactly like round-0 seeds of a fresh crawl (replay
         twin: replay_crawl(seeds=..., initial_seen=..., start_round=...))."""
-        nf = seen_ops.with_hashes(
-            init_frontier(self.spark, self.new_seeds)
-        ).withColumn("round_added", F.lit(self._rnd))
+        nf = init_frontier(self.spark, self.new_seeds).withColumn(
+            "round_added", F.lit(self._rnd)
+        )
         fresh_seeds = seen_ops.filter_unseen_parts(
             nf, self._seen_parts,
             broadcast_base=not self._seen_large(self._n_seen),
         ).select(*frontier.columns).localCheckpoint()
         frontier = frontier.unionByName(fresh_seeds).localCheckpoint()
-        self._seen_parts.append(fresh_seeds.select("url", "h1", "h2"))
-        if self._seen_filter is not None:
-            # the restored filter covers the RESTORED seen table only —
-            # fold the batch's surviving seeds in, or the first round's
-            # prefilter would route a child link equal to a same-batch
-            # seed URL around the anti-join as "definitely new"
-            self._seen_filter.fold_delta_df(fresh_seeds.select("h1", "h2"))
+        self._seen_parts.append(fresh_seeds.select("url"))
         return frontier
 
-    def _count_frontier(self) -> None:
+    def _count_frontier(self, new: Column) -> int:
         """The round's one frontier action: its row count (the loop-exit
-        test and the seen-cardinality input for filter sizing) and, in
-        the same aggregate, how many rows can expand (``can_expand``);
-        with none, the next round skips child expansion."""
+        test) and, in the same aggregate, how many rows can expand
+        (``can_expand``; with none, the next round skips child
+        expansion) and how many match ``new``, the rows just added to
+        the seen set. Returns that last count: the seen cardinality
+        ``_seen_large`` reads is the sum of these counts."""
         row = self._frontier.agg(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(can_expand(self.cfg.max_depth), 1)).alias("n_expand"),
+            F.count(F.when(new, 1)).alias("n_new"),
         ).collect()[0]
         self._n_frontier, self._n_expandable = row["n"], row["n_expand"]
+        return row["n_new"]
 
     def _round(self) -> None:
         """One crawl round, in the module docstring's diagram order."""
@@ -783,14 +771,13 @@ class CrawlEngine:
             "url", "host", "depth", "lineage", "priority", *REQUEST_COLS,
             (F.col("attempt") + 1).alias("attempt"),
             F.lit(self._rnd + 1).alias("round_added"),
-            "h1", "h2",
         )
-        nxt = deferred.select(*FRONTIER_COLS, "h1", "h2").unionByName(retries)
-        # no frontier row can expand: no children, so no unseen rows, no
-        # seen delta and no filter fold or rebuild — the round plans none
-        # of the child-expansion path (and never builds the link cache)
-        # and reads no seen part, so it leaves the seen base's promotion
-        # to the next round that does
+        nxt = deferred.select(*FRONTIER_COLS).unionByName(retries)
+        # no frontier row can expand: no children, so no unseen rows and
+        # no seen delta — the round plans none of the child-expansion
+        # path (and never builds the link cache) and reads no seen part,
+        # so it leaves the seen base's promotion to the next round that
+        # does
         unseen, dead_parts = None, []
         if self._n_expandable:
             if self._seen_large(self._n_seen) and not self._seen_partitioned:
@@ -798,19 +785,15 @@ class CrawlEngine:
                 # plain base is neither broadcastable nor exchange-free
                 dead_parts = self._fold_seen()
             unseen = self._unseen(self._children(fetched))
-            nxt = nxt.unionByName(unseen.select(*FRONTIER_COLS, "h1", "h2"))
+            nxt = nxt.unionByName(unseen.select(*FRONTIER_COLS))
         self._frontier = nxt.localCheckpoint(eager=False)
         dead_parts += self._compact_seen(unseen)
-        self._count_frontier()
-        # cheap upper bound is enough for filter sizing (deferred and
-        # retry rows double-count; the filter is just slightly larger)
-        self._n_seen += self._n_frontier
-        if unseen is not None and self._seen_filter is not None:
-            # the round's one O(delta) fold (executor-side partial
-            # bitsets, never keys to the driver): the committed blob
-            # then covers exactly the committed seen table, and the fold
-            # reads unseen before hygiene can release its blocks
-            self._seen_filter.fold_delta_df(unseen.select("h1", "h2"))
+        # the round's unseen rows: a child enters the next round at
+        # attempt 0, a deferred row keeps its earlier round_added and a
+        # retry counts its attempts
+        self._n_seen += self._count_frontier(
+            (F.col("round_added") == self._rnd + 1) & (F.col("attempt") == 0)
+        )
         if self.store is not None:
             self._commit()
         self._hygiene(dead_parts, fetched, frontier)
@@ -849,7 +832,7 @@ class CrawlEngine:
                 transport_factory=self.transport_factory,
                 num_partitions=self._session_width,
                 passthrough=[
-                    "priority", *REQUEST_COLS, "h1", "h2", "sched_slot_ms",
+                    "priority", *REQUEST_COLS, "sched_slot_ms",
                 ],
             )
             # partition_id comes from the salted live stage itself
@@ -942,7 +925,7 @@ class CrawlEngine:
 
     def _children(self, fetched: DataFrame) -> DataFrame:
         """Link expansion from fetched html pages below the depth cap,
-        first-seen deduped and hashed for the seen filter."""
+        first-seen deduped."""
         next_round = self._rnd + 1
         parent_filter = (
             (F.col("outcome") == "fetched")
@@ -989,26 +972,11 @@ class CrawlEngine:
                 F.lit(0).alias("attempt"),
                 F.lit(next_round).alias("round_added"),
             )
-        return seen_ops.with_hashes(first_seen(children, "url", CRAWL_ORDER))
+        return first_seen(children, "url", CRAWL_ORDER)
 
     def _unseen(self, children: DataFrame) -> DataFrame:
         """The round's new URLs: children anti-joined against the seen
-        parts, behind the seen filter when ``use_bloom`` is on (the
-        filter is None otherwise)."""
-        filt = self._seen_filter
-        if self.use_bloom and (filt is None or self._n_seen > filt.capacity):
-            # (re)build with 2x headroom. Each round's delta folds in after
-            # the round's count, so this O(total seen) scan runs only on the
-            # geometric resize schedule — O(log n_seen) times over a crawl.
-            # An over-full filter between resizes only raises the fp rate
-            # (fp rows still hit the exact anti-join). One shard per session
-            # partition: the width the seen base is hash-partitioned to.
-            self._seen_filter = seen_ops.SeenSet.build(
-                self._union_parts(self._seen_parts),
-                n_items=max(self._n_seen, 1024) * 2,
-                n_shards=self._session_width,
-            )
-            self._filter_rebuilds += 1
+        parts."""
         # lazy checkpoints truncate lineage without extra jobs: the single
         # frontier count materializes unseen AND the new frontier in one job;
         # seen then reuses the stored unseen partitions. The anti-join runs
@@ -1020,7 +988,7 @@ class CrawlEngine:
         # work, not driver overhead (measured: analyze+physical-plan alone is
         # 0.03-0.06 s/round at sf0.1; the remaining ~1.2 s is stage jobs)
         return seen_ops.filter_unseen_parts(
-            children, self._seen_parts, self._seen_filter,
+            children, self._seen_parts,
             # plain (unpartitioned) small base -> broadcast it; the partitioned
             # base must NOT be broadcast or its exchange-free SMJ shape is
             # wasted. The round promoted a large base just before this
@@ -1035,7 +1003,7 @@ class CrawlEngine:
         that cannot expand) and, on the compaction cadence, fold the
         parts into one new base. Returns the folded parts."""
         if unseen is not None:
-            self._seen_parts.append(unseen.select("url", "h1", "h2"))
+            self._seen_parts.append(unseen.select("url"))
         # periodic compaction bounds the anti-join chain depth at
         # SEEN_COMPACT_EVERY + 1 (at 10^10 scale this is the lakehouse
         # seen-table MERGE; locally a checkpoint rewrite)
@@ -1045,7 +1013,7 @@ class CrawlEngine:
 
     def _fold_seen(self) -> list[DataFrame]:
         """Fold the seen parts into one new base, partitioned + sorted
-        once the seen estimate is large (``_ckpt_seen``). Returns the
+        once the seen count is large (``_ckpt_seen``). Returns the
         folded parts: they die once the round's count has stored
         unseen's rows in the new frontier's own blocks."""
         base = self._ckpt_seen(self._union_parts(self._seen_parts), self._n_seen)
@@ -1053,24 +1021,18 @@ class CrawlEngine:
         return dead
 
     def _commit(self) -> None:
-        """Publish the round's snapshot: frontier, seen, cumulative log
-        and the seen filter's blob."""
+        """Publish the round's snapshot: frontier, seen and cumulative
+        log."""
         # a published snapshot at round k must not outrun the payload-table
         # merges it implies, and a mid-swap log part must not be unioned into
         # the committed log while its source blocks are being released
         self._drain()
-        blobs = {}
-        if self._seen_filter is not None:
-            # a resume uses it as the first round's filter without a
-            # rebuild scan
-            blobs["seen_shards"] = self._seen_filter.to_bytes()
         self.store.commit(
             {"frontier": self._frontier,
              "seen": self._union_parts(self._seen_parts),
              "fetch_log": self._union_parts(self._logs)},
             meta={"round": self._rnd, "n_frontier": self._n_frontier,
                   "n_seen_hint": self._n_seen},
-            blobs=blobs,
         )
 
     def _hygiene(

@@ -5,11 +5,14 @@ resumes crawls from Iceberg snapshot checkpoints. This container has no
 Iceberg runtime jars, so this module implements the same contract on
 plain parquet with Iceberg's commit discipline:
 
-- **versioned snapshots**: every commit writes a new `v{N}` directory
-  (immutable data files) and publishes it by writing `manifest.json`
-  LAST via atomic rename — readers never see a half-written snapshot,
-  exactly like Iceberg's metadata-pointer swap. Time travel = read any
-  older vN.
+- **versioned snapshots**: every commit writes its tables and, last,
+  its `manifest.json` into a fresh staging directory, then publishes
+  it as `v{N}` with one directory rename — readers never see a
+  half-written snapshot, exactly like Iceberg's metadata-pointer swap.
+  The publish is exclusive: a committer whose `v{N}` another committer
+  already published raises instead of mixing its files into that
+  version (Iceberg's optimistic-commit conflict). Time travel = read
+  any older vN.
 - **schemas in the manifest**: like Iceberg's table metadata, every
   manifest records each table's Spark schema, so a read resolves its
   columns from the manifest instead of running a footer-inference Spark
@@ -19,11 +22,11 @@ plain parquet with Iceberg's commit discipline:
   appears in the batch are replaced, everything else re-written
   unchanged (Iceberg COW `MERGE INTO t USING b ON t.k = b.k WHEN
   MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT`).
-- **filter state**: the URL-seen filter's shard bytes (the
-  `seen_shards` blob, written under `use_bloom`) are stored inside the
-  snapshot directory so a resume does not rescan history to rebuild
-  membership state (SURVEY §7 M6). The engine ignores any other blob
-  name a manifest lists.
+- **membership state**: the URL-seen set is the committed `seen`
+  table itself (one `url` column), so a resume reads it back instead of
+  rescanning history (SURVEY §7 M6). Manifests written while the engine
+  still committed Bloom-filter blobs list them under `blobs`; nothing
+  reads those files.
 
 On a real cluster, swap `SnapshotStore` for `df.writeTo(tbl)` /
 `MERGE INTO` SQL against an Iceberg catalog; the engine call sites are
@@ -71,7 +74,8 @@ def _read_parquet(
 
 class SnapshotStore:
     """Versioned snapshot directory: `<root>/v{N}/<table>.parquet` plus
-    `<root>/v{N}/manifest.json` (written last, atomically)."""
+    `<root>/v{N}/manifest.json`, published together by one rename of a
+    `<root>/.staging-*` directory."""
 
     def __init__(self, root: str):
         self.root = root
@@ -94,33 +98,39 @@ class SnapshotStore:
         return os.path.join(self.root, f"v{version}")
 
     # -- commit ------------------------------------------------------
-    def commit(
-        self,
-        tables: dict[str, DataFrame],
-        meta: dict,
-        blobs: dict[str, bytes] | None = None,
-    ) -> int:
-        """Write all tables + blobs, then publish the manifest last."""
+    def commit(self, tables: dict[str, DataFrame], meta: dict) -> int:
+        """Write all tables and then the manifest into a fresh staging
+        directory, and publish it as the next version with one rename.
+        Raises ``FileExistsError`` when another committer published that
+        version first; the staging directory is removed either way."""
         version = (self.latest() or 0) + 1
-        vdir = self._vdir(version)
-        os.makedirs(vdir, exist_ok=True)
-        written, schemas = [], {}
-        for name, df in tables.items():
-            path = os.path.join(vdir, f"{name}.parquet")
-            df.write.mode("overwrite").parquet(path)
-            written.append(name)
-            schemas[name] = _schema_json(df)
-        blob_names = []
-        for name, raw in (blobs or {}).items():
-            with open(os.path.join(vdir, f"{name}.bin"), "wb") as f:
-                f.write(raw)
-            blob_names.append(name)
-        manifest = {"version": version, "tables": written, "blobs": blob_names,
-                    "meta": meta, "schemas": schemas}
-        fd, tmp = tempfile.mkstemp(dir=vdir, suffix=".json.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, os.path.join(vdir, "manifest.json"))  # publish
+        staging = tempfile.mkdtemp(prefix=".staging-", dir=self.root)
+        try:
+            schemas = {}
+            for name, df in tables.items():
+                df.write.parquet(os.path.join(staging, f"{name}.parquet"))
+                schemas[name] = _schema_json(df)
+            manifest = {"version": version, "tables": list(tables),
+                        "meta": meta, "schemas": schemas}
+            with open(os.path.join(staging, "manifest.json"), "w") as f:
+                json.dump(manifest, f)
+            vdir = self._vdir(version)
+            if os.path.isdir(vdir) and not os.path.exists(
+                os.path.join(vdir, "manifest.json")
+            ):
+                # a crash inside a commit that wrote into v{N} in place
+                # (before commits staged) left it unpublished
+                shutil.rmtree(vdir)
+            try:
+                os.rename(staging, vdir)  # publish
+            except OSError as e:  # v{N} exists and is not empty
+                raise FileExistsError(
+                    f"snapshot v{version} under {self.root} was published "
+                    "by another committer"
+                ) from e
+        finally:
+            # gone after a publish; a failed commit leaves no files
+            shutil.rmtree(staging, ignore_errors=True)
         return version
 
     # -- read --------------------------------------------------------
@@ -137,11 +147,6 @@ class SnapshotStore:
         return _read_parquet(
             spark, [os.path.join(self._vdir(v), f"{name}.parquet")], schema
         )
-
-    def read_blob(self, name: str, version: int | None = None) -> bytes:
-        v = self.latest() if version is None else version
-        with open(os.path.join(self._vdir(v), f"{name}.bin"), "rb") as f:
-            return f.read()
 
     def expire_snapshots(self, keep_last: int = 2) -> None:
         """Iceberg `expireSnapshots` analogue: drop all but the newest K."""

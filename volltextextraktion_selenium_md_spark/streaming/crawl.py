@@ -13,7 +13,7 @@ INCREMENTALLY against the persistent snapshot store —
   anti-join (the service's already-extracted fast path),
 - the rest enter the frontier at depth 0 and BFS to completion with a
   fresh ``max_rounds`` budget (each POST is served in full),
-- fetch log / seen set / filter blobs / payload merges land in the
+- fetch log / seen set / frontier / payload merges land in the
   SAME store, so the next batch resumes from them (Iceberg-snapshot
   semantics at scale, ``sources/lakehouse.py`` locally).
 
