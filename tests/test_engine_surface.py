@@ -180,16 +180,15 @@ def _conf_writes(tree: ast.AST) -> list[str]:
     return found
 
 
-def test_one_session_conf_write():
+def test_no_session_conf_write():
     """The engine shares the caller's session conf with its bulk-convert
-    thread; the only write is the AQE toggle (and its restore) around
-    the partitioned seen base's capture, which drains the bulk thread
-    first. No lock serializes the two threads: the futures do."""
+    thread and never writes it. No lock serializes the two threads: the
+    futures do."""
     writes = []
     for path, tree in _trees(PKG):
         rel = os.path.relpath(path, PKG)
         writes += [f"{rel}:{w}" for w in _conf_writes(tree)]
-    assert writes == ["plans/frontier.py:CrawlEngine._ckpt_partitioned"] * 2, writes
+    assert writes == [], writes
     path = os.path.join(PKG, "plans", "frontier.py")
     with open(path) as f:
         tree = ast.parse(f.read(), path)

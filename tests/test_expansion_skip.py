@@ -74,50 +74,30 @@ def test_capped_crawl_skips_and_resumes_exact(spark, tmp_path):
 def test_skipped_round_on_compaction_cadence_partitioned_base(spark):
     """A tight host budget spreads the seeds over rounds 0-2, so round
     3 — the first compaction round — cannot expand, yet still holds
-    three seen deltas over the base round 0 promoted before its
-    anti-join. It folds them like any other compaction round, and the
-    crawl stays exact."""
+    three seen deltas over the base. It folds them like any other
+    compaction round, and the crawl, whose every anti-join is left to
+    the planner (``SEEN_BROADCAST_MAX = 1``), stays exact."""
     cfg = CrawlConfig(max_depth=1, host_budget_per_round=3, max_rounds=20)
-    eng = CrawlEngine(spark, SF_SMALL, cfg, seen_partitioned_min_rows=1)
+    eng = CrawlEngine(spark, SF_SMALL, cfg)
+    eng.SEEN_BROADCAST_MAX = 1
     rounds = expanding_rounds(eng)
-    captures = []
-    capture = eng._ckpt_partitioned
+    # (round, seen parts folded) at each compaction
+    folds = []
+    compact = eng._compact_seen
 
-    def recording(df):
-        captures.append((eng._rnd, len(eng._seen_parts)))
-        return capture(df)
+    def recording(unseen):
+        dead = compact(unseen)
+        if dead:
+            folds.append((eng._rnd, len(dead)))
+        return dead
 
-    eng._ckpt_partitioned = recording
+    eng._compact_seen = recording
     res = eng.run()
     last = CrawlEngine.SEEN_COMPACT_EVERY - 1
     assert last not in rounds and last - 1 in rounds
-    assert eng._seen_partitioned
-    # promoted before round 0's anti-join, then base + three deltas
-    # folded in a skip round
-    assert (0, 1) in captures and (last, 4) in captures
+    # base + three deltas folded in a skip round
+    assert folds[0] == (last, 4)
     _exact(res, cfg)
-
-
-def test_skip_rounds_leave_promotion_to_an_expanding_round(spark):
-    """The seen estimate crosses ``seen_partitioned_min_rows`` after
-    round 0, but rounds 1-2 cannot expand and read no seen part, so the
-    base stays plain: no round promotes it."""
-    min_rows = len(_load_graph(SF_SMALL)[2]) + 1
-    eng = CrawlEngine(spark, SF_SMALL, CAPPED, seen_partitioned_min_rows=min_rows)
-    rounds = expanding_rounds(eng)
-    captures = []
-    capture = eng._ckpt_partitioned
-
-    def recording(df):
-        captures.append(eng._rnd)
-        return capture(df)
-
-    eng._ckpt_partitioned = recording
-    res = eng.run()
-    assert rounds == [0] and res.rounds == 3
-    assert eng._seen_large(eng._n_seen)  # non-vacuous: over the threshold
-    assert captures == [] and not eng._seen_partitioned
-    _exact(res, CAPPED)
 
 
 def test_convert_on_capped_crawl_exact(spark):

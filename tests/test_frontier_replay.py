@@ -8,6 +8,7 @@ import pytest
 
 from tests.conftest import SF_SMALL
 from volltextextraktion_selenium_md_spark.config import CrawlConfig
+from volltextextraktion_selenium_md_spark.operators import seen as seen_ops
 from volltextextraktion_selenium_md_spark.plans.frontier import CrawlEngine
 from volltextextraktion_selenium_md_spark.replay import replay_crawl
 
@@ -47,8 +48,8 @@ def test_crawl_order_and_seen_exact_match(spark):
 def test_tight_budget_and_retries_still_match(spark):
     """Politeness pressure: small per-host budget forces multi-round
     deferral; retries interleave with deferred rows. The engine's
-    running seen count (the partitioned-layout threshold's input,
-    committed as ``n_seen_hint``) still counts each seen url once."""
+    running seen count (the seen anti-join's broadcast gate, committed
+    as ``n_seen_hint``) still counts each seen url once."""
     cfg = CrawlConfig(host_budget_per_round=3, retries=2, max_depth=2, max_rounds=20)
     rep = replay_crawl(SF_SMALL, cfg)
     eng = CrawlEngine(spark, SF_SMALL, cfg)
@@ -281,36 +282,50 @@ def test_live_fetch_with_convert(spark):
     assert res.payloads is None or res.payloads.count() == 0
 
 
-@pytest.mark.parametrize("min_rows", [1, 60])
-def test_partitioned_seen_base_still_exact(spark, min_rows):
-    """The volume-adaptive seen set has two layouts: a plain broadcast
-    base below ``seen_partitioned_min_rows`` and the hash-partitioned +
-    sorted exchange-free base above it (the 10^10-scale layout). The
-    default threshold (200k) means small-graph tests only ever exercise
-    the plain path — this test forces promotion so BOTH layouts and the
-    mid-crawl plain->partitioned handover are proven replay-exact:
-    min_rows=1 promotes at round 0, min_rows=60 promotes mid-crawl
-    (round 0 of the small graph seeds ~40 URLs)."""
+def record_broadcast(monkeypatch) -> list[bool]:
+    """The ``broadcast_base`` of every seen anti-join, recorded as the
+    engine plans them."""
+    calls: list[bool] = []
+    filter_unseen_parts = seen_ops.filter_unseen_parts
+
+    def recording(candidates, seen_parts, bloom=None, broadcast_base=False):
+        calls.append(broadcast_base)
+        return filter_unseen_parts(candidates, seen_parts, bloom, broadcast_base)
+
+    monkeypatch.setattr(seen_ops, "filter_unseen_parts", recording)
+    return calls
+
+
+@pytest.mark.parametrize("max_rows", [1, 60])
+def test_unbroadcast_seen_anti_join_still_exact(spark, monkeypatch, max_rows):
+    """The seen anti-join broadcasts the seen parts below
+    ``SEEN_BROADCAST_MAX`` seen rows and leaves the join to the planner
+    above it (the 10^10-scale regime). The default (200k) means
+    small-graph crawls only ever broadcast — this test lowers the cut
+    so the unbroadcast join and the mid-crawl switch are proven
+    replay-exact: max_rows=1 never broadcasts, max_rows=60 switches
+    mid-crawl (round 0 of the small graph seeds ~40 URLs)."""
     cfg = CrawlConfig()
     rep = replay_crawl(SF_SMALL, cfg)
-    eng = CrawlEngine(
-        spark, SF_SMALL, cfg, seen_partitioned_min_rows=min_rows
-    )
+    eng = CrawlEngine(spark, SF_SMALL, cfg)
+    eng.SEEN_BROADCAST_MAX = max_rows
+    calls = record_broadcast(monkeypatch)
     res = eng.run()
-    # promotion actually happened — otherwise this test proves nothing
-    assert eng._seen_partitioned
+    # an unbroadcast anti-join actually ran — otherwise this test
+    # proves nothing; at 60 the first one still broadcasts
+    assert False in calls
+    assert calls[0] is (max_rows == 60)
     assert _spark_order(res) == _gold_order(rep)
     assert {r["url"] for r in res.seen.collect()} == rep.seen
 
 
 def test_convert_on_partitioned_seen_base_exact_and_conf_kept(spark):
-    """The partitioned seen base's capture turns AQE off on the session
-    conf the bulk-convert thread shares, so it first drains every job
-    handed to that thread. A convert-on mirrored crawl promoted to the
-    partitioned base at round 0 (``seen_partitioned_min_rows=1``) and
-    compacting again at round SEEN_COMPACT_EVERY - 1, each time right
-    after the round's convert was submitted, stays replay-exact per
-    mirror, and the session conf reads the same after the run."""
+    """A convert-on mirrored crawl whose every seen anti-join is left to
+    the planner (``SEEN_BROADCAST_MAX = 1``) and whose seen parts are
+    compacted at round SEEN_COMPACT_EVERY - 1, right after the round's
+    convert was handed to the bulk thread, stays replay-exact per
+    mirror, and the session conf reads the same after the run: the
+    engine writes none of it."""
     from tests.test_mirror_factoring import REPLAY_KEY, per_mirror_crawl
 
     keys = (
@@ -323,25 +338,12 @@ def test_convert_on_partitioned_seen_base_exact_and_conf_kept(spark):
     mirrors = 2
     eng = CrawlEngine(
         spark, SF_SMALL, cfg, with_convert=True, mirrors=mirrors,
-        seen_partitioned_min_rows=1,
     )
-    # (round, convert jobs submitted so far) at each partitioned capture
-    captures = []
-    capture = eng._ckpt_partitioned
-
-    def recording(df):
-        captures.append((eng._rnd, len(eng._bulk_futures)))
-        return capture(df)
-
-    eng._ckpt_partitioned = recording
+    eng.SEEN_BROADCAST_MAX = 1
     res = eng.run()
     assert {k: spark.conf.get(k) for k in keys} == before
-    # non-vacuous: promotion and a scheduled compaction both captured a
-    # partitioned base with the round's convert already submitted
-    assert eng._seen_partitioned
-    assert (0, 1) in captures
-    every = CrawlEngine.SEEN_COMPACT_EVERY
-    assert (every - 1, every) in captures
+    # non-vacuous: the crawl reached a compaction round
+    assert res.rounds >= CrawlEngine.SEEN_COMPACT_EVERY
     assert res.conversions.count() > 0
     per_m, seen_m = per_mirror_crawl(res, eng.span, mirrors)
     rep = replay_crawl(SF_SMALL, cfg)

@@ -96,6 +96,47 @@ def test_incremental_with_filters_and_convert(spark, tmp_path):
     assert r2.payloads.count() > n_pay1 > 0
 
 
+def test_service_batch_against_large_committed_seen_set(spark, tmp_path, monkeypatch):
+    """A service batch whose committed seen set is past
+    ``SEEN_BROADCAST_MAX`` (lowered to 1 on the serving engine): the
+    admission anti-join and every resumed round's anti-join are left to
+    the planner, and the batch still equals the replay twin, drops the
+    already-seen requests and keeps the running seen count exact."""
+    from tests.test_frontier_replay import record_broadcast
+    from volltextextraktion_selenium_md_spark.replay import canonicalize_one
+
+    from pyspark.sql import functions as F
+
+    cfg = CrawlConfig()
+    df1, df2, d1, d2 = _seed_halves(spark)
+    # batch 2 re-POSTs batch 1's first request last, so the admission
+    # has an already-seen request to drop
+    repost = 1 + max(d["seed_idx"] for d in d2)
+    d2 = d2 + [{**d1[0], "seed_idx": repost}]
+    df2 = df2.unionByName(
+        df1.filter(F.col("seed_idx") == d1[0]["seed_idx"]).withColumn(
+            "seed_idx", F.lit(repost).cast(df1.schema["seed_idx"].dataType)
+        )
+    )
+    store = str(tmp_path / "store")
+    CrawlEngine(spark, SF_SMALL, cfg, checkpoint_dir=store, new_seeds=df1).run()
+    eng2 = CrawlEngine(spark, SF_SMALL, cfg, checkpoint_dir=store, new_seeds=df2)
+    eng2.SEEN_BROADCAST_MAX = 1
+    calls = record_broadcast(monkeypatch)
+    r2 = eng2.run()
+    # non-vacuous: the admission (the first anti-join) and at least one
+    # round's ran unbroadcast, and the admission had requests to drop
+    assert len(calls) > 1 and not any(calls)
+    g1 = replay_crawl(SF_SMALL, cfg, seeds=d1)
+    assert {canonicalize_one(d["raw_url"]) for d in d2} & g1.seen
+    g2 = replay_crawl(
+        SF_SMALL, cfg, seeds=d2, initial_seen=g1.seen, start_round=g1.rounds
+    )
+    assert _spark_order(r2) == _concat_gold(g1, g2)
+    assert {r["url"] for r in r2.seen.collect()} == g2.seen
+    assert eng2._n_seen == r2.seen.count()
+
+
 def test_already_extracted_requests_are_skipped(spark, tmp_path):
     """Re-POSTing the same requests is the service's cache-hit path:
     the second run must fetch NOTHING new and leave the store's log

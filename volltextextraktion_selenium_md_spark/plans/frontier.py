@@ -21,25 +21,23 @@ persists the graph tables and ``_restore`` loads the starting point
 Each ``_round`` then runs robots, budget and slots (``_politeness``),
 the fetch stage and the round's log part (``_fetch``; ``_convert``
 hands the bulk phase to its thread), children plus first-seen dedup
-(``_children``), the seen anti-join (``_unseen``; a seen
-base whose count crossed ``seen_partitioned_min_rows`` is promoted to
-the partitioned layout just before it), the next frontier, the seen
-delta and compaction (``_compact_seen``), and then, in this order: the
-frontier count, ``_commit`` and ``_hygiene``. The frontier count also
-counts the rows that can expand (``can_expand``) and the rows new to
-the seen set; a round whose frontier has no row that can expand plans
-no children and no unseen rows, so it adds no seen delta, promotes no
-seen base and never builds the link cache (a service batch of leaf
-requests, the last rounds of a depth-capped BFS). ``_endgame`` drains
-the bulk thread and assembles the result; ``CrawlResult.fetch_log``
-assigns the global ordinal on its first read.
+(``_children``), the seen anti-join (``_unseen``), the next
+frontier, the seen delta and compaction (``_compact_seen``), and then,
+in this order: the frontier count, ``_commit`` and ``_hygiene``. The
+frontier count also counts the rows that can expand (``can_expand``)
+and the rows new to the seen set; a round whose frontier has no row
+that can expand plans no children and no unseen rows, so it adds no
+seen delta, reads no seen part and never builds the link cache (a
+service batch of leaf requests, the last rounds of a depth-capped
+BFS). ``_endgame`` drains the bulk thread and assembles the result;
+``CrawlResult.fetch_log`` assigns the global ordinal on its first
+read.
 
-The loop thread and the bulk thread share one session conf, and the
-engine writes it in one place only: ``_ckpt_partitioned`` turns AQE off
-while it captures the partitioned seen base. It first waits for every
-job handed to the bulk thread (``_drain``, the same wait ``_commit``
-runs before publishing a snapshot), so no bulk job is planned inside
-that window. Every round plans its shuffles at the session width.
+The loop thread and the bulk thread share the caller's session conf,
+and the engine never writes it: every round plans its shuffles at the
+session width, and the two threads meet only where the loop waits for
+the bulk thread's futures (``_drain``, before a snapshot commit and in
+the endgame).
 
 The fetch stage is either the simulated lookup join (deterministic,
 oracle-checkable) or, when a transport is given
@@ -58,15 +56,16 @@ golden replay (replay.py) must — and does, see tests — match row for
 row.
 
 Scale notes (10^10-URL design point):
-- per-round state (frontier, seen) is hash-partitioned on the url;
+- per-round state (frontier, seen) is checkpointed:
   `localCheckpoint` truncates the iterative lineage each round so plans
   don't grow with round count (on a cluster: checkpoint to the
   lakehouse, see sources/lakehouse.py).
 - seen-set membership = exact left_anti join on the url against a
-  base plus per-round deltas (operators/seen.py); below
-  ``seen_partitioned_min_rows`` the base is broadcast, above it the
-  base stays hash(url)-partitioned and sorted, so the join moves only
-  the round's candidates.
+  plain base plus per-round deltas, unioned (operators/seen.py); below
+  ``CrawlEngine.SEEN_BROADCAST_MAX`` seen rows the union is broadcast,
+  above it AQE picks the join (a sort-merge that shuffles the union; at
+  800k seen rows a hash(url)-partitioned + sorted base measured no
+  faster, CHANGES.md).
 - hot hosts are salted across partitions before the fetch stage
   (operators/politeness.py:salted_repartition); AQE skew-join covers
   the join side.
@@ -278,7 +277,11 @@ class CrawlEngine:
     # frontier rows hint the broadcast outright instead of letting AQE
     # discover it through a materialized shuffle stage
     BROADCAST_PARENTS_MAX = 100_000
-    # seen-set compaction cadence (rounds); bounds the anti-join chain
+    # explicit-broadcast ceiling for the seen anti-join (see _unseen):
+    # below this many seen rows (200k urls ≈ 20 MB) the base + deltas
+    # union is broadcast; above it the planner picks the join
+    SEEN_BROADCAST_MAX = 200_000
+    # seen-set compaction cadence (rounds); bounds the anti-join's union
     SEEN_COMPACT_EVERY = 4
 
     def __init__(
@@ -297,7 +300,10 @@ class CrawlEngine:
     ):
         """``collect_round_counts`` is accepted and ignored: per-(round,
         outcome) counts are ``CrawlResult.metrics``. Its frozen callers
-        (``bench.py``, ``perfbench/workloads.py``) still pass it."""
+        (``bench.py``, ``perfbench/workloads.py``) still pass it.
+        ``seen_partitioned_min_rows`` is accepted and ignored too: the
+        seen base has one layout, and ``SEEN_BROADCAST_MAX`` gates its
+        broadcast. ``perfbench/workloads.py`` still passes it."""
         # caller-input checks raise (not assert, which ``python -O``
         # strips) before any Spark work runs
         if new_seeds is not None and mirrors != 1:
@@ -356,20 +362,9 @@ class CrawlEngine:
         self.payload_table = (
             os.path.join(checkpoint_dir, "payload_table") if checkpoint_dir else None
         )
-        # volume-adaptive seen set (round-4 verdict #1): below this many
-        # seen rows the base is a PLAIN checkpoint and the anti-join
-        # BROADCASTS it — the eager repartition+sort machinery of the
-        # partitioned base costs more than it saves at small rounds.
-        # Once the seen count crosses the threshold the engine
-        # promotes (monotonically) to the partitioned base whose
-        # per-round shuffle is O(round delta), never O(total seen).
-        # 200k urls ≈ 20 MB of urls — a comfortable per-round
-        # broadcast; past that the partitioned/exchange-free layout
-        # wins (r4 measured it at 204 s for the conv-off m64 loop).
-        self.seen_partitioned_min_rows = seen_partitioned_min_rows
         # the session width is every explicit width's ceiling: the
-        # cached pages/links, the partitioned seen base, the convert
-        # stage and the final ordinal sort
+        # cached pages/links, the convert stage and the final ordinal
+        # sort
         self._session_width = int(
             spark.conf.get("spark.sql.shuffle.partitions")
         )
@@ -456,57 +451,11 @@ class CrawlEngine:
         """Wait for every job handed to the bulk thread so far (convert,
         payload merge, narrow log re-checkpoint); re-raises a worker's
         exception. ``result()`` is idempotent, so draining twice costs
-        nothing. The bulk thread only runs what this (loop) thread
-        submits, so after the drain no bulk job is planned until the
-        loop submits the next one."""
+        nothing. ``_commit`` drains so a snapshot never outruns the
+        payload merges it implies, ``_endgame`` so every log slot holds
+        its narrow checkpoint before the result is assembled."""
         for fut in self._bulk_futures + self._hygiene_futures:
             fut.result()
-
-    def _ckpt_partitioned(self, df: DataFrame) -> DataFrame:
-        """Eager localCheckpoint that KEEPS hash(url) partitioning and
-        per-partition ordering visible to later plans. AQE must be off
-        while the checkpoint is captured: under AQE the physical root is
-        an un-finalized AdaptiveSparkPlanExec whose outputPartitioning
-        reads as Unknown, so the resulting LogicalRDD would force an
-        ENSURE_REQUIREMENTS exchange in every consumer (verified on
-        Spark 4.1; with the toggle the downstream AQE-planned anti-join
-        shows ZERO exchanges on this side). The sort lets the SMJ skip
-        the base-side sort too.
-
-        This is the engine's only session-conf write. The conf is shared
-        with the bulk thread, so the toggle window opens only after
-        ``_drain``: a bulk job planned inside it would silently run
-        without AQE."""
-        self._drain()
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return (
-                df.repartition(self._session_width, "url")
-                .sortWithinPartitions("url")
-                .localCheckpoint()
-            )
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev)
-
-    def _ckpt_seen(self, df: DataFrame, n_hint: int) -> DataFrame:
-        """Checkpoint a (compacted) seen base, volume-adaptively: small
-        bases take a plain eager checkpoint (no repartition/sort jobs,
-        no AQE toggle — the anti-join broadcasts them), large bases the
-        partitioned+sorted form (exchange-free base side). Promotion is
-        monotonic so a run never flip-flops layouts."""
-        if self._seen_large(n_hint):
-            self._seen_partitioned = True
-            return self._ckpt_partitioned(df)
-        return df.localCheckpoint()
-
-    def _seen_large(self, n_seen: int) -> bool:
-        """Is the seen base large: already promoted to the partitioned
-        layout, or at/over its threshold? A large base is kept
-        hash-partitioned + sorted and anti-joined exchange-free; a small
-        one is a plain checkpoint the anti-join broadcasts."""
-        return self._seen_partitioned or n_seen >= self.seen_partitioned_min_rows
 
     @staticmethod
     def _union_parts(parts: list[DataFrame]) -> DataFrame:
@@ -661,9 +610,6 @@ class CrawlEngine:
         self._bulk_futures: list = []  # pipelined convert/merge jobs
         self._hygiene_futures: list = []  # narrow log re-checkpoints
         self._round_walls: list[float] = []
-        # seen set = BASE + DELTAS (filter_unseen_parts); the base is in
-        # the partitioned layout once _seen_large promoted it
-        self._seen_partitioned = False
         self._bulk_pool = None
         if self.with_convert:
             from concurrent.futures import ThreadPoolExecutor
@@ -675,7 +621,8 @@ class CrawlEngine:
             self._resume()
         else:
             self._frontier = init_frontier(self.spark, self.seeds).localCheckpoint()
-            self._seen_parts = [self._ckpt_seen(self._frontier.select("url"), 0)]
+            # seen set = BASE + DELTAS (filter_unseen_parts)
+            self._seen_parts = [self._frontier.select("url").localCheckpoint()]
             self._n_seen = 0
         # the seeds this start added to the seen set: a fresh crawl's, or
         # a service batch's fresh ones. A restored frontier's own rows
@@ -705,15 +652,11 @@ class CrawlEngine:
             # service mode checkpoints the frontier once, after the
             # union with the batch's seeds
             frontier = frontier.localCheckpoint()
-        # above the volume threshold the restored base is kept
-        # hash(url)-partitioned + sorted through its checkpoint, so each
-        # round's anti-join moves no base rows; small bases stay plain
-        # and the anti-join broadcasts them
+        # the committed count gates the anti-join's broadcast
+        # (SEEN_BROADCAST_MAX)
         self._n_seen = man["meta"].get("n_seen_hint", 1024)
         self._seen_parts = [
-            self._ckpt_seen(
-                self.store.read(self.spark, "seen").select("url"), self._n_seen
-            )
+            self.store.read(self.spark, "seen").select("url").localCheckpoint()
         ]
         log0 = self.store.read(self.spark, "fetch_log")
         if "js_escalated" not in log0.columns:
@@ -737,7 +680,7 @@ class CrawlEngine:
         )
         fresh_seeds = seen_ops.filter_unseen_parts(
             nf, self._seen_parts,
-            broadcast_base=not self._seen_large(self._n_seen),
+            broadcast_base=self._n_seen < self.SEEN_BROADCAST_MAX,
         ).select(*frontier.columns).localCheckpoint()
         frontier = frontier.unionByName(fresh_seeds).localCheckpoint()
         self._seen_parts.append(fresh_seeds.select("url"))
@@ -749,7 +692,8 @@ class CrawlEngine:
         (``can_expand``; with none, the next round skips child
         expansion) and how many match ``new``, the rows just added to
         the seen set. Returns that last count: the seen cardinality
-        ``_seen_large`` reads is the sum of these counts."""
+        the anti-join's broadcast gate reads is the sum of these
+        counts."""
         row = self._frontier.agg(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(can_expand(self.cfg.max_depth), 1)).alias("n_expand"),
@@ -775,19 +719,13 @@ class CrawlEngine:
         nxt = deferred.select(*FRONTIER_COLS).unionByName(retries)
         # no frontier row can expand: no children, so no unseen rows and
         # no seen delta — the round plans none of the child-expansion
-        # path (and never builds the link cache) and reads no seen part,
-        # so it leaves the seen base's promotion to the next round that
-        # does
-        unseen, dead_parts = None, []
+        # path (and never builds the link cache) and reads no seen part
+        unseen = None
         if self._n_expandable:
-            if self._seen_large(self._n_seen) and not self._seen_partitioned:
-                # promote before the anti-join reads the base: a large
-                # plain base is neither broadcastable nor exchange-free
-                dead_parts = self._fold_seen()
             unseen = self._unseen(self._children(fetched))
             nxt = nxt.unionByName(unseen.select(*FRONTIER_COLS))
         self._frontier = nxt.localCheckpoint(eager=False)
-        dead_parts += self._compact_seen(unseen)
+        dead_parts = self._compact_seen(unseen)
         # the round's unseen rows: a child enters the next round at
         # attempt 0, a deferred row keeps its earlier round_added and a
         # retry counts its attempts
@@ -979,23 +917,20 @@ class CrawlEngine:
         parts."""
         # lazy checkpoints truncate lineage without extra jobs: the single
         # frontier count materializes unseen AND the new frontier in one job;
-        # seen then reuses the stored unseen partitions. The anti-join runs
-        # against the partitioned base + per-round deltas — no O(total seen)
-        # shuffle per round. NOTE for profile readers: under AQE this lazy
-        # checkpoint's toRdd finalizes the plan, which MATERIALIZES every
-        # intermediate query stage (children shuffle, first_seen window,
-        # anti-join broadcast builds) — building it is the round's distributed
-        # work, not driver overhead (measured: analyze+physical-plan alone is
-        # 0.03-0.06 s/round at sf0.1; the remaining ~1.2 s is stage jobs)
+        # seen then reuses the stored unseen partitions. NOTE for profile
+        # readers: under AQE this lazy checkpoint's toRdd finalizes the
+        # plan, which MATERIALIZES every intermediate query stage (children
+        # shuffle, first_seen window, anti-join broadcast builds) — building
+        # it is the round's distributed work, not driver overhead
+        # (measured: analyze+physical-plan alone is 0.03-0.06 s/round at
+        # sf0.1; the remaining ~1.2 s is stage jobs)
         return seen_ops.filter_unseen_parts(
             children, self._seen_parts,
-            # plain (unpartitioned) small base -> broadcast it; the partitioned
-            # base must NOT be broadcast or its exchange-free SMJ shape is
-            # wasted. The round promoted a large base just before this
-            # anti-join, so the layout alone tells the two apart (a
+            # a checkpoint carries no size stats, so a small seen set is
+            # broadcast by hint; a large one is left to the planner (a
             # broadcast million-row base: conv-off m64 32c 421 s vs 204 s
-            # in r4).
-            broadcast_base=not self._seen_partitioned,
+            # in r4)
+            broadcast_base=self._n_seen < self.SEEN_BROADCAST_MAX,
         ).localCheckpoint(eager=False)
 
     def _compact_seen(self, unseen: DataFrame | None) -> list[DataFrame]:
@@ -1004,19 +939,14 @@ class CrawlEngine:
         parts into one new base. Returns the folded parts."""
         if unseen is not None:
             self._seen_parts.append(unseen.select("url"))
-        # periodic compaction bounds the anti-join chain depth at
-        # SEEN_COMPACT_EVERY + 1 (at 10^10 scale this is the lakehouse
-        # seen-table MERGE; locally a checkpoint rewrite)
+        # periodic compaction bounds the anti-join's union at
+        # SEEN_COMPACT_EVERY + 1 parts (at 10^10 scale this is the
+        # lakehouse seen-table MERGE; locally a checkpoint rewrite). The
+        # folded parts die once the round's count has stored unseen's
+        # rows in the new frontier's own blocks.
         if (self._rnd + 1) % self.SEEN_COMPACT_EVERY:
             return []
-        return self._fold_seen()
-
-    def _fold_seen(self) -> list[DataFrame]:
-        """Fold the seen parts into one new base, partitioned + sorted
-        once the seen count is large (``_ckpt_seen``). Returns the
-        folded parts: they die once the round's count has stored
-        unseen's rows in the new frontier's own blocks."""
-        base = self._ckpt_seen(self._union_parts(self._seen_parts), self._n_seen)
+        base = self._union_parts(self._seen_parts).localCheckpoint()
         dead, self._seen_parts = self._seen_parts, [base]
         return dead
 
